@@ -6,8 +6,8 @@ of stdout, small enough for a bounded tail buffer):
   {"metric": "...", "value": <total-sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <sf>}
 and writes the bulky context — manifest [{name, semver, desc}, ...],
-extras (bench-only twins), protocol, and per-run samples — to the
-BENCH_DETAIL.json sidecar next to this file.
+protocol, and per-run samples — to the BENCH_DETAIL.json sidecar next
+to this file.
 
 Comparability contract (round-4 bench manifest): every headline entry
 carries a SEMANTICS VERSION. Whenever a builder's verified work grows
@@ -38,6 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from training_datawarehouse_spark.session import get_spark  # noqa: E402
 from training_datawarehouse_spark.plans import QUERIES  # noqa: E402
+from training_datawarehouse_spark.plans.relational import approx_aggs  # noqa: E402
 
 # Headline set: one per operator family — scan-agg, cube, rollup,
 # windows, EWMA, interpolation, joins, dedup, text, similarity.
@@ -161,262 +162,13 @@ MANIFEST = [
 HEADLINE = [m["name"] for m in MANIFEST]
 
 
-def _headline_overrides() -> dict:
-    """Headline entries whose TIMED plan is a flagged sub-plan of the
-    registry builder (the manifest desc says which flag and why). Used
-    when a builder carries correctness-only differential apparatus that
-    production never executes — the registry/oracle keeps the full
-    builder; the bench times the production path. Import-guarded like
-    _extras for old-worktree attribution runs."""
-    try:
-        from training_datawarehouse_spark.plans.relational import approx_aggs
-
-        def _try_sketch_only(fn, s, d):
-            try:
-                return fn(s, d, sketch_only=True)
-            except TypeError:  # older code state (attribution worktrees)
-                return fn(s, d, include_kmv_exact=False)
-        import inspect
-        if "include_kmv_exact" not in inspect.signature(approx_aggs).parameters:
-            return {}
-        return {
-            "op_approx_aggs": lambda s, d: _try_sketch_only(approx_aggs, s, d),
-        }
-    except ImportError:
-        return {}
-
-
-def _extras() -> list[dict]:
-    """Bench-only twins: timed and reported under "extras", NOT in the
-    headline total. Two kinds: (a) the production-hash LSH twin of the
-    md5-portable headline entry, and (b) round-2-EQUIVALENT sub-plans
-    of every semver-2 headline entry, so a like-for-like lineage number
-    exists next to each entry whose semantics grew. Import-guarded so
-    this harness also runs unchanged against older code states (the
-    attribution tool drops it into a round-2 worktree)."""
-    extras: list[dict] = []
-
-    def _compat(fn, *args, **kwargs):
-        """Call dropping kwargs an older code state doesn't accept —
-        the attribution tool runs this harness inside old worktrees,
-        where a missing equivalence flag means the old plan already IS
-        the equivalent."""
-        while True:
-            try:
-                return fn(*args, **kwargs)
-            except TypeError:
-                if not kwargs:
-                    raise
-                kwargs = dict(list(kwargs.items())[:-1])
-
-    try:
-        from training_datawarehouse_spark.plans.core import (
-            q1_pricing_summary, scalar_breadth,
-        )
-        from training_datawarehouse_spark.plans.northstar import (
-            lsh_cross_modal, lsh_cross_modal_xxhash, multimodal_meta,
-            similarity_ann, similarity_topk, split_train_val,
-            text_profile,
-        )
-        from training_datawarehouse_spark.operators.funnel import (
-            funnel_counts,
-        )
-        from training_datawarehouse_spark.plans.relational import (
-            FUNNEL_STEPS, FUNNEL_WITHIN_DAYS, approx_aggs, windowed_batch,
-        )
-        from training_datawarehouse_spark.plans.relational import (
-            asof_join_q as _asof_q,
-        )
-        from training_datawarehouse_spark.sources.tables import load_table
-
-        extras += [
-            {"name": "tpch_q1_pricing_summary__r4equiv", "semver": 1,
-             "desc": "q1 semver-1 sub-plan (no decimal twin columns)",
-             "builder": lambda s, d: _compat(q1_pricing_summary,
-                 s, d, include_decimal=False)},
-            {"name": "op_fn_scalar_breadth__r4equiv", "semver": 2,
-             "desc": "scalar breadth semver-2 sub-plan (no decimal columns)",
-             "builder": lambda s, d: _compat(scalar_breadth,
-                 s, d, include_decimal=False)},
-            {"name": "ns_dedup_lsh_xxhash64", "semver": 1,
-             "desc": "production xxhash64/murmur3 LSH family — same plan as "
-                     "ns_dedup_lsh_cross_modal (semver 2) minus md5 "
-                     "oracle-portability cost",
-             "builder": lsh_cross_modal_xxhash},
-            {"name": "ns_dedup_lsh_cross_modal__r8equiv", "semver": 1,
-             "desc": "lsh_cross_modal semver-2 sub-plan (no image_phash / "
-                     "audio_fp / video_fp stages)",
-             "builder": lambda s, d: _compat(lsh_cross_modal,
-                 s, d, include_image_stage=False,
-                 include_audio_stage=False,
-                 include_video_stage=False)},
-            {"name": "ns_dedup_lsh_cross_modal__r9equiv", "semver": 1,
-             "desc": "lsh_cross_modal semver-3 sub-plan (image_phash + "
-                     "audio_fp, no video_fp stage)",
-             "builder": lambda s, d: _compat(lsh_cross_modal,
-                 s, d, include_video_stage=False)},
-            {"name": "op_approx_aggs__r2equiv", "semver": 1,
-             "desc": "op_approx_aggs semver-1 sub-plan (per-type stage only, "
-                     "no sketch rollup; NOTE: still carries the exact-twin "
-                     "columns — use __r1equiv for the r1-anchor comparison)",
-             "builder": lambda s, d: _compat(approx_aggs,
-                 s, d, include_weekly=False, include_cms=False)},
-            {"name": "op_approx_aggs__r1equiv", "semver": 1,
-             "desc": "op_approx_aggs ROUND-1 sub-plan: sketch-only single "
-                     "aggregation, no exact twins, no rollup — the honest "
-                     "anchor for BENCH_r01's 0.356 (see BENCH_ATTRIBUTION "
-                     "§7 addendum)",
-             "builder": lambda s, d: _compat(approx_aggs,
-                 s, d, include_weekly=False, include_exact=False,
-                 include_cms=False)},
-            {"name": "op_jn_asof__r11equiv", "semver": 1,
-             "desc": "op_jn_asof semver-1 sub-plan (backward stage only — "
-                     "the r1..r11 semantics; the dir tag column is the "
-                     "only delta and costs nothing)",
-             "builder": lambda s, d: _compat(_asof_q, s, d,
-                                             dirs=("bwd",))},
-            {"name": "op_jn_asof__r12equiv", "semver": 2,
-             "desc": "op_jn_asof semver-2 sub-plan (bwd+fwd+tol stages, "
-                     "no nearest — the r12 semantics on the r13 "
-                     "struct-carry operator)",
-             "builder": lambda s, d: _compat(_asof_q, s, d,
-                                             dirs=("bwd", "fwd", "tol"))},
-            {"name": "op_stream_windows_batch__r8equiv", "semver": 1,
-             "desc": "windows+funnel semver-1 sub-plan (no time-to-"
-                     "convert percentile rows)",
-             "builder": lambda s, d: _compat(windowed_batch,
-                 s, d, include_ttc=False)},
-            {"name": "ns_multimodal_meta__r2equiv", "semver": 1,
-             "desc": "ns_multimodal_meta semver-1 sub-plan (stub decode only, "
-                     "no real codecs)",
-             "builder": lambda s, d: _compat(multimodal_meta,
-                 s, d, stages=("stub",))},
-            {"name": "ns_multimodal_meta__r3equiv", "semver": 2,
-             "desc": "ns_multimodal_meta semver-2 sub-plan (stub+png+wav, "
-                     "no jpeg stage)",
-             "builder": lambda s, d: multimodal_meta(
-                 s, d, stages=("stub", "png", "wav"))},
-            {"name": "ns_multimodal_meta__r4equiv", "semver": 3,
-             "desc": "ns_multimodal_meta semver-3 sub-plan (no webp stage)",
-             "builder": lambda s, d: _compat(multimodal_meta,
-                 s, d, stages=("stub", "png", "wav", "jpeg"))},
-            {"name": "ns_multimodal_meta__r9equiv", "semver": 4,
-             "desc": "ns_multimodal_meta semver-4 sub-plan (no avi stage)",
-             "builder": lambda s, d: multimodal_meta(
-                 s, d, stages=("stub", "png", "wav", "jpeg", "webp"))},
-            {"name": "ns_multimodal_meta__r10equiv", "semver": 5,
-             "desc": "ns_multimodal_meta semver-5 sub-plan (no avi_mjpg "
-                     "stage)",
-             "builder": lambda s, d: multimodal_meta(
-                 s, d, stages=("stub", "png", "wav", "jpeg", "webp",
-                               "avi"))},
-            {"name": "ns_text_profile__r2equiv", "semver": 1,
-             "desc": "ns_text_profile semver-1 sub-plan (no fingerprint / "
-                     "dupe-group columns)",
-             "builder": lambda s, d: _compat(text_profile,
-                 s, d, include_fingerprint=False)},
-            {"name": "ns_split_train_val__r4equiv", "semver": 1,
-             "desc": "split composite semver-1 sub-plan (no leakage stage)",
-             "builder": lambda s, d: _compat(split_train_val,
-                 s, d, include_leakage=False)},
-            {"name": "ns_text_profile__r4equiv", "semver": 2,
-             "desc": "ns_text_profile semver-2 sub-plan (no bigram-LM / "
-                     "BPE / DSIR / classifier / unigram / wordpiece "
-                     "stages; r10 fix: the r9 unigram flag was missing "
-                     "here, silently inflating this twin for one round)",
-             "builder": lambda s, d: _compat(text_profile,
-                 s, d, include_lm=False, include_bpe=False,
-                 include_dsir=False, include_lrq=False,
-                 include_ulm=False, include_wp=False)},
-            {"name": "ns_text_profile__r8equiv", "semver": 5,
-             "desc": "ns_text_profile semver-5 sub-plan (no unigram-LM / "
-                     "wordpiece stages)",
-             "builder": lambda s, d: _compat(text_profile,
-                 s, d, include_ulm=False, include_wp=False)},
-            {"name": "ns_text_profile__r9equiv", "semver": 6,
-             "desc": "ns_text_profile semver-6 sub-plan (no wordpiece "
-                     "stage)",
-             "builder": lambda s, d: _compat(text_profile,
-                 s, d, include_wp=False)},
-            {"name": "ns_text_profile__r5equiv", "semver": 3,
-             "desc": "ns_text_profile semver-3 sub-plan (no BPE / DSIR / "
-                     "classifier / unigram / wordpiece stages; r10 fix: "
-                     "the r9 unigram flag was missing here)",
-             "builder": lambda s, d: _compat(text_profile,
-                 s, d, include_bpe=False, include_dsir=False,
-                 include_lrq=False, include_ulm=False,
-                 include_wp=False)},
-            {"name": "op_approx_aggs__r9equiv", "semver": 3,
-             "desc": "op_approx_aggs semver-3 sub-plan (no KMV stages)",
-             "builder": lambda s, d: _compat(approx_aggs,
-                 s, d, include_kmv=False)},
-            {"name": "op_approx_aggs__r12equiv", "semver": 5,
-             "desc": "op_approx_aggs semver-5 plan: KMV exact twins "
-                     "OFF (the r12a trim) but the quantile-sketch "
-                     "exact-rank twin still timed — the shape the "
-                     "first r12 bench ran, kept for lineage now that "
-                     "the headline is sketch-only on BOTH families",
-             "builder": lambda s, d: _compat(approx_aggs,
-                 s, d, include_kmv_exact=False)},
-            {"name": "op_approx_aggs__r11equiv", "semver": 4,
-             "desc": "op_approx_aggs semver-4 plan: WITH the KMV "
-                     "exact-twin apparatus, WITHOUT the r12 quantile-"
-                     "sketch stages — the r10/r11-timed shape, kept for "
-                     "lineage now that the headline times the sketch-"
-                     "only production path",
-             "builder": lambda s, d: _compat(approx_aggs,
-                 s, d, include_qsk=False)},
-            {"name": "ns_similarity_ann", "semver": 3,
-             "desc": "ANN composite (correctness-only registry entry, "
-                     "timed here for attribution): sign-LSH + trained "
-                     "IVF + PQ/ADC/IVFADC + SQ8 + recall@5 columns; "
-                     "r11/semver-2: + NN-descent graph stage (oracle "
-                     "retrains the graph round by round); r15/semver-3: "
-                     "+ 'nnd_serve' hierarchical beam-serving stage "
-                     "(coarse-layer graph + two-layer descent at the "
-                     "measured 4+4 knee, oracle re-derives both "
-                     "descents hop by hop)",
-             "builder": lambda s, d: similarity_ann(s, d)},
-            {"name": "ns_similarity_ann__r14equiv", "semver": 2,
-             "desc": "ANN composite semver-2 sub-plan (nnd build stage, "
-                     "no r15 'nnd_serve' hierarchical serving stage) — "
-                     "prices the serve-stage addition",
-             "builder": lambda s, d: _compat(similarity_ann,
-                 s, d, include_serve=False)},
-            {"name": "ns_similarity_ann__r10equiv", "semver": 1,
-             "desc": "ANN composite semver-1 sub-plan (no NN-descent "
-                     "graph stage) — prices the r11 'nnd' stage "
-                     "addition (r11 advice: the include_nnd knob "
-                     "existed but nothing timed it)",
-             "builder": lambda s, d: _compat(similarity_ann,
-                 s, d, include_nnd=False)},
-            {"name": "op_approx_aggs__r5equiv", "semver": 2,
-             "desc": "op_approx_aggs semver-2 sub-plan (no CMS / KMV "
-                     "stages)",
-             "builder": lambda s, d: _compat(approx_aggs,
-                 s, d, include_cms=False, include_kmv=False)},
-            {"name": "ns_similarity_topk__r6equiv", "semver": 1,
-             "desc": "similarity top-k semver-1 sub-plan (cosine stage "
-                     "only, no BM25 / RRF retrieval stages)",
-             "builder": lambda s, d: _compat(similarity_topk,
-                 s, d, include_retrieval=False)},
-            {"name": "op_funnel_only", "semver": 1,
-             "desc": "funnel min-chain in isolation (the r7 'funnel' kind "
-                     "of op_stream_windows_batch without the tumbling/"
-                     "sliding stages) — keeps the headline entry "
-                     "decomposable",
-             "builder": lambda s, d: funnel_counts(
-                 load_table(s, d, "events"), FUNNEL_STEPS,
-                 within_days=FUNNEL_WITHIN_DAYS)},
-            {"name": "ns_text_profile__r6aequiv", "semver": 4,
-             "desc": "ns_text_profile semver-4 sub-plan (BPE stage, no "
-                     "DSIR / classifier stages — the early-r6 entry shape)",
-             "builder": lambda s, d: _compat(text_profile,
-                 s, d, include_dsir=False, include_lrq=False)},
-        ]
-    except (ImportError, TypeError):
-        pass  # older code state: no twins to time
-    return extras
+# Headline entries whose TIMED plan is the production path of a builder
+# that also carries correctness-only differential apparatus: the
+# registry/oracle keeps the full builder, the bench times what
+# production runs (the manifest desc says which and why).
+HEADLINE_OVERRIDES = {
+    "op_approx_aggs": lambda s, d: approx_aggs(s, d, sketch_only=True),
+}
 
 
 def _time_entry(spark, builder, sf_dir: str, n_runs: int) -> dict:
@@ -452,25 +204,16 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     detail: dict[str, dict] = {}
-    overrides = _headline_overrides()
     for name in HEADLINE:
         if only and name not in only:
             continue
-        builder = overrides.get(name, QUERIES[name].builder)
+        builder = HEADLINE_OVERRIDES.get(name, QUERIES[name].builder)
         r = _time_entry(spark, builder, sf_dir, n_runs)
         timings[name] = r["median"]
         detail[name] = r
 
-    extras: dict[str, float] = {}
-    for ex in _extras():
-        if only and ex["name"] not in only:
-            continue
-        r = _time_entry(spark, ex["builder"], sf_dir, n_runs)
-        extras[ex["name"]] = r["median"]
-        detail[ex["name"]] = r
-
     total = round(sum(timings.values()), 3)
-    # Sidecar carries everything bulky (manifest, extras, per-run samples):
+    # Sidecar carries everything bulky (manifest, per-run samples):
     # round 4 taught us the driver tail-captures stdout with a bounded
     # buffer, so the FINAL stdout line must stay compact or the headline
     # number is lost ("parsed": null in BENCH_r04.json).
@@ -482,7 +225,6 @@ def main() -> None:
     with open(sidecar, "w") as f:
         json.dump({
             "manifest": MANIFEST,
-            "extras": extras,
             "protocol": {
                 "stat": "median", "n_runs": n_runs, "warmup_discarded": 1,
                 "note": "compare entries cross-round only at equal semver",

@@ -76,35 +76,6 @@ def test_every_registry_oracle_has_stable_dtypes(spark, duck):
     assert not offences, "\n".join(offences)
 
 
-def test_extras_and_twin_builders_keep_stable_dtypes(spark, duck):
-    """r12 (r11 verdict #6): the bench ``__r*equiv`` twins and extras
-    are flagged SUB-PLANS of registry entries — their Spark schemas
-    must satisfy the same integral-ness contract against the PARENT
-    entry's oracle (dtype_drift matches columns by name and ignores
-    the columns a sub-plan drops, so the shared oracle applies
-    directly). The dtype class bit three rounds before the registry
-    sweep existed; the twins were its remaining blind spot."""
-    import importlib
-
-    bench = importlib.import_module("bench")
-    offences, checked = [], []
-    for ex in bench._extras():
-        parent = ex["name"].split("__")[0]
-        q = QUERIES.get(parent)
-        if q is None or q.oracle is None:
-            continue  # production-twin extras with no oracle lineage
-        duck_fields = duck_describe(duck, q.oracle)
-        df = ex["builder"](spark, SF_DIR)
-        spark_fields = [(f.name, f.dataType.simpleString())
-                        for f in df.schema.fields]
-        for off in dtype_drift(spark_fields, duck_fields):
-            offences.append(f"{ex['name']}: {off}")
-        checked.append(ex["name"])
-    # the sweep must actually cover the twin fleet, not silently no-op
-    assert len(checked) >= 15, checked
-    assert not offences, "\n".join(offences)
-
-
 def test_dtype_drift_flags_both_directions():
     """Unit gate for the canon dtype rule: the r9/r10 class (Spark
     integral vs oracle float/HUGEINT) AND the r11-review mirror class

@@ -350,6 +350,28 @@ def test_every_registry_entry_has_an_oracle():
     assert missing == []
 
 
+#: The only parameters a registry builder may take beyond (spark,
+#: sf_dir): the headline's sketch-only production path, and the corpus
+#: the clustered-vector recall eval injects into the ANN composite.
+BUILDER_EXTRA_PARAMS = {
+    "op_approx_aggs": ("sketch_only",),
+    "ns_similarity_ann": ("emb",),
+}
+
+
+def test_registry_builders_take_only_spark_and_sf_dir():
+    """Each registry builder is ONE production path: no stage or
+    sub-plan flags, so no second, unmeasured plan can grow back."""
+    import inspect
+
+    offenders = {}
+    for name, q in QUERIES.items():
+        params = tuple(inspect.signature(q.builder).parameters)
+        if params != ("spark", "sf_dir") + BUILDER_EXTRA_PARAMS.get(name, ()):
+            offenders[name] = params
+    assert offenders == {}
+
+
 def test_new_deep_shapes_decorrelate_cleanly(spark):
     """The r4 subquery shapes (q13/q17/q20/q21) must decorrelate into
     broadcast-hash joins — never a cartesian product or nested loop
@@ -494,9 +516,12 @@ def test_materialized_builds_stay_within_job_budget(spark):
     st = spark.sparkContext.statusTracker()
 
     def jobs_of(fn):
-        before = len(st.getJobIdsForGroup(None))
+        # job ids are sequential; count by the newest id, not by how many
+        # the tracker holds — it drops its oldest jobs past
+        # spark.ui.retainedJobs, which can shrink the list mid-build
+        before = max(st.getJobIdsForGroup(None), default=-1)
         out = fn()
-        delta = len(st.getJobIdsForGroup(None)) - before
+        delta = max(st.getJobIdsForGroup(None), default=-1) - before
         release_local_checkpoint(out)
         return delta
 

@@ -17,10 +17,9 @@ benching slower that day. This tool answers it:
    next to recorded per-round numbers (``--recorded label=path``,
    robust to both the parsed-stdout and tail-embedded-sidecar BENCH
    file shapes), with per-entry environment and code factors.
-   ``--twin head_name=base_name`` compares a HEAD-only ``*__rNequiv``
-   sub-plan twin against the base side's full entry — the
-   like-for-like pairing when HEAD's full entry carries newer
-   semantics the base tree didn't have.
+
+The base tree must run the current harness unchanged: its
+``approx_aggs`` must accept ``sketch_only`` (round 12 or later).
 
 History: the round-3 study (base ea28985, full headline set) settled
 the r3 +38 % question as VM drift — see BENCH_ATTRIBUTION.md §1-6 and
@@ -32,7 +31,7 @@ Usage:
     python tools/bench_attribution.py [--pairs 3] [--n 2]
         [--base-commit ea28985] [--sf-dir /root/testdata/sf0.1]
         [--only entry ...] [--recorded label=path ...]
-        [--twin head=base ...] [--out BENCH_ATTRIBUTION.json]
+        [--out BENCH_ATTRIBUTION.json]
 """
 
 from __future__ import annotations
@@ -88,37 +87,31 @@ def load_recorded(path: str) -> dict[str, float]:
     parsed = rec.get("parsed") or {}
     if parsed.get("queries"):
         out.update(parsed["queries"])
-    for blob in (rec, parsed):
-        for k, v in (blob.get("extras") or {}).items():
-            out.setdefault(k, v)
     if not out and "tail" in rec:
-        # r4 shape: find the embedded samples/extras dicts in the tail
+        # r4 shape: find the embedded samples dict in the tail
         tail = rec["tail"]
-        for key in ("extras", "samples"):
-            idx = tail.find(f'\\"{key}\\"')
-            raw = tail.replace("\\\"", "\"") if idx < 0 else tail
-            idx = raw.find(f'"{key}"')
-            if idx < 0:
-                continue
-            start = raw.find("{", idx)
-            depth, end = 0, start
-            for i in range(start, len(raw)):
-                depth += raw[i] == "{"
-                depth -= raw[i] == "}"
-                if depth == 0:
-                    end = i + 1
-                    break
-            else:
-                continue  # truncated mid-dict: skip
-            try:
-                d = json.loads(raw[start:end])
-            except json.JSONDecodeError:
-                continue
-            for name, v in d.items():
-                if isinstance(v, list) and v:
-                    out.setdefault(name, round(statistics.median(v), 3))
-                elif isinstance(v, (int, float)):
-                    out.setdefault(name, v)
+        idx = tail.find('\\"samples\\"')
+        raw = tail.replace("\\\"", "\"") if idx < 0 else tail
+        idx = raw.find('"samples"')
+        if idx < 0:
+            return out
+        start = raw.find("{", idx)
+        depth, end = 0, start
+        for i in range(start, len(raw)):
+            depth += raw[i] == "{"
+            depth -= raw[i] == "}"
+            if depth == 0:
+                end = i + 1
+                break
+        else:
+            return out  # truncated mid-dict
+        try:
+            d = json.loads(raw[start:end])
+        except json.JSONDecodeError:
+            return out
+        for name, v in d.items():
+            if isinstance(v, list) and v:
+                out[name] = round(statistics.median(v), 3)
     return out
 
 
@@ -134,9 +127,6 @@ def main() -> None:
     ap.add_argument("--recorded", action="append", default=[],
                     metavar="LABEL=PATH",
                     help="recorded BENCH_r*.json files to column in")
-    ap.add_argument("--twin", action="append", default=[],
-                    metavar="HEAD=BASE",
-                    help="compare HEAD entry HEAD against base entry BASE")
     ap.add_argument("--out", default=os.path.join(REPO, "BENCH_ATTRIBUTION.json"))
     args = ap.parse_args()
     if not args.recorded:
@@ -146,7 +136,6 @@ def main() -> None:
     for spec in args.recorded:
         label, path = spec.split("=", 1)
         recorded[label] = load_recorded(os.path.join(REPO, path))
-    twins = dict(spec.split("=", 1) for spec in args.twin)
 
     # throwaway worktree at the base code state, with the CURRENT harness
     if os.path.exists(WORKTREE):
@@ -181,31 +170,29 @@ def main() -> None:
 
     rows = []
     for name in sorted(set(pooled["head"]) | set(pooled["base"])):
-        base_name = twins.get(name, name)
         med_h = med("head", name)
-        med_b = med("base", base_name)
+        med_b = med("base", name)
         row = {
             "entry": name,
-            "base_entry": base_name,
-            **{f"{lbl}_recorded": rec.get(base_name)
+            **{f"{lbl}_recorded": rec.get(name)
                for lbl, rec in recorded.items()},
             "basecode_now": med_b,
             "head_now": med_h,
-            "n_samples": {"base": len(pooled["base"].get(base_name) or []),
+            "n_samples": {"base": len(pooled["base"].get(name) or []),
                           "head": len(pooled["head"].get(name) or [])},
             "head_samples": pooled["head"].get(name),
-            "base_samples": pooled["base"].get(base_name),
+            "base_samples": pooled["base"].get(name),
         }
         first = next(iter(recorded.values()), {})
-        if med_b and first.get(base_name):
-            row["env_factor"] = round(med_b / first[base_name], 2)
+        if med_b and first.get(name):
+            row["env_factor"] = round(med_b / first[name], 2)
         if med_b and med_h:
             row["code_factor"] = round(med_h / med_b, 2)
         rows.append(row)
 
     result = {"sf_dir": args.sf_dir, "pairs": args.pairs,
               "n_per_process": args.n, "base_commit": args.base_commit,
-              "only": args.only, "twins": twins, "rows": rows}
+              "only": args.only, "rows": rows}
     with open(args.out, "w") as f:
         json.dump(result, f, indent=2)
     lbls = list(recorded)

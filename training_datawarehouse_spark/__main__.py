@@ -2,7 +2,7 @@
 ``python populate_from_json.py`` (reference :584-608) — but one Spark
 job writing a partitioned warehouse instead of per-row SQLite loops.
 
-    python -m training_datawarehouse_spark DIARY.json OUT_DIR [--sf-cpus N]
+    python -m training_datawarehouse_spark DIARY.json OUT_DIR [--cpus N]
 
 Writes OUT_DIR/facts (partitioned by cell keys, date-sorted),
 OUT_DIR/weekly, OUT_DIR/monthly, and prints per-stage wall-clock —

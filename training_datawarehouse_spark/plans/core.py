@@ -16,8 +16,7 @@ from ..functions.scalars import key_concat, time_dims
 from ..sources.tables import load_table
 
 
-def q1_pricing_summary(spark: SparkSession, sf_dir: str,
-                       include_decimal: bool = True) -> DataFrame:
+def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape: pricing summary report (OP-AGG-2, plain AVG).
 
     r5 adds the DECIMAL(15,2) money twin of the three price sums —
@@ -46,16 +45,13 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str,
         F.round(F.avg("l_extendedprice"), 6).alias("avg_price"),
         F.round(F.avg("l_discount"), 6).alias("avg_disc"),
         F.count(F.lit(1)).alias("count_order"),
+        F.sum(p).cast("decimal(38,2)").cast("string")
+        .alias("dec_sum_base_price"),
+        F.sum(p * (one - dd)).cast("decimal(38,4)").cast("string")
+        .alias("dec_sum_disc_price"),
+        F.sum(p * (one - dd) * (one + t)).cast("decimal(38,6)")
+        .cast("string").alias("dec_sum_charge"),
     ]
-    if include_decimal:
-        aggs += [
-            F.sum(p).cast("decimal(38,2)").cast("string")
-            .alias("dec_sum_base_price"),
-            F.sum(p * (one - dd)).cast("decimal(38,4)").cast("string")
-            .alias("dec_sum_disc_price"),
-            F.sum(p * (one - dd) * (one + t)).cast("decimal(38,6)")
-            .cast("string").alias("dec_sum_charge"),
-        ]
     return (
         li.filter(F.col("l_shipdate") <= cutoff)
         .groupBy("l_returnflag", "l_linestatus")
@@ -328,8 +324,7 @@ GROUP BY 1, 2, 3
 """
 
 
-def string_functions(spark: SparkSession, sf_dir: str,
-                     include_decimal: bool = True) -> DataFrame:
+def string_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar string breadth: case, pad, reverse, substring, and
     levenshtein edit distance (small-string near-dup primitive).
 
@@ -372,15 +367,12 @@ def string_functions(spark: SparkSession, sf_dir: str,
         F.levenshtein(head, F.lit("the quick brown fox ")).alias("edit_dist"),
         z.alias("zval"),
         F.shiftright(z, 16).cast("long").alias("zbucket"),
+        q4.cast("string").alias("dec_q4"),
+        F.round(q4, 2).cast("decimal(17,2)").cast("string")
+        .alias("dec_round_up"),
+        F.bround(q4, 2).cast("decimal(17,2)").cast("string")
+        .alias("dec_round_even"),
     ]
-    if include_decimal:
-        cols += [
-            q4.cast("string").alias("dec_q4"),
-            F.round(q4, 2).cast("decimal(17,2)").cast("string")
-            .alias("dec_round_up"),
-            F.bround(q4, 2).cast("decimal(17,2)").cast("string")
-            .alias("dec_round_even"),
-        ]
     return docs.select(*cols)
 
 
@@ -431,14 +423,13 @@ def _splice_zorder_oracle() -> str:
 STRING_FUNCTIONS_ORACLE = _splice_zorder_oracle()
 
 
-def scalar_breadth(spark: SparkSession, sf_dir: str,
-                   include_decimal: bool = True) -> DataFrame:
+def scalar_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String + array scalar-function breadth in one entry: the
     documents string surface (case/pad/reverse/levenshtein, and from
     r5 the decimal cast/arithmetic/rounding columns) joined to the
     embeddings array surface (higher-order transform/filter/
     aggregate) on the shared id domain (doc_id ≡ vec_id)."""
-    s = string_functions(spark, sf_dir, include_decimal=include_decimal)
+    s = string_functions(spark, sf_dir)
     a = array_ops(spark, sf_dir)
     return s.join(a, s.doc_id == a.vec_id).drop("vec_id")
 

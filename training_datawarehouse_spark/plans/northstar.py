@@ -722,8 +722,7 @@ _RETR_K = 5
 _RRF_DEPTH = 20      # fusion depth: top-20 from each ranking
 
 
-def similarity_topk(spark: SparkSession, sf_dir: str,
-                    include_retrieval: bool = True) -> DataFrame:
+def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retrieval composite (r7): three hash-checked stages on the
     (query_id, rank, neighbor_id, score) grain.
 
@@ -745,17 +744,9 @@ def similarity_topk(spark: SparkSession, sf_dir: str,
     The oracle RE-DERIVES all three rankings — BM25 scores (same
     idf/saturation arithmetic, same 6-dp pre-rank rounding, same
     neighbor-id tie-break), the fusion sum, and the final ranks — so
-    the retrieval math itself is hash-checked.
-    ``include_retrieval=False`` is the r6-equivalent (cosine-only)
-    sub-plan for the bench twin."""
+    the retrieval math itself is hash-checked."""
     emb = load_table(spark, sf_dir, "embeddings")
     qv = emb.filter(F.col("vec_id") < 8)
-    if not include_retrieval:
-        cos = sim.cosine_topk(emb, qv, "vec_id", "embedding", k=_RETR_K)
-        return cos.select(
-            F.lit("cosine").alias("stage"), "query_id", "rank",
-            "neighbor_id", F.col("cosine").alias("score"),
-        )
     # ONE exact-cosine pass serves BOTH vector consumers (r16): the
     # 'cosine' stage needs top-_RETR_K for queries 0..7 and the RRF
     # fusion needs top-_RRF_DEPTH for queries 0.._MLT_N_QUERIES-1 —
@@ -1474,8 +1465,7 @@ _KMEANS_ITERS = 4
 _SEMDEDUP_TAU = 0.4
 
 
-def kmeans_clusters(spark: SparkSession, sf_dir: str,
-                    include_semdedup: bool = True) -> DataFrame:
+def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative algorithm surface: 4 Lloyd's iterations over the
     embeddings (one distributed pass each; only k·dim floats return to
     the driver between iterations), then final cluster sizes + mean
@@ -1494,7 +1484,6 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str,
     sd_* columns — the oracle re-derives all three from its own
     unrolled Lloyd's assignment plus a recursive-closure component
     pass, so the semantic-dedup decision itself is hash-checked.
-    ``include_semdedup=False`` is the r5-equivalent sub-plan.
 
     k is PINNED at 6 here — a bench-scale choice, not the production
     rule: the differential oracle unrolls Lloyd's into static SQL, so
@@ -1535,8 +1524,6 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str,
         F.count(F.lit(1)).alias("n_vectors"),
         F.round(F.avg("d2"), 6).alias("mean_sq_dist"),
     )
-    if not include_semdedup:
-        return stats
     sd = sim.semdedup_stats(assigned, "vec_id", "v", "cluster",
                             threshold=_SEMDEDUP_TAU)
     return stats.join(sd, "cluster", "left").select(
@@ -1705,9 +1692,7 @@ def similarity_ivf(spark: SparkSession, sf_dir: str,
 
 # ------------------------------------------------ multimodal columns
 
-def multimodal_meta(spark: SparkSession, sf_dir: str,
-                    stages: tuple = ("stub", "png", "wav", "jpeg",
-                                     "webp", "avi", "avi_mjpg")) -> DataFrame:
+def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column pipeline end-to-end, tagged by stage:
 
     - 'stub': deterministic fake decode of an opaque payload — the
@@ -1740,11 +1725,7 @@ def multimodal_meta(spark: SparkSession, sf_dir: str,
       parsed frame count, ``format`` the parsed stream fourcc.
 
     Dims/rates derive from the same md5 bytes in every stage, so the
-    whole six-codec pipeline shares one exact SQL oracle.
-
-    ``stages=("stub",)`` is the round-2-equivalent sub-plan (the real
-    codecs landed in round 3), timed under the bench "extras" section
-    so cross-round numbers stay like-for-like."""
+    whole six-codec pipeline shares one exact SQL oracle."""
     from ..operators import multimodal as mm
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1826,12 +1807,10 @@ def multimodal_meta(spark: SparkSession, sf_dir: str,
         .groupBy("format").agg(*agg)
         .select(F.lit("avi_mjpg").alias("stage"), "*")
     )
-    parts = {"stub": stub, "png": png, "wav": wav, "jpeg": jpg,
-             "webp": webp, "avi": avi, "avi_mjpg": avim}
-    out = None
-    for st in stages:
-        out = parts[st] if out is None else out.unionByName(parts[st])
-    return out
+    return (
+        stub.unionByName(png).unionByName(wav).unionByName(jpg)
+        .unionByName(webp).unionByName(avi).unionByName(avim)
+    )
 
 
 # payload = unhex(md5(text)); byte k = hex pair 2k+1..2k+2 of the md5.
@@ -1908,8 +1887,7 @@ FROM hx
 MIXTURE_FRACTIONS = {f"src{i}": ((i % 4) + 1) / 8 for i in range(20)}
 
 
-def split_train_val(spark: SparkSession, sf_dir: str,
-                    include_leakage: bool = True) -> DataFrame:
+def split_train_val(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dataset-composition surface in one entry, tagged by stage:
 
     - 'split': stable 90/5/5 train/val/test membership by md5 of
@@ -1961,8 +1939,6 @@ def split_train_val(spark: SparkSession, sf_dir: str,
     )
 
     base = split.unionByName(ex).unionByName(th)
-    if not include_leakage:
-        return base  # round-4-equivalent sub-plan (bench extras)
 
     grp_w = Window.partitionBy("grp")
     lab = docs.select(
@@ -2096,14 +2072,7 @@ DSIR_TARGET_SOURCES = tuple(f"src{i}" for i in range(20) if i % 4 == 3)
 DSIR_SELECT_FRAC = 0.25
 
 
-def text_profile(spark: SparkSession, sf_dir: str,
-                 include_fingerprint: bool = True,
-                 include_lm: bool = True,
-                 include_bpe: bool = True,
-                 include_dsir: bool = True,
-                 include_lrq: bool = True,
-                 include_ulm: bool = True,
-                 include_wp: bool = True) -> DataFrame:
+def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document text analysis in one entry: lexical stats (token
     counts, TTR, stopwords), BPE-pretokenizer regex token counts, and
     the canonical md5 fingerprint with its dupe-group size — ONE
@@ -2112,8 +2081,6 @@ def text_profile(spark: SparkSession, sf_dir: str,
     window count over the fingerprint, not an aggregate-and-join-back);
     all JVM-side expressions, all values hash-checked. Formerly two
     registry entries (profile + fingerprint); merged onto one scan.
-    ``include_fingerprint=False`` is the round-2-equivalent sub-plan
-    (pre-merge), timed under the bench "extras" section.
 
     r5 adds the corpus-trained bigram-LM quality score
     (``operators/text.py:bigram_lm_scores`` — the KenLM-filter shape:
@@ -2121,8 +2088,7 @@ def text_profile(spark: SparkSession, sf_dir: str,
     broadcast, score each doc's mean smoothed log-probability). The
     DuckDB oracle retrains the identical model and must reproduce the
     score to 1e-6 — model training AND scoring are differentially
-    checked, not just the plumbing. ``include_lm=False`` is the
-    round-4-equivalent sub-plan for the bench extras.
+    checked, not just the plumbing.
 
     r6 adds DSIR data selection (``operators/text.py:dsir_importance``
     — Xie et al. 2023): hashed-bigram importance weights
@@ -2132,15 +2098,13 @@ def text_profile(spark: SparkSession, sf_dir: str,
     the top 25 % per source selected via a PARTITIONED rank window.
     The oracle retrains both models and re-ranks — weights to 1e-6 AND
     the exact per-domain selection set are differentially checked.
-    ``include_dsir=False`` is the round-6-entry equivalent sub-plan.
 
     r6 also adds the TRAINED quality classifier
     (``operators/classifier.py:logreg_quality``): logistic regression
     on the same hashed-bigram features with the same weak provenance
     labels, 3 unrolled full-batch GD epochs (per-epoch 8-dp weight
     rounding — the k-means cross-engine discipline), scored back over
-    every document. The oracle RETRAINS the full descent and re-scores;
-    ``include_lrq=False`` excludes it for the bench twin.
+    every document. The oracle RETRAINS the full descent and re-scores.
 
     r6 adds the distributed BPE subword-tokenizer training stage
     (``operators/bpe.py``): k=8 merges trained on the corpus's
@@ -2151,7 +2115,6 @@ def text_profile(spark: SparkSession, sf_dir: str,
     recursive-CTE stages) — the learned merge sequence is stamped as
     the constant ``bpe_merges`` column so training is checked
     symbol-for-symbol, and ``bpe_n_tokens`` checks the encoding.
-    ``include_bpe=False`` is the round-5-equivalent sub-plan.
 
     r9 adds the SECOND published subword trainer beside BPE: the
     SentencePiece-style unigram LM (``operators/unigram.py``, Kudo
@@ -2162,8 +2125,7 @@ def text_profile(spark: SparkSession, sf_dir: str,
     RETRAINS the EM end-to-end (sliding-window recursive-CTE α/β
     passes per iteration) and the learned model is stamped as the
     constant ``ulm_vocab`` column — piece-for-piece, probability-for-
-    probability. ``include_ulm=False`` is the round-8-equivalent
-    sub-plan.
+    probability.
 
     r10 completes the tokenizer-family triad with WordPiece
     (``operators/wordpiece.py``, Schuster & Nakajima 2012 / the BERT
@@ -2171,8 +2133,7 @@ def text_profile(spark: SparkSession, sf_dir: str,
     ``count(ab)/(count(a)·count(b))`` over ##-prefixed continuation
     symbols, re-encoded per document. The oracle RETRAINS every
     merge (pair + symbol counts, score argmax, the greedy fold) —
-    the learned sequence is the constant ``wp_merges`` column.
-    ``include_wp=False`` is the round-9-equivalent sub-plan."""
+    the learned sequence is the constant ``wp_merges`` column."""
     docs = load_table(spark, sf_dir, "documents")
     t = F.col("text")
     base = docs.select(
@@ -2187,8 +2148,6 @@ def text_profile(spark: SparkSession, sf_dir: str,
         F.size(F.array_distinct(tx.regex_tokens(t))).cast("long").alias("n_bpe_distinct"),
         tx.fingerprint(t).alias("fp"),
     )
-    if not include_fingerprint:
-        return base.drop("fp")
     prof = base.withColumn(
         "group_size",
         F.count(F.lit(1)).over(Window.partitionBy("fp")),
@@ -2222,14 +2181,11 @@ def text_profile(spark: SparkSession, sf_dir: str,
     def _bpe_wp_track():
         _label("BPE/WordPiece track")
         wc = bpe.collect_word_counts(docs, "text")
-        got = {}
-        if include_bpe:
-            got["bpe"] = bpe.train_bpe(docs, "text", num_merges=8,
-                                       word_counts=wc)
-        if include_wp:
-            got["wp"] = wpc.train_wordpiece(docs, "text", num_merges=6,
-                                            word_counts=wc)
-        return got
+        trained_bpe = bpe.train_bpe(docs, "text", num_merges=8,
+                                    word_counts=wc)
+        trained_wp = wpc.train_wordpiece(docs, "text", num_merges=6,
+                                         word_counts=wc)
+        return trained_bpe, trained_wp
 
     def _dsir_track():
         _label("DSIR track")
@@ -2259,58 +2215,41 @@ def text_profile(spark: SparkSession, sf_dir: str,
         )
         return uprobs, usc
 
-    tracks = {}
-    if include_lm:
-        tracks["lm"] = _lm_track
-    if include_bpe or include_wp:
-        tracks["bpe_wp"] = _bpe_wp_track
-    if include_dsir:
-        tracks["dsir"] = _dsir_track
-    if include_lrq:
-        tracks["lrq"] = _lrq_track
-    if include_ulm:
-        tracks["ulm"] = _ulm_track
+    tracks = {"lm": _lm_track, "bpe_wp": _bpe_wp_track,
+              "dsir": _dsir_track, "lrq": _lrq_track, "ulm": _ulm_track}
     built = {}
-    if tracks:
-        with ThreadPoolExecutor(len(tracks)) as ex:
-            futs = {k: ex.submit(fn) for k, fn in tracks.items()}
-            errs = []
-            for k, f in futs.items():
-                try:
-                    built[k] = f.result()
-                except BaseException as e:  # noqa: BLE001
-                    errs.append(e)
-            if errs:
-                # r17 (r16 ADVICE): siblings that already materialized
-                # release their checkpoints before the raise — the
-                # _modality_pairs discipline
-                release_checkpoints_in(built)
-                raise errs[0]
-    if include_lm:
-        prof = prof.join(built["lm"], "doc_id", "left")
-    if include_bpe:
-        vocab, merges = built["bpe_wp"]["bpe"]
-        enc = bpe.encode_token_counts(docs, vocab, "doc_id", "text")
-        prof = prof.join(enc, "doc_id", "left").withColumn(
-            "bpe_merges", F.lit(bpe.merges_tag(merges))
-        )
-    if include_dsir:
-        prof = prof.join(built["dsir"], "doc_id", "left").withColumn(
-            "dsir_selected", F.coalesce("dsir_selected", F.lit(False))
-        )
-    if include_lrq:
-        prof = prof.join(built["lrq"], "doc_id", "left")
-    if include_ulm:
-        uprobs, usc = built["ulm"]
-        prof = prof.join(usc, "doc_id", "left").withColumn(
-            "ulm_vocab", F.lit(ug.vocab_tag(uprobs))
-        )
-    if include_wp:
-        wvocab, wmerges = built["bpe_wp"]["wp"]
-        wenc = wpc.encode_token_counts(docs, wvocab, "doc_id", "text")
-        prof = prof.join(wenc, "doc_id", "left").withColumn(
-            "wp_merges", F.lit(wpc.merges_tag(wmerges))
-        )
+    with ThreadPoolExecutor(len(tracks)) as ex:
+        futs = {k: ex.submit(fn) for k, fn in tracks.items()}
+        errs = []
+        for k, f in futs.items():
+            try:
+                built[k] = f.result()
+            except BaseException as e:  # noqa: BLE001
+                errs.append(e)
+        if errs:
+            # r17 (r16 ADVICE): siblings that already materialized
+            # release their checkpoints before the raise — the
+            # _modality_pairs discipline
+            release_checkpoints_in(built)
+            raise errs[0]
+    (vocab, merges), (wvocab, wmerges) = built["bpe_wp"]
+    prof = prof.join(built["lm"], "doc_id", "left")
+    enc = bpe.encode_token_counts(docs, vocab, "doc_id", "text")
+    prof = prof.join(enc, "doc_id", "left").withColumn(
+        "bpe_merges", F.lit(bpe.merges_tag(merges))
+    )
+    prof = prof.join(built["dsir"], "doc_id", "left").withColumn(
+        "dsir_selected", F.coalesce("dsir_selected", F.lit(False))
+    )
+    prof = prof.join(built["lrq"], "doc_id", "left")
+    uprobs, usc = built["ulm"]
+    prof = prof.join(usc, "doc_id", "left").withColumn(
+        "ulm_vocab", F.lit(ug.vocab_tag(uprobs))
+    )
+    wenc = wpc.encode_token_counts(docs, wvocab, "doc_id", "text")
+    prof = prof.join(wenc, "doc_id", "left").withColumn(
+        "wp_merges", F.lit(wpc.merges_tag(wmerges))
+    )
     return prof
 
 
@@ -2638,9 +2577,7 @@ def normalized_embeddings(frame: DataFrame) -> DataFrame:
 
 
 def similarity_ann(spark: SparkSession, sf_dir: str,
-                   emb: DataFrame | None = None,
-                   include_nnd: bool = True,
-                   include_serve: bool = True) -> DataFrame:
+                   emb: DataFrame | None = None) -> DataFrame:
     """The bucketed/compressed ANN scale paths in one entry, tagged by
     stage and method: sign-LSH (hyperplane buckets), IVF (coarse
     quantizer, 2-probe), and (r8) product-quantization ADC detail rows
@@ -2940,85 +2877,81 @@ def similarity_ann(spark: SparkSession, sf_dir: str,
     # the clustered slice (= ivf) vs the documented structure-free
     # floor (high intrinsic dimension is the family's published weak
     # regime — reported, not hidden).
-    nndq = None
-    serveq = None
-    if include_nnd:
-        graph = nnd_op.nnd_graph(
-            emb, "embedding", "vec_id", k=_NND_K, iters=_NND_ITERS,
-        )
-        try:
-            # queries·k rows — materialize at build (the KMV
-            # discipline: its window never enters the entry's final
-            # plan) and release the graph checkpoint it supersedes
-            nndq = nnd_op.nnd_topk(
-                graph,
-                queries.select(F.col("vec_id").alias("query_id")),
-                _ANN_K,
-            ).select(
-                "query_id", "rank", "neighbor_id",
-                F.col("cos").alias("cosine"),
-            ).localCheckpoint(eager=True)
+    graph = nnd_op.nnd_graph(
+        emb, "embedding", "vec_id", k=_NND_K, iters=_NND_ITERS,
+    )
+    try:
+        # queries·k rows — materialize at build (the KMV
+        # discipline: its window never enters the entry's final
+        # plan) and release the graph checkpoint it supersedes
+        nndq = nnd_op.nnd_topk(
+            graph,
+            queries.select(F.col("vec_id").alias("query_id")),
+            _ANN_K,
+        ).select(
+            "query_id", "rank", "neighbor_id",
+            F.col("cos").alias("cosine"),
+        ).localCheckpoint(eager=True)
 
-            if include_serve:
-                # 'nnd_serve' (r15): the RECOMMENDED serving path
-                # (``nnd_search_hier`` — SCALE.md serve matrix,
-                # ``operators/nndescent.py`` docstring guidance) held
-                # to the same hash bar as the build: a 1/frac
-                # md5-sampled coarse layer gets its own NN-descent
-                # graph, the already-trained IVF quantizer navigates
-                # queries to per-cell layer representatives (coarse
-                # entries), and the two-layer beam descent runs at the
-                # measured knee (4+4 hops, beam 8). The oracle
-                # re-derives layer, coarse graph, entries, and BOTH
-                # descents hop by hop.
-                layer = nnd_op.nnd_sample_layer(
-                    emb, "embedding", "vec_id", frac=_SERVE_FRAC)
-                g1 = nnd_op.nnd_graph(
-                    layer, "embedding", "vec_id",
-                    k=_NND_K, iters=_NND_ITERS)
-                try:
-                    reps = (
-                        cassign.join(
-                            layer.select(
-                                F.col("vec_id").alias("neighbor_id")),
-                            "neighbor_id",
-                        )
-                        .groupBy("list_id")
-                        .agg(F.min("neighbor_id").alias("nid"))
-                    )
-                    entries1 = (
-                        qassign.join(F.broadcast(reps), "list_id")
-                        .select("query_id", "nid")
-                        .distinct()
-                    )
-                    served = nnd_op.nnd_search_hier(
-                        graph, emb, g1, layer,
-                        queries.select(
-                            F.col("vec_id").alias("query_id"),
-                            "embedding"),
-                        k=_SERVE_BEAM, beam=_SERVE_BEAM,
-                        hops0=_SERVE_HOPS, hops1=_SERVE_HOPS,
-                        n_entry=_SERVE_NENTRY, entry_df1=entries1,
-                    )
-                finally:
-                    release_local_checkpoint(g1)
-                # member queries find themselves at cos 1.0 — drop the
-                # self-match and re-rank so recall compares against the
-                # same self-excluded exact top-k every other method uses
-                wsv = Window.partitionBy("query_id").orderBy(
-                    F.col("cos").desc(), "neighbor_id")
-                serveq = (
-                    served.filter(
-                        F.col("neighbor_id") != F.col("query_id"))
-                    .withColumn("rank", F.row_number().over(wsv))
-                    .filter(F.col("rank") <= _ANN_K)
-                    .select("query_id", "rank", "neighbor_id",
-                            F.col("cos").alias("cosine"))
-                    .localCheckpoint(eager=True)
+        # 'nnd_serve' (r15): the RECOMMENDED serving path
+        # (``nnd_search_hier`` — SCALE.md serve matrix,
+        # ``operators/nndescent.py`` docstring guidance) held
+        # to the same hash bar as the build: a 1/frac
+        # md5-sampled coarse layer gets its own NN-descent
+        # graph, the already-trained IVF quantizer navigates
+        # queries to per-cell layer representatives (coarse
+        # entries), and the two-layer beam descent runs at the
+        # measured knee (4+4 hops, beam 8). The oracle
+        # re-derives layer, coarse graph, entries, and BOTH
+        # descents hop by hop.
+        layer = nnd_op.nnd_sample_layer(
+            emb, "embedding", "vec_id", frac=_SERVE_FRAC)
+        g1 = nnd_op.nnd_graph(
+            layer, "embedding", "vec_id",
+            k=_NND_K, iters=_NND_ITERS)
+        try:
+            reps = (
+                cassign.join(
+                    layer.select(
+                        F.col("vec_id").alias("neighbor_id")),
+                    "neighbor_id",
                 )
-                release_local_checkpoint(served)
+                .groupBy("list_id")
+                .agg(F.min("neighbor_id").alias("nid"))
+            )
+            entries1 = (
+                qassign.join(F.broadcast(reps), "list_id")
+                .select("query_id", "nid")
+                .distinct()
+            )
+            served = nnd_op.nnd_search_hier(
+                graph, emb, g1, layer,
+                queries.select(
+                    F.col("vec_id").alias("query_id"),
+                    "embedding"),
+                k=_SERVE_BEAM, beam=_SERVE_BEAM,
+                hops0=_SERVE_HOPS, hops1=_SERVE_HOPS,
+                n_entry=_SERVE_NENTRY, entry_df1=entries1,
+            )
         finally:
-            release_local_checkpoint(graph)
+            release_local_checkpoint(g1)
+        # member queries find themselves at cos 1.0 — drop the
+        # self-match and re-rank so recall compares against the
+        # same self-excluded exact top-k every other method uses
+        wsv = Window.partitionBy("query_id").orderBy(
+            F.col("cos").desc(), "neighbor_id")
+        serveq = (
+            served.filter(
+                F.col("neighbor_id") != F.col("query_id"))
+            .withColumn("rank", F.row_number().over(wsv))
+            .filter(F.col("rank") <= _ANN_K)
+            .select("query_id", "rank", "neighbor_id",
+                    F.col("cos").alias("cosine"))
+            .localCheckpoint(eager=True)
+        )
+        release_local_checkpoint(served)
+    finally:
+        release_local_checkpoint(graph)
 
     ann = (
         lsh.unionByName(ivf)
@@ -3029,12 +2962,9 @@ def similarity_ann(spark: SparkSession, sf_dir: str,
         .unionByName(sq8.withColumn("method", F.lit("sq8")))
         .unionByName(sq8l.withColumn("method", F.lit("sq8l")))
         .unionByName(sq8n.withColumn("method", F.lit("sq8n")))
+        .unionByName(nndq.withColumn("method", F.lit("nnd")))
+        .unionByName(serveq.withColumn("method", F.lit("nnd_serve")))
     )
-    if nndq is not None:
-        ann = ann.unionByName(nndq.withColumn("method", F.lit("nnd")))
-    if serveq is not None:
-        ann = ann.unionByName(
-            serveq.withColumn("method", F.lit("nnd_serve")))
     exact = sim.cosine_topk(emb, queries, "vec_id", "embedding", k=_ANN_K)
 
     topk = ann.select(
@@ -3069,9 +2999,8 @@ def similarity_ann(spark: SparkSession, sf_dir: str,
     )
     methods = spark.createDataFrame(
         [("signlsh",), ("ivf",), ("pq",), ("pq_rr",), ("ivfpq",),
-         ("ivfpq_res",), ("sq8",), ("sq8l",), ("sq8n",)]
-        + ([("nnd",)] if nndq is not None else [])
-        + ([("nnd_serve",)] if serveq is not None else []),
+         ("ivfpq_res",), ("sq8",), ("sq8l",), ("sq8n",), ("nnd",),
+         ("nnd_serve",)],
         "method string",
     )
     grid = queries.select(F.col("vec_id").alias("query_id")).crossJoin(
@@ -3917,7 +3846,7 @@ DOC_SIGNATURES_ORACLE = _doc_signatures_oracle()
 
 
 def image_phash_stage(spark: SparkSession, sf_dir: str,
-                      pairs: DataFrame | None = None) -> DataFrame:
+                      pairs: DataFrame) -> DataFrame:
     """Image-CONTENT near-dup pairs via DCT perceptual hash over REAL
     decoded pixels (`operators/phash.py`): token-grid image → real PNG
     encode → real decode → fixed-point 8×8 DCT → 64-bit pHash →
@@ -3930,22 +3859,9 @@ def image_phash_stage(spark: SparkSession, sf_dir: str,
     ``agree`` mirrors the cross_modal stage's ``cosine ≥ 0.2`` QA bit
     — image-content dup CONFIRMED (or not) by embedding space.
 
-    ``pairs`` lets a caller that computes BOTH modality signatures in
-    one fused crossing (``lsh_cross_modal``) hand the verified pair
-    frame in, the same sharing seam as ``cross_modal_dedup(pairs=)``."""
-    if pairs is None:
-        docs = load_table(spark, sf_dir, "documents")
-        # materialize=True (r16): the operator checkpoints its
-        # rep-grain group table for the three internal consumers (band
-        # explode + both Hamming-verify sides — the group table, one
-        # agg above the signatures, is the real sharing point; the
-        # former signature-level checkpoint still re-derived the group
-        # agg per consumer), materializes the verified pair frame, and
-        # releases the internal checkpoint
-        pairs = ph.phash_candidate_pairs(ph.image_phash_signatures(
-            docs, "doc_id", "text",
-            parallelism=spark.sparkContext.defaultParallelism,
-        ), materialize=True)
+    ``pairs`` is the verified pair frame ``lsh_cross_modal`` builds
+    from its fused codec crossing, the same sharing seam as
+    ``cross_modal_dedup(pairs=)``."""
     emb = load_table(spark, sf_dir, "embeddings")
     v = emb.select("vec_id",
                    F.transform("embedding", lambda x: x.cast("double")).alias("v"))
@@ -3964,7 +3880,7 @@ def image_phash_stage(spark: SparkSession, sf_dir: str,
 
 
 def audio_fp_stage(spark: SparkSession, sf_dir: str,
-                   pairs: DataFrame | None = None) -> DataFrame:
+                   pairs: DataFrame) -> DataFrame:
     """Audio-CONTENT near-dup pairs via Haitsma–Kalker-style spectral
     fingerprints over REALLY-decoded WAV samples
     (`operators/audiofp.py`): token-mixture clip → real 16-bit PCM WAV
@@ -3975,16 +3891,6 @@ def audio_fp_stage(spark: SparkSession, sf_dir: str,
     ``image_phash_stage``: ``jaccard`` carries ``1 − hamming/64``,
     embedding cosine LEFT-joins on, ``agree`` is the ≥ 0.2 QA bit;
     ``pairs`` is the fused-crossing sharing seam."""
-    if pairs is None:
-        docs = load_table(spark, sf_dir, "documents")
-        # same internal group-table materialization as
-        # image_phash_stage (phash_candidate_pairs materialize=True)
-        pairs = ph.phash_candidate_pairs(
-            afp.audio_fingerprint_signatures(
-                docs, "doc_id", "text",
-                parallelism=spark.sparkContext.defaultParallelism,
-            ),
-            max_hamming=afp.DEFAULT_MAX_HAMMING, materialize=True)
     emb = load_table(spark, sf_dir, "embeddings")
     v = emb.select("vec_id",
                    F.transform("embedding", lambda x: x.cast("double")).alias("v"))
@@ -4003,7 +3909,7 @@ def audio_fp_stage(spark: SparkSession, sf_dir: str,
 
 
 def video_fp_stage(spark: SparkSession, sf_dir: str,
-                   pairs: DataFrame | None = None) -> DataFrame:
+                   pairs: DataFrame) -> DataFrame:
     """Video-CONTENT near-dup pairs via per-frame DCT perceptual
     hashes of REALLY container-decoded frames (`operators/video.py`):
     per-frame token-grid rasters → real AVI/DIB encode → real strict
@@ -4015,15 +3921,6 @@ def video_fp_stage(spark: SparkSession, sf_dir: str,
     carries the video score ``n_match / n_frames``, embedding cosine
     LEFT-joins on, ``agree`` is the ≥ 0.2 QA bit; ``pairs`` is the
     shared-crossing seam (a video-grain (id_a, id_b, score) frame)."""
-    if pairs is None:
-        docs = load_table(spark, sf_dir, "documents")
-        # same internal group-table materialization as the image/audio
-        # stages (video_pair_matches materialize=True — passes through
-        # to phash_candidate_pairs and materializes the voting output)
-        pairs = vd.video_pair_matches(vd.video_phash_signatures(
-            docs, "doc_id", "text",
-            parallelism=spark.sparkContext.defaultParallelism,
-        ), materialize=True)
     emb = load_table(spark, sf_dir, "embeddings")
     v = emb.select("vec_id",
                    F.transform("embedding", lambda x: x.cast("double")).alias("v"))
@@ -4041,10 +3938,7 @@ def video_fp_stage(spark: SparkSession, sf_dir: str,
     )
 
 
-def lsh_cross_modal(spark: SparkSession, sf_dir: str,
-                    include_image_stage: bool = True,
-                    include_audio_stage: bool = True,
-                    include_video_stage: bool = True) -> DataFrame:
+def lsh_cross_modal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup candidates (τ=0.5) plus the cross-modal
     agreement pass (τ=0.3 candidates scored by embedding cosine),
     tagged by stage — the candidate stage carries null cosine/agree.
@@ -4054,14 +3948,12 @@ def lsh_cross_modal(spark: SparkSession, sf_dir: str,
     pixels — and the ``audio_fp`` stage — audio-content near-dup
     pairs from spectral fingerprints of REALLY-decoded WAV samples —
     both cross-checked against embedding cosine (see
-    ``image_phash_stage`` / ``audio_fp_stage``). All content flags
-    False is the r8-equivalent plan for the bench twin.
+    ``image_phash_stage`` / ``audio_fp_stage``).
 
     Round 10 (semver 4): + the ``video_fp`` stage — video-content
     near-dup pairs from per-frame pHashes of REALLY
     container-decoded AVI/DIB frames, lifted to video grain by
     temporal-offset voting (see ``video_fp_stage``).
-    ``include_video_stage=False`` is the r9-equivalent twin.
 
     The LSH threshold only gates the final verified-Jaccard filter, so
     ONE candidate pass at τ=0.3 feeds both stages (τ=0.5 is a filter of
@@ -4100,132 +3992,118 @@ def lsh_cross_modal(spark: SparkSession, sf_dir: str,
             rows_per_band=4, jaccard_threshold=0.3, materialize=True,
         )
 
-    def _out_from(pairs: DataFrame) -> DataFrame:
-        cand = pairs.filter(F.col("jaccard") >= 0.5).select(
-            F.lit("candidates").alias("stage"), "id_a", "id_b", "jaccard",
-            F.lit(None).cast("double").alias("cosine"),
-            F.lit(None).cast("int").alias("agree"),
-        )
-        cm = cross_modal_dedup(spark, sf_dir, pairs=pairs).select(
-            F.lit("cross_modal").alias("stage"), "id_a", "id_b", "jaccard",
-            "cosine", "agree",
-        )
-        return cand.unionByName(cm)
+    # all modalities read the same (id, text) rows — fuse the codec
+    # crossings into ONE (scan + repartition + Arrow round trip +
+    # checkpoint paid once), slice back to per-modality signatures, and
+    # hand the verified pair frames to the stages. r10: the video
+    # frames ride the same crossing as 16 vf{f}b{k} columns, exploded
+    # back to frame grain JVM-side before the banded pass.
+    def _modality_pairs():
+        spark.sparkContext.setJobDescription(
+            "lsh_cross_modal: fused codec crossing")
+        fused = afp.fused_multimodal_signatures(
+            docs, "doc_id", "text",
+            parallelism=spark.sparkContext.defaultParallelism,
+            include_video=True,
+        ).localCheckpoint(eager=True)
+        done = []
+        try:
+            isig = fused.select(
+                "id",
+                *[F.col(f"ib{k}").alias(f"b{k}") for k in range(4)])
+            asig = fused.select(
+                "id",
+                *[F.col(f"ab{k}").alias(f"b{k}") for k in range(4)])
+            vsig = fused.select(
+                "id",
+                F.explode(F.array(*[
+                    F.struct(
+                        F.lit(f).alias("frame"),
+                        *[F.col(f"vf{f}b{k}").alias(f"b{k}")
+                          for k in range(4)])
+                    for f in range(vd.N_FRAMES)
+                ])).alias("s"),
+            ).select(
+                "id", "s.frame",
+                *[F.col(f"s.b{k}").alias(f"b{k}") for k in range(4)])
+            # materialize=True (r16): each pair operator checkpoints its
+            # rep-grain group table for its three internal consumers
+            # (band explode + both Hamming-verify sides), materializes
+            # the verified pair frame (video: the voting output), and
+            # releases the internal checkpoint
+            builds = [
+                lambda: ph.phash_candidate_pairs(
+                    isig, materialize=True),
+                lambda: ph.phash_candidate_pairs(
+                    asig, max_hamming=afp.DEFAULT_MAX_HAMMING,
+                    materialize=True),
+                lambda: vd.video_pair_matches(vsig, materialize=True),
+            ]
+            with ThreadPoolExecutor(len(builds)) as ex:
+                futs = [ex.submit(b) for b in builds]
+                # collect every outcome before raising, so a
+                # failed sibling can't leak the materialized ones
+                results, errs = [], []
+                for f in futs:
+                    try:
+                        results.append(f.result())
+                    except BaseException as e:  # noqa: BLE001
+                        errs.append(e)
+                done = list(results)
+                if errs:
+                    raise errs[0]
+        except BaseException:
+            for frame in done:
+                release_local_checkpoint(frame)
+            raise
+        finally:
+            release_local_checkpoint(fused)
+        return tuple(results)
 
-    if include_image_stage and include_audio_stage:
-        # all included modalities read the same (id, text) rows — fuse
-        # the codec crossings into ONE (scan + repartition + Arrow
-        # round trip + checkpoint paid once), slice back to
-        # per-modality signatures, and hand the verified pair frames
-        # to the stages. r10: the video frames ride the same crossing
-        # as 16 vf{f}b{k} columns, exploded back to frame grain
-        # JVM-side before the banded pass.
-        def _modality_pairs():
-            spark.sparkContext.setJobDescription(
-                "lsh_cross_modal: fused codec crossing")
-            fused = afp.fused_multimodal_signatures(
-                docs, "doc_id", "text",
-                parallelism=spark.sparkContext.defaultParallelism,
-                include_video=include_video_stage,
-            ).localCheckpoint(eager=True)
-            done = []
-            try:
-                isig = fused.select(
-                    "id",
-                    *[F.col(f"ib{k}").alias(f"b{k}") for k in range(4)])
-                asig = fused.select(
-                    "id",
-                    *[F.col(f"ab{k}").alias(f"b{k}") for k in range(4)])
-                builds = [
-                    lambda: ph.phash_candidate_pairs(
-                        isig, materialize=True),
-                    lambda: ph.phash_candidate_pairs(
-                        asig, max_hamming=afp.DEFAULT_MAX_HAMMING,
-                        materialize=True),
-                ]
-                if include_video_stage:
-                    vsig = fused.select(
-                        "id",
-                        F.explode(F.array(*[
-                            F.struct(
-                                F.lit(f).alias("frame"),
-                                *[F.col(f"vf{f}b{k}").alias(f"b{k}")
-                                  for k in range(4)])
-                            for f in range(vd.N_FRAMES)
-                        ])).alias("s"),
-                    ).select(
-                        "id", "s.frame",
-                        *[F.col(f"s.b{k}").alias(f"b{k}") for k in range(4)])
-                    builds.append(lambda: vd.video_pair_matches(
-                        vsig, materialize=True))
-                with ThreadPoolExecutor(len(builds)) as ex:
-                    futs = [ex.submit(b) for b in builds]
-                    # collect every outcome before raising, so a
-                    # failed sibling can't leak the materialized ones
-                    results, errs = [], []
-                    for f in futs:
-                        try:
-                            results.append(f.result())
-                        except BaseException as e:  # noqa: BLE001
-                            errs.append(e)
-                    done = list(results)
-                    if errs:
-                        raise errs[0]
-            except BaseException:
-                for frame in done:
+    with ThreadPoolExecutor(2) as ex:
+        f_lsh = ex.submit(_lsh_pairs)
+        f_mm = ex.submit(_modality_pairs)
+        lsh_err = mm_err = None
+        try:
+            pairs = f_lsh.result()
+        except BaseException as e:  # noqa: BLE001
+            lsh_err = e
+        try:
+            ipairs, apairs, vpairs = f_mm.result()
+        except BaseException as e:  # noqa: BLE001
+            mm_err = e
+        if lsh_err is not None or mm_err is not None:
+            if lsh_err is None:
+                release_local_checkpoint(pairs)
+            if mm_err is None:
+                for frame in (ipairs, apairs, vpairs):
                     release_local_checkpoint(frame)
-                raise
-            finally:
-                release_local_checkpoint(fused)
-            if include_video_stage:
-                return results[0], results[1], results[2]
-            return results[0], results[1], None
-
-        with ThreadPoolExecutor(2) as ex:
-            f_lsh = ex.submit(_lsh_pairs)
-            f_mm = ex.submit(_modality_pairs)
-            lsh_err = mm_err = None
-            try:
-                pairs = f_lsh.result()
-            except BaseException as e:  # noqa: BLE001
-                lsh_err = e
-            try:
-                ipairs, apairs, vpairs = f_mm.result()
-            except BaseException as e:  # noqa: BLE001
-                mm_err = e
-            if lsh_err is not None or mm_err is not None:
-                if lsh_err is None:
-                    release_local_checkpoint(pairs)
-                if mm_err is None:
-                    for frame in (ipairs, apairs, vpairs):
-                        if frame is not None:
-                            release_local_checkpoint(frame)
-                raise lsh_err if lsh_err is not None else mm_err
-        out = _out_from(pairs)
-        out = out.unionByName(image_phash_stage(spark, sf_dir, pairs=ipairs))
-        out = out.unionByName(audio_fp_stage(spark, sf_dir, pairs=apairs))
-        if include_video_stage:
-            out = out.unionByName(
-                video_fp_stage(spark, sf_dir, pairs=vpairs))
-        return out
-    out = _out_from(_lsh_pairs())
-    if include_image_stage:
-        out = out.unionByName(image_phash_stage(spark, sf_dir))
-    elif include_audio_stage:
-        out = out.unionByName(audio_fp_stage(spark, sf_dir))
-    if include_video_stage:
-        out = out.unionByName(video_fp_stage(spark, sf_dir))
-    return out
+            raise lsh_err if lsh_err is not None else mm_err
+    cand = pairs.filter(F.col("jaccard") >= 0.5).select(
+        F.lit("candidates").alias("stage"), "id_a", "id_b", "jaccard",
+        F.lit(None).cast("double").alias("cosine"),
+        F.lit(None).cast("int").alias("agree"),
+    )
+    cm = cross_modal_dedup(spark, sf_dir, pairs=pairs).select(
+        F.lit("cross_modal").alias("stage"), "id_a", "id_b", "jaccard",
+        "cosine", "agree",
+    )
+    return (
+        cand.unionByName(cm)
+        .unionByName(image_phash_stage(spark, sf_dir, pairs=ipairs))
+        .unionByName(audio_fp_stage(spark, sf_dir, pairs=apairs))
+        .unionByName(video_fp_stage(spark, sf_dir, pairs=vpairs))
+    )
 
 
 def lsh_cross_modal_xxhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bench-only twin of ``lsh_cross_modal`` on the PRODUCTION hash
+    """Twin of ``lsh_cross_modal`` on the PRODUCTION hash
     family (xxhash64 shingles + murmur3 minhash permutations,
     ``lsh_candidate_pairs``) instead of the md5-portable family the
     oracle-checked registry entry runs. Identical plan shape and
     parameters; only the per-shingle hash cost differs, so timing both
-    separates "cost of the algorithm" from "cost of oracle
-    portability". Not registered: md5 can't be beaten for
+    (``tools/scale100x.py``) separates "cost of the algorithm" from
+    "cost of oracle portability". Not registered: md5 can't be beaten for
     DuckDB-checkability, xxhash64 can't be reproduced there.
 
     r16: the shared candidate pass is materialized (eager

@@ -1602,13 +1602,6 @@ def _cms_bucket_hex(m, j: int):
 
 
 def approx_aggs(spark: SparkSession, sf_dir: str,
-                include_weekly: bool = True,
-                include_exact: bool = True,
-                include_cms: bool = True,
-                include_kmv: bool = True,
-                include_kmv_exact: bool = True,
-                include_qsk: bool = True,
-                include_qsk_exact: bool = True,
                 sketch_only: bool = False) -> DataFrame:
     """Approximate aggregates (SURVEY §2.2 'free in Spark'): HLL++
     distinct counts and quantile sketches per event_type.
@@ -1628,50 +1621,16 @@ def approx_aggs(spark: SparkSession, sf_dir: str,
     a rows-only row. Raw sketch values stay asserted against exact
     recomputation in tests/test_dedup_similarity.py.
 
-    ``include_weekly=False`` drops the round-3 sketch-rollup stage —
-    the round-2-equivalent sub-plan, timed under the bench "extras"
-    section so cross-round numbers stay like-for-like.
-    ``include_exact=False`` additionally drops the exact-twin columns
-    (exact countDistinct + exact percentile bands, which arrived with
-    the hash-checkability redesign, NOT in round 1) — the true
-    ROUND-1-equivalent sub-plan: one sketch-only aggregation. The r6
-    quiet-window attribution study (BENCH_ATTRIBUTION.md §7 addendum)
-    found the ``__r2equiv`` twin was over-counting r1 semantics by
-    exactly this exact-twin cost (~1.6×), which together with VM drift
-    fully explains the face-value "2.46× of r1" the r5 judge flagged.
-    ``include_kmv_exact=False`` (r12) drops the KMV stage's exact-twin
-    apparatus (the distinct-frame self-equi-join — +3.22 s of
-    differential-check machinery production never runs); bench.py
-    times THIS sub-plan under the headline name (semver 5), while the
-    registry builder keeps the twins so the correctness oracle is
-    byte-identical to r11's. ``include_qsk_exact=False`` (r12b) does
-    the same for the quantile-sketch stage's exact-rank twin (a 10×
-    fan-out broadcast-join scan; estimates keep their hash-checked
-    values, the rank twin and its band ride only the registry plan).
-
-    ``sketch_only=True`` (r12b, bench semver 6) is the consistent
-    endpoint of that discipline — measured decomposition showed the
-    REMAINING exact twins were the actual cost (base with kmv/qsk
-    twins off: 5.4 s at sf0.1; the kmv twin itself ≈ 0 after its r11
-    one-pass rework): per_type's exact countDistinct + exact
-    5-rank percentile sort and the weekly exact countDistinct are
-    differential apparatus too. Sketch-only emits every family's
-    ESTIMATE (HLL, merged-weekly HLL, CMS — whose cheap pushed-down
-    8-key exact probe stays — KMV, quantile) and nulls the exact/band
-    columns. The registry plan is untouched: every exact twin and
-    band still rides the correctness oracle."""
-    if sketch_only:
-        include_kmv_exact = False
-        include_qsk_exact = False
+    ``sketch_only=True`` is the production path bench.py times (bench
+    semver 6): the exact twins (per_type's exact countDistinct + exact
+    5-rank percentile sort, the weekly exact countDistinct, the KMV
+    distinct-frame self-equi-join, the quantile-sketch exact-rank
+    fan-out) are differential apparatus production never runs.
+    Sketch-only emits every family's ESTIMATE (HLL, merged-weekly HLL,
+    CMS — whose cheap pushed-down 8-key exact probe stays — KMV,
+    quantile) and nulls the exact/band columns. The registry plan
+    carries every exact twin and band for the correctness oracle."""
     ev = load_table(spark, sf_dir, "events")
-    if not include_exact:
-        return ev.groupBy("event_type").agg(
-            F.approx_count_distinct("user_id", 0.02).alias("approx_users"),
-            F.percentile_approx(
-                "value", [0.5, 0.95, 0.99], 10000
-            ).alias("value_q"),
-            F.count(F.lit(1)).alias("n"),
-        )
     # Distinct counts and percentiles in SEPARATE aggregations (the
     # event_profile lesson, measured again here: fused, the
     # distinct-rewrite Expand triples the rows under the sort-based
@@ -1734,8 +1693,6 @@ def approx_aggs(spark: SparkSession, sf_dir: str,
         F.count(F.lit(1)).alias("n"),
     )
     nb = F.lit(None).cast("boolean")
-    if not include_weekly:
-        return per_type
     if sketch_only:
         weekly = weekly_est.select(
             F.lit("weekly_merge").alias("stage"),
@@ -1777,32 +1734,28 @@ def approx_aggs(spark: SparkSession, sf_dir: str,
             return fn()
         return run
 
-    family = {}
-    if include_cms:
-        family["cms"] = _family("CMS family", lambda: _cms_stages(spark, ev))
-    if include_kmv:
-        family["kmv"] = _family("KMV family", lambda: _kmv_stages(
-            spark, ev, include_exact=include_kmv_exact))
-    if include_qsk:
-        family["qsk"] = _family("quantile-sketch family", lambda: _qsk_stages(
-            spark, ev, include_exact=include_qsk_exact))
-    if family:
-        with ThreadPoolExecutor(len(family)) as ex:
-            futs = {k: ex.submit(fn) for k, fn in family.items()}
-            built, errs = {}, []
-            for k, f in futs.items():
-                try:
-                    built[k] = f.result()
-                except BaseException as e:  # noqa: BLE001
-                    errs.append(e)
-            if errs:
-                # r17 (r16 ADVICE): release successfully built sibling
-                # families' checkpoints before re-raising
-                release_checkpoints_in(built)
-                raise errs[0]
-        for k in ("cms", "kmv", "qsk"):
-            if k in built:
-                out = out.unionByName(built[k])
+    family = {
+        "cms": _family("CMS family", lambda: _cms_stages(spark, ev)),
+        "kmv": _family("KMV family", lambda: _kmv_stages(
+            spark, ev, include_exact=not sketch_only)),
+        "qsk": _family("quantile-sketch family", lambda: _qsk_stages(
+            spark, ev, include_exact=not sketch_only)),
+    }
+    with ThreadPoolExecutor(len(family)) as ex:
+        futs = {k: ex.submit(fn) for k, fn in family.items()}
+        built, errs = {}, []
+        for k, f in futs.items():
+            try:
+                built[k] = f.result()
+            except BaseException as e:  # noqa: BLE001
+                errs.append(e)
+        if errs:
+            # r17 (r16 ADVICE): release successfully built sibling
+            # families' checkpoints before re-raising
+            release_checkpoints_in(built)
+            raise errs[0]
+    for k in ("cms", "kmv", "qsk"):
+        out = out.unionByName(built[k])
     return out
 
 
@@ -2624,8 +2577,7 @@ WINDOW w AS (PARTITION BY activity ORDER BY date)
 """
 
 
-def asof_join_q(spark: SparkSession, sf_dir: str,
-                dirs: tuple = ("bwd", "fwd", "tol", "nst")) -> DataFrame:
+def asof_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-JN-ASOF, tagged by ``dir`` stage (r12 widened to
     backward/forward/tolerance; r13 completes the merge_asof surface
     with 'nearest' — operators/joins.py):
@@ -2667,7 +2619,7 @@ def asof_join_q(spark: SparkSession, sf_dir: str,
 
     spec = {"bwd": ("backward", None), "fwd": ("forward", None),
             "tol": ("backward", 3600.0), "nst": ("nearest", None)}
-    frames = [run(*spec[t], t) for t in dirs]
+    frames = [run(*spec[t], t) for t in spec]
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)
@@ -2978,8 +2930,7 @@ FUNNEL_WITHIN_DAYS = 7
 FUNNEL_TTC_PERCENTILES = (0.5, 0.75, 1.0)
 
 
-def windowed_batch(spark: SparkSession, sf_dir: str,
-                   include_ttc: bool = True) -> DataFrame:
+def windowed_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling + sliding window aggregations in one entry (same
     ``F.window`` expressions the streaming module uses), tagged by
     kind — each grain hash-checked against its time_bucket oracle.
@@ -2996,26 +2947,23 @@ def windowed_batch(spark: SparkSession, sf_dir: str,
     SAME user-grain step frames — no extra event scan), unpivoted as
     (window_start=NULL, event_type='{step}_{name}_p{P}', n=NULL,
     total_value=percentile µs). The oracle re-derives the deltas and
-    quantiles via quantile_cont. ``include_ttc=False`` is the r8-
-    equivalent sub-plan for the bench lineage twin."""
+    quantiles via quantile_cont."""
     from ..operators.funnel import _ttc_col, funnel_counts
 
     t = tumbling_window(spark, sf_dir).withColumn("kind", F.lit("tumbling"))
     s = sliding_window(spark, sf_dir).withColumn("kind", F.lit("sliding"))
-    pcts = FUNNEL_TTC_PERCENTILES if include_ttc else ()
     # persist_steps=True (r16): the funnel frame `fc` is referenced
-    # once per output kind below (1 + len(pcts) union branches), and
-    # the r15 plan showed the whole min-chain statically re-derived
-    # per reference — 30 event scans in one entry, zero
+    # once per output kind below (1 + len(FUNNEL_TTC_PERCENTILES) union
+    # branches), and the r15 plan showed the whole min-chain statically
+    # re-derived per reference — 30 event scans in one entry, zero
     # ReusedExchange. The persist mode materializes the steps-sized
     # count table once (identical rows, parity-pinned by
     # test_funnel.py), so every branch reads that instead of
-    # re-walking the chain; the bench lineage twin `op_funnel_only`
-    # still times the unpersisted operator.
+    # re-walking the chain.
     fc = funnel_counts(
         load_table(spark, sf_dir, "events"),
         FUNNEL_STEPS, within_days=FUNNEL_WITHIN_DAYS,
-        convert_percentiles=pcts, persist_steps=True,
+        convert_percentiles=FUNNEL_TTC_PERCENTILES, persist_steps=True,
     )
     fn = fc.select(
         F.lit(None).cast("timestamp").alias("window_start"),
@@ -3027,7 +2975,7 @@ def windowed_batch(spark: SparkSession, sf_dir: str,
         F.lit("funnel").alias("kind"),
     )
     out = t.unionByName(s).unionByName(fn)
-    for pq in pcts:
+    for pq in FUNNEL_TTC_PERCENTILES:
         out = out.unionByName(fc.select(
             F.lit(None).cast("timestamp").alias("window_start"),
             F.concat(
