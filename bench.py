@@ -24,6 +24,9 @@ the MEDIAN (robust to a load spike in any single sample, unlike the
 former best-of-2's min, which couldn't distinguish VM drift from
 regression). Each run rebuilds the DataFrame fresh — only JVM/cache
 warmth carries between samples, as it would in a long-lived deployment.
+The warm-up absorbs codegen only because ``session.get_spark`` sizes the
+codegen cache to hold each entry's generated classes
+(``session.CODEGEN_CACHE_ENTRIES``).
 """
 
 from __future__ import annotations

@@ -553,3 +553,36 @@ def test_load_quarantined_remote_path_delegates(monkeypatch):
         assert tb.load_quarantined(None, local, None) == ("g", "b")
     assert two_pass == ["/data/in.jsonl", "file:///data/in.jsonl",
                        "rel/p.json"]
+
+
+def test_warm_cli_passes_reuse_generated_code(spark, diary_path, tmp_path):
+    """A CLI pass (E1-E3, cache, warehouse write, weekly and monthly
+    rollup writes) needs more generated classes than Spark's default
+    100-entry codegen cache holds, so with that cache every repeated pass
+    recompiles 120-130 of them. With the cache ``get_spark`` sizes,
+    later passes compile only the stage variants AQE re-plans, up to a few
+    dozen in one pass. The smaller of the third and fourth passes must
+    compile fewer than 64 classes, half of a thrashing pass. The bound
+    does not involve the first pass, so it holds whatever the JVM
+    compiled before this test."""
+    from training_datawarehouse_spark.pipeline import write_warehouse
+
+    metrics = getattr(
+        spark._jvm.org.apache.spark.metrics.source, "CodegenMetrics$"
+    ).__getattr__("MODULE$")
+
+    def compiles() -> int:
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+
+    def cli_pass(out) -> int:
+        before = compiles()
+        facts = run_e3_strain(run_e2_tsb(run_e1_ingest(spark, diary_path))).cache()
+        facts.count()
+        write_warehouse(facts, str(out / "facts"))
+        for period, name in (("year_week", "weekly"), ("year_month", "monthly")):
+            run_e4_rollup(facts, period).write.mode("overwrite").parquet(str(out / name))
+        facts.unpersist()
+        return compiles() - before
+
+    counts = [cli_pass(tmp_path / f"pass{i}") for i in range(4)]
+    assert min(counts[2:]) < 64, counts

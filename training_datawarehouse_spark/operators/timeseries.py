@@ -81,9 +81,13 @@ def interpolate_linear(
 
     Equivalent of pandas ``Series.reindex(date_range).interpolate('linear')``
     (reference :168-171,214-219) as pure window functions: for each row,
-    the previous/next non-null anchors via ``last/first ignorenulls``
-    over unbounded frames, then the lerp
-    ``prev + (next-prev) · Δ(d,prev_d)/Δ(next_d,prev_d)``.
+    the previous/next non-null anchors via ``last ignorenulls`` over a
+    running frame (ascending for prev, descending for next), then the
+    lerp ``prev + (next-prev) · Δ(d,prev_d)/Δ(next_d,prev_d)``. Spark
+    grows an ``unboundedPreceding..current`` frame one row at a time,
+    but re-aggregates a ``current..unboundedFollowing`` frame over the
+    rest of the partition for every row, O(n²) per series; hence the
+    descending running frame for ``next``.
     Pandas' default ``limit_direction='forward'`` forward-fills every
     gap AFTER the last anchor with the last observed value, so trailing
     gaps get ``prev`` here too; only LEADING gaps (no prior anchor) stay
@@ -101,16 +105,16 @@ def interpolate_linear(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     w_fwd = (
-        Window.partitionBy(*keys).orderBy(date_col)
-        .rowsBetween(0, Window.unboundedFollowing)
+        Window.partitionBy(*keys).orderBy(F.col(date_col).desc())
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
     out = dense
     for v in value_cols:
         anchor_d = F.when(F.col(v).isNotNull(), F.col(date_col))
         prev_v = F.last(v, ignorenulls=True).over(w_back)
         prev_d = F.last(anchor_d, ignorenulls=True).over(w_back)
-        next_v = F.first(v, ignorenulls=True).over(w_fwd)
-        next_d = F.first(anchor_d, ignorenulls=True).over(w_fwd)
+        next_v = F.last(v, ignorenulls=True).over(w_fwd)
+        next_d = F.last(anchor_d, ignorenulls=True).over(w_fwd)
         span = F.datediff(next_d, prev_d)
         lerp = prev_v + (next_v - prev_v) * F.datediff(F.col(date_col), prev_d) / span
         interp = (
