@@ -37,18 +37,26 @@ def test_exact_dedup_keeps_first(docs):
 
 
 def test_minhash_lsh_finds_planted_pairs(docs):
-    pairs = dd.lsh_candidate_pairs(docs, "doc_id", "text", num_hashes=32,
-                                   bands=8, rows_per_band=4,
-                                   jaccard_threshold=0.5)
+    """The materialized path (the one ns_dedup_lsh_cross_modal runs)
+    finds the planted exact and near duplicates."""
+    from training_datawarehouse_spark.functions.caching import (
+        release_local_checkpoint,
+    )
+
+    pairs = dd.lsh_candidate_pairs_portable(docs, "doc_id", "text",
+                                            num_hashes=32, bands=8,
+                                            rows_per_band=4,
+                                            jaccard_threshold=0.5,
+                                            materialize=True)
     got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
+    release_local_checkpoint(pairs)
     assert got.get((10, 50)) == pytest.approx(1.0)
     assert (11, 51) in got and got[(11, 51)] > 0.8
 
 
 def test_minhash_lsh_portable_matches_planted_pairs(docs):
-    """The engine-portable md5 family must find the same planted
-    near-dups as the xxhash64 family (families differ, exact-Jaccard
-    verification makes the output hash-family-independent)."""
+    """The lazy plan finds the planted exact and near duplicates
+    (exact-Jaccard verification makes the scores hash-independent)."""
     pairs = dd.lsh_candidate_pairs_portable(docs, "doc_id", "text", num_hashes=32,
                                             bands=8, rows_per_band=4,
                                             jaccard_threshold=0.5)
@@ -82,11 +90,12 @@ def test_ngram_jaccard_exact_pairs(docs):
 
 
 def test_simhash_near_dup_small_hamming(docs, spark):
-    hashes = {r["id"]: r["simhash"] for r in dd.simhash64(docs, "doc_id", "text").collect()}
+    hashes = {r["id"]: int(r["simhash_hex"], 16) for r in
+              dd.simhash_hex_portable(docs, "doc_id", "text").collect()}
     assert hashes[10] == hashes[50]  # identical docs → identical simhash
 
     def hamming(a, b):
-        return bin((a ^ b) & ((1 << 64) - 1)).count("1")
+        return bin(a ^ b).count("1")
 
     near = hamming(hashes[11], hashes[51])
     far = [hamming(hashes[11], hashes[i]) for i in range(10)]
@@ -410,7 +419,8 @@ def test_winnowing_guarantee(docs, spark):
     """Winnowing's core guarantee: docs sharing a substring of length
     >= k + window - 1 tokens share at least one fingerprint; identical
     docs share ALL fingerprints."""
-    fps = dd.winnowing_fingerprints(docs, "doc_id", "text", k=4, window=5)
+    fps = dd.winnowing_fingerprints_portable(docs, "doc_id", "text",
+                                             k=4, window=5)
     by_doc = {}
     for r in fps.collect():
         by_doc.setdefault(r["doc_id"], set()).add(r["fp"])
@@ -554,7 +564,8 @@ def test_lsh_probe_index_hot_bucket_cap(spark):
     """An ingest batch flooded with one degenerate signature must not
     expand quadratically: with max_bucket below the flood size the
     in-batch path drops the hot bucket (same guard as
-    lsh_candidate_pairs), while distinct small-bucket pairs survive."""
+    lsh_candidate_pairs_portable), while distinct small-bucket pairs
+    survive."""
     from training_datawarehouse_spark.operators.dedup import (
         lsh_band_index,
         lsh_probe_index,

@@ -157,30 +157,53 @@ def test_train_wordpiece_word_counts_injection_parity(docs):
     assert sorted(map(tuple, w1.collect())) == sorted(map(tuple, w2.collect()))
 
 
+def _persistent_rdd_ids(spark):
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in jmap.keySet().toArray()}
+
+
+def _materialize_keeps_only_output(spark, build):
+    """Run a ``materialize=True`` build; assert the only RDD it leaves
+    persisted is the returned pair frame's, and that releasing that
+    frame leaves none. Returns the collected rows."""
+    from training_datawarehouse_spark.functions.caching import (
+        release_local_checkpoint,
+    )
+
+    before = _persistent_rdd_ids(spark)
+    out = build()
+    assert len(_persistent_rdd_ids(spark) - before) == 1
+    rows = out.collect()
+    release_local_checkpoint(out)
+    assert not _persistent_rdd_ids(spark) - before
+    return rows
+
+
 def test_lsh_pair_materialize_parity(spark):
     """materialize=True must return the identical pair set (it only
-    changes WHERE the shared signature table is computed), release its
-    internal checkpoint, and work for both hash families."""
+    changes WHERE the shared signature table is computed) and release
+    its internal checkpoint."""
     from training_datawarehouse_spark.operators import dedup as dd
 
     rows = [(i, f"tok{i % 7} tok{(i + 1) % 7} tok{(i + 2) % 7} "
                 f"w{i % 3} w{(i + 1) % 3} filler{i % 11}")
             for i in range(60)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    for fn in (dd.lsh_candidate_pairs, dd.lsh_candidate_pairs_portable):
-        lazy = fn(docs, "doc_id", "text", num_hashes=8, bands=4,
-                  rows_per_band=2, jaccard_threshold=0.2).collect()
-        mat = fn(docs, "doc_id", "text", num_hashes=8, bands=4,
-                 rows_per_band=2, jaccard_threshold=0.2,
-                 materialize=True).collect()
-        assert sorted(map(tuple, lazy)) == sorted(map(tuple, mat)), fn
+    kw = dict(num_hashes=8, bands=4, rows_per_band=2, jaccard_threshold=0.2)
+    lazy = dd.lsh_candidate_pairs_portable(docs, "doc_id", "text",
+                                           **kw).collect()
+    mat = _materialize_keeps_only_output(
+        spark, lambda: dd.lsh_candidate_pairs_portable(
+            docs, "doc_id", "text", materialize=True, **kw))
+    assert sorted(map(tuple, lazy)) == sorted(map(tuple, mat))
 
 
 def test_phash_pair_materialize_and_fused_expansion_parity(spark):
     """The fused within/across pair expansion + materialize=True must
     reproduce the two-branch union's pair multiset exactly, for both
     cap grains, including a planted identical-fingerprint group (the
-    within-group C(g,2) path) and near-dup reps (the across path)."""
+    within-group C(g,2) path) and near-dup reps (the across path), and
+    release its internal checkpoint."""
     from training_datawarehouse_spark.operators import phash as ph
 
     rows = []
@@ -193,8 +216,9 @@ def test_phash_pair_materialize_and_fused_expansion_parity(spark):
         rows, "id long, b0 int, b1 int, b2 int, b3 int")
     for grain in ("doc", "rep"):
         lazy = ph.phash_candidate_pairs(sig, cap_grain=grain).collect()
-        mat = ph.phash_candidate_pairs(
-            sig, cap_grain=grain, materialize=True).collect()
+        mat = _materialize_keeps_only_output(
+            spark, lambda: ph.phash_candidate_pairs(
+                sig, cap_grain=grain, materialize=True))
         assert sorted(map(tuple, lazy)) == sorted(map(tuple, mat)), grain
         assert len(lazy) > 0
 

@@ -4,7 +4,7 @@ to the MinHash-LSH dedup family in round 6 per VERDICT r5 task 3).
 Extends tools/scale10x.py's replica method by another decade for the
 scan-agg (tpch_q1), exact-dedup (ns_dedup_exact), as-of-join
 (op_jn_asof) families plus — r6 — the full MinHash-LSH cross-modal
-pipeline (the registry md5 family AND the production xxhash64 twin,
+pipeline (the registry entry's md5 family,
 ~500 k documents at 100×, near-dup density kept linear by the same
 9-of-10 per-copy perturbation rule: text suffixes for documents,
 vector rotations for embeddings, vec_id shifted by DOCUMENTS' row
@@ -194,9 +194,7 @@ def main() -> None:
         def __init__(self, builder):
             self.builder = builder
 
-    from training_datawarehouse_spark.plans.northstar import (
-        DSIR_TARGET_SOURCES, lsh_cross_modal_xxhash,
-    )
+    from training_datawarehouse_spark.plans.northstar import DSIR_TARGET_SOURCES
     from training_datawarehouse_spark.operators.classifier import (
         logreg_quality,
     )
@@ -222,9 +220,6 @@ def main() -> None:
         )
 
     under_test = [(n, QUERIES[n]) for n in QUERIES_UNDER_TEST]
-    under_test.append(
-        ("ns_dedup_lsh_xxhash64", _Q(lsh_cross_modal_xxhash))
-    )
     under_test += [("lrq_fit_score", _Q(_lrq)), ("dsir_select", _Q(_dsir))]
     names = [a for a in sys.argv[1:] if not a.startswith("-")]
     if names:
@@ -2076,33 +2071,21 @@ def funnel_probe(spark) -> None:
 def bucket_stats(spark) -> None:
     """Hot-bucket cap behavior at both scales: the LSH in-bucket pair
     expansion is quadratic in bucket size, bounded by the max_bucket
-    cap (operators/dedup.py lsh_candidate_pairs). This probe rebuilds
-    just the signature->band->bucket stage (xxhash64 family, the
-    production parameters: 32 hashes, 8 bands of 4 rows) and records
-    the bucket-size distribution — the quantity the cap governs."""
+    cap (operators/dedup.py lsh_candidate_pairs_portable). This probe
+    builds the same band rows with ``lsh_band_index`` (md5 family, the
+    registry entry's parameters: 32 hashes, 8 bands of 4 rows) and
+    records the bucket-size distribution — the quantity the cap
+    governs."""
     from training_datawarehouse_spark.operators import dedup as dd
     from training_datawarehouse_spark.sources.tables import load_table
 
-    num_hashes, bands, rows_per_band, cap = 32, 8, 4, 10_000
+    cap = 10_000
     for sf_dir, label in ((SRC, "sf0.1"), (DST, "100x")):
         docs = load_table(spark, sf_dir, "documents")
-        sh = dd.hashed_shingles(docs, "doc_id", "text", 3)
-        mins = [F.min(F.hash("g", F.lit(i))).alias(f"h{i}")
-                for i in range(num_hashes)]
-        per_doc = sh.groupBy("doc_id").agg(*mins)
-        band_structs = F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(*[
-                    F.col(f"h{b * rows_per_band + j}")
-                    for j in range(rows_per_band)
-                ]).alias("sig"),
-            )
-            for b in range(bands)
-        ])
         sizes = (
-            per_doc.select(F.explode(band_structs).alias("bs"))
-            .groupBy("bs.band", "bs.sig")
+            dd.lsh_band_index(docs, "doc_id", "text", num_hashes=32,
+                              bands=8, rows_per_band=4)
+            .groupBy("band", "sig")
             .agg(F.count(F.lit(1)).alias("sz"))
             .filter(F.col("sz") > 1)
         )

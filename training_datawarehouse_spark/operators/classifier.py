@@ -57,7 +57,7 @@ def logreg_quality(
     Returns (id_col, lrq_score, lrq_pred): σ(w·x) rounded 1e-6 and the
     ≥0.5 decision ON THE ROUNDED SCORE (so the threshold compares
     identical values in both engines). md5 feature buckets keep the
-    oracle in DuckDB; production swaps xxhash64.
+    oracle in DuckDB.
     """
     bias_bkt = n_buckets  # one extra slot: the always-on bias feature
 

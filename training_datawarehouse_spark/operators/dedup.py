@@ -1,22 +1,23 @@
 """Deduplication operators for training-data pipelines (charter
 extensions; no reference implementation — SURVEY §2.2).
 
-All variants are compositions of built-in expressions — no Python UDFs:
+All variants are compositions of built-in expressions — no Python UDFs.
+Every near-dup hash is md5-derived (the engine-portable family below),
+so a DuckDB oracle can reproduce each of them bit-for-bit:
 
 - ``exact_dedup``: min_by hash aggregate keyed on the content hash.
   One shuffle; at 100 TB the md5 key distributes uniformly so no skew.
-- ``hashed_shingles``: the shared shingling kernel — row-local
-  split → transform(sequence) → explode → one xxhash64; no shuffle,
-  shingles ride downstream exchanges as 8-byte longs.
-- ``minhash_signatures`` + ``lsh_candidate_pairs``: k seeded murmur3
-  minima per doc; banded LSH buckets expanded in-bucket (no self-join),
-  hot buckets capped, candidates broadcast into exact-Jaccard
-  verification over the shingle sets produced by the SAME groupBy pass
-  as the signatures.
-- ``simhash``: 64-bit SimHash from xxhash64 token hashes — per-bit
-  weighted majority via explode + 64 conditional sums.
-- ``winnowing_fingerprints``: rolling-hash window minima (MOSS) — the
-  containment-detection complement to MinHash resemblance.
+- ``hashed_shingles_portable``: the shared shingling kernel — row-local
+  split → transform(sequence) → explode → one md5 per gram; no shuffle,
+  shingles ride downstream exchanges as two 60-bit longs.
+- ``lsh_candidate_pairs_portable``: k universal-hash minima per doc;
+  banded LSH buckets expanded in-bucket (no self-join), hot buckets
+  capped, candidates broadcast into exact-Jaccard verification over
+  the shingle sets produced by the SAME groupBy pass as the signatures.
+- ``simhash_hex_portable``: 64-bit SimHash from md5 token hashes —
+  per-bit weighted majority via explode + 64 conditional sums.
+- ``winnowing_fingerprints_portable``: rolling-hash window minima
+  (MOSS) — the containment-detection complement to MinHash resemblance.
 - ``ngram_jaccard_pairs``: exact all-pairs n-gram Jaccard via shingle
   posting lists — quadratic in posting-list length; the scale path is
   LSH above, this is the exact verifier (and the DuckDB-oracled one).
@@ -24,7 +25,6 @@ All variants are compositions of built-in expressions — no Python UDFs:
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -72,7 +72,7 @@ def _gram_stream(
     strictly worse at scale.) The explode's Generate node is also an
     optimizer barrier: CollapseProject cannot inline the gram
     construction into each downstream hash expression (the hazard the
-    ``minhash_signatures`` docstring describes).
+    ``lsh_candidate_pairs_portable`` docstring describes).
 
     Duplicate shingles are removed PER DOCUMENT before the explode
     (``array_distinct`` — row-local, so it costs no shuffle): every
@@ -96,31 +96,16 @@ def _gram_stream(
     return toks.select(F.col(id_col), F.explode(F.expr(grams)).alias("__gram"))
 
 
-def hashed_shingles(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int = 3
-) -> DataFrame:
-    """(id, g) — one row per word-shingle occurrence, as a 64-bit
-    ``xxhash64`` of the gram string (tokens cannot contain the space
-    delimiter, so the join is unambiguous). Fully row-local — see
-    ``_gram_stream``."""
-    return _gram_stream(df, id_col, text_col, shingle_n).select(
-        id_col, F.xxhash64("__gram").alias("g")
-    )
-
-
 # ------------------------------------------------------------------
 # Engine-portable hash family (differential-oracle support).
 #
-# xxhash64/murmur3 are Spark-native and fast but exist in no other
-# engine, so queries built on them can only ever get a rows-only check.
-# The portable family below uses ONE md5 per shingle (md5 exists in
-# every engine) split into two 60-bit integers, then k universal
-# hashes h_i(g) = (a_i·x + b_i·y + i) mod P over those integers —
-# pure 64-bit-safe integer arithmetic any SQL engine reproduces
-# bit-for-bit. Cost vs the native family is one md5 instead of one
-# xxhash64 per shingle; the plan shape (and every scale property) is
-# identical, so the portable family is the registry default and the
-# xxhash64 family remains for hot paths that don't need an oracle.
+# Spark-native hashes (xxhash64, murmur3) exist in no other engine, so
+# queries built on them could only ever get a rows-only check. This
+# family uses ONE md5 per shingle (md5 exists in every engine) split
+# into two 60-bit integers, then k universal hashes
+# h_i(g) = (a_i·x + b_i·y + i) mod P over those integers — pure
+# 64-bit-safe integer arithmetic any SQL engine reproduces
+# bit-for-bit. It is the only near-dup hash family in this module.
 
 _LSH_P = 2_147_483_647  # 2^31 − 1 (Mersenne prime)
 
@@ -144,8 +129,9 @@ def hashed_shingles_portable(
     """(id, g1, g2) — one row per word-shingle occurrence as two 60-bit
     md5-prefix integers (hex chars 1-15 and 17-31 of md5(gram)).
 
-    Same row-local kernel as ``hashed_shingles`` (``_gram_stream``:
-    split → transform → explode, no shuffle); ``conv(hex,16,10)`` turns
+    Fully row-local (``_gram_stream``: split → transform → explode, no
+    shuffle; tokens cannot contain the space delimiter, so the gram
+    string is unambiguous); ``conv(hex,16,10)`` turns
     the prefixes into longs identically to DuckDB's
     ``('0x' || substr(md5(g),1,15))::BIGINT``."""
     grams = _gram_stream(df, id_col, text_col, shingle_n).select(
@@ -169,64 +155,11 @@ def _portable_min_exprs(num_hashes: int) -> list[Column]:
     ]
 
 
-def _release_internal(frame: DataFrame, internal_storage: str) -> None:
-    """Free a materialized internal table built under either
-    ``internal_storage`` mode (see ``lsh_candidate_pairs_portable``)."""
-    if internal_storage == "persist":
-        frame.unpersist()
-    else:
-        release_local_checkpoint(frame)
-
-
-def lsh_candidate_pairs_portable(
-    df: DataFrame, id_col: str, text_col: str,
-    num_hashes: int = 32, bands: int = 8, rows_per_band: int = 4,
-    jaccard_threshold: float = 0.5, shingle_n: int = 3,
-    max_bucket: int = 10_000,
-    materialize: bool = False,
-    internal_storage: str = "checkpoint",
-) -> DataFrame:
-    """``lsh_candidate_pairs`` on the engine-portable hash family —
-    identical plan shape (one groupBy(id) for signature AND shingle
-    set, banded bucket expansion with hot-bucket cap, broadcast
-    candidates into exact-Jaccard verification), but every hash is
-    md5-derived so a DuckDB oracle reproduces the full pipeline
-    bit-for-bit (see plans/northstar.py). Jaccard is computed over the
-    60-bit g1 shingle ids in BOTH engines, so even a prefix collision
-    cannot diverge them.
-
-    ``materialize=True`` (r16): materializes the shared
-    (signature + shingle-set) table for its THREE consumers (band
-    explode and both Jaccard-verify sides — without it each consumer
-    statically re-derives the whole shingle→md5→aggregate pipeline;
-    the r16 plan audit measured zero exchange reuse across them),
-    materializes the returned pair frame, and releases the internal
-    table. Identical rows either way.
-
-    ``internal_storage`` (r17, r16 verdict #1): the internal table is
-    CORPUS-SIZED (minhash signature + shingle set per document).
-    ``"persist"`` stores it as a MEMORY_AND_DISK cache — lineage kept
-    (an executor loss recomputes instead of failing the job), spill
-    by policy — with an eager count. MEASURED at sf0.1: the columnar
-    cache build/read of the shingle-set arrays costs 15–30 % on this
-    entry (persist 4.8–5.6 s vs checkpoint 4.0–4.4 s warm, same
-    session), outside the verdict's own ±10 % acceptance, so
-    ``"checkpoint"`` (the r16 localCheckpoint) stays the default;
-    deployments where executor loss is routine should pass
-    ``"persist"`` and pay the measured premium. The bounded
-    (id, id, jaccard) pair frame always uses ``localCheckpoint``."""
-    sh = hashed_shingles_portable(df, id_col, text_col, shingle_n)
-    per_doc = sh.groupBy(id_col).agg(
-        *_portable_min_exprs(num_hashes), F.collect_set("g1").alias("sh")
-    )
-    if materialize:
-        if internal_storage == "persist":
-            per_doc = per_doc.persist(StorageLevel.MEMORY_AND_DISK)
-            per_doc.count()
-        else:
-            per_doc = per_doc.localCheckpoint(eager=True)
-
-    band_structs = F.array(*[
+def _band_structs(bands: int, rows_per_band: int) -> Column:
+    """``bands`` (band, sig) structs over the h0..h{k-1} minhash
+    columns: sig is the band's ``rows_per_band`` minima joined with
+    '|' — the same string DuckDB's ``concat_ws`` builds."""
+    return F.array(*[
         F.struct(
             F.lit(b).alias("band"),
             F.concat_ws("|", *[
@@ -236,78 +169,14 @@ def lsh_candidate_pairs_portable(
         )
         for b in range(bands)
     ])
-    banded = per_doc.select(
-        F.col(id_col).alias("bid"), F.explode(band_structs).alias("bs")
-    ).select("bid", F.col("bs.band"), F.col("bs.sig"))
-
-    cand = (
-        banded.groupBy("band", "sig")
-        .agg(F.array_sort(F.collect_list("bid")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
-        .select(F.explode(_pairs_expr("ids")).alias("p"))
-        .select(F.col("p.id_a"), F.col("p.id_b"))
-        .distinct()
-    )
-
-    sets = per_doc.select(F.col(id_col).alias("id"), "sh")
-    verified = (
-        sets.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a")
-        .join(F.broadcast(cand), "id_a")
-        .join(
-            sets.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"),
-            "id_b",
-        )
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    out = (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    if not materialize:
-        return out
-    try:
-        out = out.localCheckpoint(eager=True)
-    except BaseException:
-        _release_internal(per_doc, internal_storage)
-        raise
-    _release_internal(per_doc, internal_storage)
-    return out
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 32, shingle_n: int = 3
-) -> DataFrame:
-    """(id, minhash array<int>[num_hashes]) per document.
-
-    Hash family: murmur3 with seed-chaining — ``F.hash(g, lit(i))`` is
-    an independent-enough family and stays JVM-side.
-
-    Formulated as explode → groupBy(id) → k ``min`` aggregates rather
-    than ``array_min(transform(...))`` columns: the Aggregate is an
-    optimizer barrier (CollapseProject would otherwise inline the whole
-    shingle construction into EACH of the k hash expressions — measured
-    ~5× slowdown), and partial map-side mins mean the shuffle carries
-    one slim row per (mapper, doc), which is the shape that survives
-    100 TB. Docs with fewer than ``shingle_n`` tokens have no shingles
-    and drop out (they cannot be near-dups at this shingle size).
-    """
-    sh = hashed_shingles(df, id_col, text_col, shingle_n)
-    mins = [F.min(F.hash("g", F.lit(i))).alias(f"h{i}") for i in range(num_hashes)]
-    agg = sh.groupBy(id_col).agg(*mins)
-    return agg.select(
-        id_col, F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("minhash")
-    )
-
-
-def lsh_candidate_pairs(
+def lsh_candidate_pairs_portable(
     df: DataFrame, id_col: str, text_col: str,
     num_hashes: int = 32, bands: int = 8, rows_per_band: int = 4,
     jaccard_threshold: float = 0.5, shingle_n: int = 3,
     max_bucket: int = 10_000,
     materialize: bool = False,
-    internal_storage: str = "checkpoint",
 ) -> DataFrame:
     """Banded-LSH near-dup pairs verified with exact shingle Jaccard.
 
@@ -317,35 +186,43 @@ def lsh_candidate_pairs(
     shuffle of slim (band, sig, id) triples, no self-join) → distinct
     pairs → join shingle sets for the exact-Jaccard verification (only
     candidate pairs ever carry shingle arrays through a shuffle).
+    Every hash is md5-derived, so a DuckDB oracle reproduces the full
+    pipeline bit-for-bit (see plans/northstar.py). Jaccard is computed
+    over the 60-bit g1 shingle ids in BOTH engines, so even a prefix
+    collision cannot diverge them.
 
-    ``materialize=True``: see ``lsh_candidate_pairs_portable`` — the
-    same three-consumer signature-table materialization, same
-    identical-rows contract.
-    """
-    sh = hashed_shingles(df, id_col, text_col, shingle_n)
+    Signatures are formulated as explode → groupBy(id) → k ``min``
+    aggregates rather than ``array_min(transform(...))`` columns: the
+    Aggregate is an optimizer barrier (CollapseProject would otherwise
+    inline the whole shingle construction into EACH of the k hash
+    expressions — measured ~5× slowdown), and partial map-side mins
+    mean the shuffle carries one slim row per (mapper, doc), which is
+    the shape that survives 100 TB. Docs with fewer than ``shingle_n``
+    tokens have no shingles and drop out (they cannot be near-dups at
+    this shingle size).
+
+    ``materialize=True`` (r16): materializes the shared
+    (signature + shingle-set) table for its THREE consumers (band
+    explode and both Jaccard-verify sides — without it each consumer
+    statically re-derives the whole shingle→md5→aggregate pipeline;
+    the r16 plan audit measured zero exchange reuse across them) with
+    ``localCheckpoint``, materializes the returned pair frame the same
+    way, and releases the internal table. Identical rows either way.
+    The internal table is corpus-sized and its lineage is truncated,
+    so losing an executor fails the job."""
+    sh = hashed_shingles_portable(df, id_col, text_col, shingle_n)
     # ONE groupBy(id) produces both the k-min signature and the exact
     # shingle set — signature banding and the later Jaccard verification
-    # share a single shuffle over slim (id, g) longs.
-    mins = [F.min(F.hash("g", F.lit(i))).alias(f"h{i}") for i in range(num_hashes)]
-    per_doc = sh.groupBy(id_col).agg(*mins, F.collect_set("g").alias("sh"))
+    # share a single shuffle over slim (id, g1, g2) longs.
+    per_doc = sh.groupBy(id_col).agg(
+        *_portable_min_exprs(num_hashes), F.collect_set("g1").alias("sh")
+    )
     if materialize:
-        if internal_storage == "persist":
-            per_doc = per_doc.persist(StorageLevel.MEMORY_AND_DISK)
-            per_doc.count()
-        else:
-            per_doc = per_doc.localCheckpoint(eager=True)
+        per_doc = per_doc.localCheckpoint(eager=True)
 
-    band_structs = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(*[
-                F.col(f"h{b * rows_per_band + j}") for j in range(rows_per_band)
-            ]).alias("sig"),
-        )
-        for b in range(bands)
-    ])
     banded = per_doc.select(
-        F.col(id_col).alias("bid"), F.explode(band_structs).alias("bs")
+        F.col(id_col).alias("bid"),
+        F.explode(_band_structs(bands, rows_per_band)).alias("bs"),
     ).select("bid", F.col("bs.band"), F.col("bs.sig"))
 
     # In-bucket pair expansion is quadratic in bucket size. A bucket
@@ -386,10 +263,8 @@ def lsh_candidate_pairs(
         return out
     try:
         out = out.localCheckpoint(eager=True)
-    except BaseException:
-        _release_internal(per_doc, internal_storage)
-        raise
-    _release_internal(per_doc, internal_storage)
+    finally:
+        release_local_checkpoint(per_doc)
     return out
 
 
@@ -405,57 +280,6 @@ def _pairs_expr(ids: str) -> Column:
             ),
         )
     )
-
-
-def winnowing_fingerprints(
-    df: DataFrame, id_col: str, text_col: str, k: int = 4, window: int = 5
-) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken's
-    MOSS scheme): rolling k-gram hashes → per-position minimum over a
-    ``window``-wide frame → distinct minima per document.
-
-    Guarantees: any shared substring of length ≥ k + window − 1 between
-    two documents yields at least one shared fingerprint, and
-    fingerprint density is ~2/(window+1) of positions — a tunable
-    size/recall knob for plagiarism-style containment detection
-    (complementary to MinHash, which measures whole-set resemblance).
-
-    Fully row-local: gram hashes, the rolling window minima, and the
-    per-document fingerprint dedup are all array expressions over the
-    token array — the ONLY shuffle in the whole operator is the final
-    (id, fp) distinct, and it ships two longs per fingerprint. (The
-    per-position ``array_min(slice(...))`` is O(n·window) per doc, the
-    same work the frame-based window minimum does, without the
-    shuffle+sort of every token row that a window would need.)
-    """
-    return _winnow(df, id_col, text_col, k, window, "xxhash64(g)")
-
-
-def _winnow(
-    df: DataFrame, id_col: str, text_col: str, k: int, window: int,
-    hash_sql: str,
-) -> DataFrame:
-    """Shared winnowing kernel: ``hash_sql`` maps a gram string ``g``
-    to a BIGINT inside a SQL lambda."""
-    toks = df.select(
-        F.col(id_col), F.split(F.col(text_col), " ").alias("__tk")
-    ).filter(F.size("__tk") >= k)
-    parts = ", ".join(
-        "__tk[i]" if j == 0 else f"__tk[i + {j}]" for j in range(k)
-    )
-    gh = (
-        f"transform(sequence(0, size(__tk) - {k}), "
-        f"i -> concat_ws(' ', {parts}))"
-    )
-    gh = f"transform({gh}, g -> {hash_sql})"
-    staged = toks.select(F.col(id_col), F.expr(gh).alias("__gh"))
-    fps = (
-        "array_distinct(transform(sequence(1, size(__gh)), "
-        f"p -> array_min(slice(__gh, p, {window}))))"
-    )
-    return staged.select(
-        F.col(id_col), F.explode(F.expr(fps)).alias("fp")
-    ).distinct()
 
 
 def ngram_jaccard_pairs(
@@ -543,35 +367,19 @@ def contamination_pairs(
     )
 
 
-def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """64-bit SimHash per document from xxhash64 token hashes.
-
-    Per-bit majority vote over tokens (explode + 64 conditional sums →
-    one shuffle on id), bits recombined with shiftleft/bitwise-or.
-    """
-    toks = df.select(F.col(id_col).alias("id"), F.explode(F.split(F.col(text_col), " ")).alias("t"))
-    h = F.xxhash64("t")
-    votes = toks.groupBy("id").agg(*[
-        F.sum(F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)).alias(f"b{i}")
-        for i in range(64)
-    ])
-    sim = None
-    for i in range(64):
-        bit = F.when(F.col(f"b{i}") > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        term = F.shiftleft(bit, i)
-        sim = term if sim is None else sim.bitwiseOR(term)
-    return votes.select("id", sim.alias("simhash"))
-
-
 _HEX = "0123456789abcdef"
 
 
 def simhash_hex_portable(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """64-bit SimHash as a 16-hex-char string, md5 token hashes only —
-    the engine-portable twin of ``simhash64`` (same per-bit weighted
-    majority; bit j of a token is bit (3 − j%4) of md5 hex digit j/4).
-    Output is a hex STRING because recombining bit 63 into a signed
-    BIGINT overflows in ANSI engines; Hamming distance works the same.
+    """64-bit SimHash per document as a 16-hex-char string, from md5
+    token hashes (bit j of a token is bit (3 − j%4) of md5 hex digit
+    j/4).
+
+    Per-bit weighted majority vote over tokens (explode + 64
+    conditional sums → one shuffle on id), bits recombined into hex
+    digits. Output is a hex STRING because recombining bit 63 into a
+    signed BIGINT overflows in ANSI engines; take Hamming distance on
+    ``int(hex, 16)``.
     """
     toks = df.select(
         F.col(id_col).alias("id"),
@@ -609,13 +417,48 @@ def simhash_hex_portable(df: DataFrame, id_col: str, text_col: str) -> DataFrame
 def winnowing_fingerprints_portable(
     df: DataFrame, id_col: str, text_col: str, k: int = 4, window: int = 5
 ) -> DataFrame:
-    """``winnowing_fingerprints`` on 60-bit md5-prefix k-gram hashes —
-    same kernel and guarantees, but reproducible in any engine with
-    md5 (DuckDB oracle in plans/northstar.py)."""
-    return _winnow(
-        df, id_col, text_col, k, window,
-        "CAST(conv(substr(md5(g), 1, 15), 16, 10) AS BIGINT)",
+    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken's
+    MOSS scheme): rolling k-gram hashes → per-position minimum over a
+    ``window``-wide frame → distinct minima per document. Each k-gram
+    hashes to the 60-bit md5 prefix, so the DuckDB oracle in
+    plans/northstar.py reproduces every fingerprint.
+
+    Guarantees: any shared substring of length ≥ k + window − 1 between
+    two documents yields at least one shared fingerprint, and
+    fingerprint density is ~2/(window+1) of positions — a tunable
+    size/recall knob for plagiarism-style containment detection
+    (complementary to MinHash, which measures whole-set resemblance).
+
+    Fully row-local: gram hashes, the rolling window minima, and the
+    per-document fingerprint dedup are all array expressions over the
+    token array — the ONLY shuffle in the whole operator is the final
+    (id, fp) distinct, and it ships two longs per fingerprint. (The
+    per-position ``array_min(slice(...))`` is O(n·window) per doc, the
+    same work the frame-based window minimum does, without the
+    shuffle+sort of every token row that a window would need.)
+    """
+    toks = df.select(
+        F.col(id_col), F.split(F.col(text_col), " ").alias("__tk")
+    ).filter(F.size("__tk") >= k)
+    parts = ", ".join(
+        "__tk[i]" if j == 0 else f"__tk[i + {j}]" for j in range(k)
     )
+    gh = (
+        f"transform(sequence(0, size(__tk) - {k}), "
+        f"i -> concat_ws(' ', {parts}))"
+    )
+    gh = (
+        f"transform({gh}, g -> "
+        "CAST(conv(substr(md5(g), 1, 15), 16, 10) AS BIGINT))"
+    )
+    staged = toks.select(F.col(id_col), F.expr(gh).alias("__gh"))
+    fps = (
+        "array_distinct(transform(sequence(1, size(__gh)), "
+        f"p -> array_min(slice(__gh, p, {window}))))"
+    )
+    return staged.select(
+        F.col(id_col), F.explode(F.expr(fps)).alias("fp")
+    ).distinct()
 
 
 def connected_components(
@@ -746,9 +589,9 @@ def minhash_band_rows_rowlocal(
     md5-prefix integer pairs via ``transform`` (one md5 per gram,
     evaluated once — the array is bound to a higher-order-function
     variable, so CollapseProject cannot duplicate it into each
-    downstream reference, the `minhash_signatures` CSE trap) → a
-    single ``aggregate`` that folds every gram into the
-    ``num_hashes``-vector of running minima via ``zip_with`` against
+    downstream reference, the CSE trap the batch kernel avoids with
+    its groupBy) → a single ``aggregate`` that folds every gram into
+    the ``num_hashes``-vector of running minima via ``zip_with`` against
     the injected ``lsh_hash_coeffs`` literal arrays → band structs
     from the bound minima vector → explode. Values are bit-identical
     to ``lsh_candidate_pairs_portable``'s signatures (same formula
@@ -833,27 +676,23 @@ def lsh_band_index(
     num_hashes: int = 32, bands: int = 8, rows_per_band: int = 4,
     shingle_n: int = 3,
 ) -> DataFrame:
-    """(band, sig, id) rows — the persistable LSH index of a corpus.
+    """(id, band, sig) rows — the persistable LSH index of a corpus.
 
     Incremental-dedup support: build once, write partitioned/bucketed
     by (band, sig), then each new ingest batch probes the index with
-    ``lsh_probe_index`` instead of re-hashing the whole corpus. The
-    index row is 3 longs — at 100 TB of text it is orders of magnitude
-    smaller than its corpus and cheap to keep hot.
+    ``lsh_probe_index`` instead of re-hashing the whole corpus. Rows
+    are the band signatures of ``lsh_candidate_pairs_portable`` (same
+    md5 family, same groupBy kernel): ``bands`` rows per document, each
+    an int band, a string of ``rows_per_band`` minima and the id —
+    fixed size per document, so at 100 TB of text the index is orders
+    of magnitude smaller than its corpus and cheap to keep hot.
     """
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    band_structs = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(*[
-                F.element_at("minhash", b * rows_per_band + j + 1)
-                for j in range(rows_per_band)
-            ]).alias("sig"),
-        )
-        for b in range(bands)
-    ])
-    return sigs.select(
-        F.col(id_col).alias("id"), F.explode(band_structs).alias("bs")
+    per_doc = hashed_shingles_portable(
+        df, id_col, text_col, shingle_n
+    ).groupBy(id_col).agg(*_portable_min_exprs(num_hashes))
+    return per_doc.select(
+        F.col(id_col).alias("id"),
+        F.explode(_band_structs(bands, rows_per_band)).alias("bs"),
     ).select("id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
 
 
@@ -871,11 +710,10 @@ def lsh_probe_index(
     (band, sig): with the index bucketed on those keys this reads only
     the touched buckets, never the corpus. In-batch collisions reuse
     the same in-bucket array expansion (and ``max_bucket`` hot-bucket
-    cap) as ``lsh_candidate_pairs``, so an ingest batch flooded with a
-    degenerate signature inherits the quadratic-blowup guard instead of
-    self-joining. Verification (exact Jaccard on the candidate ids'
-    texts) stays a separate composable step, as in
-    ``lsh_candidate_pairs``.
+    cap) as ``lsh_candidate_pairs_portable``, so an ingest batch
+    flooded with a degenerate signature inherits the quadratic-blowup
+    guard instead of self-joining. Verification (exact Jaccard on the
+    candidate ids' texts) stays a separate composable step.
     """
     probe = lsh_band_index(
         new_docs, id_col, text_col, num_hashes, bands, rows_per_band, shingle_n
@@ -921,7 +759,7 @@ def dup_span_coverage(
     merge arithmetically, no interval list materializes. Two shuffles
     of the gram stream (by gram key, then by doc) — the honest cost of
     substring-level dedup; nothing is all-pairs and nothing collects.
-    md5 keys keep the oracle in DuckDB; production swaps xxhash64.
+    md5 keys keep the oracle in DuckDB.
 
     Returns (id_col, dup_span_tokens, dup_span_frac); documents with
     no duplicated grams (or fewer than ``gram_len`` tokens) get 0/0.0.

@@ -50,10 +50,10 @@ from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .dedup import _pairs_expr, _release_internal as _dd_release_internal
+from ..functions.caching import release_local_checkpoint
+from .dedup import _pairs_expr
 from .multimodal import decode_png, encode_png
 
 def _self_incl_pairs_expr(ids: str):
@@ -334,7 +334,6 @@ def phash_candidate_pairs(
     band_bits: int = BAND_BITS,
     cap_grain: str = "doc",
     materialize: bool = False,
-    internal_storage: str = "checkpoint",
 ) -> DataFrame:
     """Hamming-banded near-dup pairs from (id, b0..b3) signatures.
     Returns (id_a, id_b, hamming) with hamming <= max_hamming,
@@ -418,22 +417,8 @@ def phash_candidate_pairs(
     # signature aggregation (3 upstream executions; the r16 plan audit
     # measured zero exchange reuse across them). Callers that keep the
     # default get the fully-lazy plan.
-    #
-    # ``internal_storage`` (r17, r16 verdict #1): "persist" stores
-    # this corpus-sized table as a MEMORY_AND_DISK cache (lineage kept
-    # — executor loss recomputes instead of failing the job; spill by
-    # policy) behind an eager count. MEASURED on the LSH sibling at
-    # sf0.1: the columnar cache costs 15–30 % vs localCheckpoint,
-    # outside the verdict's ±10 % acceptance — so "checkpoint" stays
-    # the default and fault-tolerance-first deployments opt in. The
-    # bounded (id, id, hamming) PAIR frame below always uses
-    # localCheckpoint, and the internal table releases before return.
     if materialize:
-        if internal_storage == "persist":
-            groups = groups.persist(StorageLevel.MEMORY_AND_DISK)
-            groups.count()
-        else:
-            groups = groups.localCheckpoint(eager=True)
+        groups = groups.localCheckpoint(eager=True)
 
     band_structs = F.array(*[
         F.struct(F.lit(k).alias("band"), F.col(f"b{k}").alias("val"))
@@ -530,10 +515,8 @@ def phash_candidate_pairs(
         return out
     try:
         out = out.localCheckpoint(eager=True)
-    except BaseException:
-        _dd_release_internal(groups, internal_storage)
-        raise
-    _dd_release_internal(groups, internal_storage)
+    finally:
+        release_local_checkpoint(groups)
     return out
 
 

@@ -393,7 +393,7 @@ def dsir_importance(
 
     - features: each whitespace bigram hashes into one of
       ``n_buckets`` buckets (hashing trick; md5-backed so the oracle
-      reproduces it — production swaps xxhash64, same shape).
+      reproduces it).
     - models: ONE corpus scan trains both — groupBy(bucket) with
       cr=count(*) (raw) and ct=count_if(target) (target); add-one
       smoothing over the bucket space. The model table is ≤n_buckets

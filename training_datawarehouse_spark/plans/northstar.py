@@ -1193,24 +1193,18 @@ WHERE p.n_hits > 0
 
 
 
-def cross_modal_dedup(
-    spark: SparkSession, sf_dir: str, pairs: DataFrame | None = None
-) -> DataFrame:
-    """Cross-modal agreement: text near-dup candidate pairs (MinHash
+def cross_modal_dedup(spark: SparkSession, sf_dir: str,
+                      pairs: DataFrame) -> DataFrame:
+    """Cross-modal agreement: text near-dup candidate ``pairs`` (MinHash
     LSH, τ=0.3) scored by embedding cosine for the ids that carry
     embeddings (doc_id ≡ vec_id on the shared prefix). Disagreement
     (high Jaccard, low cosine) is the standard embedding-quality QA
     signal in dedup pipelines. Composes two subsystems → rows-only.
 
-    ``pairs`` lets a caller share one LSH candidate pass across several
-    consumers (see ``lsh_cross_modal``) instead of recomputing the
+    The caller passes the candidate pass so several consumers share it
+    (see ``lsh_cross_modal``) instead of recomputing the
     shingle→signature→band pipeline per consumer."""
     emb = load_table(spark, sf_dir, "embeddings")
-    if pairs is None:
-        docs = load_table(spark, sf_dir, "documents")
-        pairs = dd.lsh_candidate_pairs(docs, "doc_id", "text", num_hashes=32,
-                                       bands=8, rows_per_band=4,
-                                       jaccard_threshold=0.3)
     v = emb.select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
     joined = (
         pairs.join(v.withColumnsRenamed({"vec_id": "id_a", "v": "va"}), "id_a")
@@ -3707,12 +3701,10 @@ ANN_ORACLE = _ann_oracle()
 def doc_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document signature surface in one entry: 64-bit SimHash (as
     a hex string) joined to winnowing/MOSS fingerprint counts plus the
-    corpus-wide shared-fingerprint count. Round 2 this was rows-only
-    (xxhash64 has no DuckDB twin); both signatures now ride the
-    engine-portable md5 family (``simhash_hex_portable`` /
+    corpus-wide shared-fingerprint count. Both signatures are built on
+    md5 token/gram hashes (``simhash_hex_portable`` /
     ``winnowing_fingerprints_portable``), so every value hash-checks
-    against the SQL oracle. The xxhash64 variants remain for hot paths
-    that don't need an oracle (property tests keep covering them).
+    against the SQL oracle.
 
     r6 adds substring-level duplication coverage
     (``operators/dedup.py:dup_span_coverage`` — the distributed
@@ -4094,36 +4086,6 @@ def lsh_cross_modal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(audio_fp_stage(spark, sf_dir, pairs=apairs))
         .unionByName(video_fp_stage(spark, sf_dir, pairs=vpairs))
     )
-
-
-def lsh_cross_modal_xxhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Twin of ``lsh_cross_modal`` on the PRODUCTION hash
-    family (xxhash64 shingles + murmur3 minhash permutations,
-    ``lsh_candidate_pairs``) instead of the md5-portable family the
-    oracle-checked registry entry runs. Identical plan shape and
-    parameters; only the per-shingle hash cost differs, so timing both
-    (``tools/scale100x.py``) separates "cost of the algorithm" from
-    "cost of oracle portability". Not registered: md5 can't be beaten for
-    DuckDB-checkability, xxhash64 can't be reproduced there.
-
-    r16: the shared candidate pass is materialized (eager
-    localCheckpoint) exactly like the headline entry, so the twin
-    keeps pricing ONLY the hash-family delta."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = dd.lsh_candidate_pairs(docs, "doc_id", "text", num_hashes=32,
-                                   bands=8, rows_per_band=4,
-                                   jaccard_threshold=0.3,
-                                   materialize=True)
-    cand = pairs.filter(F.col("jaccard") >= 0.5).select(
-        F.lit("candidates").alias("stage"), "id_a", "id_b", "jaccard",
-        F.lit(None).cast("double").alias("cosine"),
-        F.lit(None).cast("int").alias("agree"),
-    )
-    cm = cross_modal_dedup(spark, sf_dir, pairs=pairs).select(
-        F.lit("cross_modal").alias("stage"), "id_a", "id_b", "jaccard",
-        "cosine", "agree",
-    )
-    return cand.unionByName(cm)
 
 
 def _lsh_cross_modal_oracle(
