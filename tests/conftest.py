@@ -16,6 +16,22 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def jobs_of(spark):
+    """``jobs_of(fn) -> (jobs, fn())``: how many Spark jobs ``fn`` started."""
+    st = spark.sparkContext.statusTracker()
+
+    def count(fn):
+        # job ids are sequential; count by the newest id, not by how many
+        # the tracker holds — it drops its oldest jobs past
+        # spark.ui.retainedJobs, which can shrink the list mid-build
+        before = max(st.getJobIdsForGroup(None), default=-1)
+        out = fn()
+        return max(st.getJobIdsForGroup(None), default=-1) - before, out
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def diary_path(tmp_path_factory) -> str:
     """Deterministic synthetic TrainingDiary.json (FIXTURES.md §A):

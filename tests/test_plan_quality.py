@@ -497,7 +497,7 @@ BUILD_JOB_BUDGET = {
 }
 
 
-def test_materialized_builds_stay_within_job_budget(spark):
+def test_materialized_builds_stay_within_job_budget(spark, jobs_of):
     from pyspark.sql import functions as F
 
     from training_datawarehouse_spark.functions.caching import (
@@ -513,20 +513,14 @@ def test_materialized_builds_stay_within_job_budget(spark):
 
     docs = load_table(spark, SF_DIR, "documents")
     docs.count()
-    st = spark.sparkContext.statusTracker()
 
-    def jobs_of(fn):
-        # job ids are sequential; count by the newest id, not by how many
-        # the tracker holds — it drops its oldest jobs past
-        # spark.ui.retainedJobs, which can shrink the list mid-build
-        before = max(st.getJobIdsForGroup(None), default=-1)
-        out = fn()
-        delta = max(st.getJobIdsForGroup(None), default=-1) - before
+    def build_jobs(fn):
+        jobs, out = jobs_of(fn)
         release_local_checkpoint(out)
-        return delta
+        return jobs
 
     got = {}
-    got["lsh_portable_materialized"] = jobs_of(
+    got["lsh_portable_materialized"] = build_jobs(
         lambda: dd.lsh_candidate_pairs_portable(
             docs, "doc_id", "text", jaccard_threshold=0.3,
             materialize=True))
@@ -535,7 +529,7 @@ def test_materialized_builds_stay_within_job_budget(spark):
     ).localCheckpoint(eager=True)
     isig = sig.select(
         "id", *[F.col(f"ib{k}").alias(f"b{k}") for k in range(4)])
-    got["phash_pairs_materialized"] = jobs_of(
+    got["phash_pairs_materialized"] = build_jobs(
         lambda: ph.phash_candidate_pairs(isig, materialize=True))
     vsig = sig.select(
         "id",
@@ -547,7 +541,7 @@ def test_materialized_builds_stay_within_job_budget(spark):
         ])).alias("s"),
     ).select("id", "s.frame",
              *[F.col(f"s.b{k}").alias(f"b{k}") for k in range(4)])
-    got["video_pairs_materialized"] = jobs_of(
+    got["video_pairs_materialized"] = build_jobs(
         lambda: vd.video_pair_matches(vsig, materialize=True))
     release_local_checkpoint(sig)
 

@@ -31,6 +31,8 @@ def test_stream_batch_parity(spark, tmp_path):
 def _two_batch_stream(spark, tmp_path, name):
     """Stage the sf0.001 events as TWO files so maxFilesPerTrigger=1
     yields two micro-batches — state must survive between them."""
+    import os
+
     import pyarrow.parquet as pq
     import pyarrow as pa
 
@@ -40,6 +42,12 @@ def _two_batch_stream(spark, tmp_path, name):
     half = t.num_rows // 2
     pq.write_table(t.slice(0, half), src / "part0.parquet")
     pq.write_table(t.slice(half), src / "part1.parquet")
+    # the file source takes the oldest file first and breaks mtime ties by
+    # listing order, and both writes often land in one mtime tick: make
+    # part0 strictly older so it is always the first micro-batch
+    st = os.stat(src / "part1.parquet")
+    os.utime(src / "part0.parquet",
+             ns=(st.st_atime_ns, st.st_mtime_ns - 1_000_000_000))
     from training_datawarehouse_spark.streaming.events_stream import stream_events
 
     return stream_events(spark, str(src))
