@@ -11,7 +11,7 @@ from training_datawarehouse_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", master="local[4]", shuffle_partitions=4)
+    s = get_spark("tests", master="local[4]")
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

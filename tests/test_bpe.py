@@ -129,23 +129,6 @@ def test_bpe_duckdb_oracle_parity(spark):
     assert rows[0][2] == bpe.merges_tag(merges)
 
 
-def test_encode_with_merges_oov_words(spark):
-    """Inference-time encoding of UNSEEN words: the hybrid encoder
-    takes vocabulary hits from the broadcast table and replays the
-    learned merge rules over character splits for misses. Hand-walked:
-    with the textbook merges, OOV 'slower' -> [s,low,e,r,</w>] (5) and
-    OOV 'lowest' -> [low,est</w>] (2); in-vocab 'newest' -> 4."""
-    train = spark.createDataFrame(SENNRICH_DOCS, "doc_id long, text string")
-    vocab, merges = bpe.train_bpe(train, "text", num_merges=5)
-    new_docs = spark.createDataFrame(
-        [(10, "slower lowest newest")], "doc_id long, text string"
-    )
-    out = bpe.encode_with_merges(new_docs, vocab, merges).collect()
-    assert len(out) == 1
-    assert out[0]["bpe_n_tokens"] == 5 + 2 + 4
-    assert out[0]["n_oov_words"] == 2
-
-
 def _persistent_ids(spark) -> set:
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     return {int(k) for k in jmap.keySet().toArray()}

@@ -7,6 +7,37 @@ from pyspark.sql import functions as F
 from training_datawarehouse_spark.operators import graph as gr
 
 
+def pagerank_fixed_reference(
+    node_ids: list,
+    edge_pairs: list[tuple],
+    iterations: int = 5,
+    damping_pct: int = 85,
+    scale: int = gr.PR_SCALE,
+) -> dict:
+    """Driver-side pure-Python twin of ``pagerank_fixed`` — the same
+    integer recurrence as a dict loop."""
+    nodes = sorted(set(node_ids))
+    nn = len(nodes)
+    eset = {
+        (s, t)
+        for s, t in edge_pairs
+        if s != t and s in set(nodes) and t in set(nodes)
+    }
+    deg: dict = {}
+    for s, _ in eset:
+        deg[s] = deg.get(s, 0) + 1
+    d, dd = damping_pct, 100
+    r = {v: scale // nn for v in nodes}
+    for _ in range(iterations):
+        dang = sum(r[v] for v in nodes if v not in deg)
+        nxt = {v: (dd - d) * scale // (dd * nn) + d * dang // (dd * nn)
+               for v in nodes}
+        for s, t in eset:
+            nxt[t] += d * r[s] // (dd * deg[s])
+        r = nxt
+    return r
+
+
 def _run(spark, node_ids, edges, **kw):
     n = spark.createDataFrame([(v,) for v in node_ids], "node long")
     e = spark.createDataFrame(edges, "src long, dst long") if edges else (
@@ -26,7 +57,7 @@ def test_pagerank_matches_reference_loop(spark):
         (7, 99),         # edge out of the node set: dropped
     ]
     got = _run(spark, nodes, edges)
-    ref = gr.pagerank_fixed_reference(nodes, edges)
+    ref = pagerank_fixed_reference(nodes, edges)
     assert {v: r["pr_rank"] for v, r in got.items()} == ref
     # the hub has max rank; total mass can only leak DOWN via floors
     assert max(got, key=lambda v: got[v]["pr_rank"]) == 0

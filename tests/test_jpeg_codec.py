@@ -31,16 +31,27 @@ def _digest_pixels(w: int, h: int, seed: bytes = b"jpeg-test") -> bytes:
     return (digest * (n // len(digest) + 1))[:n]
 
 
+def fdct2(block: np.ndarray) -> np.ndarray:
+    """Forward 8×8 DCT (T.81 §A.3.3) on a level-shifted float block,
+    through the codec's own DCT matrix."""
+    return jpeg._A @ block @ jpeg._A.T
+
+
+def idct2(coef: np.ndarray) -> np.ndarray:
+    """Inverse 8×8 DCT — exact inverse of ``fdct2``."""
+    return jpeg._A.T @ coef @ jpeg._A
+
+
 def test_idct_is_exact_inverse_of_fdct():
     rng = np.random.RandomState(3)
     for _ in range(20):
         block = rng.uniform(-128, 127, size=(8, 8))
-        assert np.abs(jpeg.idct2(jpeg.fdct2(block)) - block).max() < 1e-10
+        assert np.abs(idct2(fdct2(block)) - block).max() < 1e-10
 
 
 def test_fdct_dc_coefficient_is_scaled_mean():
     """S(0,0) of a constant block must be 8·value (T.81 normalization)."""
-    coef = jpeg.fdct2(np.full((8, 8), 13.0))
+    coef = fdct2(np.full((8, 8), 13.0))
     assert abs(coef[0, 0] - 8 * 13.0) < 1e-9
     assert np.abs(coef.ravel()[1:]).max() < 1e-9
 
@@ -146,6 +157,16 @@ def test_malformed_streams_raise_codec_errors():
     progressive = good.replace(b"\xFF\xC0", b"\xFF\xC2", 1)
     with pytest.raises(NotImplementedError):
         jpeg.decode_jpeg(progressive)
+    # corrupt headers: a scan naming an unknown component, a zero
+    # sampling factor, a DHT segment that ends before its 16 counts
+    sos, sof, dht = (good.index(m) for m in (b"\xFF\xDA", b"\xFF\xC0", b"\xFF\xC4"))
+    for at, byte in ((sos + 5, 0x77), (sof + 11, 0x00), (dht + 3, 3)):
+        bad = bytearray(good)
+        bad[at] = byte
+        with pytest.raises(ValueError):
+            jpeg.decode_jpeg(bytes(bad))
+        with pytest.raises(ValueError):
+            jpeg.decode_jpeg_many([bytes(bad)])
 
 
 def test_jpeg_decode_meta_adapter():
@@ -158,17 +179,9 @@ def test_jpeg_decode_meta_adapter():
     assert len(meta["checksum"]) == 16
 
 
-def test_resize_jpeg_produces_valid_jpeg():
-    data = jpeg.encode_jpeg(24, 16, _gradient(24, 16), quality=90)
-    out = mm.resize_jpeg(data, 8, 8)
-    img = jpeg.decode_jpeg(out)
-    assert (img["width"], img["height"]) == (8, 8)
-
-
 def test_sniffed_jpeg_routes_through_real_codec_in_plan(spark):
     """End-to-end through the Spark operators: synthesized JPEG rows
-    decode to the md5-rule dims, resize keeps a valid JPEG, features
-    come from the real raster; a progressive payload degrades to the
+    decode to the md5-rule dims; a progressive payload degrades to the
     stub instead of failing the job."""
     from training_datawarehouse_spark.sources.tables import load_table
 
@@ -185,7 +198,29 @@ def test_sniffed_jpeg_routes_through_real_codec_in_plan(spark):
         assert (r["width"], r["height"]) == (w, h)
         assert r["n_bytes"] == w * h
         assert r["format"] == "jpeg"
-    resized = mm.resize_images(payloads, 6, 6).collect()
-    assert all(bytes(r["payload"][:3]) == b"\xff\xd8\xff" for r in resized)
-    feats = mm.extract_features(payloads, dim=8).collect()
-    assert all(len(r["features"]) == 8 for r in feats)
+    progressive = jpeg.encode_jpeg(20, 12, _digest_pixels(20, 12)).replace(
+        b"\xFF\xC0", b"\xFF\xC2", 1)
+    df = spark.createDataFrame([(1, bytearray(progressive))],
+                               "id long, payload binary")
+    got = mm.decode_metadata(df, decode_fn=mm.jpeg_decode_meta).collect()
+    assert got[0].asDict() == {
+        "id": 1, **mm.deterministic_fake_decode(progressive)}
+
+
+def test_batch_decode_falls_back_per_row_on_a_bad_payload(spark):
+    """An Arrow batch wide enough for the batch twin
+    (``_BATCH_DECODE_MIN``) holding one progressive and one empty
+    payload: the twin rejects the batch, the batch is decoded row by
+    row, and only those two rows degrade."""
+    good = jpeg.encode_jpeg(8, 8, _digest_pixels(8, 8))
+    progressive = good.replace(b"\xFF\xC0", b"\xFF\xC2", 1)
+    rows = [(i, bytearray(good)) for i in range(mm._BATCH_DECODE_MIN)]
+    rows += [(-1, bytearray(progressive)), (-2, bytearray())]
+    df = spark.createDataFrame(rows, "id long, payload binary").coalesce(1)
+    got = {r["id"]: r.asDict() for r in
+           mm.decode_metadata(df, decode_fn=mm.jpeg_decode_meta).collect()}
+    assert len(got) == mm._BATCH_DECODE_MIN + 2
+    assert got[-1] == {"id": -1, **mm.deterministic_fake_decode(progressive)}
+    assert got[-2] == {"id": -2, **dict.fromkeys(mm.MEDIA_META_SCHEMA.names[1:])}
+    want = mm.jpeg_decode_meta(good)
+    assert all(got[i] == {"id": i, **want} for i in range(mm._BATCH_DECODE_MIN))

@@ -289,6 +289,29 @@ def test_cli_main_end_to_end(diary_path, tmp_path):
     assert glob.glob(f"{out}/monthly/*.parquet")
 
 
+def test_get_spark_sizes_shuffle_from_its_master():
+    """`--cpus N` passes master local[N] to get_spark: the shuffle must
+    be planned N wide, not $SPARK_GRAFT_CPUS wide. A fresh process,
+    because a session already running here would be reused."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "from training_datawarehouse_spark.session import get_spark\n"
+        "s = get_spark('shuffle-width', master='local[2]')\n"
+        "print(s.conf.get('spark.sql.shuffle.partitions'))\n"
+        "s.stop()\n"
+    )
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "32", "SPARK_DRIVER_MEM": "1g"}
+    out = subprocess.run(
+        [sys.executable, "-c", code], env=env, capture_output=True, text=True,
+        cwd=Path(__file__).resolve().parents[1], timeout=300, check=True,
+    )
+    assert out.stdout.split()[-1] == "2"
+
+
 def test_scd2_merge_two_batches_vs_duckdb(spark):
     """SCD2 emulation (close + version + passthrough) across two update
     batches, differentially checked against a DuckDB reimplementation

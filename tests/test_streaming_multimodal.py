@@ -196,42 +196,9 @@ def test_multimodal_real_decode_in_plan(spark):
         assert wav[did]["n_bytes"] == (256 + digest[3]) * 2
 
 
-def test_multimodal_frame_sampling(spark):
-    docs = spark.createDataFrame([(1, "abc")], "doc_id long, text string")
-    payloads = mm.attach_binary_payload(docs, "doc_id", "text")
-    frames = mm.sample_frames(payloads, every_n_bytes=4).collect()
-    # md5 payload = 16 bytes → offsets 0,4,8,12
-    assert [r["offset"] for r in frames] == [0, 4, 8, 12]
-
-
 def test_decode_stub_raises_on_empty():
     with pytest.raises(NotImplementedError):
         mm.deterministic_fake_decode(b"")
-
-
-def test_multimodal_resize_plumbing(spark):
-    from training_datawarehouse_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents").limit(20)
-    payloads = mm.attach_binary_payload(docs, "doc_id", "text")
-    resized = mm.resize_images(payloads, width=8, height=4).collect()
-    assert len(resized) == 20
-    assert all(len(r["payload"]) == 32 for r in resized)
-    assert all((r["width"], r["height"]) == (8, 4) for r in resized)
-
-
-def test_multimodal_features_compose_with_similarity(spark):
-    """Fake-encoder features flow straight into the similarity ops —
-    the multimodal and embedding halves of the engine compose."""
-    from training_datawarehouse_spark.operators import similarity as sim
-    from training_datawarehouse_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents").limit(30)
-    payloads = mm.attach_binary_payload(docs, "doc_id", "text")
-    feats = mm.extract_features(payloads, dim=8).withColumnRenamed("id", "vec_id")
-    out = sim.cosine_topk(feats, feats.limit(2), "vec_id", "features", k=3).collect()
-    assert len(out) == 6  # 2 queries x top-3
-    assert all(-1.0 <= r["cosine"] <= 1.0 for r in out)
 
 
 def test_stream_stream_join_parity(spark, tmp_path):
@@ -298,43 +265,6 @@ def test_stream_to_warehouse_replay_idempotent(spark, tmp_path):
     assert spark.read.parquet(wh).count() == n1
 
 
-def test_multimodal_real_resize_roundtrip(spark):
-    """Real PNG payloads resize through decode → nearest-neighbor →
-    re-encode: every output is a VALID PNG whose decoded raster has the
-    target dims, and resampling is deterministic."""
-    from training_datawarehouse_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_DIR, "documents").limit(12)
-    pngs = mm.synthesize_png_payload(docs, "doc_id", "text")
-    out = mm.resize_images(pngs, width=8, height=4).collect()
-    assert len(out) == 12
-    for r in out:
-        img = mm.decode_png(bytes(r["payload"]))
-        assert (img["width"], img["height"]) == (8, 4)
-    again = {r["id"]: bytes(r["payload"])
-             for r in mm.resize_images(pngs, width=8, height=4).collect()}
-    assert all(bytes(r["payload"]) == again[r["id"]] for r in out)
-
-
-def test_multimodal_real_features_content_sensitive(spark):
-    """PNG/WAV payloads featurize from decoded content: vectors have
-    the requested dim, live in [0,1], and differ between a flat and a
-    gradient image (content sensitivity, not byte hashing)."""
-    flat = mm.encode_png(16, 16, bytes([128] * 256))
-    grad = mm.encode_png(16, 16, bytes(range(256)))
-    wav = mm.encode_wav(list(range(-500, 500)), framerate=8000)
-    df = spark.createDataFrame(
-        [(1, bytearray(flat)), (2, bytearray(grad)), (3, bytearray(wav))],
-        "id long, payload binary",
-    )
-    feats = {r["id"]: r["features"] for r in mm.extract_features(df, dim=12).collect()}
-    assert all(len(v) == 12 for v in feats.values())
-    assert all(0.0 <= x <= 1.0 for v in feats.values() for x in v)
-    assert feats[1] != feats[2]
-    # flat image: std 0, one histogram bin holds all mass
-    assert abs(feats[1][1]) < 1e-6 and max(feats[1][4:]) > 0.99
-
-
 def test_events_ts_unit_tolerance(spark, tmp_path):
     """The events loader and streaming source must read BOTH ts
     encodings the driver has shipped: native micro timestamps and
@@ -388,23 +318,37 @@ def test_events_ts_unit_tolerance(spark, tmp_path):
 
 
 def test_codec_sniff_falls_back_to_stub_on_unsupported(spark):
-    """Signature-only sniffing must not fail the job: a payload that
-    STARTS like a PNG but isn't a supported one (e.g. RGB color type),
-    and a RIFF container that isn't a WAV (WebP also starts 'RIFF'),
-    both degrade to the deterministic stub paths instead of raising
-    inside the executor (round-3 advice)."""
+    """Malformed media degrades a row, never the job. Through
+    ``decode_metadata``: a payload that STARTS like a PNG but isn't a
+    supported one, a RIFF container that isn't WebP-lossless, a WAV
+    whose fmt chunk overruns the file, and a 1-byte payload each get
+    the stub's metadata; an empty or null payload gets null metadata;
+    a good payload in the same Arrow batch still decodes for real."""
+    import struct
+
+    from training_datawarehouse_spark.operators import vp8l
+
     bogus_png = mm._PNG_SIG + b"\x00" * 32          # signature, garbage body
     fake_webp = b"RIFF" + b"\x20\x00\x00\x00" + b"WEBPVP8 " + b"\x07" * 16
-    df = spark.createDataFrame(
-        [(1, bytearray(bogus_png)), (2, bytearray(fake_webp))],
-        "id long, payload binary",
-    )
-    resized = {r["id"]: r for r in mm.resize_images(df, 4, 4).collect()}
-    assert len(resized[1]["payload"]) == 16          # stub tile path
-    assert len(resized[2]["payload"]) == 16
-    feats = {r["id"]: r["features"] for r in mm.extract_features(df, dim=8).collect()}
-    assert len(feats[1]) == 8 and len(feats[2]) == 8
-    assert all(0.0 <= x <= 1.0 for x in feats[1] + feats[2])
+    bad_wav = bytearray(mm.encode_wav(list(range(-50, 50))))
+    bad_wav[16:20] = struct.pack("<I", 1000)
+    nulls = dict.fromkeys(mm.MEDIA_META_SCHEMA.names[1:])
+    for decode_fn, bad, good in (
+        (mm.png_decode_meta, bogus_png, mm.encode_png(3, 2, bytes(range(6)))),
+        (mm.webp_decode_meta, fake_webp, vp8l.encode_vp8l(2, 2, bytes(range(16)))),
+        (mm.wav_decode_meta, bytes(bad_wav), mm.encode_wav([0, 7, -7])),
+    ):
+        df = spark.createDataFrame(
+            [(1, bytearray(bad)), (2, bytearray(b"\x89")), (3, bytearray()),
+             (4, None), (5, bytearray(good))],
+            "id long, payload binary",
+        ).coalesce(1)
+        got = {r["id"]: r.asDict() for r in
+               mm.decode_metadata(df, decode_fn=decode_fn).collect()}
+        assert got[1] == {"id": 1, **mm.deterministic_fake_decode(bad)}
+        assert got[2] == {"id": 2, **mm.deterministic_fake_decode(b"\x89")}
+        assert got[3] == {"id": 3, **nulls} and got[4] == {"id": 4, **nulls}
+        assert got[5] == {"id": 5, **decode_fn(good)}
 
 
 def test_pil_fast_path_routing_and_parity(monkeypatch):

@@ -122,15 +122,6 @@ def test_mjpeg_fingerprints_survive_lossy_path():
         assert ham <= ph.DEFAULT_MAX_HAMMING
 
 
-def test_sample_avi_frames_decodes_only_sampled():
-    w, h = 16, 16
-    frames = [bytes((x + f) % 256 for x in range(w * h)) for f in range(6)]
-    avi = vi.encode_avi(frames, w, h)
-    got = vi.sample_avi_frames(avi, every_k=3)
-    assert [i for i, _ in got] == [0, 3]
-    assert got[0][1] == frames[0] and got[1][1] == frames[3]
-
-
 def test_synthesize_avi_payload_and_meta(spark):
     df = spark.createDataFrame(
         [(1, BASE), (2, FAR)], "doc_id long, text string")
@@ -302,12 +293,6 @@ def test_foreign_avi_with_audio_stream_parses_video_correctly():
     dec = vi.decode_avi(bytes(patched))
     assert dec["codec"] == "DIB " and dec["fps"] == 8
     assert dec["frames"] == frames
-
-
-def test_sample_avi_frames_rejects_bad_stride():
-    with pytest.raises(ValueError, match="every_k"):
-        vi.sample_avi_frames(
-            vi.encode_avi(vi.frame_token_grids(BASE), ph.GRID, ph.GRID), 0)
 
 
 def test_video_pair_matches_production_envelope(spark):

@@ -154,35 +154,6 @@ def test_encoder_validates_dims():
     assert vp8l.decode_vp8l(vp8l.encode_vp8l(2, 2, raw4))["pixels"] == raw4
 
 
-def test_resize_and_features_route_through_vp8l(spark):
-    """The pipeline's resize and feature operators must treat a
-    WebP-lossless payload as a real image: resize decodes, resamples
-    the RGBA raster, and re-encodes a DECODABLE VP8L file of the new
-    dims; features come from the raster (pixels/255 statistics), not
-    the hash-window stub."""
-    import numpy as np
-
-    w, h = 10, 6
-    raw = _rgba(w, h, b"rz")
-    enc = vp8l.encode_vp8l(w, h, raw, cache_bits=4)
-
-    small = mm.resize_webp(enc, 5, 3)
-    out = vp8l.decode_vp8l(small)
-    assert (out["width"], out["height"]) == (5, 3)
-    # nearest-neighbor: the top-left pixel survives exactly
-    assert out["pixels"][:4] == raw[:4]
-
-    df = spark.createDataFrame([(1, bytearray(enc))], "id long, payload binary")
-    feats = mm.extract_features(df, dim=8).collect()[0]["features"]
-    arr = np.frombuffer(raw, dtype=np.uint8) / 255.0
-    want = mm._stat_features(arr, 8)
-    assert feats == pytest.approx(want, abs=1e-6)
-
-    resized = mm.resize_images(df, width=4, height=4).collect()[0]
-    back = vp8l.decode_vp8l(bytes(resized["payload"]))
-    assert (back["width"], back["height"]) == (4, 4)
-
-
 def test_fuzz_decoder_raises_cleanly():
     """Garbage bytes — including garbage wrapped in a valid-looking
     container — must raise a codec-set error promptly (never hang,

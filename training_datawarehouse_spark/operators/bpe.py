@@ -431,56 +431,3 @@ bpe_enc AS MATERIALIZED (
   GROUP BY t.doc_id
 )""")
     return ",".join(parts)
-
-
-def encode_with_merges(
-    docs: DataFrame,
-    trained_words: DataFrame,
-    merges: list,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Encode documents that may contain words UNSEEN at training
-    time — the inference-time encoder. The trained ``word -> symbols``
-    table covers only the training vocabulary; a real tokenizer
-    encodes an out-of-vocabulary word by replaying the learned merge
-    RULES over its characters. Hybrid plan, the production shape:
-
-    - broadcast-join the trained table (hits: the overwhelming
-      majority — vocabulary lookup, no rule replay);
-    - for misses only, apply the ``merges`` list as a chain of
-      ``_merge_fold`` expressions over the char split (k nested
-      folds; per-word arrays are ~10 symbols, so expression cost is
-      bounded and JVM-side — no UDF).
-
-    Returns ``(id_col, bpe_n_tokens, n_oov_words)``. Documents with
-    no trainable word are absent (LEFT-join from the caller).
-    """
-    doc_words = (
-        docs.select(
-            F.col(id_col).alias("__id"),
-            F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("w"),
-        )
-        .filter(F.col("w").rlike(WORD_RE))
-    )
-    per_word = F.broadcast(
-        trained_words.select("w", F.size("syms").alias("__n_hit"))
-    )
-    chars = F.filter(F.split(F.col("w"), ""), lambda c: c != F.lit(""))
-    oov_syms = F.concat(chars, F.array(F.lit(EOW)))
-    for a, b, _c in merges:
-        oov_syms = _merge_fold(oov_syms, a, b)
-    return (
-        doc_words.join(per_word, "w", "left")
-        .select(
-            "__id",
-            F.coalesce(F.col("__n_hit"), F.size(oov_syms)).alias("n"),
-            F.col("__n_hit").isNull().cast("int").alias("oov"),
-        )
-        .groupBy("__id")
-        .agg(
-            F.sum("n").cast("long").alias("bpe_n_tokens"),
-            F.sum("oov").cast("long").alias("n_oov_words"),
-        )
-        .withColumnRenamed("__id", id_col)
-    )

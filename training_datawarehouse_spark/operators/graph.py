@@ -191,34 +191,3 @@ def pagerank_fixed(
             F.coalesce("__ind", F.lit(0).cast("long")).alias("pr_in_deg"),
         )
     )
-
-
-def pagerank_fixed_reference(
-    node_ids: list,
-    edge_pairs: list[tuple],
-    iterations: int = 5,
-    damping_pct: int = 85,
-    scale: int = PR_SCALE,
-) -> dict:
-    """Driver-side pure-Python twin of ``pagerank_fixed`` for tests —
-    the same integer recurrence as a dict loop."""
-    nodes = sorted(set(node_ids))
-    nn = len(nodes)
-    eset = {
-        (s, t)
-        for s, t in edge_pairs
-        if s != t and s in set(nodes) and t in set(nodes)
-    }
-    deg: dict = {}
-    for s, _ in eset:
-        deg[s] = deg.get(s, 0) + 1
-    d, dd = damping_pct, 100
-    r = {v: scale // nn for v in nodes}
-    for _ in range(iterations):
-        dang = sum(r[v] for v in nodes if v not in deg)
-        nxt = {v: (dd - d) * scale // (dd * nn) + d * dang // (dd * nn)
-               for v in nodes}
-        for s, t in eset:
-            nxt[t] += d * r[s] // (dd * deg[s])
-        r = nxt
-    return r

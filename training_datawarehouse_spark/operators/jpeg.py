@@ -111,16 +111,6 @@ for _u in range(8):
         _A[_u, _x] = 0.5 * c * np.cos((2 * _x + 1) * _u * np.pi / 16)
 
 
-def fdct2(block: np.ndarray) -> np.ndarray:
-    """Forward 8×8 DCT (T.81 §A.3.3) on a level-shifted float block."""
-    return _A @ block @ _A.T
-
-
-def idct2(coef: np.ndarray) -> np.ndarray:
-    """Inverse 8×8 DCT — exact inverse of ``fdct2``."""
-    return _A.T @ coef @ _A
-
-
 def _quality_scale(table: np.ndarray, quality: int) -> np.ndarray:
     """IJG quality scaling of a reference quant table (1..100)."""
     if not 1 <= quality <= 100:
@@ -614,19 +604,6 @@ def _stacked_tables(kind: str):
     return (np.stack([lu[0], ch[0]]), np.stack([lu[1], ch[1]]))
 
 
-def encode_jpeg_frames(width: int, height: int, frames: list[bytes],
-                       quality: int = 85) -> list[bytes]:
-    """Batch grayscale encoder for same-dimension frame sequences (the
-    MJPEG synthesis path): ONE numpy pass runs the FDCT+quantize and
-    the array-at-once entropy encode across every block of every
-    frame (per-frame DC chains and byte padding preserved — each
-    returned element is byte-identical to ``encode_jpeg(width,
-    height, frame, quality)``; parity pinned in tests). The marker
-    header is dimension/quality-derived and shared."""
-    return encode_jpeg_frames_many([(width, height, frames)],
-                                   quality=quality)[0]
-
-
 def _clip_zigzag_blocks(width: int, height: int, frames: list[bytes],
                         quality: int) -> np.ndarray:
     """(nf·blocks, 64) zigzag coefficients for a same-dim grayscale
@@ -925,7 +902,7 @@ def _parse_jpeg(data: bytes) -> tuple:
                 bits = [0] + list(body[p + 1:p + 17])
                 n = sum(bits)
                 vals = list(body[p + 17:p + 17 + n])
-                if len(vals) != n:
+                if len(bits) != 17 or len(vals) != n:
                     raise ValueError("short DHT")
                 # content-cached: every stream from this encoder
                 # carries the same four Annex-K tables (r17)
@@ -939,6 +916,8 @@ def _parse_jpeg(data: bytes) -> tuple:
             comps = []
             for i in range(nc):
                 cid, hv, tq = body[6 + 3 * i:9 + 3 * i]
+                if not hv >> 4 or not hv & 0x0F:
+                    raise ValueError("zero sampling factor")
                 comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F,
                               "tq": tq})
             frame = {"w": w0, "h": h, "comps": comps}
@@ -951,7 +930,9 @@ def _parse_jpeg(data: bytes) -> tuple:
             scan = []
             for i in range(ns):
                 cs, tdta = body[1 + 2 * i], body[2 + 2 * i]
-                comp = next(c for c in frame["comps"] if c["id"] == cs)
+                comp = next((c for c in frame["comps"] if c["id"] == cs), None)
+                if comp is None:
+                    raise ValueError("scan names a component the frame lacks")
                 scan.append({**comp, "dc": tdta >> 4, "ac": tdta & 0x0F})
             pos += seglen
             return (pos, frame, scan, qtables, htables, restart_interval)

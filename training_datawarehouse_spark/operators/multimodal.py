@@ -1,17 +1,21 @@
 """Multimodal column plumbing (charter extension).
 
 Images / audio / video ride through the engine as opaque ``binary``
-columns with typed metadata structs. The Spark-side machinery — schema,
-partition-preserving ``mapInPandas``, Arrow batch shapes — is real and
-tested, and so are two decode kernels that need only the standard
-library: a PNG codec (``encode_png`` / ``decode_png``: chunk + CRC
-validation, zlib inflate, all five scanline filters), a WAV codec
-(``encode_wav`` / ``decode_wav`` via the ``wave`` module), and a
-baseline JPEG codec (``operators/jpeg.py``: Annex-K Huffman, FDCT/IDCT,
-4:2:0 MCU interleave). Formats still needing external libraries
-(WebP/video, progressive JPEG) stay behind the
-``deterministic_fake_decode`` stub, which produces stable fake metadata
-so the plumbing remains testable without them.
+columns with typed metadata structs. ``decode_metadata`` is the one
+decode crossing: a partition-preserving, Arrow-batched ``mapInPandas``
+that turns (id, payload) rows into ``MEDIA_META_SCHEMA`` rows through a
+per-format adapter. The adapters run real codecs that need only the
+standard library and numpy: PNG (``encode_png`` / ``decode_png``: chunk
++ CRC validation, zlib inflate, all five scanline filters), WAV
+(``encode_wav`` / ``decode_wav`` via the ``wave`` module), baseline JPEG
+(``operators/jpeg.py``: Annex-K Huffman, FDCT/IDCT, 4:2:0 MCU
+interleave), WebP-lossless (``operators/vp8l.py``) and AVI
+(``operators/video.py``). Formats still needing external libraries
+(lossy WebP, progressive JPEG) stay behind the
+``deterministic_fake_decode`` stub, which produces stable fake metadata.
+
+Malformed media degrades a row; it never fails the job (see
+``decode_metadata``).
 
 At 100 TB: binary payloads dominate row size, so the operators are
 careful to (a) select only the needed columns into the UDF
@@ -37,17 +41,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
-_JPEG_SIG = b"\xFF\xD8\xFF"
 
 #: minimum Arrow-batch payload count before ``decode_metadata`` routes
 #: through a decoder's vectorized ``batch`` twin (see decode_metadata)
 _BATCH_DECODE_MIN = 1024
 
-# Format sniffing is signature-only, so a payload that *starts* like a
-# PNG/JPEG/RIFF container but isn't one these codecs support (palette
-# PNG, progressive JPEG, WebP/AVI — RIFF too) must degrade to the
-# opaque-payload stub path instead of failing the whole job from
-# inside an executor.
+# What a real decode adapter raises on a payload its codec does not
+# support or cannot parse (palette PNG, progressive JPEG, lossy WebP,
+# a truncated or corrupt file). ``decode_metadata`` degrades such a row
+# to the stub instead of failing the whole job from inside an executor.
 _CODEC_ERRORS = (
     NotImplementedError, ValueError, EOFError,
     struct.error, zlib.error, wave.Error,
@@ -270,7 +272,13 @@ def decode_wav(data: bytes) -> dict:
     import io
     import wave
 
-    with wave.open(io.BytesIO(data), "rb") as w:
+    try:
+        w = wave.open(io.BytesIO(data), "rb")
+    except RuntimeError as e:
+        # wave's chunk reader raises a bare RuntimeError when a chunk
+        # size points past the end of its parent chunk
+        raise wave.Error("chunk size overruns the RIFF body") from e
+    with w:
         return {
             "n_channels": w.getnchannels(),
             "framerate": w.getframerate(),
@@ -316,7 +324,7 @@ def deterministic_fake_decode(payload: bytes) -> dict:
         "n_bytes": len(payload),
         "format": ["png", "jpeg", "webp"][payload[0] % 3],
         "width": 64 + payload[0] % 64,
-        "height": 64 + payload[1] % 64,
+        "height": 64 + payload[min(1, len(payload) - 1)] % 64,
         "checksum": digest[:16],
     }
 
@@ -553,6 +561,11 @@ def decode_metadata(
     Arrow-batched; one Python crossing per batch, not per row. The
     binary column is consumed here and does not survive into the
     output — downstream aggregations never shuffle payload bytes.
+
+    Malformed media degrades a row and never fails the job: a payload
+    ``decode_fn`` rejects with a ``_CODEC_ERRORS`` member gets
+    ``deterministic_fake_decode``'s stub metadata, and an empty or null
+    payload gets nulls in every metadata column.
     """
 
     # r17: a decode_fn may expose a ``batch`` twin (same per-payload
@@ -564,225 +577,30 @@ def decode_metadata(
     # bench-scale batches keep the scalar path and production-width
     # Arrow batches (10k rows) get the vectorized one.
     batch_fn = getattr(decode_fn, "batch", None)
+    meta_cols = MEDIA_META_SCHEMA.names[1:]
+
+    def decode_one(payload) -> dict:
+        if payload is None or len(payload) == 0:
+            return {}
+        try:
+            return decode_fn(payload)
+        except _CODEC_ERRORS:
+            return deterministic_fake_decode(payload)
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if batch_fn is not None and len(pdf) >= _BATCH_DECODE_MIN:
-                metas = batch_fn(list(pdf["payload"]))
-            else:
-                metas = [decode_fn(p) for p in pdf["payload"]]
-            out = pd.DataFrame(metas)
+            payloads = list(pdf["payload"])
+            metas = None
+            if batch_fn is not None and len(payloads) >= _BATCH_DECODE_MIN:
+                try:
+                    metas = batch_fn(payloads)
+                except _CODEC_ERRORS:
+                    pass  # a payload the twin rejects: decode row by row
+            if metas is None:
+                metas = [decode_one(p) for p in payloads]
+            out = pd.DataFrame(metas, columns=meta_cols)
             out.insert(0, "id", pdf["id"].to_numpy())
-            yield out[["id", "n_bytes", "format", "width", "height", "checksum"]]
+            yield out
 
     return df.select("id", "payload").mapInPandas(decode_batches, MEDIA_META_SCHEMA)
 
-
-RESIZED_SCHEMA = T.StructType([
-    T.StructField("id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-])
-
-
-def resize_jpeg(data: bytes, width: int, height: int) -> bytes:
-    """REAL JPEG resize: full baseline decode (``jpeg.decode_jpeg``),
-    nearest-neighbor resample of the luma raster, re-encode as a
-    grayscale baseline JPEG. Lossy by format, deterministic by
-    construction (fixed quality, integer index arithmetic)."""
-    from . import jpeg
-
-    img = jpeg.decode_jpeg(data)
-    src = np.frombuffer(img["pixels"], dtype=np.uint8).reshape(
-        img["height"], img["width"]
-    )
-    ys = (np.arange(height) * img["height"]) // height
-    xs = (np.arange(width) * img["width"]) // width
-    out = src[np.ix_(ys, xs)]
-    return jpeg.encode_jpeg(width, height, out.tobytes(), quality=85)
-
-
-def resize_png(data: bytes, width: int, height: int) -> bytes:
-    """REAL image resize, stdlib + numpy only: decode the PNG (CRCs,
-    inflate, un-filter), nearest-neighbor resample the raster with
-    index arithmetic, re-encode a valid PNG. Nearest-neighbor is the
-    deterministic choice (no float kernels → bit-identical everywhere);
-    a production pipeline would swap a PIL/libvips kernel in here
-    without touching the Spark plumbing."""
-    img = decode_png_auto(data)
-    src = np.frombuffer(img["pixels"], dtype=np.uint8).reshape(
-        img["height"], img["width"]
-    )
-    ys = (np.arange(height) * img["height"]) // height
-    xs = (np.arange(width) * img["width"]) // width
-    out = src[np.ix_(ys, xs)]
-    return encode_png(width, height, out.tobytes())
-
-
-def resize_webp(data: bytes, width: int, height: int) -> bytes:
-    """REAL WebP-lossless resize: full VP8L decode, nearest-neighbor
-    resample of the RGBA raster (per-channel index arithmetic —
-    deterministic, no float kernels), re-encode as a plain literal
-    VP8L stream."""
-    from . import vp8l
-
-    img = vp8l.decode_vp8l(data)
-    src = np.frombuffer(img["pixels"], dtype=np.uint8).reshape(
-        img["height"], img["width"], 4
-    )
-    ys = (np.arange(height) * img["height"]) // height
-    xs = (np.arange(width) * img["width"]) // width
-    out = src[np.ix_(ys, xs)]
-    return vp8l.encode_vp8l(width, height, out.tobytes())
-
-
-def resize_images(
-    df: DataFrame, width: int = 32, height: int = 32
-) -> DataFrame:
-    """Resize: (id, payload) → (id, resized payload, w, h).
-
-    Payloads carrying a real PNG go through ``resize_png`` (decode →
-    nearest-neighbor resample → re-encode — a valid PNG comes out).
-    Opaque payloads (formats whose codecs need external libraries) fall
-    back to the documented deterministic STUB: tile/truncate to exactly
-    ``width·height`` bytes, keeping the pipeline shape (binary in →
-    binary out through Arrow) testable. Unlike metadata extraction, the
-    binary column legitimately survives this operator — downstream
-    writers should partition before shuffling payloads.
-    """
-    target = width * height
-
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for pid, payload in zip(pdf["id"], pdf["payload"]):
-                if payload is None or len(payload) == 0:
-                    raise NotImplementedError("empty payload: real resizer not available")
-                resized = None
-                raw0 = bytes(payload[:8])
-                if raw0 == _PNG_SIG:
-                    try:
-                        resized = resize_png(bytes(payload), width, height)
-                    except _CODEC_ERRORS:
-                        resized = None  # unsupported PNG variant → stub
-                elif raw0[:3] == _JPEG_SIG:
-                    try:
-                        resized = resize_jpeg(bytes(payload), width, height)
-                    except _CODEC_ERRORS:
-                        resized = None  # progressive/exotic JPEG → stub
-                elif raw0[:4] == b"RIFF":
-                    try:
-                        resized = resize_webp(bytes(payload), width, height)
-                    except _CODEC_ERRORS:
-                        resized = None  # lossy/extended WebP, AVI → stub
-                if resized is None:
-                    reps = -(-target // len(payload))  # ceil
-                    resized = (payload * reps)[:target]
-                outs.append(resized)
-            yield pd.DataFrame({
-                "id": pdf["id"].to_numpy(),
-                "payload": outs,
-                "width": width,
-                "height": height,
-            })
-
-    return df.select("id", "payload").mapInPandas(resize_batches, RESIZED_SCHEMA)
-
-
-def _stat_features(arr: np.ndarray, dim: int) -> list[float]:
-    """Real content features from normalized samples in [0, 1]: four
-    moments (mean/std/min/max) + a (dim−4)-bin density histogram —
-    deterministic, library-free, and content-sensitive (a flat image
-    and a gradient produce different vectors)."""
-    moments = [float(arr.mean()), float(arr.std()),
-               float(arr.min()), float(arr.max())]
-    bins = max(dim - 4, 1)
-    hist, _ = np.histogram(arr, bins=bins, range=(0.0, 1.0))
-    vec = moments + (hist / max(arr.size, 1)).tolist()
-    return (vec + [0.0] * dim)[:dim]
-
-
-def extract_features(df: DataFrame, dim: int = 16) -> DataFrame:
-    """Feature extraction: (id, payload) → (id, float vector).
-
-    Real PNG / baseline-JPEG / WebP-lossless payloads are decoded and
-    featurized from the raster (pixels/255); real WAV payloads from
-    their PCM samples; opaque payloads fall back to the deterministic
-    hash-window STUB (the slot a learned encoder would fill). Output is a dense ``array<float>``
-    column — the same shape the similarity operators consume, so the
-    multimodal and embedding halves of the engine compose end-to-end
-    (tested).
-    """
-    import hashlib
-
-    schema = T.StructType([
-        T.StructField("id", T.LongType()),
-        T.StructField("features", T.ArrayType(T.FloatType())),
-    ])
-
-    def one(payload) -> list[float]:
-        if payload is None or len(payload) == 0:
-            raise NotImplementedError("empty payload: real encoder not available")
-        raw = bytes(payload)
-        if raw[:8] == _PNG_SIG:
-            try:
-                img = decode_png_auto(raw)
-                arr = np.frombuffer(img["pixels"], dtype=np.uint8) / 255.0
-                return _stat_features(arr, dim)
-            except _CODEC_ERRORS:
-                pass  # unsupported PNG variant → hash-window stub
-        if raw[:3] == _JPEG_SIG:
-            try:
-                from . import jpeg as _j
-
-                img = _j.decode_jpeg(raw)
-                arr = np.frombuffer(img["pixels"], dtype=np.uint8) / 255.0
-                return _stat_features(arr, dim)
-            except _CODEC_ERRORS:
-                pass  # progressive/exotic JPEG → stub
-        if raw[:4] == b"RIFF":
-            if raw[8:12] == b"WEBP":
-                try:
-                    from . import vp8l as _v
-
-                    img = _v.decode_vp8l(raw)
-                    arr = np.frombuffer(img["pixels"], dtype=np.uint8) / 255.0
-                    return _stat_features(arr, dim)
-                except _CODEC_ERRORS:
-                    pass  # lossy/extended WebP → stub
-            else:
-                try:
-                    meta = decode_wav(raw)
-                    pcm = np.frombuffer(meta["pcm"], dtype="<i2")
-                    return _stat_features(
-                        (pcm.astype("float64") / 32768.0 + 1.0) / 2.0, dim)
-                except _CODEC_ERRORS:
-                    pass  # non-WAV/WebP RIFF container (AVI) → stub
-        vec = []
-        for i in range(dim):
-            h = hashlib.sha256(raw + bytes([i])).digest()
-            vec.append(int.from_bytes(h[:4], "big") / 2**32)
-        return vec
-
-    def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [one(p) for p in pdf["payload"]]
-            yield pd.DataFrame({"id": pdf["id"].to_numpy(), "features": feats})
-
-    return df.select("id", "payload").mapInPandas(feat_batches, schema)
-
-
-def sample_frames(
-    df: DataFrame, every_n_bytes: int = 4
-) -> DataFrame:
-    """Frame-sampling plumbing demo: explode byte offsets 0, n, 2n, …
-    per payload (a real video pipeline explodes frame timestamps).
-    Pure built-ins — offsets come from ``sequence``, no UDF."""
-    return df.select(
-        "id",
-        F.explode(
-            F.sequence(F.lit(0), F.length("payload") - 1, F.lit(every_n_bytes))
-        ).alias("offset"),
-        F.length("payload").alias("n_bytes"),
-    )

@@ -9,9 +9,10 @@ skew; these helpers are for the cases AQE cannot fix:
   ``n_salts`` reducers — then merge the per-salt partials. Any
   algebraic aggregate decomposes this way (same partial/final split as
   ``cube_lattice_two_level``).
-- ``salted_broadcast_left``: fact ⋈ skewed-small-dim where the dim is
-  broadcastable — broadcasting sidesteps shuffle skew entirely; the
-  helper exists to make the intent explicit at call sites.
+- ``skew_split_join``: a fact ⋈ fact join where a few keys hold most
+  rows — the hot keys (``detect_hot_keys``) join against a broadcast
+  of the right side's hot slice, the cold keys take the ordinary
+  shuffled join.
 
 Salting trades one extra (cheap, |keys|·n_salts-row) shuffle for
 eliminating the straggler task; it is NOT free and should only wrap
@@ -62,12 +63,6 @@ def salted_agg(
     salted = with_salt(df, n_salts)
     stage1 = salted.groupBy(*keys, "__salt").agg(*partials)
     return stage1.groupBy(*keys).agg(*finals)
-
-
-def salted_broadcast_left(fact: DataFrame, dim: DataFrame, on: list[str] | str) -> DataFrame:
-    """Skew-proof fact⋈dim: broadcast the dim so the fact side never
-    shuffles — shuffle skew cannot exist without a shuffle."""
-    return fact.join(F.broadcast(dim), on)
 
 
 def detect_hot_keys(

@@ -304,22 +304,6 @@ def decode_avi(data: bytes) -> dict:
     }
 
 
-def sample_avi_frames(data: bytes, every_k: int = 2) -> list[tuple[int, bytes]]:
-    """Decode ONLY frames 0, k, 2k, … — the parser seeks via idx1 and
-    never touches the skipped chunks' bytes (beyond the movi walk that
-    verifies the index). Returns (frame_no, raster) pairs. This is the
-    production frame-sampling access pattern: IO proportional to the
-    SAMPLED frames, not the clip length."""
-    if every_k < 1:
-        raise ValueError("every_k must be >= 1")
-    meta = _parse_headers(data)
-    spans = _frame_spans(data, meta)
-    return [
-        (i, _decode_frame_body(data[o:o + ln], meta))
-        for i, (o, ln) in enumerate(spans) if i % every_k == 0
-    ]
-
-
 # ------------------------------------------------- synthesis + hash
 
 def frame_token_grids(text: str, n_frames: int = N_FRAMES,

@@ -515,13 +515,6 @@ def _add_pixels(residual: int, pred: int) -> int:
     return out
 
 
-def _sub_pixels(pixel: int, pred: int) -> int:
-    out = 0
-    for sh in (24, 16, 8, 0):
-        out |= ((((pixel >> sh) & 0xFF) - ((pred >> sh) & 0xFF)) & 0xFF) << sh
-    return out
-
-
 # -------------------------------------------------------------- decode
 
 _NUM_LENGTH_CODES = 24
@@ -922,9 +915,9 @@ def encode_vp8l(
             ch = res
         else:
             # r17: forward residuals read ORIGINAL neighbors — no
-            # recurrence, so one vectorized plane predictor replaces
-            # the per-pixel _predict/_sub_pixels loop (kept as the
-            # parity reference in tests); uint8 wrap IS mod-256
+            # recurrence, so one vectorized plane predictor does the
+            # whole channel (``_predict`` is its parity reference in
+            # tests); uint8 wrap IS mod-256
             ch = ch - _predict_plane(predictor_mode, ch)
         bw.write(1, 1)   # transform present
         bw.write(0, 2)   # predictor

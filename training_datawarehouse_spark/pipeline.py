@@ -321,14 +321,3 @@ def compact_warehouse(
         )
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def run_full_pipeline(spark: SparkSession, diary_path: str) -> dict[str, DataFrame]:
-    facts = run_e1_ingest(spark, diary_path)
-    facts = run_e2_tsb(facts)
-    facts = run_e3_strain(facts)
-    return {
-        "facts": facts,
-        "weekly": run_e4_rollup(facts, "year_week"),
-        "monthly": run_e4_rollup(facts, "year_month"),
-    }

@@ -182,22 +182,6 @@ FROM lineitem
 """
 
 
-def json_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON-in-string extraction (events.props), grouped stats."""
-    ev = load_table(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("long")
-    return (
-        ev.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.sum("k").alias("sum_k"),
-            F.count("k").alias("n_with_k"),
-            F.min("k").alias("min_k"),
-            F.max("k").alias("max_k"),
-        )
-    )
-
-
 JSON_EXTRACTION_ORACLE = """
 SELECT event_type,
        -- DuckDB sum(BIGINT) widens to HUGEINT (pandas float64); cast back

@@ -229,21 +229,6 @@ def catalog_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CATALOG_ORACLE = f"""
-WITH src AS (
-  SELECT l_returnflag AS activity,
-         l_linestatus AS activity_type,
-         {_EQUIP_SQL} AS equipment
-  FROM lineitem
-)
-SELECT DISTINCT activity, activity_type,
-       replace(equipment, ' ', '') AS equipment,
-       'Day' || '_' || activity || '_' || activity_type || '_'
-             || replace(equipment, ' ', '') AS table_name
-FROM src WHERE equipment NOT IN ('Not Set', '')
-"""
-
-
 # SCD2 stage constants — shared verbatim by builder and oracle.
 _SCD_T0, _SCD_T1, _SCD_T2 = (
     "2020-01-01 00:00:00", "2021-06-01 00:00:00", "2022-01-01 00:00:00",

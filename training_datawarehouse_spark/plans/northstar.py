@@ -100,20 +100,6 @@ WHERE rn = 1
 
 # -------------------------------------------------------- text stats
 
-def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting + lexical stats, all JVM-side expressions."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = F.col("text")
-    return docs.select(
-        "doc_id",
-        tx.token_count(t).alias("n_tokens"),
-        tx.distinct_token_count(t).alias("n_distinct"),
-        F.round(tx.type_token_ratio(t), 6).alias("ttr"),
-        F.round(tx.avg_token_length(t), 6).alias("avg_token_len"),
-        tx.stopword_count(t, "en").alias("n_stopwords_en"),
-    )
-
-
 TEXT_STATS_ORACLE = """
 WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
 SELECT doc_id,
@@ -491,22 +477,6 @@ FROM dirty
     "__URL__", tx.URL_PATTERN).replace("__PHONE__", tx.PHONE_PATTERN)
 
 
-def lang_char_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Char-trigram language ID (the n-gram heuristic complement to the
-    stopword-based lang_id), plus per-language overlap counts."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = F.col("text")
-    grams = tx.char_trigrams(t)
-    cols = [
-        F.size(F.array_intersect(grams, F.lit(list(prof))))
-        .alias(f"n_{lang}")
-        for lang, prof in tx.CHAR_TRIGRAM_PROFILES.items()
-    ]
-    return docs.select(
-        "doc_id", tx.lang_id_char_ngram(t).alias("lang_pred"), *cols
-    )
-
-
 def _prof_sql(lang: str) -> str:
     grams = ", ".join("'" + g.replace("'", "''") + "'" for g in
                       tx.CHAR_TRIGRAM_PROFILES[lang])
@@ -684,26 +654,6 @@ LANG_QUALITY_ORACLE = LANG_QUALITY_ORACLE.format(
 ).replace("@@PII@@", _PII_ORACLE).replace(
     "@@GOPHER@@", _GOPHER_ORACLE).replace("@@C4@@", _C4_ORACLE).replace(
     "@@PAGERANK@@", _pagerank_oracle())
-
-
-# ------------------------------------------------------- fingerprint
-
-def fingerprint_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical md5 fingerprint of normalized text + dupe-group size."""
-    docs = load_table(spark, sf_dir, "documents")
-    fp = docs.select("doc_id", tx.fingerprint(F.col("text")).alias("fp"))
-    counts = fp.groupBy("fp").agg(F.count(F.lit(1)).alias("group_size"))
-    return fp.join(counts, "fp").select("doc_id", "fp", "group_size")
-
-
-FINGERPRINT_ORACLE = """
-WITH fp AS (
-  SELECT doc_id,
-         substr(md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')), 1, 16) AS fp
-  FROM documents
-)
-SELECT doc_id, fp, count(*) OVER (PARTITION BY fp) AS group_size FROM fp
-"""
 
 
 # ------------------------------------------------ similarity search
@@ -934,16 +884,6 @@ FROM rrf_ranked WHERE rank <= {_RETR_K}
 
 
 SIMILARITY_ORACLE = _retrieval_oracle()
-
-
-def similarity_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force top-5 via Arrow-batched numpy matmul (the dense
-    scoring scale path). Same result as ns_similarity_topk — equality
-    asserted in tests; rows-only here because float fold order differs
-    from the SQL oracle in the last ulp."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    return sim.cosine_topk_vectorized(emb, queries, "vec_id", "embedding", k=5)
 
 
 def similarity_lsh(spark: SparkSession, sf_dir: str,
@@ -1220,19 +1160,6 @@ def cross_modal_dedup(spark: SparkSession, sf_dir: str,
 
 
 # ------------------------------------------------ regex tokenization
-
-def token_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-pretokenizer-style regex token counts (letters / digits /
-    single marks) next to whitespace token counts."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = F.col("text")
-    return docs.select(
-        "doc_id",
-        tx.token_count(t).alias("n_ws_tokens"),
-        tx.regex_token_count(t).alias("n_bpe_tokens"),
-        F.size(F.array_distinct(tx.regex_tokens(t))).cast("long").alias("n_bpe_distinct"),
-    )
-
 
 TOKEN_REGEX_ORACLE = """
 SELECT doc_id,
@@ -4473,8 +4400,7 @@ QUERIES = {
     "ns_multimodal_meta": Query(multimodal_meta, MULTIMODAL_ORACLE),
     # ns_text_profile absorbs the former ns_fingerprint entry (same
     # scan, window count for the group size); ns_lang_quality absorbs
-    # ns_lang_char_ngram (both lang-ID families in one projection) —
-    # the builders fingerprint_q / lang_char_ngram remain for direct use
+    # ns_lang_char_ngram (both lang-ID families in one projection)
     "ns_text_profile": Query(text_profile, TEXT_PROFILE_ORACLE),
     "ns_lang_quality": Query(lang_quality, LANG_QUALITY_ORACLE),
     "ns_similarity_topk": Query(similarity_topk, SIMILARITY_ORACLE),

@@ -1587,12 +1587,6 @@ CMS_EPS_NUM = 2.71828  # e: the classic eps = e/w overestimate bound
 CMS_PROBE_KEYS = (1, 2, 3, 4, 5)
 
 
-def _cms_bucket(key, j: int):
-    """Row-j bucket: hex byte j of md5(key) mod CMS_W — one md5, four
-    independent-enough byte extractions; portable to the SQL oracle."""
-    return _cms_bucket_hex(F.md5(key.cast("string")), j)
-
-
 def _cms_bucket_hex(m, j: int):
     """Row-j bucket from an ALREADY-COMPUTED md5 hex column — the hot
     path computes the digest once per row and slices it four times."""
@@ -2264,7 +2258,7 @@ def _cms_stages(spark: SparkSession, ev: DataFrame) -> DataFrame:
 
 
 # CMS bucket for hash row j (a COLUMN): hex byte j of md5 — the same
-# rule as _cms_bucket, with j entering the substr positions
+# rule as _cms_bucket_hex, with j entering the substr positions
 _CMS_HEXV = "(strpos('0123456789abcdef', substr(m, {p}, 1)) - 1)"
 _CMS_B = (
     f"(({_CMS_HEXV.format(p='2*j + 1')} * 16"
@@ -2782,15 +2776,6 @@ def pivot_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PIVOT_ORACLE = """
-SELECT l_returnflag,
-       round(sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END), 2) AS qty_f,
-       round(sum(CASE WHEN l_linestatus = 'O' THEN l_quantity END), 2) AS qty_o
-FROM lineitem GROUP BY l_returnflag
-"""
-
-
-
 def unpivot_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (melt): the pivot matrix back to long form — wide
     per-status quantity columns become (returnflag, status, qty) rows."""
@@ -2840,18 +2825,6 @@ SELECT event_type,
        round(quantile_cont(value, 0.95), 6) AS p95
 FROM events GROUP BY event_type
 """
-
-
-def multi_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multiple COUNT(DISTINCT ...) in one aggregate (Expand-based
-    rewrite under the hood) + a plain sum alongside."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_users"),
-        F.countDistinct(F.to_date("ts")).alias("n_days"),
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 4).alias("total_value"),
-    )
 
 
 MULTI_DISTINCT_ORACLE = """

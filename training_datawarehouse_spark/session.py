@@ -36,23 +36,22 @@ CODEGEN_CACHE_ENTRIES = 2000
 def get_spark(
     app_name: str = "training-datawarehouse-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
+    """A session on ``master`` (default ``local[$SPARK_GRAFT_CPUS]``,
+    32 cores when unset), finished by ``tune_for_queries`` so the
+    shuffle-partition count follows the cores the master actually
+    gives."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    return builder.getOrCreate()
+    return tune_for_queries(builder.getOrCreate())
 
 
 def tune_for_queries(spark: SparkSession) -> SparkSession:

@@ -4,12 +4,11 @@ The reference drives its entire schema, projection, casting, unit
 conversion and aggregation-method choice from four Python list-of-dict
 maps (reference ``src/populate_from_json.py:28-84``). We keep the same
 design: one declarative spec per column, and pure generator functions
-that emit (a) a ``StructType``, (b) Spark select-expression lists
-(projection with unit factor + banker's rounding), and (c) Spark
-aggregate-expression lists. No ``eval`` — the reference dispatches
-mapper functions by name via ``eval`` (``populate_from_json.py:410,432``);
-here mappers are a static registry of Column builders (see
-``functions/mappers.py``).
+that emit (a) Spark select-expression lists (projection with unit
+factor + banker's rounding) and (b) Spark aggregate-expression lists.
+No ``eval`` — the reference dispatches mapper functions by name via
+``eval`` (``populate_from_json.py:410,432``); here mappers are a
+static registry of Column builders (see ``functions/mappers.py``).
 
 All functions here are pure and unit-testable without a SparkSession
 (they build unresolved Column expressions only).
@@ -174,22 +173,6 @@ CALCULATED_SPECS: list[ColumnSpec] = [
         "monotony", "strain", "rpe_monotony", "rpe_strain",
     )
 ]
-
-PHYSIOLOGICAL_SPECS: list[ColumnSpec] = [
-    ColumnSpec("kg", "kg", D, agg=Agg.NONE),
-    ColumnSpec("lbs", "kg", D, factor=2.20462, round_dp=1, agg=Agg.NONE),
-    ColumnSpec("fat_percentage", "fatPercent", D, agg=Agg.NONE),
-    ColumnSpec("resting_hr", "restingHR", L, agg=Agg.NONE),
-    ColumnSpec("sdnn", "restingSDNN", D, agg=Agg.NONE),
-    ColumnSpec("rmssd", "restingRMSSD", D, agg=Agg.NONE),
-]
-
-
-def struct_type(specs: list[ColumnSpec]) -> T.StructType:
-    return T.StructType([
-        T.StructField(s.name, T.IntegerType() if s.is_boolean() else s.dtype, True)
-        for s in specs
-    ])
 
 
 def select_exprs(specs: list[ColumnSpec]) -> list[Column]:
