@@ -1,0 +1,82 @@
+"""The row-local Python crossing seam, ``functions.crossing.map_batches``:
+it is the only ``mapInPandas`` in the package, and it keeps its contract
+(only ``cols`` cross, fan-out, dict rows, schema column order, the
+``parallelism`` exchange).
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+from pyspark.sql import types as T
+
+from training_datawarehouse_spark.functions.crossing import map_batches
+
+PACKAGE = Path(__file__).resolve().parents[1] / "training_datawarehouse_spark"
+SEAM = PACKAGE / "functions" / "crossing.py"
+
+
+def test_map_batches_is_the_only_row_local_crossing():
+    sites = sorted(
+        f"{path.relative_to(PACKAGE)}:{node.lineno}"
+        for path in PACKAGE.rglob("*.py") if path != SEAM
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path)))
+        if isinstance(node, ast.Attribute) and node.attr == "mapInPandas"
+    )
+    assert not sites, "mapInPandas outside map_batches: " + ", ".join(sites)
+
+
+SCHEMA = T.StructType([
+    T.StructField("id", T.LongType()),
+    T.StructField("k", T.IntegerType()),
+    T.StructField("tag", T.StringType()),
+    T.StructField("n_cols", T.IntegerType()),
+])
+
+
+def test_map_batches_contract(spark):
+    def kernel(*cols):
+        # len(text) rows per input row, as dicts in an order unlike
+        # SCHEMA's; the first row of each input omits "k"
+        ids, texts = cols
+        return [
+            {"n_cols": len(cols), "tag": t, "id": i, **({"k": k} if k else {})}
+            for i, t in zip(ids, texts)
+            for k in range(len(t))
+        ]
+
+    df = spark.createDataFrame(
+        [(1, "a", 1.0), (2, "bb", 2.0)], "id long, text string, extra double")
+    out = map_batches(df, ["id", "text"], SCHEMA, kernel, parallelism=3)
+
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    below_map = plan[plan.index("MapInPandas"):]
+    assert "Exchange RoundRobinPartitioning(3)" in below_map, plan
+    assert out.columns == ["id", "k", "tag", "n_cols"]
+    assert {tuple(r) for r in out.collect()} == {
+        (1, None, "a", 2),
+        (2, None, "bb", 2),
+        (2, 1, "bb", 2),
+    }
+
+    unspread = map_batches(df, ["id", "text"], SCHEMA, kernel)
+    assert "Exchange" not in (
+        unspread._jdf.queryExecution().executedPlan().toString())
+
+
+def test_map_batches_sends_no_empty_batch(spark):
+    """The seam has no empty-batch branch and the kernels have no empty
+    guard: Spark sends no batch for an empty partition."""
+    def first_only(ids, texts):
+        return [(ids[0], None, texts[0], 1)]  # IndexError on an empty batch
+
+    df = spark.createDataFrame([(1, "a")], "id long, text string")
+    cases = {
+        "fully filtered": (df.filter("id < 0"), 0),
+        "range(0)": (spark.range(0).selectExpr("id", "'' AS text"), 0),
+        "3 of 4 partitions empty": (df.repartition(4), 1),
+    }
+    for name, (frame, n_rows) in cases.items():
+        out = map_batches(frame, ["id", "text"], SCHEMA, first_only)
+        assert len(out.collect()) == n_rows, name

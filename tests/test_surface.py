@@ -1,12 +1,13 @@
-"""Regrowth guard: every top-level function and class in the package has
-a caller somewhere in the repository's code.
+"""Regrowth guard: every top-level function, class and module constant
+in the package has a caller somewhere in the repository's code.
 
 A name counts as used when it appears, outside its own definition, as a
 name, an attribute, an imported name or an exact string constant in the
 package, ``tests/``, ``tools/``, ``perfbench/``, ``bench.py`` or
 ``__spark_entry__.py``. The scan is static and name-based, so it cannot
 see a use through ``getattr`` with a computed string; such a caller must
-spell the name out.
+spell the name out. ``__version__`` is exempt: it is the package's
+public version string, kept for readers outside the code.
 """
 
 from __future__ import annotations
@@ -39,6 +40,21 @@ def _uses(node: ast.AST) -> set[str]:
     return out
 
 
+def _defined(stmt: ast.stmt) -> list[str]:
+    """Names a top-level statement defines: a def, a class, or the plain
+    names an assignment binds."""
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [stmt.name]
+    if isinstance(stmt, ast.Assign):
+        targets = stmt.targets
+    elif isinstance(stmt, ast.AnnAssign):
+        targets = [stmt.target]
+    else:
+        return []
+    return [n.id for t in targets for n in ast.walk(t)
+            if isinstance(n, ast.Name) and n.id != "__version__"]
+
+
 def test_every_package_definition_has_a_caller():
     defs = []      # (name, file, index of its top-level statement)
     uses = {}      # (file, top-level statement index) -> names it uses
@@ -46,10 +62,8 @@ def test_every_package_definition_has_a_caller():
         tree = ast.parse(path.read_text(), filename=str(path))
         for i, stmt in enumerate(tree.body):
             uses[path, i] = _uses(stmt)
-            if PACKAGE in path.parents and isinstance(
-                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ):
-                defs.append((stmt.name, path, i))
+            if PACKAGE in path.parents:
+                defs.extend((name, path, i) for name in _defined(stmt))
     orphans = sorted(
         f"{path.relative_to(PACKAGE)}:{name}"
         for name, path, i in defs

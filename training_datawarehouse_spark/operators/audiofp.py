@@ -47,12 +47,11 @@ import functools
 import hashlib
 import math
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..functions.crossing import map_batches
 from . import phash as _ph
 from .multimodal import decode_wav, encode_wav
 from .phash import BAND_BITS, N_BANDS
@@ -164,36 +163,27 @@ def audio_fingerprint_signatures(df: DataFrame, id_col: str, text_col: str,
     """(id, b0..b3) audio fingerprints: synthesize the token mixture,
     round-trip it through the REAL stdlib WAV codec (16-bit PCM is
     lossless, so decode reproduces the samples — asserted by pytest),
-    and fingerprint the DECODED samples. One Arrow crossing,
-    row-local, no shuffle; shares the signature schema with
+    and fingerprint the DECODED samples. One ``map_batches``
+    crossing, row-local, no shuffle; shares the signature schema with
     `phash.image_phash_signatures` so `phash_candidate_pairs` serves
-    both modalities. ``parallelism``: same CPU-bound-crossing
-    repartition as `image_phash_signatures` (see its docstring)."""
-    if parallelism:
-        df = df.select(id_col, text_col).repartition(parallelism)
+    both modalities. ``parallelism``: the crossing's repartition width
+    (see `functions.crossing.map_batches`)."""
     schema = T.StructType(
         [T.StructField("id", T.LongType())]
         + [T.StructField(f"b{k}", T.IntegerType()) for k in range(N_BANDS)]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, clips = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                samples = token_wave_samples(text)
-                wav = encode_wav(samples)
-                pcm = decode_wav(wav)["pcm"]
-                clips.append(struct.unpack(f"<{N_SAMPLES}h", pcm))
-                ids.append(did)
-            cols = ["id"] + [f"b{k}" for k in range(N_BANDS)]
-            if not ids:
-                yield pd.DataFrame(columns=cols)
-                continue
-            ab = fingerprint_bands_batch(np.array(clips, dtype=np.int64))
-            yield pd.DataFrame(
-                [[did, *ab[j]] for j, did in enumerate(ids)], columns=cols)
+    def gen(ids: list, texts: list) -> list:
+        clips = []
+        for text in texts:
+            samples = token_wave_samples(text)
+            wav = encode_wav(samples)
+            pcm = decode_wav(wav)["pcm"]
+            clips.append(struct.unpack(f"<{N_SAMPLES}h", pcm))
+        ab = fingerprint_bands_batch(np.array(clips, dtype=np.int64))
+        return [[did, *ab[j]] for j, did in enumerate(ids)]
 
-    return df.select(id_col, text_col).mapInPandas(gen, schema)
+    return map_batches(df, [id_col, text_col], schema, gen, parallelism)
 
 
 def fused_multimodal_signatures(df: DataFrame, id_col: str, text_col: str,
@@ -215,8 +205,6 @@ def fused_multimodal_signatures(df: DataFrame, id_col: str, text_col: str,
     scan / one repartition / one crossing / one checkpoint."""
     from . import video as _vd
 
-    if parallelism:
-        df = df.select(id_col, text_col).repartition(parallelism)
     n_frames = _vd.N_FRAMES
     vcols = [f"vf{f}b{k}" for f in range(n_frames) for k in range(N_BANDS)]
     schema = T.StructType(
@@ -227,52 +215,39 @@ def fused_multimodal_signatures(df: DataFrame, id_col: str, text_col: str,
            if include_video else [])
     )
 
-    cols = (["id"]
-            + [f"ib{k}" for k in range(N_BANDS)]
-            + [f"ab{k}" for k in range(N_BANDS)]
-            + (vcols if include_video else []))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-
-        for pdf in batches:
-            # r16: hash at BATCH grain — the codec round trips stay
-            # row-local (they are the REAL-decode semantics), but the
-            # pHash DCT, the audio DFT, and the bit packs each run as
-            # one stacked numpy op per Arrow batch instead of one
-            # small matmul + 64 Python bit-shifts per row
-            # (phash_bands_batch / fingerprint_bands_batch are
-            # parity-tested bit-identical to the scalar forms)
-            ids, irasters, aclips, vframes = [], [], [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                pix = _ph.token_grid_pixels(text)
-                png = _ph.encode_png(_ph.GRID, _ph.GRID, pix,
-                                     filter_type=len(text) % 5)
-                irasters.append(_ph.decode_png(png)["pixels"])
-                samples = token_wave_samples(text)
-                pcm = decode_wav(encode_wav(samples))["pcm"]
-                aclips.append(struct.unpack(f"<{N_SAMPLES}h", pcm))
-                ids.append(did)
-                if include_video:
-                    avi = _vd.encode_avi(
-                        _vd.frame_token_grids(text, n_frames),
-                        _ph.GRID, _ph.GRID)
-                    vframes.extend(_vd.decode_avi(avi)["frames"])
-            if not ids:
-                yield pd.DataFrame(columns=cols)
-                continue
-            ib = _ph.phash_bands_batch(
-                _np.frombuffer(b"".join(irasters), dtype=_np.uint8))
-            ab = fingerprint_bands_batch(
-                _np.array(aclips, dtype=_np.int64))
-            rows = [[did, *ib[j], *ab[j]] for j, did in enumerate(ids)]
+    def gen(ids: list, texts: list) -> list:
+        # r16: hash at BATCH grain — the codec round trips stay
+        # row-local (they are the REAL-decode semantics), but the
+        # pHash DCT, the audio DFT, and the bit packs each run as
+        # one stacked numpy op per Arrow batch instead of one
+        # small matmul + 64 Python bit-shifts per row
+        # (phash_bands_batch / fingerprint_bands_batch are
+        # parity-tested bit-identical to the scalar forms)
+        irasters, aclips, vframes = [], [], []
+        for text in texts:
+            pix = _ph.token_grid_pixels(text)
+            png = _ph.encode_png(_ph.GRID, _ph.GRID, pix,
+                                 filter_type=len(text) % 5)
+            irasters.append(_ph.decode_png(png)["pixels"])
+            samples = token_wave_samples(text)
+            pcm = decode_wav(encode_wav(samples))["pcm"]
+            aclips.append(struct.unpack(f"<{N_SAMPLES}h", pcm))
             if include_video:
-                # one stacked einsum hashes every frame in the batch
-                vb = _ph.phash_bands_batch(
-                    _np.frombuffer(b"".join(vframes), dtype=_np.uint8))
-                for j, row in enumerate(rows):
-                    row.extend(
-                        vb[j * n_frames:(j + 1) * n_frames].reshape(-1))
-            yield pd.DataFrame(rows, columns=cols)
+                avi = _vd.encode_avi(
+                    _vd.frame_token_grids(text, n_frames),
+                    _ph.GRID, _ph.GRID)
+                vframes.extend(_vd.decode_avi(avi)["frames"])
+        ib = _ph.phash_bands_batch(
+            np.frombuffer(b"".join(irasters), dtype=np.uint8))
+        ab = fingerprint_bands_batch(np.array(aclips, dtype=np.int64))
+        rows = [[did, *ib[j], *ab[j]] for j, did in enumerate(ids)]
+        if include_video:
+            # one stacked einsum hashes every frame in the batch
+            vb = _ph.phash_bands_batch(
+                np.frombuffer(b"".join(vframes), dtype=np.uint8))
+            for j, row in enumerate(rows):
+                row.extend(
+                    vb[j * n_frames:(j + 1) * n_frames].reshape(-1))
+        return rows
 
-    return df.select(id_col, text_col).mapInPandas(gen, schema)
+    return map_batches(df, [id_col, text_col], schema, gen, parallelism)

@@ -849,7 +849,6 @@ def dup_span_coverage(
 
 BLOOM_M = 65_536          # filter bits
 BLOOM_WORD_BITS = 32      # bits packed per array element
-BLOOM_WORDS = BLOOM_M // BLOOM_WORD_BITS
 BLOOM_K = 4               # hash functions = disjoint md5 hex slices
 
 

@@ -2,8 +2,8 @@
 
 Images / audio / video ride through the engine as opaque ``binary``
 columns with typed metadata structs. ``decode_metadata`` is the one
-decode crossing: a partition-preserving, Arrow-batched ``mapInPandas``
-that turns (id, payload) rows into ``MEDIA_META_SCHEMA`` rows through a
+decode crossing: a partition-preserving, Arrow-batched pass through
+``functions/crossing.map_batches`` that turns (id, payload) rows into ``MEDIA_META_SCHEMA`` rows through a
 per-format adapter. The adapters run real codecs that need only the
 standard library and numpy: PNG (``encode_png`` / ``decode_png``: chunk
 + CRC validation, zlib inflate, all five scanline filters), WAV
@@ -19,7 +19,7 @@ Malformed media degrades a row; it never fails the job (see
 
 At 100 TB: binary payloads dominate row size, so the operators are
 careful to (a) select only the needed columns into the UDF
-(``mapInPandas`` receives pruned Arrow batches), (b) never shuffle the
+(``map_batches`` crosses only its ``cols``), (b) never shuffle the
 binary column for metadata-only outputs (project metadata first, then
 aggregate), and (c) bound Arrow batch memory via
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` for wide payloads.
@@ -31,14 +31,15 @@ import hashlib
 import struct
 import wave
 import zlib
-from typing import Callable, Iterator
+from typing import Callable
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions.crossing import map_batches
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -296,6 +297,12 @@ MEDIA_META_SCHEMA = T.StructType([
     T.StructField("checksum", T.StringType()),
 ])
 
+#: (id, payload) rows: what every ``synthesize_*_payload`` source emits
+PAYLOAD_SCHEMA = T.StructType([
+    T.StructField("id", T.LongType()),
+    T.StructField("payload", T.BinaryType()),
+])
+
 
 def attach_binary_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Test/demo source: derive a deterministic binary payload from a
@@ -344,27 +351,19 @@ def synthesize_png_payload(df: DataFrame, id_col: str, text_col: str) -> DataFra
     """Source stand-in producing REAL image bytes: a valid PNG per row
     (dims md5-derived, pixels the tiled digest, scanline filter chosen
     per-row so all five filter paths run), in place of reading image
-    files from a store. Arrow-batched ``mapInPandas``; output is
+    files from a store. One ``map_batches`` crossing; output is
     (id, payload) like ``attach_binary_payload``."""
-    schema = T.StructType([
-        T.StructField("id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
+    def gen(ids: list, texts: list) -> list:
+        payloads = []
+        for text in texts:
+            w, h, digest = _md5_dims(text)
+            n = w * h
+            pixels = (digest * (n // len(digest) + 1))[:n]
+            payloads.append(encode_png(w, h, pixels,
+                                       filter_type=digest[2] % 5))
+        return list(zip(ids, payloads))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf[text_col]:
-                w, h, digest = _md5_dims(text)
-                n = w * h
-                pixels = (digest * (n // len(digest) + 1))[:n]
-                payloads.append(encode_png(w, h, pixels,
-                                           filter_type=digest[2] % 5))
-            yield pd.DataFrame({
-                "id": pdf[id_col].to_numpy(), "payload": payloads,
-            })
-
-    return df.select(id_col, text_col).mapInPandas(gen, schema)
+    return map_batches(df, [id_col, text_col], PAYLOAD_SCHEMA, gen)
 
 
 def png_decode_meta(payload: bytes) -> dict:
@@ -388,26 +387,18 @@ def synthesize_wav_payload(df: DataFrame, id_col: str, text_col: str) -> DataFra
     """Source stand-in producing REAL audio bytes: a 16-bit PCM WAV per
     row (framerate/frame-count md5-derived, samples from the tiled
     digest)."""
-    schema = T.StructType([
-        T.StructField("id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
+    def gen(ids: list, texts: list) -> list:
+        payloads = []
+        for text in texts:
+            digest = hashlib.md5(text.encode("utf-8")).digest()
+            framerate = 8000 + (digest[2] % 8) * 1000
+            n_frames = 256 + digest[3]
+            raw = (digest * (2 * n_frames // len(digest) + 1))[: 2 * n_frames]
+            samples = list(struct.unpack(f"<{n_frames}h", raw))
+            payloads.append(encode_wav(samples, framerate))
+        return list(zip(ids, payloads))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf[text_col]:
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                framerate = 8000 + (digest[2] % 8) * 1000
-                n_frames = 256 + digest[3]
-                raw = (digest * (2 * n_frames // len(digest) + 1))[: 2 * n_frames]
-                samples = list(struct.unpack(f"<{n_frames}h", raw))
-                payloads.append(encode_wav(samples, framerate))
-            yield pd.DataFrame({
-                "id": pdf[id_col].to_numpy(), "payload": payloads,
-            })
-
-    return df.select(id_col, text_col).mapInPandas(gen, schema)
+    return map_batches(df, [id_col, text_col], PAYLOAD_SCHEMA, gen)
 
 
 def synthesize_jpeg_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -417,27 +408,19 @@ def synthesize_jpeg_payload(df: DataFrame, id_col: str, text_col: str) -> DataFr
     both MCU paths run)."""
     from . import jpeg
 
-    schema = T.StructType([
-        T.StructField("id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
+    def gen(ids: list, texts: list) -> list:
+        items = []
+        for text in texts:
+            w, h, digest = _md5_dims(text)
+            n = w * h
+            pixels = (digest * (n // len(digest) + 1))[:n]
+            items.append((w, h, pixels, bool(digest[3] % 2)))
+        # r17: every image in the Arrow batch rides one entropy-
+        # encode numpy pass (byte-identical to per-row encode_jpeg)
+        payloads = jpeg.encode_jpeg_batch(items, quality=85)
+        return list(zip(ids, payloads))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            items = []
-            for text in pdf[text_col]:
-                w, h, digest = _md5_dims(text)
-                n = w * h
-                pixels = (digest * (n // len(digest) + 1))[:n]
-                items.append((w, h, pixels, bool(digest[3] % 2)))
-            # r17: every image in the Arrow batch rides one entropy-
-            # encode numpy pass (byte-identical to per-row encode_jpeg)
-            payloads = jpeg.encode_jpeg_batch(items, quality=85)
-            yield pd.DataFrame({
-                "id": pdf[id_col].to_numpy(), "payload": payloads,
-            })
-
-    return df.select(id_col, text_col).mapInPandas(gen, schema)
+    return map_batches(df, [id_col, text_col], PAYLOAD_SCHEMA, gen)
 
 
 def synthesize_webp_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -449,29 +432,21 @@ def synthesize_webp_payload(df: DataFrame, id_col: str, text_col: str) -> DataFr
     prefix codes, both transforms, cache hits) runs across a corpus."""
     from . import vp8l
 
-    schema = T.StructType([
-        T.StructField("id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
+    def gen(ids: list, texts: list) -> list:
+        payloads = []
+        for text in texts:
+            w, h, digest = _md5_dims(text)
+            n = w * h * 4
+            rgba = (digest * (n // len(digest) + 1))[:n]
+            payloads.append(vp8l.encode_vp8l(
+                w, h, rgba,
+                subtract_green=bool(digest[4] % 2),
+                predictor_mode=[None, 1, 2, 7][digest[5] % 4],
+                cache_bits=[0, 6][digest[6] % 2],
+            ))
+        return list(zip(ids, payloads))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for text in pdf[text_col]:
-                w, h, digest = _md5_dims(text)
-                n = w * h * 4
-                rgba = (digest * (n // len(digest) + 1))[:n]
-                payloads.append(vp8l.encode_vp8l(
-                    w, h, rgba,
-                    subtract_green=bool(digest[4] % 2),
-                    predictor_mode=[None, 1, 2, 7][digest[5] % 4],
-                    cache_bits=[0, 6][digest[6] % 2],
-                ))
-            yield pd.DataFrame({
-                "id": pdf[id_col].to_numpy(), "payload": payloads,
-            })
-
-    return df.select(id_col, text_col).mapInPandas(gen, schema)
+    return map_batches(df, [id_col, text_col], PAYLOAD_SCHEMA, gen)
 
 
 def webp_decode_meta(payload: bytes) -> dict:
@@ -556,7 +531,7 @@ def decode_metadata(
     df: DataFrame,
     decode_fn: Callable[[bytes], dict] = deterministic_fake_decode,
 ) -> DataFrame:
-    """mapInPandas decode: (id, payload) → MEDIA_META_SCHEMA rows.
+    """Row-local decode: (id, payload) → MEDIA_META_SCHEMA rows.
 
     Arrow-batched; one Python crossing per batch, not per row. The
     binary column is consumed here and does not survive into the
@@ -577,7 +552,6 @@ def decode_metadata(
     # bench-scale batches keep the scalar path and production-width
     # Arrow batches (10k rows) get the vectorized one.
     batch_fn = getattr(decode_fn, "batch", None)
-    meta_cols = MEDIA_META_SCHEMA.names[1:]
 
     def decode_one(payload) -> dict:
         if payload is None or len(payload) == 0:
@@ -587,20 +561,16 @@ def decode_metadata(
         except _CODEC_ERRORS:
             return deterministic_fake_decode(payload)
 
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = list(pdf["payload"])
-            metas = None
-            if batch_fn is not None and len(payloads) >= _BATCH_DECODE_MIN:
-                try:
-                    metas = batch_fn(payloads)
-                except _CODEC_ERRORS:
-                    pass  # a payload the twin rejects: decode row by row
-            if metas is None:
-                metas = [decode_one(p) for p in payloads]
-            out = pd.DataFrame(metas, columns=meta_cols)
-            out.insert(0, "id", pdf["id"].to_numpy())
-            yield out
+    def decode_batch(ids: list, payloads: list) -> list[dict]:
+        metas = None
+        if batch_fn is not None and len(payloads) >= _BATCH_DECODE_MIN:
+            try:
+                metas = batch_fn(payloads)
+            except _CODEC_ERRORS:
+                pass  # a payload the twin rejects: decode row by row
+        if metas is None:
+            metas = [decode_one(p) for p in payloads]
+        return [{**m, "id": i} for i, m in zip(ids, metas)]
 
-    return df.select("id", "payload").mapInPandas(decode_batches, MEDIA_META_SCHEMA)
+    return map_batches(df, ["id", "payload"], MEDIA_META_SCHEMA, decode_batch)
 

@@ -46,13 +46,13 @@ from __future__ import annotations
 import functools
 import hashlib
 import math
-from typing import Iterator, NamedTuple
+from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..functions.caching import release_local_checkpoint
+from ..functions.crossing import map_batches
 from .dedup import _pairs_expr
 from .multimodal import decode_png, encode_png
 
@@ -286,45 +286,28 @@ def image_phash_signatures(df: DataFrame, id_col: str, text_col: str,
     round-trip it through the REAL PNG codec (encode with a per-row
     scanline filter so all five filter paths run, then full decode —
     CRCs, inflate, un-filter), and pHash the DECODED raster. One
-    Arrow crossing, row-local, no shuffle (with ``parallelism`` unset).
-
-    ``parallelism``: optional round-robin repartition WIDTH for the
-    crossing. Parquet sizes scan partitions for IO (~128 MB), but this
-    crossing is CPU-bound at ~0.5 ms/row — a 50 MB file holding 500 k
-    docs would otherwise run as ONE multi-minute task (measured on the
-    100x replica, SCALE.md r9). Callers at corpus scale pass
-    ``spark.sparkContext.defaultParallelism``; the extra exchange
-    ships only (id, text) and is priced at build time when the result
-    is checkpointed."""
-    if parallelism:
-        df = df.select(id_col, text_col).repartition(parallelism)
-    band_cols = params.band_cols
+    ``map_batches`` crossing, row-local, no shuffle (with
+    ``parallelism`` unset); ``parallelism`` is the crossing's
+    repartition width (see `functions.crossing.map_batches`)."""
     schema = T.StructType(
         [T.StructField("id", T.LongType())]
-        + [T.StructField(c, T.IntegerType()) for c in band_cols]
+        + [T.StructField(c, T.IntegerType()) for c in params.band_cols]
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rasters = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                pix = token_grid_pixels(text, params)
-                png = encode_png(params.grid, params.grid, pix,
-                                 filter_type=len(text) % 5)
-                rasters.append(decode_png(png)["pixels"])
-                ids.append(did)
-            cols = ["id"] + band_cols
-            if not ids:
-                yield pd.DataFrame(columns=cols)
-                continue
-            # r16: one stacked einsum hashes the whole Arrow batch
-            # (phash_bands_batch is parity-tested bit-identical)
-            bands = phash_bands_batch(
-                np.frombuffer(b"".join(rasters), dtype=np.uint8), params)
-            yield pd.DataFrame(
-                [[did, *bands[j]] for j, did in enumerate(ids)], columns=cols)
+    def gen(ids: list, texts: list) -> list:
+        rasters = []
+        for text in texts:
+            pix = token_grid_pixels(text, params)
+            png = encode_png(params.grid, params.grid, pix,
+                             filter_type=len(text) % 5)
+            rasters.append(decode_png(png)["pixels"])
+        # r16: one stacked einsum hashes the whole Arrow batch
+        # (phash_bands_batch is parity-tested bit-identical)
+        bands = phash_bands_batch(
+            np.frombuffer(b"".join(rasters), dtype=np.uint8), params)
+        return [[did, *bands[j]] for j, did in enumerate(ids)]
 
-    return df.select(id_col, text_col).mapInPandas(gen, schema)
+    return map_batches(df, [id_col, text_col], schema, gen, parallelism)
 
 
 def phash_candidate_pairs(

@@ -5,7 +5,7 @@
   and a ranking window per query. The corpus never shuffles: the join
   is broadcast-nested-loop over a tiny query set, then one shuffle of
   (query, candidate, score) tuples for the top-k window — at 100 TB
-  replace the final window with a per-partition top-k (``mapInPandas``
+  replace the final window with a per-partition top-k (``map_batches``
   heap) + global merge, or the same window after a coarse score filter.
 - ``signlsh_topk``: the scale path — random-hyperplane sign-LSH.
   Hyperplanes are deterministic (seeded numpy), shipped as literal
@@ -21,7 +21,9 @@ import numpy as np
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..functions.crossing import map_batches
 from ..functions.scalars import round_half_away
 
 
@@ -94,42 +96,37 @@ def cosine_topk_vectorized(
 
     Queries are collected to the driver (they are top-k *probes*, tiny
     by contract) and closed over; the corpus streams through
-    ``mapInPandas`` in Arrow batches emitting per-batch top-k per
+    ``map_batches`` in Arrow batches emitting per-batch top-k per
     query, then a global per-query top-k window merges batch winners:
     shuffle carries ≤ batches·queries·k slim rows, never scores for
     the whole corpus.
     """
-    import numpy as np  # noqa: F811 — numpy is module-level already
-
     q_rows = queries.select(id_col, vec_col).collect()
     q_ids = np.array([r[0] for r in q_rows])
     q_mat = np.array([r[1] for r in q_rows], dtype="float64")
     q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
 
-    out_schema = (
-        f"query_id long, neighbor_id long, cosine double"
-    )
+    out_schema = T.StructType([
+        T.StructField("query_id", T.LongType()),
+        T.StructField("neighbor_id", T.LongType()),
+        T.StructField("cosine", T.DoubleType()),
+    ])
 
-    def score(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            c = np.array(list(pdf[vec_col]), dtype="float64")
-            c_norm = c / np.linalg.norm(c, axis=1, keepdims=True)
-            sims = c_norm @ q_norm.T  # |batch| × |queries|
-            import pandas as _pd
+    def score(ids: list, vecs: list) -> list:
+        ids = np.array(ids)
+        c = np.array(vecs, dtype="float64")
+        c_norm = c / np.linalg.norm(c, axis=1, keepdims=True)
+        sims = c_norm @ q_norm.T  # |batch| × |queries|
+        rows = []
+        for j, qid in enumerate(q_ids):
+            col = sims[:, j]
+            mask = ids != qid
+            cand_idx = np.nonzero(mask)[0]
+            top = cand_idx[np.argsort(-col[cand_idx], kind="stable")[:k]]
+            rows.extend((qid, nid, cos) for nid, cos in zip(ids[top], col[top]))
+        return rows
 
-            outs = []
-            for j, qid in enumerate(q_ids):
-                col = sims[:, j]
-                mask = ids != qid
-                cand_idx = np.nonzero(mask)[0]
-                top = cand_idx[np.argsort(-col[cand_idx], kind="stable")[:k]]
-                outs.append(_pd.DataFrame({
-                    "query_id": qid, "neighbor_id": ids[top], "cosine": col[top],
-                }))
-            yield _pd.concat(outs, ignore_index=True)
-
-    batch_topk = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
+    batch_topk = map_batches(corpus, [id_col, vec_col], out_schema, score)
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return (
         batch_topk.withColumn("rank", F.row_number().over(w))

@@ -33,7 +33,7 @@ corpus is touched ONCE (the word-frequency aggregation — map-side
 combinable, vocabulary-sized output); the EM loop then runs over the
 (word, count) table. Below ``driver_vocab_cap`` that table collects
 and the loop is driver-side Python (how reference trainers hold it);
-above the cap each E-step is ONE Arrow-batched ``mapInPandas`` pass
+above the cap each E-step is ONE Arrow-batched ``map_batches`` pass
 over the distributed word table running the identical per-word
 function with the (model-sized, ≤V entries) probability table closed
 over — per-iteration driver traffic is V micro-count longs, the
@@ -60,8 +60,9 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..functions.crossing import map_batches
 from ..functions.scalars import round_half_away
 #: trainable-word alphabet: the BPE [a-z]+ rule PLUS an explicit
 #: 127-char length cap — the oracle's position/length expansion uses
@@ -195,21 +196,20 @@ def _estep_distributed(words_df: DataFrame, probs: dict,
     table running ``_estep_word`` per row (identical floats — same
     Python arithmetic, executor-side), partial micro sums per batch,
     ONE vocabulary-sized aggregation back to the driver."""
-    import pandas as pd
+    schema = T.StructType([
+        T.StructField("piece", T.StringType()),
+        T.StructField("micro", T.LongType()),
+    ])
 
-    def run(batches):
-        for pdf in batches:
-            acc: dict = {}
-            for w, n in zip(pdf["w"], pdf["n"]):
-                for q, m in _estep_word(str(w), int(n), probs, max_len):
-                    acc[q] = acc.get(q, 0) + m
-            yield pd.DataFrame(
-                {"piece": list(acc), "micro": list(acc.values())}
-            )
+    def run(ws: list, ns: list) -> list:
+        acc: dict = {}
+        for w, n in zip(ws, ns):
+            for q, m in _estep_word(str(w), int(n), probs, max_len):
+                acc[q] = acc.get(q, 0) + m
+        return list(acc.items())
 
     rows = (
-        words_df.select("w", "n")
-        .mapInPandas(run, "piece string, micro long")
+        map_batches(words_df, ["w", "n"], schema, run)
         .groupBy("piece")
         .agg(F.sum("micro").alias("micro"))
         .collect()
@@ -257,7 +257,7 @@ def train_unigram(
     """Train the unigram model on the corpus; returns the final
     ``{piece: prob}`` dict (model-sized). One corpus scan (the word
     frequency aggregation); the EM loop is driver-side under the cap
-    and per-iteration ``mapInPandas`` passes above it (identical
+    and per-iteration ``map_batches`` passes above it (identical
     results — the two E-steps run the same per-word Python function
     and the micro-unit sums are exact; parity-tested).
 

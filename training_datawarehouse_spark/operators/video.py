@@ -59,15 +59,15 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from ..functions.caching import release_local_checkpoint
+from ..functions.crossing import map_batches
 from . import phash as ph
-from .jpeg import decode_jpeg, encode_jpeg, encode_jpeg_frames_many
+from .jpeg import decode_jpeg, encode_jpeg_frames_many
+from .multimodal import PAYLOAD_SCHEMA
 
 N_FRAMES = 4           # frames per synthesized fingerprint clip
 DEFAULT_FPS = 8
@@ -339,45 +339,34 @@ def video_phash_signatures(df: DataFrame, id_col: str, text_col: str,
     """(id, frame, b0..b{n_bands-1}) per-frame pHash signatures:
     synthesize the frame rasters, round-trip them through the REAL
     AVI/DIB container codec (lossless => pixel-identity, pinned by
-    pytest), and pHash each DECODED frame. One Arrow crossing,
-    row-local; ``parallelism`` is the CPU-bound-crossing repartition
-    of `phash.image_phash_signatures` (see its docstring); ``params``
-    selects the hash envelope (64-bit bench default vs the 256-bit
+    pytest), and pHash each DECODED frame. One ``map_batches``
+    crossing, row-local; ``parallelism`` is the crossing's repartition
+    width (see `functions.crossing.map_batches`); ``params`` selects
+    the hash envelope (64-bit bench default vs the 256-bit
     `phash.PRODUCTION_PARAMS`)."""
-    if parallelism:
-        df = df.select(id_col, text_col).repartition(parallelism)
-    band_cols = params.band_cols
     schema = T.StructType(
         [T.StructField("id", T.LongType()),
          T.StructField("frame", T.IntegerType())]
-        + [T.StructField(c, T.IntegerType()) for c in band_cols]
+        + [T.StructField(c, T.IntegerType()) for c in params.band_cols]
     )
 
-    cols = ["id", "frame"] + band_cols
+    def gen(ids: list, texts: list) -> list:
+        rasters = []
+        for text in texts:
+            avi = encode_avi(
+                frame_token_grids(text, n_frames, params),
+                params.grid, params.grid)
+            rasters.extend(decode_avi(avi)["frames"])
+        # one stacked einsum hashes EVERY frame in the Arrow batch
+        bands = ph.phash_bands_batch(
+            np.frombuffer(b"".join(rasters), dtype=np.uint8), params)
+        return [
+            [did, fno, *bands[j * n_frames + fno]]
+            for j, did in enumerate(ids)
+            for fno in range(n_frames)
+        ]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, rasters = [], []
-            for did, text in zip(pdf[id_col], pdf[text_col]):
-                avi = encode_avi(
-                    frame_token_grids(text, n_frames, params),
-                    params.grid, params.grid)
-                ids.append(did)
-                rasters.extend(decode_avi(avi)["frames"])
-            if not ids:
-                yield pd.DataFrame(columns=cols)
-                continue
-            # one stacked einsum hashes EVERY frame in the Arrow batch
-            bands = ph.phash_bands_batch(
-                np.frombuffer(b"".join(rasters), dtype=np.uint8), params)
-            rows = [
-                [did, fno, *bands[j * n_frames + fno]]
-                for j, did in enumerate(ids)
-                for fno in range(n_frames)
-            ]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select(id_col, text_col).mapInPandas(gen, schema)
+    return map_batches(df, [id_col, text_col], schema, gen, parallelism)
 
 
 def video_pair_matches(
@@ -482,43 +471,35 @@ def synthesize_avi_payload(df: DataFrame, id_col: str, text_col: str,
     pixels (frame f shifts the stripe by f so frames differ). The
     variable frame count + non-4-multiple widths exercise the idx1
     walk and the DIB stride padding. Output is (id, payload)."""
-    schema = T.StructType([
-        T.StructField("id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ])
+    def gen(ids: list, texts: list) -> list:
+        clips = []
+        for text in texts:
+            digest = hashlib.md5(text.encode("utf-8")).digest()
+            w, h = 16 + digest[0] % 16, 16 + digest[1] % 16
+            nf = 2 + digest[2] % 7
+            fps = 4 + digest[3] % 8
+            n = w * h
+            frames = []
+            for f in range(nf):
+                stripe = digest[f % 16:] + digest[:f % 16]
+                frames.append((stripe * (n // 16 + 1))[:n])
+            clips.append((w, h, frames, fps))
+        if codec == "MJPG":
+            # r17: one vectorized entropy pass encodes every frame
+            # of every clip in the Arrow batch (byte-identical to
+            # per-frame encode_jpeg — §4.2 batch-at-once)
+            encs = encode_jpeg_frames_many(
+                [(w, h, frames) for w, h, frames, _fps in clips])
+            payloads = [
+                encode_avi(enc, w, h, fps, codec="MJPG")
+                for (w, h, _frames, fps), enc in zip(clips, encs)
+            ]
+        else:
+            payloads = [encode_avi(frames, w, h, fps)
+                        for w, h, frames, fps in clips]
+        return list(zip(ids, payloads))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            clips = []
-            for text in pdf[text_col]:
-                digest = hashlib.md5(text.encode("utf-8")).digest()
-                w, h = 16 + digest[0] % 16, 16 + digest[1] % 16
-                nf = 2 + digest[2] % 7
-                fps = 4 + digest[3] % 8
-                n = w * h
-                frames = []
-                for f in range(nf):
-                    stripe = digest[f % 16:] + digest[:f % 16]
-                    frames.append((stripe * (n // 16 + 1))[:n])
-                clips.append((w, h, frames, fps))
-            if codec == "MJPG":
-                # r17: one vectorized entropy pass encodes every frame
-                # of every clip in the Arrow batch (byte-identical to
-                # per-frame encode_jpeg — §4.2 batch-at-once)
-                encs = encode_jpeg_frames_many(
-                    [(w, h, frames) for w, h, frames, _fps in clips])
-                payloads = [
-                    encode_avi(enc, w, h, fps, codec="MJPG")
-                    for (w, h, _frames, fps), enc in zip(clips, encs)
-                ]
-            else:
-                payloads = [encode_avi(frames, w, h, fps)
-                            for w, h, frames, fps in clips]
-            yield pd.DataFrame({
-                "id": pdf[id_col].to_numpy(), "payload": payloads,
-            })
-
-    return df.select(id_col, text_col).mapInPandas(gen, schema)
+    return map_batches(df, [id_col, text_col], PAYLOAD_SCHEMA, gen)
 
 
 def avi_decode_meta(payload: bytes) -> dict:
