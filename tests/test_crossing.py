@@ -1,7 +1,10 @@
-"""The row-local Python crossing seam, ``functions.crossing.map_batches``:
-it is the only ``mapInPandas`` in the package, and it keeps its contract
-(only ``cols`` cross, fan-out, dict rows, schema column order, the
-``parallelism`` exchange).
+"""The seams where Python meets the plan, ``functions/crossing.py``.
+
+``map_batches`` is the only ``mapInPandas`` in the package, and it keeps
+its contract (only ``cols`` cross, fan-out, dict rows, schema column
+order, the ``parallelism`` exchange). ``local_frame`` is the only
+``createDataFrame``, and its frames are ``LocalRelation``s typed as the
+list path types them.
 """
 
 from __future__ import annotations
@@ -11,20 +14,34 @@ from pathlib import Path
 
 from pyspark.sql import types as T
 
-from training_datawarehouse_spark.functions.crossing import map_batches
+from training_datawarehouse_spark.functions.crossing import (
+    local_frame, map_batches,
+)
 
 PACKAGE = Path(__file__).resolve().parents[1] / "training_datawarehouse_spark"
 SEAM = PACKAGE / "functions" / "crossing.py"
 
 
-def test_map_batches_is_the_only_row_local_crossing():
-    sites = sorted(
+def _sites_outside_seam(attr: str) -> list[str]:
+    return sorted(
         f"{path.relative_to(PACKAGE)}:{node.lineno}"
         for path in PACKAGE.rglob("*.py") if path != SEAM
         for node in ast.walk(ast.parse(path.read_text(), filename=str(path)))
-        if isinstance(node, ast.Attribute) and node.attr == "mapInPandas"
+        if isinstance(node, ast.Attribute) and node.attr == attr
     )
+
+
+def test_map_batches_is_the_only_row_local_crossing():
+    sites = _sites_outside_seam("mapInPandas")
     assert not sites, "mapInPandas outside map_batches: " + ", ".join(sites)
+
+
+def test_local_frame_is_the_only_create_dataframe():
+    """A Python list handed to ``createDataFrame`` plans as a Python RDD
+    whose partitions each wait on a Python worker every time the plan
+    runs; ``local_frame`` plans the same rows in the JVM."""
+    sites = _sites_outside_seam("createDataFrame")
+    assert not sites, "createDataFrame outside local_frame: " + ", ".join(sites)
 
 
 SCHEMA = T.StructType([
@@ -80,3 +97,36 @@ def test_map_batches_sends_no_empty_batch(spark):
     for name, (frame, n_rows) in cases.items():
         out = map_batches(frame, ["id", "text"], SCHEMA, first_only)
         assert len(out.collect()) == n_rows, name
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_local_frame_contract(spark):
+    ddl = "w string, n long, x double, syms array<string>"
+    rows = [
+        ("a", 1, 0.5, ["p", "q"]),
+        (None, None, None, None),
+        ("b", -2, 1e300, []),
+    ]
+    listed = spark.createDataFrame(rows, ddl)
+    struct = listed.schema
+    before = spark.conf.get("spark.sql.execution.arrow.pyspark.enabled")
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", arrow)
+            for schema in (ddl, struct):
+                out = local_frame(spark, rows, schema)
+                plan = _optimized(out)
+                assert plan.startswith("LocalRelation"), plan
+                assert "LogicalRDD" not in plan, plan
+                assert out.schema == struct  # nullability included
+                assert out.collect() == listed.collect()  # row order too
+
+                empty = local_frame(spark, [], schema)
+                assert empty.schema == struct
+                assert empty.collect() == []
+                assert _optimized(empty).startswith("LocalRelation")
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", before)

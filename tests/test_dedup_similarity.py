@@ -760,6 +760,19 @@ def test_bigram_lm_topk_tiebreak_deterministic(spark):
     assert {k: v["lm_score"] for k, v in out.items()} == again
 
 
+def _leaf_outputs(df):
+    """The output column names of each leaf of ``df``'s physical plan,
+    whatever the leaf type (under AQE, of the plan it would run now)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    leaves = plan.collectLeaves()
+    return [
+        [leaf.output().apply(j).name() for j in range(leaf.output().size())]
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+    ]
+
+
 def test_bigram_lm_single_unigram_scan(spark):
     """The unigram-count table is materialized (persist → count →
     vocab-sized localCheckpoint → unpersist) before the driver collects
@@ -777,13 +790,10 @@ def test_bigram_lm_single_unigram_scan(spark):
         "doc_id long, text string",
     )
     out = bigram_lm_scores(df, "doc_id", "text", top_k=4)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" in plan  # the checkpointed unigram model
-    corpus_scans = [
-        line for line in plan.splitlines()
-        if "LocalTableScan" in line and "text" in line
-    ]
-    assert len(corpus_scans) <= 2, plan
+    leaves = _leaf_outputs(out)
+    assert ["w", "cu"] in leaves, leaves  # the checkpointed unigram model
+    corpus_scans = [cols for cols in leaves if "text" in cols]
+    assert len(corpus_scans) == 2, leaves
     # and the scores themselves still come out right
     assert out.count() == 8
 
@@ -941,13 +951,10 @@ def test_dsir_single_model_scan(spark):
         "doc_id long, text string, is_t boolean",
     )
     out = dsir_importance(df, "doc_id", "text", target_flag=F.col("is_t"))
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" in plan  # the checkpointed model table
-    corpus_scans = [
-        line for line in plan.splitlines()
-        if "LocalTableScan" in line and "text" in line
-    ]
-    assert len(corpus_scans) <= 1, plan
+    leaves = _leaf_outputs(out)
+    assert ["bkt", "cr", "ct"] in leaves, leaves  # the checkpointed model
+    corpus_scans = [cols for cols in leaves if "text" in cols]
+    assert len(corpus_scans) == 1, leaves
     assert out.count() == 8
 
 

@@ -1,10 +1,13 @@
-"""The one row-local Python crossing.
+"""Where driver-side Python meets the plan.
 
 Python runs only where no built-in expression can do the work, and then
 only Arrow-batched. Every row-local crossing in the package goes through
 ``map_batches``, so the shape of the crossing (which columns cross, the
 optional repartition, batch iteration, output column order) is decided
 here once and each call site keeps only its kernel.
+
+Every frame of driver-side rows enters a plan through ``local_frame``,
+so it is a JVM ``LocalRelation`` and no Python runs when it is scanned.
 """
 
 from __future__ import annotations
@@ -12,8 +15,10 @@ from __future__ import annotations
 from typing import Callable, Iterable, Iterator, Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def map_batches(df: DataFrame, cols: Sequence[str], schema: T.StructType,
@@ -47,3 +52,30 @@ def map_batches(df: DataFrame, cols: Sequence[str], schema: T.StructType,
             yield pd.DataFrame(rows, columns=names)
 
     return df.mapInPandas(crossing, schema)
+
+
+def local_frame(spark: SparkSession, rows: Sequence[Sequence],
+                schema: T.StructType | str) -> DataFrame:
+    """A frame of driver-side ``rows``, planned as a ``LocalRelation``.
+
+    ``rows`` are sequences in ``schema`` order; ``schema`` is a
+    ``StructType`` or a DDL string. Row order, column types and
+    nullability are those of ``spark.createDataFrame(rows, schema)``.
+
+    A Python list goes to a Python RDD: a ``Scan ExistingRDD`` with
+    ``defaultParallelism`` partitions, each waiting on a Python worker to
+    unpickle its rows every time the plan runs, and no size statistics.
+    An Arrow table goes to a ``LocalRelation``: rows held in the JVM,
+    exact statistics, no Python at execution (past Spark's
+    ``spark.sql.execution.arrow.localRelationThreshold`` it falls back
+    to a JVM RDD of Arrow batches).
+    """
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type)
+         for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)

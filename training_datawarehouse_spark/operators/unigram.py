@@ -62,7 +62,7 @@ import math
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..functions.crossing import map_batches
+from ..functions.crossing import local_frame, map_batches
 from ..functions.scalars import round_half_away
 #: trainable-word alphabet: the BPE [a-z]+ rule PLUS an explicit
 #: 127-char length cap — the oracle's position/length expansion uses
@@ -366,8 +366,8 @@ def doc_unigram_scores(
     for w in words:
         nll_micro, exp_micro = _word_stats(w, probs, max_len)
         stat_rows.append((w, nll_micro, exp_micro))
-    stats = F.broadcast(spark.createDataFrame(
-        stat_rows, "w string, nll_micro long, exp_micro long"
+    stats = F.broadcast(local_frame(
+        spark, stat_rows, "w string, nll_micro long, exp_micro long"
     ))
     doc_words = (
         docs.select(

@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.caching import eager_checkpoint, release_local_checkpoint
+from ..functions.crossing import local_frame
 from .bpe import WORD_RE, _trainable_words
 
 CONT = "##"
@@ -159,8 +160,8 @@ def train_wordpiece(
         word_counts = collect_word_counts(docs, text_col, driver_vocab_cap)
     if word_counts is not None:
         rows, merges = _train_local(word_counts, num_merges)
-        words = docs.sparkSession.createDataFrame(
-            rows, "w string, cnt long, syms array<string>"
+        words = local_frame(
+            docs.sparkSession, rows, "w string, cnt long, syms array<string>"
         )
         return words, merges
     counts_df = (

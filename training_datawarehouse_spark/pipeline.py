@@ -12,9 +12,13 @@ interpolation. Engine shape: declarative —
   E3  strain:   per-cell 7-row rolling monotony/strain (pure windows)
   E4  rollup:   week/month grain (plain AVG, MAX date)
 
-Everything before E2 is a single shuffle-bounded DAG; E2 adds one
-shuffle on the cell keys; E3 reuses that partitioning (window over the
-same keys); E4 is one more shuffle onto (cell, period).
+Everything before E2 is a single shuffle-bounded DAG. E2 shuffles
+nothing itself: the densified facts are already hash-partitioned on the
+cell keys (the ``cells`` distinct is the stream side of densify's cross
+join and of the broadcast joins after it), so no exchange sits below the
+grouped Python operator. E3 cannot reuse that partitioning: the Python
+operator emits new attributes, so its windows plan a fresh exchange on
+the cell keys. E4 is one more shuffle onto (cell, period).
 
 Scale posture: facts partitioned by cell keys; the physiological series
 and day dimension are date-keyed and tiny relative to facts → broadcast

@@ -18,6 +18,7 @@ from pyspark.sql import types as T
 
 from ..operators.lattice import cube_lattice_two_level
 from ..operators.rollup import periodic_rollup
+from ..functions.crossing import local_frame
 from ..functions.scalars import year_week, year_month
 from ..sources.tables import load_table
 from .base import Query
@@ -394,8 +395,9 @@ def dim_source_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(qwork, ignore_errors=True)
 
-    fmt_df = spark.createDataFrame(
-        rows, "stage string, key string, val string, detail string, flag string"
+    fmt_df = local_frame(
+        spark, rows,
+        "stage string, key string, val string, detail string, flag string",
     )
 
     # r12 'linkage' stage: blocked fuzzy entity resolution

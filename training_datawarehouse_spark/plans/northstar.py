@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from ..functions.caching import (
     release_checkpoints_in, release_local_checkpoint,
 )
+from ..functions.crossing import local_frame
 from ..functions.scalars import round_half_away
 from ..operators import bpe
 from ..operators import classifier as clf
@@ -712,8 +713,8 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per consumer — the same statically-duplicated-subplan failure
     # the r16 lsh_cross_modal plan audit caught
     docs = load_table(spark, sf_dir, "documents")
-    qmap = spark.createDataFrame(
-        [(qid, t) for qid, ts in _BM25_QUERIES for t in ts],
+    qmap = local_frame(
+        spark, [(qid, t) for qid, ts in _BM25_QUERIES for t in ts],
         "query_id long, term string",
     )
     qterms = rtr.mlt_query_terms(
@@ -1219,8 +1220,8 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         + [("eig", c, -1, lam) for c, lam in enumerate(eigs)]
     )
-    model = spark.createDataFrame(
-        model_rows, "space string, id_a long, id_b long, cosine double"
+    model = local_frame(
+        spark, model_rows, "space string, id_a long, id_b long, cosine double"
     )
     z = pca.whiten_project(emb, "embedding", means, comps, eigs)
     white = sim.cosine_neardup_pairs(
@@ -2918,7 +2919,8 @@ def similarity_ann(spark: SparkSession, sf_dir: str,
             F.lit(None).cast("double").alias("recall"),
         )
     )
-    methods = spark.createDataFrame(
+    methods = local_frame(
+        spark,
         [("signlsh",), ("ivf",), ("pq",), ("pq_rr",), ("ivfpq",),
          ("ivfpq_res",), ("sq8",), ("sq8l",), ("sq8n",), ("nnd",),
          ("nnd_serve",)],

@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 from ..functions.caching import (
     release_checkpoints_in, release_local_checkpoint,
 )
+from ..functions.crossing import local_frame
 from ..operators import funnel as _funnel
 from ..sources.tables import load_table
 from .base import Query
@@ -742,8 +743,8 @@ def stream_funnel_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         final = spark.table(name).groupBy("user_id").agg(
             F.max_by("max_step", "nb").alias("max_step")
         )
-        steps_df = spark.createDataFrame(
-            [(i, s) for i, s in enumerate(FUNNEL_STEPS, start=1)],
+        steps_df = local_frame(
+            spark, [(i, s) for i, s in enumerate(FUNNEL_STEPS, start=1)],
             "step int, step_name string",
         )
         counts = (
@@ -1890,8 +1891,8 @@ def _kmv_build(spark: SparkSession, sk: DataFrame,
         types_src = exact_t.select("event_type")
 
     types = sorted(r["event_type"] for r in types_src.collect())
-    pairs = spark.createDataFrame(
-        [(a, b) for i, a in enumerate(types) for b in types[i + 1:]],
+    pairs = local_frame(
+        spark, [(a, b) for i, a in enumerate(types) for b in types[i + 1:]],
         "ta string, tb string",
     )
 
@@ -2215,8 +2216,8 @@ def _cms_stages(spark: SparkSession, ev: DataFrame) -> DataFrame:
     sketch = sk_all.filter(F.col("src") == "one").drop("src")
     merged = sk_all.filter(F.col("src") == "merge").drop("src")
 
-    probes = spark.createDataFrame(
-        [(int(k),) for k in CMS_PROBE_KEYS], "k long"
+    probes = local_frame(
+        spark, [(int(k),) for k in CMS_PROBE_KEYS], "k long"
     )
     pj = probes.select(
         "k", F.explode(hex_rows(F.md5(F.col("k").cast("string")))).alias("e")
