@@ -155,42 +155,6 @@ def test_eager_checkpoint_lazy_mode_roundtrip_and_release(spark):
     assert release_local_checkpoint(lz)
 
 
-def test_tune_for_iterative_sets_the_three_knobs(spark):
-    from training_datawarehouse_spark.session import tune_for_iterative
-
-    saved = {}
-    keys = [
-        "spark.sql.defaultSizeInBytes",
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        "spark.sql.optimizer.runtime.bloomFilter.enabled",
-    ]
-    for k in keys:
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-    try:
-        tune_for_iterative(spark)
-        assert spark.conf.get("spark.sql.defaultSizeInBytes") == str(
-            64 * 1024 * 1024)
-        assert spark.conf.get(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-        ) == "64k"
-        assert spark.conf.get(
-            "spark.sql.optimizer.runtime.bloomFilter.enabled") == "false"
-        # re-exported next to the operators (r13 ADVICE #4)
-        from training_datawarehouse_spark.operators.nndescent import (
-            tune_for_iterative as reexported,
-        )
-        assert reexported is tune_for_iterative
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 def test_recursive_build_survives_all_core_corpus(spark):
     """r13 ADVICE #1: on a corpus whose ids ALL hash to the core
     level (every wave batch empty), the returned graph IS the core
@@ -243,6 +207,14 @@ def test_iterative_tuning_scoped_restores_confs(spark):
     with iterative_tuning(spark):
         for k, v in ITERATIVE_CONFS.items():
             assert spark.conf.get(k) == v
+        # the three measured knobs, spelled out
+        assert spark.conf.get("spark.sql.defaultSizeInBytes") == str(
+            64 * 1024 * 1024)
+        assert spark.conf.get(
+            "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+        ) == "64k"
+        assert spark.conf.get(
+            "spark.sql.optimizer.runtime.bloomFilter.enabled") == "false"
     assert {k: spark.conf.get(k) for k in ITERATIVE_CONFS} == before
 
     # exception-safe: the finally must still restore

@@ -1,7 +1,5 @@
-"""r17 optimization-round parity gates (the r16 pattern).
-
-Every optimization this round must keep results BYTE-IDENTICAL; these
-tests pin the codec internals that changed:
+"""Codec parity gates: the vectorized codec internals must keep results
+BYTE-IDENTICAL to their scalar references. These tests pin:
 
 - the array-at-once JPEG entropy ENCODER against the retained
   ``_encode_block`` scalar loop (gray + 4:2:0, multi-frame batches);
@@ -17,7 +15,6 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pytest
 
 from training_datawarehouse_spark.operators import jpeg, vp8l
 

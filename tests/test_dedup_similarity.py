@@ -360,20 +360,6 @@ def test_pack_training_windows_matches_global_cumsum(spark):
         assert got == expected, f"shard_width={shard_width}"
 
 
-def test_cosine_topk_vectorized_matches_expression(vectors):
-    exact = sim.cosine_topk(vectors, vectors.filter(F.col("vec_id") < 3),
-                            "vec_id", "embedding", k=4).collect()
-    vect = sim.cosine_topk_vectorized(vectors, vectors.filter(F.col("vec_id") < 3),
-                                      "vec_id", "embedding", k=4).collect()
-    key = lambda rows: {(r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-                        for r in rows}
-    a, b = key(exact), key(vect)
-    assert a.keys() == b.keys()
-    for kk in a:
-        assert a[kk][0] == b[kk][0]
-        assert a[kk][1] == pytest.approx(b[kk][1], abs=1e-6)
-
-
 def test_asof_join_semantics(spark):
     from training_datawarehouse_spark.operators.joins import asof_join
 
@@ -560,37 +546,6 @@ def test_resolve_near_duplicates_string_ids(spark):
     assert rows2[0]["survivor"] == "doc-a"
 
 
-def test_lsh_probe_index_hot_bucket_cap(spark):
-    """An ingest batch flooded with one degenerate signature must not
-    expand quadratically: with max_bucket below the flood size the
-    in-batch path drops the hot bucket (same guard as
-    lsh_candidate_pairs_portable), while distinct small-bucket pairs
-    survive."""
-    from training_datawarehouse_spark.operators.dedup import (
-        lsh_band_index,
-        lsh_probe_index,
-    )
-
-    flood = ("boilerplate template text repeated verbatim across the whole "
-             "spam burst with absolutely no variation between documents")
-    pair = ("a genuinely unique document about incremental lsh probing "
-            "strategies that appears exactly twice in this batch of docs")
-    corpus = spark.createDataFrame(
-        [(1, "some unrelated archival corpus document text entirely")],
-        "doc_id long, text string",
-    )
-    index = lsh_band_index(corpus, "doc_id", "text")
-    new = spark.createDataFrame(
-        [(100 + i, flood) for i in range(8)] + [(900, pair), (901, pair)],
-        "doc_id long, text string",
-    )
-    got = {(r["new_id"], r["old_id"])
-           for r in lsh_probe_index(index, new, "doc_id", "text",
-                                    max_bucket=4).collect()}
-    assert (900, 901) in got
-    assert not any(100 <= a < 200 and 100 <= b < 200 for a, b in got)
-
-
 def test_drop_reason_rule_order_and_kept(spark):
     from pyspark.sql import functions as F
     from training_datawarehouse_spark.operators import text as tx
@@ -618,36 +573,6 @@ def test_drop_reason_rule_order_and_kept(spark):
     assert got[2] == "repetitive"         # repetition outranks low_quality
     assert got[3] in ("low_quality", "unknown_lang")
     assert got[4] == "kept"
-
-
-def test_lsh_incremental_probe_finds_cross_generation_dups(spark):
-    from pyspark.sql import functions as F
-    from training_datawarehouse_spark.operators.dedup import (
-        lsh_band_index,
-        lsh_probe_index,
-    )
-
-    base = ("the quick brown fox jumps over the lazy dog and then runs far "
-            "away into the quiet green forest before the sun finally sets")
-    corpus = spark.createDataFrame(
-        [(1, base), (2, "completely unrelated text about database join "
-                        "strategies and shuffle partitioning at scale")],
-        "doc_id long, text string",
-    )
-    index = lsh_band_index(corpus, "doc_id", "text")
-    new = spark.createDataFrame(
-        [(100, base + " now"),            # near-dup of corpus doc 1
-         (101, base + " today"),          # near-dup of 1 AND of 100
-         (102, "fresh unique content mentioning nothing ever seen in "
-               "any earlier generation of this growing corpus at all")],
-        "doc_id long, text string",
-    )
-    pairs = {(r["new_id"], r["old_id"])
-             for r in lsh_probe_index(index, new, "doc_id", "text").collect()}
-    assert (100, 1) in pairs and (101, 1) in pairs
-    assert (100, 101) in pairs          # in-batch collision
-    assert not any(102 in p for p in pairs)
-    assert not any(2 in p for p in pairs)
 
 
 def test_contamination_pairs_planted_overlap(spark):
@@ -796,22 +721,6 @@ def test_bigram_lm_single_unigram_scan(spark):
     assert len(corpus_scans) == 2, leaves
     # and the scores themselves still come out right
     assert out.count() == 8
-
-
-def test_semdedup_k_population_constant():
-    """The k∝n contract as code: semdedup_k holds the per-cluster
-    population (and therefore the quadratic pair work per cluster)
-    constant as the corpus grows — the SCALE.md-measured rule that
-    makes SemDeDup embarrassingly parallel instead of O(n²)."""
-    from training_datawarehouse_spark.operators.similarity import semdedup_k
-
-    assert semdedup_k(0) == 2
-    assert semdedup_k(500) == 2
-    assert semdedup_k(2000, 250) == 8
-    for n in (10_000, 1_000_000, 100_000_000):
-        k = semdedup_k(n)
-        assert k >= 2
-        assert n / k <= 250  # population never exceeds the target
 
 
 def test_semdedup_stats_planted_groups(spark):

@@ -1,19 +1,11 @@
-"""Z-order clustering: interleave correctness, engine symmetry, and
-MEASURED file skipping (operators/layout.py).
-
-The skipping test is the point: it writes the same rows twice — once
-in insertion order, once Z-clustered on two dimensions — then replays
-a min/max-pruning reader against the real parquet footers and asserts
-the Z layout skips most row groups for a 2-D box predicate while the
-natural layout skips (almost) none on the non-sorted dimension.
-SCALE.md records the measured numbers.
-"""
+"""Z-order interleave (operators/layout.py): correctness against a
+Python reference, engine symmetry with the DuckDB SQL twin, and the
+locality the curve exists for."""
 
 from __future__ import annotations
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from training_datawarehouse_spark.operators import layout as lo
 
@@ -80,105 +72,3 @@ def test_zorder_locality_beats_linear_order(spark):
     for i in range(0, len(rows), 4):
         quad = rows[i:i + 4]
         assert len({(r["x"] // 2, r["y"] // 2) for r in quad}) == 1
-
-
-def test_zorder_file_skipping_measured(spark, tmp_path):
-    """The 100 TB claim, measured on real footers: a 2-D box predicate
-    over (user_id, day) reads a small fraction of Z-clustered row
-    groups but nearly all naturally-ordered ones."""
-    n = 40_000
-    df = spark.range(n).select(
-        F.col("id").alias("row_id"),
-        (F.col("id") % 1000).alias("user_id"),
-        ((F.col("id") * 37) % 365).alias("day"),
-        (F.col("id") % 97).cast("double").alias("value"),
-    )
-    natural = str(tmp_path / "natural")
-    zord = str(tmp_path / "zord")
-    # natural: insertion order (row_id), the layout an append pipeline
-    # produces; same file count as the Z layout for a fair comparison
-    df.repartitionByRange(16, "row_id").write.mode("overwrite").parquet(natural)
-    lo.write_zordered(df, zord, ["user_id", "day"], n_files=16, bits=10)
-
-    box = {"user_id": (100, 149), "day": (30, 59)}
-    nat = lo.file_pruning_stats(natural, box)
-    z = lo.file_pruning_stats(zord, box)
-    assert nat["n_row_groups"] >= 8 and z["n_row_groups"] >= 8
-    # natural order: user_id/day cycle inside every file -> ~no pruning
-    assert nat["frac_pruned"] <= 0.25
-    # Z-clustered: the box lives in a few curve segments
-    assert z["frac_pruned"] >= 0.5
-    assert z["frac_pruned"] > nat["frac_pruned"]
-
-    # pruning must not change answers: both layouts return the rows
-    pred = (
-        (F.col("user_id").between(*box["user_id"]))
-        & (F.col("day").between(*box["day"]))
-    )
-    a = sorted(r["row_id"] for r in
-               spark.read.parquet(natural).where(pred).collect())
-    b = sorted(r["row_id"] for r in
-               spark.read.parquet(zord).where(pred).collect())
-    expected = sorted(
-        i for i in range(n)
-        if 100 <= i % 1000 <= 149 and 30 <= (i * 37) % 365 <= 59
-    )
-    assert a == expected and b == expected
-
-    # record for SCALE.md maintenance
-    print(f"\nzorder-skip natural={nat} z={z}")
-
-
-def test_cluster_by_zorder_plan_shape(spark):
-    """Exactly ONE exchange (the range repartition) and no Python in
-    the clustering plan — the write-time cost a plain sort also pays."""
-    df = spark.range(1000).select(
-        (F.col("id") % 50).alias("a"), (F.col("id") % 77).alias("b")
-    )
-    plan = lo.cluster_by_zorder(df, ["a", "b"], 8, bits=8) \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1
-    assert "rangepartitioning" in plan.lower()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_ivf_index_layout_prunes_unprobed_lists(spark, tmp_path):
-    """The IVF storage contract: an index written partitionBy(list_id)
-    and probed with isin([...]) must (a) prune at the PARTITION level
-    (PartitionFilters in the scan, unprobed directories never opened),
-    (b) return exactly the probed lists' rows, (c) lay files out as
-    one directory per list."""
-    import os
-
-    from training_datawarehouse_spark.operators.layout import (
-        read_probed_lists, write_ivf_index,
-    )
-
-    rows = [(i, i % 8, [i % 251, (i * 7) % 251]) for i in range(800)]
-    codes = spark.createDataFrame(
-        rows, "vec_id long, list_id int, codes array<int>")
-    path = str(tmp_path / "ivf_index")
-    write_ivf_index(codes, path)
-
-    dirs = sorted(d for d in os.listdir(path) if d.startswith("list_id="))
-    assert dirs == [f"list_id={k}" for k in range(8)]
-
-    probed = read_probed_lists(spark, path, [1, 4])
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "list_id" in plan.split(
-        "PartitionFilters", 1)[1][:200]
-    got = probed.select("vec_id").collect()
-    assert len(got) == 200
-    assert all(r["vec_id"] % 8 in (1, 4) for r in got)
-    # physical proof unprobed directories are never OPENED (
-    # inputFiles() lists pre-pruning, so it can't show this): corrupt
-    # an unprobed list's file — the probed read must still succeed,
-    # and touching the corrupt list must fail
-    victim_dir = os.path.join(path, "list_id=5")
-    victim = [f for f in os.listdir(victim_dir) if f.endswith(".parquet")][0]
-    with open(os.path.join(victim_dir, victim), "wb") as fh:
-        fh.write(b"not a parquet file")
-    assert read_probed_lists(spark, path, [1, 4]).count() == 200
-    import pytest as _pytest
-    with _pytest.raises(Exception):
-        read_probed_lists(spark, path, [5]).count()

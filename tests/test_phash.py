@@ -17,7 +17,6 @@ import hashlib
 import math
 
 import duckdb
-import pytest
 
 from training_datawarehouse_spark.operators import phash as ph
 
@@ -202,45 +201,6 @@ def test_planted_near_dup_found_by_banded_join(spark):
     assert "MapInPandas" in plan or "FlatMapGroupsInPandas" in plan
     assert "Exchange" not in plan  # signatures are row-local
 
-
-def test_phash_incremental_index_cross_generation(spark):
-    """Generational dedup: a stored (band, val, id, b0..b3) index
-    probed by a new ingest batch must surface cross-generation
-    near-dups (Hamming verified from the INDEX's stored signatures —
-    no corpus re-decode) and in-batch pairs, and nothing for
-    unrelated content."""
-    gen0 = [(1, BASE), (2, FAR)] + [
-        (10 + i,
-         f"decoy document number {i} with padding words alpha beta "
-         f"gamma delta epsilon zeta eta theta iota kappa row{i}")
-        for i in range(10)
-    ]
-    in_batch_a = ("fresh content about shuffle partitions and adaptive "
-                  "query execution tuning broadcast thresholds and skew "
-                  "salting under the catalyst optimizer regime with whole "
-                  "stage codegen spans widened and the exchange reuse rule "
-                  "applied to every branch of the union today")
-    in_batch_b = in_batch_a.replace("today", "yesterday")  # hamming 4
-    gen1 = [(100, NEAR),              # cross-gen near-dup of doc 1
-            (101, in_batch_a), (102, in_batch_b),  # in-batch pair
-            (103, "entirely novel text regarding basalt columns and "
-                  "tidal erosion patterns on volcanic coastlines")]
-    df0 = spark.createDataFrame(gen0, "doc_id long, text string")
-    df1 = spark.createDataFrame(gen1, "doc_id long, text string")
-    index = ph.phash_band_index(
-        ph.image_phash_signatures(df0, "doc_id", "text"))
-    pairs = {(r.new_id, r.old_id): r.hamming
-             for r in ph.phash_probe_index(
-                 index,
-                 ph.image_phash_signatures(df1, "doc_id", "text"),
-             ).collect()}
-    assert (100, 1) in pairs and pairs[(100, 1)] <= ph.DEFAULT_MAX_HAMMING
-    assert (101, 102) in pairs
-    assert all(103 not in p for p in pairs)
-    assert all(2 not in p for p in pairs)  # FAR pairs with nothing
-
-
-# ----------------------------------------- r11: production envelope
 
 def _ref_phash_params(pixels: bytes, p: ph.PhashParams) -> list[int]:
     """The independent loop reimplementation, geometry-generic."""

@@ -27,6 +27,8 @@ def facts(spark, diary_path):
 
 
 def test_every_cell_has_every_date(facts):
+    # also OP-DD-1 (insert-or-ignore on (date, cell)): no cell holds a
+    # date twice
     span = facts.agg(F.min("date"), F.max("date")).collect()[0]
     n_days = (span[1] - span[0]).days + 1
     per_cell = facts.groupBy(*CELL_KEYS).agg(
@@ -131,7 +133,7 @@ def test_monthly_rollup_sum_matches_daily(spark, facts):
 
 
 def test_warehouse_write_prune_and_idempotent_append(spark, facts, tmp_path):
-    from training_datawarehouse_spark.pipeline import append_days, write_warehouse
+    from training_datawarehouse_spark.pipeline import write_warehouse
 
     wh = str(tmp_path / "warehouse")
     write_warehouse(facts, wh)
@@ -146,133 +148,6 @@ def test_warehouse_write_prune_and_idempotent_append(spark, facts, tmp_path):
     )
     plan = one._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan and "activity" in plan.split("PartitionFilters")[1][:200]
-
-    # re-appending the same facts is a no-op (first-writer-wins on
-    # (date, cell)); appending genuinely new dates lands exactly once
-    n0 = back.count()
-    after_dup = append_days(spark, wh, facts)
-    assert after_dup.count() == n0
-    shifted = facts.withColumn("date", F.date_add("date", 10000))
-    after_new = append_days(spark, wh, shifted)
-    assert after_new.count() == 2 * n0
-
-
-def test_delete_rows_rewrites_only_affected_partitions(spark, facts, tmp_path):
-    import glob
-    import os
-
-    from training_datawarehouse_spark.pipeline import delete_rows, write_warehouse
-
-    wh = str(tmp_path / "wh_del")
-    write_warehouse(facts, wh)
-    n0 = spark.read.parquet(wh).count()
-
-    # snapshot file mtimes per partition directory
-    def mtimes():
-        return {
-            p: os.path.getmtime(p)
-            for p in glob.glob(f"{wh}/activity=*/activity_type=*/equipment=*/*.parquet")
-        }
-
-    before = mtimes()
-    target_cell = (F.col("activity") == "Run") & (F.col("activity_type") == "Road")
-    victim_dates = (
-        spark.read.parquet(wh).filter(target_cell).select("date").limit(5).collect()
-    )
-    dates = [r["date"] for r in victim_dates]
-    pred = target_cell & F.col("date").isin(dates)
-    n_match = spark.read.parquet(wh).filter(pred).count()
-    assert n_match > 0
-
-    after_df = delete_rows(spark, wh, pred)
-    assert after_df.count() == n0 - n_match
-    assert after_df.filter(pred).count() == 0
-
-    after = mtimes()
-    untouched = [p for p in before if "activity=Run/activity_type=Road" not in p]
-    changed = [p for p in untouched if p not in after or after[p] != before[p]]
-    assert changed == []  # only Run/Road partitions rewritten
-
-
-def test_delete_rows_removes_fully_emptied_partitions(spark, facts, tmp_path):
-    """Deleting EVERY row of a cell must remove the partition directory —
-    dynamic partition overwrite alone would silently leave the old files
-    (no survivor rows → no output partition → no rewrite)."""
-    import glob
-
-    from training_datawarehouse_spark.pipeline import delete_rows, write_warehouse
-
-    wh = str(tmp_path / "wh_del_all")
-    write_warehouse(facts, wh)
-    n0 = spark.read.parquet(wh).count()
-
-    target_cell = (F.col("activity") == "Run") & (F.col("activity_type") == "Road")
-    n_match = spark.read.parquet(wh).filter(target_cell).count()
-    assert n_match > 0
-
-    after_df = delete_rows(spark, wh, target_cell)
-    assert after_df.count() == n0 - n_match
-    assert after_df.filter(target_cell).count() == 0
-    # the on-disk partition directories are gone, not just unreferenced
-    assert glob.glob(f"{wh}/activity=Run/activity_type=Road/*") == []
-
-
-def test_delete_rows_handles_escaped_and_default_partitions(spark, tmp_path):
-    """Partition values that Hive-escape on disk ('' and null →
-    __HIVE_DEFAULT_PARTITION__; ':', '%', '/' → %XX) must still be
-    deletable when their cell is fully emptied — path string-building
-    misses exactly these directories (round-2 ADVICE)."""
-    import glob
-
-    from training_datawarehouse_spark.pipeline import delete_rows, write_warehouse
-
-    rows = []
-    for eq in ["", "a:b", "x%y", "Run/Road", "plain"]:
-        for d in ["2020-01-01", "2020-01-02"]:
-            rows.append(("Run", "Road", eq, d, 1.0))
-    df = spark.createDataFrame(
-        rows, "activity string, activity_type string, equipment string, date string, tss double"
-    ).withColumn("date", F.to_date("date"))
-    wh = str(tmp_path / "wh_escaped")
-    write_warehouse(df, wh)
-    # '' is stored as the default-partition token and reads back as null
-    back = spark.read.parquet(wh)
-    assert back.count() == 10
-
-    # empty the null ('') cell and every escaped-value cell entirely
-    pred = F.col("equipment").isNull() | F.col("equipment").isin(
-        "a:b", "x%y", "Run/Road"
-    )
-    after = delete_rows(spark, wh, pred)
-    assert after.count() == 2
-    assert [r["equipment"] for r in after.collect()] == ["plain", "plain"]
-    # the escaped directories are gone from disk, not just unreferenced
-    leaf_dirs = glob.glob(f"{wh}/activity=*/activity_type=*/equipment=*")
-    assert len(leaf_dirs) == 1 and leaf_dirs[0].endswith("equipment=plain")
-
-
-def test_compact_warehouse_single_file_per_partition(spark, facts, tmp_path):
-    import glob
-
-    from training_datawarehouse_spark.pipeline import (
-        append_days,
-        compact_warehouse,
-        write_warehouse,
-    )
-
-    wh = str(tmp_path / "wh_compact")
-    write_warehouse(facts, wh)
-    # fragment: append a disjoint copy, creating extra files per dir
-    shifted = facts.withColumn("date", F.date_add("date", 20000))
-    append_days(spark, wh, shifted)
-    n0 = spark.read.parquet(wh).count()
-
-    compact_warehouse(spark, wh, n_tasks=8)
-    assert spark.read.parquet(wh).count() == n0
-    dirs = glob.glob(f"{wh}/activity=*/activity_type=*/equipment=*")
-    for d in dirs:
-        files = glob.glob(f"{d}/*.parquet")
-        assert len(files) == 1, d
 
 
 def test_cli_main_end_to_end(diary_path, tmp_path):
@@ -315,12 +190,10 @@ def test_get_spark_sizes_shuffle_from_its_master():
 def test_scd2_merge_two_batches_vs_duckdb(spark):
     """SCD2 emulation (close + version + passthrough) across two update
     batches, differentially checked against a DuckDB reimplementation
-    of the same semantics, plus the point-in-time snapshot view."""
+    of the same semantics."""
     import duckdb
 
-    from training_datawarehouse_spark.operators.scd import (
-        scd2_merge, scd2_snapshot_at,
-    )
+    from training_datawarehouse_spark.operators.scd import scd2_merge
 
     dim0 = spark.createDataFrame(
         [(1, "Shoes A", "Run", "2020-01-01", None, True),
@@ -395,10 +268,6 @@ def test_scd2_merge_two_batches_vs_duckdb(spark):
     )
     assert got == want
 
-    # point-in-time: between the two batches, key 1 shows v2
-    snap = {r["eq_id"]: r["name"]
-            for r in scd2_snapshot_at(after2, "2021-06-01 00:00:00").collect()}
-    assert snap[1] == "Shoes A v2" and snap[4] == "Trainer"
     # exactly one open row per live key, no overlapping intervals
     cur = after2.filter("is_current").groupBy("eq_id").count().collect()
     assert all(r["count"] == 1 for r in cur)
@@ -457,7 +326,7 @@ def test_scd2_merge_rejects_bad_batches(spark):
 
 def test_load_quarantined_routes_bad_rows(spark, tmp_path):
     """Malformed-row quarantine (PERMISSIVE + corrupt column): broken
-    lines in a json/csv source neither kill the job (FAILFAST) nor
+    lines in a JSON-lines source neither kill the job (FAILFAST) nor
     vanish (DROPMALFORMED) — they land in the bad frame with the raw
     line preserved for replay, while every parseable row flows through
     the good frame. Also covers Spark's corrupt-column-only-scan
@@ -479,37 +348,26 @@ def test_load_quarantined_routes_bad_rows(spark, tmp_path):
         '{"id": 3}\n'
         "garbage line\n"
     )
-    good, bad = load_quarantined(spark, str(p), schema, fmt="json")
-    assert sorted((r["id"], r["name"]) for r in good.collect()) == [
-        (1, "ok"), (2, "also ok"), (3, None),
-    ]
-    assert sorted(r["raw_record"] for r in bad.collect()) == [
-        "garbage line", '{"id": oops not json',
-    ]
-    assert bad.columns == ["raw_record", "id", "name"]
-
-    pc = tmp_path / "in.csv"
-    pc.write_text("id,name\n1,ok\nnotanumber,bad\n3,fine\n")
-    goodc, badc = load_quarantined(spark, str(pc), schema, fmt="csv")
-    assert sorted((r["id"], r["name"]) for r in goodc.collect()) == [
-        (1, "ok"), (3, "fine"),
-    ]
-    assert [r["raw_record"] for r in badc.collect()] == ["notanumber,bad"]
-
-    with pytest.raises(ValueError, match="json/csv"):
-        load_quarantined(spark, str(p), schema, fmt="orc")
+    good, bad, release = load_quarantined(spark, str(p), schema)
+    try:
+        assert sorted((r["id"], r["name"]) for r in good.collect()) == [
+            (1, "ok"), (2, "also ok"), (3, None),
+        ]
+        assert sorted(r["raw_record"] for r in bad.collect()) == [
+            "garbage line", '{"id": oops not json',
+        ]
+        assert bad.columns == ["raw_record", "id", "name"]
+    finally:
+        release()
 
 
 def test_load_quarantined_single_pass_one_scan(spark, tmp_path):
-    """The remote-source variant must produce IDENTICAL splits to the
-    two-pass loader while scanning the source once: after the persist
-    is materialized, both splits' executed plans read the cache
+    """The loader scans the source once: after the persist is
+    materialized, both splits' executed plans read the cache
     (InMemoryTableScan), not the files (no FileScan/Scan json)."""
     from pyspark.sql import types as T
 
-    from training_datawarehouse_spark.sources.tables import (
-        load_quarantined, load_quarantined_single_pass,
-    )
+    from training_datawarehouse_spark.sources.tables import load_quarantined
 
     schema = T.StructType([
         T.StructField("id", T.LongType()),
@@ -522,18 +380,13 @@ def test_load_quarantined_single_pass_one_scan(spark, tmp_path):
         '{"id": 3, "name": "fine"}\n'
         "garbage line\n"
     )
-    g2, b2 = load_quarantined(spark, str(p), schema, fmt="json")
-    g1, b1, release = load_quarantined_single_pass(
-        spark, str(p), schema, fmt="json"
-    )
+    good, bad, release = load_quarantined(spark, str(p), schema)
     try:
-        assert sorted(map(tuple, g1.collect())) == sorted(
-            map(tuple, g2.collect())
-        )
-        assert sorted(map(tuple, b1.collect())) == sorted(
-            map(tuple, b2.collect())
-        )
-        for split in (g1, b1):
+        assert sorted(map(tuple, good.collect())) == [(1, "ok"), (3, "fine")]
+        assert sorted(r["raw_record"] for r in bad.collect()) == [
+            "garbage line", '{"id": oops not json',
+        ]
+        for split in (good, bad):
             plan = split._jdf.queryExecution().executedPlan().toString()
             # the executing part of the plan reads the cache; a FileScan
             # may appear BELOW InMemoryRelation (that's the cache's
@@ -543,39 +396,6 @@ def test_load_quarantined_single_pass_one_scan(spark, tmp_path):
             assert "FileScan" not in executing
     finally:
         release()
-
-
-def test_load_quarantined_remote_path_delegates(monkeypatch):
-    """A remote-shaped path (object store / HDFS / HTTP scheme) must
-    route through the single-pass loader — on remote storage the
-    two-pass variant's second scan is a second egress bill. Local and
-    ``file:`` paths keep the two-scan path (OS page cache makes it
-    cheap). Routing only — no I/O, so no Spark session needed."""
-    from training_datawarehouse_spark.sources import tables as tb
-
-    calls = []
-    monkeypatch.setattr(
-        tb, "load_quarantined_single_pass",
-        lambda spark, path, schema, fmt, corrupt_col: (
-            calls.append(path) or ("GOOD", "BAD", lambda: None)
-        ),
-    )
-    two_pass = []
-    monkeypatch.setattr(
-        tb, "_read_permissive",
-        lambda *a: two_pass.append(a[1]) or None,
-    )
-    monkeypatch.setattr(tb, "_split_quarantine", lambda df, s, c: ("g", "b"))
-
-    for remote in ("s3a://bucket/in.jsonl", "gs://b/x.json",
-                   "hdfs://nn/path", "HTTPS://host/x.json"):
-        assert tb.load_quarantined(None, remote, None) == ("GOOD", "BAD")
-    assert calls == ["s3a://bucket/in.jsonl", "gs://b/x.json",
-                     "hdfs://nn/path", "HTTPS://host/x.json"]
-    for local in ("/data/in.jsonl", "file:///data/in.jsonl", "rel/p.json"):
-        assert tb.load_quarantined(None, local, None) == ("g", "b")
-    assert two_pass == ["/data/in.jsonl", "file:///data/in.jsonl",
-                       "rel/p.json"]
 
 
 def test_warm_cli_passes_reuse_generated_code(spark, diary_path, tmp_path):

@@ -92,33 +92,6 @@ def test_tpch_deep_dims_broadcast(plans):
     assert p.count("BroadcastHashJoin") >= 10
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """orders ⋈ lineitem both bucketed on the order key: the sort-merge
-    join must consume the bucketed layout with NO exchange on either
-    side (co-located join — the pay-once clustering for repeated
-    fact-to-fact joins)."""
-    from training_datawarehouse_spark.sources.tables import load_table, write_bucketed
-
-    orders = load_table(spark, SF_DIR, "orders")
-    li = load_table(spark, SF_DIR, "lineitem")
-    write_bucketed(orders, "orders_b", "o_orderkey", 4, str(tmp_path / "ob"))
-    write_bucketed(
-        li.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "lineitem_b", "o_orderkey", 4, str(tmp_path / "lb"),
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = spark.table("orders_b").join(spark.table("lineitem_b"), "o_orderkey")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange hashpartitioning" not in plan
-        assert j.count() == li.count()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS lineitem_b")
-
-
 # SCALE.md's shuffle budget, EXECUTED: exact `Exchange hashpartitioning`
 # node counts in the static physical plan at sf0.001, per operator-family
 # representative. A rewrite that adds (or removes) a shuffle changes the

@@ -1,7 +1,5 @@
-"""r16 optimization-round parity gates.
-
-Every optimization this round must keep results BYTE-IDENTICAL; these
-tests pin the ones that changed operator internals:
+"""Kernel parity gates: the vectorized operator internals must keep
+results BYTE-IDENTICAL to their reference loops. These tests pin:
 
 - the vectorized synthesis/fingerprint kernels (token grids, wave
   mixture, batch DFT fingerprint) against their pre-r16 per-element

@@ -1,13 +1,10 @@
-"""Training-shard layout: determinism, seed sensitivity, sorted shards."""
+"""Training-shard order: determinism, seed sensitivity, dense positions."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from training_datawarehouse_spark.operators.sharding import (
-    training_order,
-    write_training_shards,
-)
+from training_datawarehouse_spark.operators.sharding import training_order
 
 
 def _docs(spark, n=300):
@@ -42,21 +39,3 @@ def test_positions_are_dense_per_shard(spark):
     assert set(by_shard) == {0, 1, 2, 3}
     for pos in by_shard.values():
         assert sorted(pos) == list(range(len(pos)))
-
-
-def test_write_training_shards_sorted_within_each_shard(spark, tmp_path):
-    df = _docs(spark)
-    path = str(tmp_path / "shards")
-    write_training_shards(df, path, "doc_id", seed="s9", n_shards=4)
-    back = spark.read.parquet(path)
-    assert back.count() == 300
-    assert {r["tshard"] for r in back.select("tshard").distinct().collect()} == {0, 1, 2, 3}
-    # per shard-file row order equals seeded-hash order
-    key = F.md5(F.concat_ws(":", F.lit("s9"), F.col("doc_id").cast("string")))
-    for shard in range(4):
-        rows = [
-            r["k"]
-            for r in spark.read.parquet(f"{path}/tshard={shard}")
-            .select(key.alias("k")).collect()
-        ]
-        assert rows == sorted(rows)

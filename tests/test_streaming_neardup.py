@@ -262,10 +262,14 @@ def test_admission_serves_media_phash_bands(spark, tmp_path):
         .parquet(str(src))
     )
     sig = ph.image_phash_signatures(raw, "doc_id", "text")
-    bands = ph.phash_band_index(sig).select(
-        F.col("id").alias("doc_id"), "band",
-        F.col("val").cast("string").alias("sig"),
-    )
+    bands = sig.select(
+        F.col("id").alias("doc_id"),
+        F.explode(F.array(*[
+            F.struct(F.lit(k).alias("band"),
+                     F.col(f"b{k}").cast("string").alias("sig"))
+            for k in range(ph.N_BANDS)
+        ])).alias("bs"),
+    ).select("doc_id", "bs.band", "bs.sig")
     q = (
         streaming_neardup_admission(bands)
         .writeStream.format("memory")

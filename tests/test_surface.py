@@ -1,13 +1,23 @@
 """Regrowth guard: every top-level function, class and module constant
-in the package has a caller somewhere in the repository's code.
+in the package is reachable from a production entry point.
 
-A name counts as used when it appears, outside its own definition, as a
-name, an attribute, an imported name or an exact string constant in the
-package, ``tests/``, ``tools/``, ``perfbench/``, ``bench.py`` or
-``__spark_entry__.py``. The scan is static and name-based, so it cannot
-see a use through ``getattr`` with a computed string; such a caller must
-spell the name out. ``__version__`` is exempt: it is the package's
-public version string, kept for readers outside the code.
+The roots are everything in ``bench.py``, ``__spark_entry__.py``,
+``tools/`` and ``perfbench/``, plus the package's own top-level
+statements that are neither imports, definitions nor assignments (the
+``__main__`` guard) and the ``QUERIES`` tables the registry collects.
+A name a reached body uses, as a name, an attribute, an imported name or
+an exact string constant, reaches every package ``def``, ``class`` or
+module assignment of that name, whose body is then scanned in turn.
+Docstrings are not uses, and neither are top-level imports inside the
+package, so an ``__init__`` re-export keeps nothing alive. ``tests/`` is
+not a root: code only a test calls is dead weight, unless it is a
+deliberate reference implementation listed in ``ORACLES`` with the test
+that compares a production kernel against it.
+
+The scan is static and name-based, so it cannot see a use through
+``getattr`` with a computed string; such a caller must spell the name
+out. ``__version__`` is exempt: it is the package's public version
+string, kept for readers outside the code.
 """
 
 from __future__ import annotations
@@ -17,16 +27,49 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
 PACKAGE = ROOT / "training_datawarehouse_spark"
-SCOPE = [PACKAGE, ROOT / "tests", ROOT / "tools", ROOT / "perfbench",
-         ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+TESTS = ROOT / "tests"
+ENTRY_POINTS = [ROOT / "bench.py", ROOT / "__spark_entry__.py",
+                ROOT / "tools", ROOT / "perfbench"]
+ROOT_ASSIGNMENTS = {"QUERIES"}
+
+#: Reference implementations kept only as test oracles:
+#: ``module:name`` -> ``test file::test`` that compares a production
+#: kernel against it.
+ORACLES = {
+    "operators/jpeg.py:encode_jpeg":
+        "test_codec_parity.py::test_jpeg_batch_apis_match_per_image",
+    "operators/jpeg.py:_encode_block":
+        "test_codec_parity.py::test_jpeg_encode_matches_scalar_reference",
+    "operators/phash.py:phash_bands":
+        "test_phash.py::test_production_phash_matches_reference_and_batch",
+    "operators/phash.py:image_phash_signatures":
+        "test_audiofp.py::test_fused_crossing_matches_separate_signatures",
+    "operators/audiofp.py:fingerprint_bands":
+        "test_r16_optimizations.py::"
+        "test_fingerprint_bands_scalar_and_batch_match_reference",
+    "operators/audiofp.py:audio_fingerprint_signatures":
+        "test_audiofp.py::test_fused_crossing_matches_separate_signatures",
+}
 
 
-def _files():
-    for p in SCOPE:
+def _files(paths):
+    for p in paths:
         yield from (sorted(p.rglob("*.py")) if p.is_dir() else [p])
 
 
+def _parse(path: Path) -> ast.Module:
+    return ast.parse(path.read_text(), filename=str(path))
+
+
 def _uses(node: ast.AST) -> set[str]:
+    docstrings = {
+        id(n.body[0].value) for n in ast.walk(node)
+        if isinstance(n, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef,
+                          ast.ClassDef))
+        and n.body and isinstance(n.body[0], ast.Expr)
+        and isinstance(n.body[0].value, ast.Constant)
+        and isinstance(n.body[0].value.value, str)
+    }
     out = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
@@ -35,7 +78,8 @@ def _uses(node: ast.AST) -> set[str]:
             out.add(n.attr)
         elif isinstance(n, ast.alias):
             out.update(n.name.split("."))
-        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+        elif (isinstance(n, ast.Constant) and isinstance(n.value, str)
+              and id(n) not in docstrings):
             out.add(n.value)
     return out
 
@@ -47,7 +91,7 @@ def _defined(stmt: ast.stmt) -> list[str]:
         return [stmt.name]
     if isinstance(stmt, ast.Assign):
         targets = stmt.targets
-    elif isinstance(stmt, ast.AnnAssign):
+    elif isinstance(stmt, (ast.AnnAssign, ast.AugAssign)):
         targets = [stmt.target]
     else:
         return []
@@ -55,19 +99,73 @@ def _defined(stmt: ast.stmt) -> list[str]:
             if isinstance(n, ast.Name) and n.id != "__version__"]
 
 
+def _is_root(stmt: ast.stmt) -> bool:
+    if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+        return False
+    if (isinstance(stmt, ast.Expr) and isinstance(stmt.value, ast.Constant)
+            and isinstance(stmt.value.value, str)):
+        return False   # module docstring
+    names = _defined(stmt)
+    return not names or bool(ROOT_ASSIGNMENTS & set(names))
+
+
+def _scan():
+    """(package definitions by name as ``[(module:name, statement)]``,
+    the names the roots use)."""
+    defs, roots = {}, set()
+    for path in _files(ENTRY_POINTS):
+        roots |= _uses(_parse(path))
+    for path in _files([PACKAGE]):
+        for stmt in _parse(path).body:
+            for name in _defined(stmt):
+                key = f"{path.relative_to(PACKAGE).as_posix()}:{name}"
+                defs.setdefault(name, []).append((key, stmt))
+            if _is_root(stmt):
+                roots |= _uses(stmt)
+    return defs, roots
+
+
+def _reach(defs, names) -> set[str]:
+    """The definitions (``module:name``) the given names reach."""
+    live, seen, todo = set(), set(), list(names)
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        for key, stmt in defs.get(name, []):
+            live.add(key)
+            todo.extend(_uses(stmt) - seen)
+    return live
+
+
 def test_every_package_definition_has_a_caller():
-    defs = []      # (name, file, index of its top-level statement)
-    uses = {}      # (file, top-level statement index) -> names it uses
-    for path in _files():
-        tree = ast.parse(path.read_text(), filename=str(path))
-        for i, stmt in enumerate(tree.body):
-            uses[path, i] = _uses(stmt)
-            if PACKAGE in path.parents:
-                defs.extend((name, path, i) for name in _defined(stmt))
-    orphans = sorted(
-        f"{path.relative_to(PACKAGE)}:{name}"
-        for name, path, i in defs
-        if not any(name in names for key, names in uses.items()
-                   if key != (path, i))
-    )
-    assert not orphans, "no caller: " + ", ".join(orphans)
+    defs, roots = _scan()
+    everything = {key for found in defs.values() for key, _ in found}
+    oracles = {key.split(":")[1] for key in ORACLES}
+    orphans = sorted(everything - _reach(defs, roots | oracles))
+    assert not orphans, "not reachable from an entry point: " + ", ".join(orphans)
+
+
+def test_oracles_are_test_only_and_compared():
+    """The allow-list cannot go stale: an oracle a root reaches is a
+    production kernel, and one whose comparing test is gone is dead."""
+    defs, roots = _scan()
+    everything = {key for found in defs.values() for key, _ in found}
+    live = _reach(defs, roots)
+    problems = []
+    for key, where in ORACLES.items():
+        if key not in everything:
+            problems.append(f"{key}: not defined")
+        elif key in live:
+            problems.append(f"{key}: reachable from an entry point")
+        fname, test = where.split("::")
+        path = TESTS / fname
+        tree = _parse(path) if path.exists() else ast.Module(body=[])
+        func = next((s for s in tree.body if isinstance(s, ast.FunctionDef)
+                     and s.name == test), None)
+        if func is None:
+            problems.append(f"{key}: comparing test {where} is gone")
+        elif key.split(":")[1] not in _uses(tree):
+            problems.append(f"{key}: {fname} no longer references it")
+    assert not problems, "; ".join(problems)

@@ -233,44 +233,6 @@ def test_fuzz_avi_parser_raises_cleanly():
             pass
 
 
-def test_video_frames_feed_the_incremental_phash_index(spark):
-    """Generational VIDEO dedup rides the r9 perceptual-hash index
-    unchanged: composite (video·4 + frame) ids make per-frame
-    signatures index/probe rows, so a new batch's frames surface
-    cross-generation frame matches without re-decoding the corpus —
-    lifted to video grain by the same offset arithmetic."""
-    from pyspark.sql import functions as F
-
-    df0 = spark.createDataFrame(
-        [(1, BASE), (2, FAR)], "doc_id long, text string")
-    df1 = spark.createDataFrame(
-        [(100, NEAR)], "doc_id long, text string")
-
-    def comp_sig(df):
-        return vi.video_phash_signatures(df, "doc_id", "text").select(
-            (F.col("id") * vi.N_FRAMES + F.col("frame")).alias("id"),
-            "b0", "b1", "b2", "b3",
-        )
-
-    index = ph.phash_band_index(comp_sig(df0))
-    probe = ph.phash_probe_index(index, comp_sig(df1))
-    vids = (
-        probe
-        .filter(F.expr(f"new_id div {vi.N_FRAMES}")
-                != F.expr(f"old_id div {vi.N_FRAMES}"))
-        .groupBy(
-            F.expr(f"new_id div {vi.N_FRAMES}").alias("nv"),
-            F.expr(f"old_id div {vi.N_FRAMES}").alias("ov"),
-            (F.col("new_id") % vi.N_FRAMES
-             - F.col("old_id") % vi.N_FRAMES).alias("off"),
-        )
-        .count().collect()
-    )
-    best = {(r["nv"], r["ov"]): r["count"] for r in vids if r["off"] == 0}
-    assert best.get((100, 1), 0) >= vi.DEFAULT_MIN_FRAMES
-    assert (100, 2) not in best
-
-
 def test_foreign_avi_with_audio_stream_parses_video_correctly():
     """A second (audio) strl whose strf is NOT a BITMAPINFOHEADER must
     not overwrite the video stream's codec/bit-depth — the strf

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from training_datawarehouse_spark.operators import wordpiece as wp
 
@@ -97,16 +96,6 @@ def test_exhaustion_refusal_and_checkpoint_release(spark):
     leaked = _persistent_ids(spark) - before
     assert leaked == set(), (
         f"error-path WordPiece generations leaked RDDs: {sorted(leaked)}")
-
-
-def test_segment_greedy_longest_match_and_unk():
-    vocab = {"un", "##aff", "##able", "##ffa", "a", "##b"}
-    assert wp.wordpiece_segment("unaffable", vocab) == \
-        ["un", "##aff", "##able"]
-    assert wp.wordpiece_segment("ab", vocab) == ["a", "##b"]
-    assert wp.wordpiece_segment("xyz", vocab) == [wp.UNK]
-    # stuck mid-word -> whole word is UNK (the BERT rule)
-    assert wp.wordpiece_segment("unz", vocab) == [wp.UNK]
 
 
 def test_encode_counts_match_vocab_syms(spark):

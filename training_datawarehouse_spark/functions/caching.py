@@ -105,7 +105,7 @@ def eager_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
 
     What the stat-less leaf DOES change in static plans: joins
     against it no longer inherit the origin's small size estimate,
-    so without ``tune_for_iterative`` the static planner defaults to
+    so without ``iterative_tuning`` the static planner defaults to
     shuffle joins where it previously broadcast the checkpointed
     frame; AQE converts back to broadcast at runtime from real
     shuffle sizes (measured on the PageRank edge set:

@@ -678,10 +678,7 @@ def lsh_band_index(
 ) -> DataFrame:
     """(id, band, sig) rows — the persistable LSH index of a corpus.
 
-    Incremental-dedup support: build once, write partitioned/bucketed
-    by (band, sig), then each new ingest batch probes the index with
-    ``lsh_probe_index`` instead of re-hashing the whole corpus. Rows
-    are the band signatures of ``lsh_candidate_pairs_portable`` (same
+    Rows are the band signatures of ``lsh_candidate_pairs_portable`` (same
     md5 family, same groupBy kernel): ``bands`` rows per document, each
     an int band, a string of ``rows_per_band`` minima and the id —
     fixed size per document, so at 100 TB of text the index is orders
@@ -694,46 +691,6 @@ def lsh_band_index(
         F.col(id_col).alias("id"),
         F.explode(_band_structs(bands, rows_per_band)).alias("bs"),
     ).select("id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
-
-
-def lsh_probe_index(
-    index: DataFrame, new_docs: DataFrame, id_col: str, text_col: str,
-    num_hashes: int = 32, bands: int = 8, rows_per_band: int = 4,
-    shingle_n: int = 3, max_bucket: int = 10_000,
-) -> DataFrame:
-    """Incremental near-dup candidates: (new_id, old_id) pairs whose
-    band signature collides with the stored corpus index, plus
-    new-vs-new collisions within the batch (old_id < new_id convention
-    cannot hold across generations, so columns are role-named).
-
-    The probe joins the batch's band rows — tiny — against the index on
-    (band, sig): with the index bucketed on those keys this reads only
-    the touched buckets, never the corpus. In-batch collisions reuse
-    the same in-bucket array expansion (and ``max_bucket`` hot-bucket
-    cap) as ``lsh_candidate_pairs_portable``, so an ingest batch
-    flooded with a degenerate signature inherits the quadratic-blowup
-    guard instead of self-joining. Verification (exact Jaccard on the
-    candidate ids' texts) stays a separate composable step.
-    """
-    probe = lsh_band_index(
-        new_docs, id_col, text_col, num_hashes, bands, rows_per_band, shingle_n
-    )
-    vs_corpus = (
-        probe.alias("n")
-        .join(index.alias("o"), ["band", "sig"])
-        .filter(F.col("n.id") != F.col("o.id"))
-        .select(F.col("n.id").alias("new_id"), F.col("o.id").alias("old_id"))
-        .distinct()
-    )
-    vs_batch = (
-        probe.groupBy("band", "sig")
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket))
-        .select(F.explode(_pairs_expr("ids")).alias("p"))
-        .select(F.col("p.id_a").alias("new_id"), F.col("p.id_b").alias("old_id"))
-        .distinct()
-    )
-    return vs_corpus.unionByName(vs_batch).distinct()
 
 
 def dup_span_coverage(
@@ -1066,8 +1023,8 @@ def connected_components_incremental(
     validate: bool = True,
 ) -> DataFrame:
     """Incremental connected-components maintenance (r12 — the dedup-
-    cluster member of the incremental suite next to the r9 pHash band
-    index, `nnd_insert`, and the PageRank warm start): fold a batch of
+    cluster member of the incremental suite next to `nnd_insert` and
+    the PageRank warm start): fold a batch of
     NEW edges into an existing labeling without re-running CC over the
     corpus.
 

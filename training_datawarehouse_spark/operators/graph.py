@@ -43,7 +43,7 @@ generation; r13 verdict #5) and each superseded generation's blocks
 are released, so peak storage is O(1) generations. On a real
 cluster, checkpoint to reliable storage, pre-partition ``edges`` by
 ``src`` so the rank join is co-located, and apply
-``session.tune_for_iterative`` at high iteration counts.
+``session.iterative_tuning`` at high iteration counts.
 """
 
 from __future__ import annotations

@@ -549,7 +549,7 @@ def encode_jpeg(width: int, height: int, pixels: bytes,
     r17: the per-coefficient ``_encode_block`` Python loop is replaced
     by the array-at-once entropy encoder (guide §4.2) — one numpy pass
     emits the identical field stream (byte-parity pinned in
-    tests/test_r17_optimizations.py against the scalar loop, which
+    tests/test_codec_parity.py against the scalar loop, which
     remains above as the reference)."""
     return encode_jpeg_batch([(width, height, pixels, subsample)],
                              quality=quality)[0]
@@ -1101,7 +1101,7 @@ def decode_jpeg_many(payloads: list[bytes]) -> list[dict]:
     (restart markers, an invalid/over-long code, reading past the
     stream) is re-decoded by the scalar path from scratch, so results
     AND error classes are identical to ``decode_jpeg`` per payload
-    (byte-parity pinned in tests/test_r17_optimizations.py)."""
+    (byte-parity pinned in tests/test_codec_parity.py)."""
     n_lanes = len(payloads)
     results: list[dict | None] = [None] * n_lanes
     lanes = []   # per eligible lane: dict of prepared state

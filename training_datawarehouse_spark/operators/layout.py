@@ -1,24 +1,14 @@
-"""Z-order (Morton-curve) clustering for data layout + file skipping.
+"""Z-order (Morton-curve) bit interleaving as Catalyst expressions.
 
-At 100 TB the cheapest bytes are the ones never read: engines prune
-parquet files and row groups whose footer min/max statistics cannot
-satisfy the predicate. A sort on ONE column gives perfect pruning on
-that column and none on any other; interleaving the bits of N columns
-— the Z-order / Morton curve — gives EVERY interleaved column locality
-in the same linear order, so multi-dimensional box predicates skip
-most of the data. This is the technique behind Delta Lake's
-``OPTIMIZE ZORDER BY`` and Iceberg's sort orders, built here from
-Catalyst bit expressions only (public Spark API; no external formats).
+Interleaving the bits of N columns — the Z-order / Morton curve — gives
+EVERY interleaved column locality in the same linear order; it is the
+key behind Delta Lake's ``OPTIMIZE ZORDER BY`` and Iceberg's sort
+orders, built here from Catalyst bit expressions only (public Spark
+API; no external formats).
 
 Scale shape: ``zvalue`` unrolls to ``bits × N`` codegen'd
 shift/and/add terms — whole-stage-codegen scalar work, no UDF, no
-shuffle. ``cluster_by_zorder`` pays exactly ONE range exchange at
-write time (the same exchange a plain global sort would pay), and
-every later box query skips files via footer stats for free. The
-pruning effect is MEASURED, not asserted by vibes:
-``file_pruning_stats`` reads the real parquet footers and counts the
-row groups a min/max-pruning reader would skip
-(tests/test_layout.py + SCALE.md carry the numbers).
+shuffle.
 
 The same unrolled expression is emitted as engine-portable SQL by
 ``zvalue_sql`` — one loop generates both sides, so the registry's
@@ -30,13 +20,8 @@ from __future__ import annotations
 import functools
 import operator
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-try:  # pruning stats read real footers; pyarrow ships in this env
-    import pyarrow.parquet as _pq
-except ImportError:  # pragma: no cover
-    _pq = None
 
 
 def _as_col(c: Column | str) -> Column:
@@ -84,121 +69,3 @@ def zvalue_sql(cols: list[str], bits: int = 16) -> str:
         for j, mc in enumerate(masked)
     ]
     return "(" + " + ".join(terms) + ")"
-
-
-def cluster_by_zorder(
-    df: DataFrame,
-    cols: list[Column | str],
-    n_partitions: int,
-    bits: int = 16,
-    z_col: str = "__zval",
-) -> DataFrame:
-    """Cluster rows along the Z-curve: ONE range exchange on the
-    Morton code, then an in-partition sort — after this, consecutive
-    output files cover small boxes of the (col₁ … colₙ) space and
-    their footer min/max stats become selective on every dimension."""
-    if z_col in df.columns:
-        raise ValueError(
-            f"z_col {z_col!r} already exists in the DataFrame — pass a "
-            "different z_col so the caller's column is not overwritten"
-        )
-    z = df.withColumn(z_col, zvalue(cols, bits))
-    return z.repartitionByRange(n_partitions, z_col).sortWithinPartitions(z_col)
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[Column | str],
-    n_files: int,
-    bits: int = 16,
-    z_col: str = "__zval",
-) -> None:
-    """Materialize ``df`` as ~``n_files`` Z-clustered parquet files.
-    The Morton code is a layout key only — it is dropped before the
-    write, because pruning runs on the ORIGINAL columns' footer stats
-    (that is the whole point: readers need no knowledge of the curve).
-    ``z_col`` names the transient layout column; ``cluster_by_zorder``
-    raises if it collides with an existing column, so a caller's data
-    can never be silently destroyed."""
-    clustered = cluster_by_zorder(df, cols, n_files, bits, z_col)
-    clustered.drop(z_col).write.mode("overwrite").parquet(path)
-
-
-def file_pruning_stats(
-    path: str, box: dict[str, tuple[float, float]]
-) -> dict:
-    """What a min/max-pruning reader would do with a box predicate:
-    walk every row group footer under ``path`` and count the groups
-    whose [min, max] ranges overlap ALL of the box's per-column
-    intervals (only those must be read). Returns
-    {n_row_groups, n_read, n_pruned, frac_pruned}."""
-    if _pq is None:  # pragma: no cover
-        raise RuntimeError("pyarrow is required for pruning stats")
-    import glob
-    import os
-
-    total = kept = 0
-    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
-        meta = _pq.ParquetFile(f).metadata
-        for rg in range(meta.num_row_groups):
-            total += 1
-            group = meta.row_group(rg)
-            stats_by_col = {}
-            for ci in range(group.num_columns):
-                col = group.column(ci)
-                name = col.path_in_schema
-                if (
-                    name in box
-                    and col.statistics is not None
-                    and col.statistics.has_min_max
-                    and col.statistics.min is not None
-                    and col.statistics.max is not None
-                ):
-                    stats_by_col[name] = col.statistics
-            # a column with no footer stats (or a stats object without
-            # usable min/max — some writers/types emit one) can never
-            # be pruned on — the group must be read (sound, like a
-            # real reader)
-            overlaps = all(
-                name not in stats_by_col
-                or (stats_by_col[name].min <= hi
-                    and stats_by_col[name].max >= lo)
-                for name, (lo, hi) in box.items()
-            )
-            if overlaps:
-                kept += 1
-    return {
-        "n_row_groups": total,
-        "n_read": kept,
-        "n_pruned": total - kept,
-        "frac_pruned": (total - kept) / total if total else 0.0,
-    }
-
-
-def write_ivf_index(
-    codes: DataFrame, path: str, list_col: str = "list_id"
-) -> None:
-    """Persist an ANN index (ids + PQ/SQ codes + their coarse-list
-    assignment) PARTITIONED BY the list — the storage half of the
-    IVF contract: a query that probes ``n_probe`` of ``n_lists``
-    lists reads exactly the probed directories and Spark's partition
-    pruning never opens the rest. At 10¹⁰ vectors with 2-of-8 lists
-    probed that is 75 % of the index bytes never read — before any
-    footer-stats pruning inside the survivors. One exchange at write
-    (the partitionBy hash); reads are pruned for free from then on."""
-    codes.write.mode("overwrite").partitionBy(list_col).parquet(path)
-
-
-def read_probed_lists(
-    spark, path: str, list_ids: list[int], list_col: str = "list_id"
-) -> DataFrame:
-    """Scan ONLY the probed lists of a ``write_ivf_index`` index. The
-    ``isin`` predicate lands in the scan's PartitionFilters (assert
-    via ``.explain`` — gate-tested), so unprobed directories are
-    pruned at planning time, not filtered after reading."""
-    from pyspark.sql import functions as F
-
-    return spark.read.parquet(path).filter(
-        F.col(list_col).isin([int(x) for x in list_ids])
-    )

@@ -55,11 +55,11 @@ broken by the lower neighbor id, and the iteration count is fixed —
 so a DuckDB oracle re-derives the ENTIRE graph, iteration by
 iteration, and every edge hash-checks.
 
-SESSION TUNING AT SCALE (measured, r13 probe): apply
-``tune_for_iterative(spark)`` (re-exported here; defined in
-``session.py``) before building at scale — it sets the three knobs
-below, promoted out of this prose per the r13 ADVICE so direct
-library users don't transcribe a docstring:
+SESSION TUNING AT SCALE (measured, r13 probe): build at scale inside
+``with session.iterative_tuning(spark):`` — it sets the three knobs
+below for the build and restores them after, promoted out of this
+prose per the r13 ADVICE so direct library users don't transcribe a
+docstring:
 
 - ``spark.sql.defaultSizeInBytes`` ≈ 64 MB. Checkpoint leaves
   (``LogicalRDD``) carry no stats, so Catalyst assumes
@@ -125,12 +125,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.caching import (eager_checkpoint,
                                  release_local_checkpoint)
-from ..session import (  # noqa: F401  (re-export: the graph family's
-    #   scale knobs live next to the operators — r13 ADVICE; r15 adds
-    #   the scoped context-manager form, the right default for mixed
-    #   sessions)
-    iterative_tuning, tune_for_iterative,
-)
 from .similarity import _as_double, cosine, nearest_centroid_lists
 
 

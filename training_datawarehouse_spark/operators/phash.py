@@ -172,8 +172,8 @@ def scaled_max_hamming(params: PhashParams) -> int:
 
 def _scaled_max_hamming_bits(n_bits: int) -> int:
     """Single source of the default-threshold scaling for EVERY
-    banding entry point. `phash_candidate_pairs`/`phash_probe_index`
-    used to scale by band COUNT (n_bands/N_BANDS) while
+    banding entry point. `phash_candidate_pairs` used to scale by band
+    COUNT (n_bands/N_BANDS) while
     `scaled_max_hamming` (the video path) scales by bit WIDTH
     (n_bits/N_BITS); the two agree only while band_bits == 16, so a
     PhashParams with a different band width silently applied
@@ -501,74 +501,3 @@ def phash_candidate_pairs(
     finally:
         release_local_checkpoint(groups)
     return out
-
-
-def phash_band_index(sig: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
-    """(band, val, id, b0..b3) rows — the persistable perceptual-hash
-    index of a corpus (incremental-dedup support, the
-    `dedup.lsh_band_index` pattern for the Hamming family).
-
-    Build once from `image_phash_signatures` /
-    `audio_fingerprint_signatures` output, write partitioned/bucketed
-    by (band, val); each ingest batch then probes the touched buckets
-    with `phash_probe_index` instead of re-decoding the corpus. One
-    deliberate difference from the minhash index: rows carry the FULL
-    4x16-bit signature (8 extra bytes), so the probe verifies exact
-    Hamming distance from the index alone — no join back to corpus
-    content, which for this family would mean re-decoding media."""
-    band_structs = F.array(*[
-        F.struct(F.lit(k).alias("band"), F.col(f"b{k}").alias("val"))
-        for k in range(n_bands)
-    ])
-    return sig.select(
-        "id", *[f"b{k}" for k in range(n_bands)],
-        F.explode(band_structs).alias("bs"),
-    ).select(
-        F.col("bs.band").alias("band"), F.col("bs.val").alias("val"),
-        "id", *[f"b{k}" for k in range(n_bands)],
-    )
-
-
-def phash_probe_index(
-    index: DataFrame, new_sig: DataFrame,
-    max_hamming: int | None = None,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-    n_bands: int = N_BANDS,
-    band_bits: int = BAND_BITS,
-) -> DataFrame:
-    """Incremental near-dup pairs for an ingest batch against a stored
-    corpus index: (new_id, old_id, hamming) for band-colliding,
-    Hamming-verified pairs across generations, plus new-vs-new pairs
-    within the batch (column roles are named because the id-ordering
-    convention cannot hold across generations).
-
-    The probe's band rows are batch-sized — joined on (band, val),
-    a bucketed index reads only the touched buckets, never the corpus.
-    Cross-generation Hamming verifies inline from the index's stored
-    signatures; in-batch pairs reuse `phash_candidate_pairs` whole
-    (rep-grain banding, doc-weighted hot-bucket cap and all)."""
-    if max_hamming is None:
-        max_hamming = _scaled_max_hamming_bits(n_bands * band_bits)
-    probe = phash_band_index(new_sig, n_bands=n_bands)
-    ham = sum(
-        F.bit_count(F.col(f"n.b{k}").bitwiseXOR(F.col(f"o.b{k}")))
-        for k in range(n_bands)
-    )
-    vs_corpus = (
-        probe.alias("n")
-        .join(index.alias("o"), ["band", "val"])
-        .filter(F.col("n.id") != F.col("o.id"))
-        .withColumn("hamming", ham.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select(F.col("n.id").alias("new_id"),
-                F.col("o.id").alias("old_id"), "hamming")
-        .distinct()
-    )
-    vs_batch = phash_candidate_pairs(
-        new_sig, max_hamming=max_hamming, max_bucket=max_bucket,
-        n_bands=n_bands,
-    ).select(
-        F.col("id_a").alias("new_id"), F.col("id_b").alias("old_id"),
-        "hamming",
-    )
-    return vs_corpus.unionByName(vs_batch).distinct()

@@ -134,18 +134,3 @@ def scd2_merge(
         .unionByName(closures)
         .unionByName(new_versions)
     )
-
-
-def scd2_snapshot_at(
-    dim: DataFrame,
-    as_of: str,
-    eff_col: str = "effective_from",
-    end_col: str = "effective_to",
-) -> DataFrame:
-    """Point-in-time view: the version of each key effective at
-    ``as_of`` (half-open interval [effective_from, effective_to))."""
-    ts = F.lit(as_of).cast("timestamp")
-    return dim.filter(
-        (F.col(eff_col) <= ts)
-        & (F.col(end_col).isNull() | (F.col(end_col) > ts))
-    )

@@ -1,17 +1,17 @@
-"""Deterministic training-shard layout — the last step of data prep.
+"""Deterministic training-shard order — the last step of data prep.
 
 Training wants the corpus in pseudo-random order (break domain/time
-correlation) split into N shard files, and wants the layout REPRODUCIBLE:
-re-running the pipeline must produce byte-identical shards, and changing
-the seed must produce an unrelated order. Both follow from deriving
-everything from ``md5(seed ':' id)``:
+correlation) split into N shards, and wants the order REPRODUCIBLE:
+re-running the pipeline must assign the same shard and position to
+every row, and changing the seed must produce an unrelated order. Both
+follow from deriving everything from ``md5(seed ':' id)``:
 
 - shard assignment = first hash byte mod n_shards (scan-only, no state),
 - order within a shard = the hash string itself (id as tiebreak).
 
-At scale this is ONE shuffle (repartition on shard) plus a sort WITHIN
-each shard — never a global sort. ``df.orderBy(rand())`` gives neither
-determinism nor a bounded sort; this gives both.
+At scale this is ONE shuffle (the rank window partitions by shard) plus
+a sort WITHIN each shard — never a global sort. ``df.orderBy(rand())``
+gives neither determinism nor a bounded sort; this gives both.
 """
 
 from __future__ import annotations
@@ -42,28 +42,3 @@ def training_order(
         .withColumn("tshard_pos", F.row_number().over(w) - F.lit(1))
         .drop("__tkey")
     )
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    seed: str = "s0",
-    n_shards: int = 8,
-) -> None:
-    """Materialize ``path/tshard=K/`` parquet shards, rows in seeded-hash
-    order within each shard: one repartition on the shard key, local
-    sort, no global ordering bottleneck."""
-    key = _seeded_key(id_col, seed)
-    out = (
-        df.withColumn("__tkey", key)
-        .withColumn(
-            "tshard",
-            F.conv(F.substring(F.col("__tkey"), 1, 2), 16, 10).cast("int")
-            % n_shards,
-        )
-        .repartition("tshard")
-        .sortWithinPartitions("tshard", "__tkey", id_col)
-        .drop("__tkey")
-    )
-    out.write.mode("overwrite").partitionBy("tshard").parquet(path)

@@ -21,9 +21,7 @@ import numpy as np
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..functions.crossing import map_batches
 from ..functions.scalars import round_half_away
 
 
@@ -81,55 +79,6 @@ def cosine_topk(
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
-    )
-
-
-def cosine_topk_vectorized(
-    corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str, k: int = 5
-) -> DataFrame:
-    """Brute-force top-k via one numpy matmul per Arrow batch — the
-    scale path for dense scoring (the expression-based ``cosine_topk``
-    folds per element, interpreted; this moves the O(|corpus|·|queries|
-    ·dim) inner loop into BLAS).
-
-    Queries are collected to the driver (they are top-k *probes*, tiny
-    by contract) and closed over; the corpus streams through
-    ``map_batches`` in Arrow batches emitting per-batch top-k per
-    query, then a global per-query top-k window merges batch winners:
-    shuffle carries ≤ batches·queries·k slim rows, never scores for
-    the whole corpus.
-    """
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([r[1] for r in q_rows], dtype="float64")
-    q_norm = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-
-    out_schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("cosine", T.DoubleType()),
-    ])
-
-    def score(ids: list, vecs: list) -> list:
-        ids = np.array(ids)
-        c = np.array(vecs, dtype="float64")
-        c_norm = c / np.linalg.norm(c, axis=1, keepdims=True)
-        sims = c_norm @ q_norm.T  # |batch| × |queries|
-        rows = []
-        for j, qid in enumerate(q_ids):
-            col = sims[:, j]
-            mask = ids != qid
-            cand_idx = np.nonzero(mask)[0]
-            top = cand_idx[np.argsort(-col[cand_idx], kind="stable")[:k]]
-            rows.extend((qid, nid, cos) for nid, cos in zip(ids[top], col[top]))
-        return rows
-
-    batch_topk = map_batches(corpus, [id_col, vec_col], out_schema, score)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        batch_topk.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
     )
@@ -448,25 +397,6 @@ def signlsh_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
     )
-
-
-def semdedup_k(n_vectors: int, target_cluster_pop: int = 250) -> int:
-    """The k∝n contract, as code: SemDeDup's within-cluster pair stage
-    is quadratic in cluster POPULATION (total work ≈ n²/k), so k must
-    grow linearly with the corpus to hold the per-cluster population —
-    and therefore per-cluster work — constant. SCALE.md measured the
-    contract directly: 10× vectors at fixed k ran 5.2× slower; 10×
-    vectors with k scaled 10× (population held at 250) ran FASTER than
-    the 1× baseline, because the same per-cluster work spreads over
-    10× the clusters. Production callers size k through this helper;
-    the registry's ``ns_kmeans_clusters`` entry pins k=6 instead
-    because its differential oracle unrolls Lloyd's iterations into
-    STATIC SQL (k is baked into the CTE text), a bench-scale
-    limitation documented there.
-    """
-    if n_vectors <= 0:
-        return 2
-    return max(2, -(-n_vectors // target_cluster_pop))
 
 
 def semdedup_stats(

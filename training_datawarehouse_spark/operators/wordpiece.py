@@ -14,9 +14,8 @@ the pair that maximizes the corpus unigram-LM likelihood gain,
 i.e. frequent-together relative to frequent-apart. Non-initial
 symbols carry the ``##`` continuation prefix and keep it through
 merges (``merge('a', '##b') = 'ab'``, ``merge('##a', '##b') =
-'##ab'``); inference segments unseen words greedily
-longest-match-first against the final vocabulary
-(``wordpiece_segment``), emitting ``[UNK]`` when stuck.
+'##ab'``). Only training lives here: the learned merges encode the
+training corpus's own words, and no unseen-word inference is built.
 
 Spark-first shape — the ``train_bpe`` two-phase discipline exactly:
 ONE corpus-scale word-frequency aggregation, then the merge loop over
@@ -50,7 +49,6 @@ from ..functions.crossing import local_frame
 from .bpe import WORD_RE, _trainable_words
 
 CONT = "##"
-UNK = "[UNK]"
 
 
 def _init_syms_py(w: str) -> list[str]:
@@ -277,31 +275,6 @@ def merges_tag(merges: list[tuple[str, str, int]]) -> str:
     """The learned merge sequence as a constant column value, so the
     oracle checks training symbol-for-symbol."""
     return ",".join(f"{a}+{b}" for a, b, _ in merges)
-
-
-def wordpiece_segment(word: str, vocab: set[str]) -> list[str]:
-    """Published WordPiece INFERENCE (the BERT tokenizer's greedy
-    longest-match-first): repeatedly take the longest vocabulary
-    piece that prefixes the remainder (##-prefixed after the first),
-    [UNK] for the whole word when stuck."""
-    out: list[str] = []
-    pos = 0
-    while pos < len(word):
-        end = len(word)
-        piece = None
-        while end > pos:
-            cand = word[pos:end]
-            if pos > 0:
-                cand = CONT + cand
-            if cand in vocab:
-                piece = cand
-                break
-            end -= 1
-        if piece is None:
-            return [UNK]
-        out.append(piece)
-        pos = end
-    return out
 
 
 def wordpiece_oracle_ctes(num_merges: int = 6, src: str = "documents",

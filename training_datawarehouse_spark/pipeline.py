@@ -162,7 +162,7 @@ def run_e4_rollup(facts: DataFrame, period_col: str) -> DataFrame:
     )
 
 
-def write_warehouse(facts: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_warehouse(facts: DataFrame, path: str) -> None:
     """OP-SNK-1: materialize the fact lattice, partitioned by cell keys.
 
     The reference's one-SQLite-table-per-cell (``create_table``
@@ -174,154 +174,5 @@ def write_warehouse(facts: DataFrame, path: str, mode: str = "overwrite") -> Non
     sorted, so parquet row-group min/max stats let date-range predicates
     skip row groups without a directory explosion.
     """
-    facts.sortWithinPartitions(*CELL_KEYS, "date").write.mode(mode).partitionBy(
-        *CELL_KEYS
-    ).parquet(path)
-
-
-def append_days(
-    spark: SparkSession, warehouse_path: str, new_facts: DataFrame
-) -> DataFrame:
-    """OP-SNK-2 + OP-DD-1: idempotent append — first-writer-wins on
-    (date, cell). The reference relied on ``date UNIQUE`` +
-    swallow-error inserts (:531-535); here the existing (date, cell)
-    keys anti-join away re-arriving rows BEFORE the write, so the
-    stored table never holds duplicates. Only the slim key columns of
-    the existing table are read (column pruning reaches the scan)."""
-    existing = spark.read.parquet(warehouse_path)
-    keys = ["date", *CELL_KEYS]
-    fresh = new_facts.join(existing.select(*keys), keys, "left_anti")
-    fresh.write.mode("append").partitionBy(*CELL_KEYS).parquet(warehouse_path)
-    return spark.read.parquet(warehouse_path)
-
-
-def delete_rows(
-    spark: SparkSession,
-    warehouse_path: str,
-    predicate,
-) -> DataFrame:
-    """Takedown-style deletion from the partitioned warehouse: rewrite
-    ONLY the partitions that contain matching rows.
-
-    Without a table format that supports row deletes, the primitive is
-    a partition-selective rewrite: find affected cell partitions,
-    anti-filter their rows, and overwrite just those partition
-    directories via dynamic partition overwrite — untouched partitions'
-    files are never read or rewritten (asserted by mtime in tests).
-    ``predicate`` is a boolean Column (e.g. a doc-id blocklist via
-    ``isin`` or a semi-join flag).
-    """
-    facts = spark.read.parquet(warehouse_path)
-    affected_cells = facts.filter(predicate).select(*CELL_KEYS).distinct()
-    survivors = facts.join(F.broadcast(affected_cells), CELL_KEYS, "left_semi").filter(
-        ~predicate
-    )
-    # Dynamic partition overwrite only rewrites partitions PRESENT in
-    # the output. A cell whose every row matches the predicate yields
-    # zero survivor rows → no output partition → its old files would
-    # silently stay on disk. Find those fully-emptied cells and remove
-    # their directories explicitly. Cell cardinality is bounded by
-    # design, so the collect is a handful of rows. The directories are
-    # resolved by LISTING the store and decoding Hive partition names —
-    # never by string-building paths from the values: Spark writes
-    # null/'' partition values as __HIVE_DEFAULT_PARTITION__ and
-    # percent-escapes special characters (%, :, =, /, #, ...), so a
-    # hand-built f"{k}={v}" path misses exactly those cells and the
-    # "deleted" rows would silently survive.
-    surviving_cells = survivors.select(*CELL_KEYS).distinct()
-    emptied = (
-        affected_cells.join(surviving_cells, CELL_KEYS, "left_anti").collect()
-    )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        survivors.write.mode("overwrite").partitionBy(*CELL_KEYS).parquet(warehouse_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    if emptied:
-        dirs = _partition_dirs(spark, warehouse_path, len(CELL_KEYS))
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.Path(warehouse_path).getFileSystem(hconf)
-        for row in emptied:
-            key = tuple(_normalize_part_value(row[k]) for k in CELL_KEYS)
-            path = dirs.get(key)
-            if path is not None:
-                fs.delete(path, True)
-    return spark.read.parquet(warehouse_path)
-
-
-def _normalize_part_value(v) -> str | None:
-    """A partition value as it round-trips through a Hive-style layout:
-    null and '' are both stored as the default-partition token and read
-    back as null — one equivalence class."""
-    if v is None or v == "":
-        return None
-    return str(v)
-
-
-def _unescape_part_name(name: str):
-    """Decode one ``key=value`` directory's value the way Spark/Hive
-    escaped it (``ExternalCatalogUtils.unescapePathName``): %XX byte
-    escapes, __HIVE_DEFAULT_PARTITION__ → null."""
-    import re
-
-    if name == "__HIVE_DEFAULT_PARTITION__":
-        return None
-    return re.sub(
-        "%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), name
-    )
-
-
-def _partition_dirs(spark: SparkSession, root: str, n_levels: int) -> dict:
-    """Map (decoded partition values...) → Hadoop Path of the leaf
-    directory, by listing the store (works on any Hadoop-compatible FS,
-    not just local disk). Decoding the on-disk names and matching the
-    decoded tuple is total — unlike re-implementing the escape rules,
-    which silently breaks the day Spark's escape set and ours diverge."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    root_path = jvm.org.apache.hadoop.fs.Path(root)
-    fs = root_path.getFileSystem(hconf)
-    out: dict = {}
-
-    def walk(path, values, depth):
-        if depth == n_levels:
-            out[tuple(values)] = path
-            return
-        for st in fs.listStatus(path):
-            if st.isDirectory():
-                name = st.getPath().getName()
-                if "=" in name:
-                    walk(
-                        st.getPath(),
-                        values + [_unescape_part_name(name.split("=", 1)[1])],
-                        depth + 1,
-                    )
-
-    walk(root_path, [], 0)
-    return out
-
-
-def compact_warehouse(
-    spark: SparkSession, warehouse_path: str, n_tasks: int = 32
-) -> None:
-    """Small-file compaction: rewrite every cell partition to ONE file
-    (append-heavy ingest fragments partitions; scan cost at 100 TB
-    tracks file count as much as bytes). Hash-repartitioning on the
-    cell keys routes each partition's rows to exactly one of
-    ``n_tasks`` tasks — one output file per directory, partitions
-    compacted in parallel — then dynamic overwrite swaps directories
-    in place."""
-    facts = spark.read.parquet(warehouse_path)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            facts.repartition(n_tasks, *CELL_KEYS)
-            .write.mode("overwrite")
-            .partitionBy(*CELL_KEYS)
-            .parquet(warehouse_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (facts.sortWithinPartitions(*CELL_KEYS, "date")
+     .write.mode("overwrite").partitionBy(*CELL_KEYS).parquet(path))

@@ -259,7 +259,7 @@ def dim_source_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     - 'quarantine' (r5): malformed-row quarantine, driver-visible.
       The supplier table is rendered to JSONL with every 5th key's
       line DELIBERATELY truncated mid-object, then read back through
-      ``load_quarantined_single_pass`` (one materialized scan, both
+      ``load_quarantined`` (one materialized scan, both
       splits from the cache). Good-split aggregates must equal the
       parquet truth over ``s_suppkey % 5 != 0``; the bad split's
       count and the key sum RECOVERED FROM THE RAW QUARANTINED LINES
@@ -272,7 +272,7 @@ def dim_source_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..operators.scd import scd2_merge
-    from ..sources.tables import load_any, load_quarantined_single_pass
+    from ..sources.tables import load_any, load_quarantined
 
     cat = catalog_query(spark, sf_dir).select(
         F.lit("catalog").alias("stage"),
@@ -366,9 +366,7 @@ def dim_source_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("s_name", T.StringType()),
             T.StructField("s_acctbal", T.DoubleType()),
         ])
-        qgood, qbad, release = load_quarantined_single_pass(
-            spark, qpath, qschema, fmt="json"
-        )
+        qgood, qbad, release = load_quarantined(spark, qpath, qschema)
         try:
             g = qgood.agg(
                 F.count(F.lit(1)).alias("n"),

@@ -1412,9 +1412,9 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     k is baked into the CTE text and cannot follow the data (sf0.01's
     500 vectors ÷ 6 ≈ 83/cluster; sf0.1's 2000 ÷ 6 ≈ 333 — the
     quadratic SemDeDup stage is still tiny). At corpus scale the
-    plan is O(n²/k); production callers derive k from the corpus via
-    ``operators/similarity.semdedup_k`` (population-constant k∝n —
-    the contract SCALE.md measures head-on)."""
+    plan is O(n²/k), so k must grow with the corpus to hold the
+    per-cluster population constant (k∝n — the contract SCALE.md
+    measures head-on)."""
     emb = load_table(spark, sf_dir, "embeddings")
     init_rows = (
         emb.filter(F.col("vec_id") < _KMEANS_K)
@@ -2314,8 +2314,7 @@ def chunk_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed = ck.pack_training_windows(
         stats, "doc_id", "n_tokens", capacity=512, shard_width=64
     )
-    # final layout step: deterministic seeded-hash shard + in-shard
-    # position (what write_training_shards materializes on disk)
+    # final layout step: deterministic seeded-hash shard + in-shard position
     laid_out = sharding.training_order(packed, "doc_id", seed="r2", n_shards=8)
     return laid_out.select(
         "doc_id", "n_chunks", "chunk_tokens_total", "max_chunk_tokens",

@@ -77,55 +77,32 @@ def tune_for_queries(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def tune_for_iterative(spark: SparkSession) -> SparkSession:
-    """Session knobs for the ITERATIVE operator family (NN-descent,
-    PageRank, connected components, tokenizer training) — the three
-    measured r13 settings, promoted out of docstring prose so library
-    users don't transcribe them by hand (r13 verdict #5 / ADVICE).
-
-    These operators checkpoint one generation per round through
-    ``functions.caching.eager_checkpoint``, whose stat-less LogicalRDD
-    leaves stop Catalyst's size-estimate compounding (the per-
-    generation squaring that ground the driver in BigInteger.multiply
-    at the r13 200 k NN-descent probe). Stat-less leaves then need:
-
-    1. ``spark.sql.defaultSizeInBytes`` at a realistic value (64 MB —
-       safely above the 10 MB autoBroadcast line, so no spurious
-       broadcasts): otherwise every leaf estimates Long.MaxValue and
-       size PRODUCTS through a 40-join/50-union wave plan are
-       BigIntegers with thousands of digits — the OPTIMIZER, not the
-       job, burns driver-minutes (jstack-diagnosed, r13).
-    2. A small AQE ``minPartitionSize`` (64k): the family's shuffles
-       carry slim (id, id, cos) rows whose map work is a 64-dim
-       cosine; byte-based coalescing sees ~2 MB and squeezes stages
-       to 1-3 tasks, serializing the scoring (measured: same-plan hop
-       checkpoints growing 1.5 s -> 23 s across waves).
-    3. Runtime bloom-filter injection OFF: InjectRuntimeFilter
-       re-walks size stats for every join of every freshly-copied
-       plan tree and can never fire on these plans anyway (runtime
-       bloom filters push into FILE scans; every leaf here is an
-       in-memory RDD). Both observed driver grinds bottomed out in
-       this rule.
-
-    Measured cost-neutral at bench scale for mixed sessions on the
-    JOIN side (AQE re-plans joins from REAL shuffle sizes at runtime,
-    so relational plans keep their broadcasts) — but knob 3 is a
-    PERMANENT loss for a long-lived session: runtime bloom-filter
-    injection materially cuts fact-table scans on selective dim
-    joins (tests/test_plan_quality.py pins the effect), and this
-    function switches it off with no restore. Prefer the scoped
-    ``iterative_tuning`` context manager for sessions that mix
-    iterative builds with relational queries (r14 verdict #3); this
-    unscoped form remains for dedicated iterative jobs where the
-    session ends with the build."""
-    for key, value in ITERATIVE_CONFS.items():
-        spark.conf.set(key, value)
-    return spark
-
-
-#: The three measured r13 iterative-family settings (rationale in
-#: ``tune_for_iterative``'s docstring) as data, so the scoped and
-#: unscoped forms can never drift apart.
+#: Session knobs for the ITERATIVE operator family (NN-descent,
+#: PageRank, connected components, tokenizer training) — the three
+#: measured r13 settings, applied by ``iterative_tuning``.
+#:
+#: These operators checkpoint one generation per round through
+#: ``functions.caching.eager_checkpoint``, whose stat-less LogicalRDD
+#: leaves stop Catalyst's size-estimate compounding (the per-generation
+#: squaring that ground the driver in BigInteger.multiply at the r13
+#: 200 k NN-descent probe). Stat-less leaves then need:
+#:
+#: 1. ``spark.sql.defaultSizeInBytes`` at a realistic value (64 MB —
+#:    safely above the 10 MB autoBroadcast line, so no spurious
+#:    broadcasts): otherwise every leaf estimates Long.MaxValue and
+#:    size PRODUCTS through a 40-join/50-union wave plan are
+#:    BigIntegers with thousands of digits — the OPTIMIZER, not the
+#:    job, burns driver-minutes (jstack-diagnosed, r13).
+#: 2. A small AQE ``minPartitionSize`` (64k): the family's shuffles
+#:    carry slim (id, id, cos) rows whose map work is a 64-dim cosine;
+#:    byte-based coalescing sees ~2 MB and squeezes stages to 1-3
+#:    tasks, serializing the scoring (measured: same-plan hop
+#:    checkpoints growing 1.5 s -> 23 s across waves).
+#: 3. Runtime bloom-filter injection OFF: InjectRuntimeFilter re-walks
+#:    size stats for every join of every freshly-copied plan tree and
+#:    can never fire on these plans anyway (runtime bloom filters push
+#:    into FILE scans; every leaf here is an in-memory RDD). Both
+#:    observed driver grinds bottomed out in this rule.
 ITERATIVE_CONFS = {
     "spark.sql.defaultSizeInBytes": str(64 * 1024 * 1024),
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
@@ -135,11 +112,10 @@ ITERATIVE_CONFS = {
 
 @contextlib.contextmanager
 def iterative_tuning(spark: SparkSession):
-    """Scoped ``tune_for_iterative``: applies the three iterative-
-    family confs on entry and RESTORES the prior values on exit
-    (r14 verdict #3).
+    """Applies the three iterative-family confs (``ITERATIVE_CONFS``)
+    on entry and RESTORES the prior values on exit (r14 verdict #3).
 
-    The unscoped function permanently disables runtime bloom-filter
+    Left on, knob 3 would permanently disable runtime bloom-filter
     injection — a feature that measurably cuts fact-table scans
     (tests/test_plan_quality.py) — so a long-lived 100 TB session
     that once built an ANN graph would pay on every subsequent
@@ -158,7 +134,8 @@ def iterative_tuning(spark: SparkSession):
             prior[key] = spark.conf.get(key)
         except Exception:
             prior[key] = None  # unset and no Spark-side default
-    tune_for_iterative(spark)
+    for key, value in ITERATIVE_CONFS.items():
+        spark.conf.set(key, value)
     try:
         yield spark
     finally:

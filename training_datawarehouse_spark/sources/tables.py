@@ -159,20 +159,21 @@ def load_any(spark: SparkSession, path: str, schema=None) -> DataFrame:
     raise ValueError(f"unsupported source format: {ext or path}")
 
 
-def load_quarantined(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    fmt: str = "json",
-    corrupt_col: str = "_corrupt_record",
-) -> tuple[DataFrame, DataFrame]:
-    """Malformed-row quarantine for semi-structured ingest: returns
-    ``(good, bad)``. At 100 TB a handful of broken lines in a billion
+def load_quarantined(spark: SparkSession, path: str, schema: T.StructType):
+    """Malformed-row quarantine for JSON-lines ingest, with exactly ONE
+    scan of the source files. A handful of broken lines in a billion
     must not kill the job (FAILFAST) or silently vanish (DROPMALFORMED)
     — PERMISSIVE mode parses what it can and routes each unparseable
-    raw line into ``corrupt_col``; ``good`` carries the parsed rows
-    (corrupt column dropped), ``bad`` carries (raw_record) for a
-    quarantine sink + replay after the producer is fixed.
+    raw line into a corrupt-record column. The permissive read is
+    persisted (memory, disk spill) and materialized, then both splits
+    are predicates over the cache (``InMemoryTableScan`` in their plans
+    — asserted in tests/test_pipeline.py), so the files are fetched
+    once, not once per split.
+
+    Returns ``(good, bad, release)``: ``good`` carries the parsed rows,
+    ``bad`` carries ``raw_record`` for a quarantine sink + replay after
+    the producer is fixed; call ``release()`` after both splits are
+    consumed to drop the cached pass.
 
     Spark caveats handled here: the corrupt column is only populated
     if it is PRESENT IN THE SCHEMA, and a query whose scan references
@@ -181,127 +182,35 @@ def load_quarantined(
     cannot know a row is unparseable without parsing it). So ``bad``
     carries the partially-parsed columns alongside ``raw_record`` —
     which a quarantine sink wants anyway (they show WHAT half-parsed).
-    ``good``/``bad`` are two reads of the same files, each
-    column-pruned — fine for LOCAL/cheap storage only. When the source
-    is remote (S3/GCS/HDFS, where a second scan is a second egress
-    bill), use ``load_quarantined_single_pass`` instead: one
-    materialized read, both splits served from the cache. A
-    remote-shaped ``path`` (scheme in ``_REMOTE_SCHEMES``) DELEGATES
-    to the single-pass loader automatically (tested in
-    tests/test_pipeline.py); the delegated cache stays pinned until
-    the session ends — call the single-pass API directly when you
-    want the explicit ``release()`` lifecycle.
-    """
-    if _is_remote_path(path):
-        good, bad, _release = load_quarantined_single_pass(
-            spark, path, schema, fmt, corrupt_col
-        )
-        return good, bad
-    df = _read_permissive(spark, path, schema, fmt, corrupt_col)
-    return _split_quarantine(df, schema, corrupt_col)
-
-
-#: URI schemes where a second scan of the source re-fetches the bytes
-#: over the network: object stores, HDFS, and plain HTTP. ``file:``
-#: and scheme-less paths are local — the OS page cache makes the
-#: second column-pruned scan cheap there.
-_REMOTE_SCHEMES = frozenset(
-    ("s3", "s3a", "s3n", "gs", "gcs", "abfs", "abfss", "wasb", "wasbs",
-     "hdfs", "oss", "cos", "http", "https")
-)
-
-
-def _is_remote_path(path: str) -> bool:
-    scheme, sep, _rest = path.partition("://")
-    return bool(sep) and scheme.lower() in _REMOTE_SCHEMES
-
-
-def load_quarantined_single_pass(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    fmt: str = "json",
-    corrupt_col: str = "_corrupt_record",
-):
-    """``load_quarantined`` with exactly ONE scan of the source files:
-    the PERMISSIVE read is persisted (memory, disk spill) and
-    materialized, then both splits are predicates over the cache
-    (``InMemoryTableScan`` in their plans — asserted in
-    tests/test_pipeline.py). This is the remote-source variant: the
-    files are fetched once, not once per split.
-
-    Returns ``(good, bad, release)``; call ``release()`` after both
-    splits are consumed to drop the cached pass. The cache holds the
-    full parsed width + the corrupt column — the price of not
-    re-fetching; at 100 TB you would bound it by quarantining
-    partition-by-partition or landing the permissive pass to a
-    scratch table instead of executor memory.
+    The cache holds the full parsed width + the corrupt column — the
+    price of not re-fetching; at 100 TB you would bound it by
+    quarantining partition-by-partition or landing the permissive pass
+    to a scratch table instead of executor memory.
     """
     from pyspark import StorageLevel
 
-    df = _read_permissive(spark, path, schema, fmt, corrupt_col)
-    cached = df.persist(StorageLevel.MEMORY_AND_DISK)
+    corrupt = "_corrupt_record"
+    full = T.StructType(
+        list(schema.fields) + [T.StructField(corrupt, T.StringType())]
+    )
+    cached = (
+        spark.read.schema(full)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", corrupt)
+        .json(path)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     cached.count()  # materialize now: THE one scan of the source
-    good, bad = _split_quarantine(cached, schema, corrupt_col)
+    good = cached.where(F.col(corrupt).isNull()).drop(corrupt)
+    bad = cached.where(F.col(corrupt).isNotNull()).select(
+        F.col(corrupt).alias("raw_record"),
+        *[F.col(f.name) for f in schema.fields],
+    )
 
     def release() -> None:
         cached.unpersist()
 
     return good, bad, release
-
-
-def _read_permissive(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    fmt: str,
-    corrupt_col: str,
-) -> DataFrame:
-    if fmt not in ("json", "csv"):
-        raise ValueError("quarantine loader supports json/csv sources")
-    full = T.StructType(
-        list(schema.fields) + [T.StructField(corrupt_col, T.StringType())]
-    )
-    r = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-    )
-    if fmt == "csv":
-        return r.option("header", "true").csv(path)
-    return r.json(path)
-
-
-def _split_quarantine(
-    df: DataFrame, schema: T.StructType, corrupt_col: str
-) -> tuple[DataFrame, DataFrame]:
-    good = df.where(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    bad = df.where(F.col(corrupt_col).isNotNull()).select(
-        F.col(corrupt_col).alias("raw_record"),
-        *[F.col(f.name) for f in schema.fields],
-    )
-    return good, bad
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int,
-    path: str | None = None,
-) -> None:
-    """Materialize a table bucketed (and sorted) on its join key.
-
-    Two tables bucketed on the same key with the same bucket count
-    co-locate: a join between them needs NO exchange on either side
-    (asserted in tests/test_plan_quality.py). This is the 100 TB answer
-    for repeated fact⋈fact joins — pay the clustering once at write
-    time, never shuffle at read time.
-    """
-    w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_col).sortBy(bucket_col)
-    if path:
-        w = w.option("path", path)
-    w.saveAsTable(table_name)
 
 
 def register_tables(spark: SparkSession, sf_dir: str) -> None:

@@ -1,6 +1,3 @@
+"""Structured Streaming: the events stream (``events_stream``), custom
+stateful operators (``stateful``) and stream-stream joins (``joins``)."""
 from .events_stream import event_schema, stream_events, windowed_counts  # noqa: F401
-from .state import (  # noqa: F401
-    HDFS_PROVIDER,
-    ROCKSDB_PROVIDER,
-    state_store_provider,
-)

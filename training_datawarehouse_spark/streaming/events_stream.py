@@ -71,69 +71,3 @@ def windowed_counts(
         )
         .select(F.col("w.start").alias("window_start"), "event_type", "n", "total_value")
     )
-
-
-def run_available_now(
-    spark: SparkSession, src_path: str, checkpoint: str
-) -> list:
-    """Drain the whole source with trigger(availableNow) into memory and
-    return the rows — used by tests to assert stream/batch parity."""
-    q = (
-        windowed_counts(stream_events(spark, src_path))
-        .writeStream.format("memory")
-        .queryName("events_windowed")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError(
-            "streaming drain did not finish within 300 s "
-            "(query 'events_windowed'); memory sink would be partial"
-        )
-    return spark.sql("select * from events_windowed").collect()
-
-
-def stream_to_warehouse(
-    spark: SparkSession,
-    src_path: str,
-    warehouse_path: str,
-    checkpoint: str,
-    window: str = "6 hours",
-    watermark: str = "1 day",
-):
-    """Streaming ingest into a keyed parquet warehouse with replay
-    idempotence: each micro-batch lands via an anti-join on the
-    (window_start, event_type) key, so reprocessing after checkpoint
-    loss (or at-least-once source replays) never duplicates rows —
-    the streaming twin of ``pipeline.append_days``.
-
-    Returns the StreamingQuery (caller awaits termination).
-    """
-    from pyspark.sql import functions as F
-
-    agg = windowed_counts(stream_events(spark, src_path), window, watermark)
-
-    def land(batch_df, batch_id: int) -> None:
-        import os
-
-        keys = ["window_start", "event_type"]
-        if os.path.isdir(warehouse_path) and any(
-            f.endswith(".parquet") or f.startswith("part-")
-            for root, _, files in os.walk(warehouse_path) for f in files
-        ):
-            existing = batch_df.sparkSession.read.parquet(warehouse_path)
-            fresh = batch_df.join(existing.select(*keys), keys, "left_anti")
-        else:
-            fresh = batch_df
-        fresh.write.mode("append").parquet(warehouse_path)
-
-    return (
-        agg.writeStream.foreachBatch(land)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -1,13 +1,10 @@
 """Custom stateful streaming operators via ``applyInPandasWithState``.
 
 The reference has no streaming (SURVEY §2.2); these are the charter's
-"custom stateful operator" surface. Two operators:
-
-- ``running_user_totals``: per-user running event count / value sum
-  maintained in the state store across micro-batches (update mode).
-- ``streaming_first_seen_dedup``: exact streaming dedup — emit a key's
-  row only the first time it is ever seen; later arrivals (any
-  micro-batch) are dropped. State is one marker per key.
+"custom stateful operator" surface. Each keeps its per-key state in the
+state store across micro-batches: ``running_user_totals`` (per-user
+running event count / value sum, update mode), the funnel progress
+chain, the KMV and quantile sketches, and the near-dup admission gate.
 
 Scale posture: state is keyed by the group column only and holds a
 fixed-size tuple per key — the state store grows with |distinct keys|,
@@ -20,7 +17,7 @@ the driver's synthetic key spaces are small and bounded.
 from __future__ import annotations
 
 import math
-from typing import Any, Iterable, Iterator
+from typing import Iterable, Iterator
 
 import pandas as pd
 
@@ -52,49 +49,6 @@ def running_user_totals(events: DataFrame) -> DataFrame:
         outputStructType="user_id long, n_events long, total_value double",
         stateStructType="n long, total double",
         outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_first_seen_dedup(events: DataFrame, key_col: str) -> DataFrame:
-    """Streaming exact dedup: first row per key wins, across all
-    micro-batches (OP-DD-1 semantics lifted to a stream).
-
-    Emits (key, first_event_id, first_ts_micros) exactly once per key;
-    subsequent arrivals find the state marker and emit nothing.
-    """
-
-    def dedup(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            for _ in pdfs:  # drain, late duplicates
-                pass
-            return
-        first: dict[str, Any] | None = None
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(["ts", "event_id"])
-            row = pdf.iloc[0]
-            if first is None or (row["ts"], row["event_id"]) < (first["ts"], first["event_id"]):
-                first = {"ts": row["ts"], "event_id": int(row["event_id"])}
-        if first is None:
-            return
-        state.update((1,))
-        yield pd.DataFrame(
-            {
-                "key": [key[0]],
-                "first_event_id": [first["event_id"]],
-                "first_ts_micros": [int(pd.Timestamp(first["ts"]).value // 1000)],
-            }
-        )
-
-    return events.groupBy(key_col).applyInPandasWithState(
-        dedup,
-        outputStructType="key string, first_event_id long, first_ts_micros long",
-        stateStructType="seen int",
-        outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
