@@ -86,9 +86,8 @@ def test_banding_recall_guarantee_and_corpus_floor(spark, corpus_sigs,
     # Perceptual-hash bit errors are NOT uniformly spread (a changed
     # token perturbs DCT/DFT coefficients across the spectrum), so
     # the no-clean-band event is common at 4-6 errors — the honest
-    # cost of m=4 banding, and the measured argument for the 256-bit
-    # / 16-band production scale-up (SCALE.md r9). Floors sit under
-    # the measurements; a real banding regression lands near zero.
+    # cost of m=4 banding (SCALE.md r9). Floors sit under the
+    # measurements; a real banding regression lands near zero.
     probable = {p for p, h in truth.items() if 4 <= h <= 6}
     if probable:
         recall = len(probable & set(got)) / len(probable)

@@ -153,83 +153,3 @@ def test_eager_checkpoint_lazy_mode_roundtrip_and_release(spark):
     # the rewrapped frame released via its _graft_ck_source
     assert getattr(lz, "_graft_ck_source", None) is not None
     assert release_local_checkpoint(lz)
-
-
-def test_recursive_build_survives_all_core_corpus(spark):
-    """r13 ADVICE #1: on a corpus whose ids ALL hash to the core
-    level (every wave batch empty), the returned graph IS the core
-    graph — the post-loop release must not unpersist the blocks
-    behind it (before the fix this collect() died with
-    missing-checkpoint-block errors)."""
-    import hashlib
-
-    import numpy as np
-
-    from training_datawarehouse_spark.operators.nndescent import (
-        nnd_graph_recursive,
-    )
-
-    # ids at level L for core_frac=2: md5(str(id))[:15] even
-    ids = [i for i in range(200)
-           if int(hashlib.md5(str(i).encode()).hexdigest()[:15], 16)
-           % 2 == 0][:24]
-    assert len(ids) == 24
-    rng = np.random.RandomState(7)
-    pts = rng.standard_normal((24, 8))
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in np.round(p, 6)])
-         for i, p in zip(ids, pts)],
-        "vec_id long, embedding array<double>",
-    )
-    g, cents = nnd_graph_recursive(
-        df, k=4, core_frac=2, core_iters=2, refine_iters=1,
-        n_lists=4, kmeans_iters=2)
-    rows = g.collect()               # would raise on released blocks
-    assert len(rows) == 24 * 4
-    assert all(r["src"] != r["dst"] for r in rows)
-    release_local_checkpoint(g)
-
-
-def test_iterative_tuning_scoped_restores_confs(spark):
-    """r14 verdict #3: the context-manager form must put every knob
-    back on exit — including on exception — so a mixed session that
-    builds a graph keeps runtime bloom-filter injection (a feature
-    test_plan_quality.py proves cuts fact scans) for the relational
-    queries that follow."""
-    from training_datawarehouse_spark.session import (
-        ITERATIVE_CONFS, iterative_tuning,
-    )
-
-    before = {k: spark.conf.get(k) for k in ITERATIVE_CONFS}
-    # runtime bloom filters are ON before (the default this scoping
-    # exists to protect)
-    assert before["spark.sql.optimizer.runtime.bloomFilter.enabled"] == "true"
-    with iterative_tuning(spark):
-        for k, v in ITERATIVE_CONFS.items():
-            assert spark.conf.get(k) == v
-        # the three measured knobs, spelled out
-        assert spark.conf.get("spark.sql.defaultSizeInBytes") == str(
-            64 * 1024 * 1024)
-        assert spark.conf.get(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-        ) == "64k"
-        assert spark.conf.get(
-            "spark.sql.optimizer.runtime.bloomFilter.enabled") == "false"
-    assert {k: spark.conf.get(k) for k in ITERATIVE_CONFS} == before
-
-    # exception-safe: the finally must still restore
-    with pytest.raises(RuntimeError, match="boom"):
-        with iterative_tuning(spark):
-            raise RuntimeError("boom")
-    assert {k: spark.conf.get(k) for k in ITERATIVE_CONFS} == before
-
-    # nesting a user-set prior value: restore to the USER's value,
-    # not the Spark default
-    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    spark.conf.set(key, "2m")
-    try:
-        with iterative_tuning(spark):
-            assert spark.conf.get(key) == "64k"
-        assert spark.conf.get(key) == "2m"
-    finally:
-        spark.conf.set(key, before[key])

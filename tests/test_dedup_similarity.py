@@ -1321,45 +1321,6 @@ def test_asof_join_null_value_carry_is_atomic(spark):
     assert row["ts_asof"] == 99.0 and row["v_asof"] is None
 
 
-def test_connected_components_incremental_equals_rebuild(spark):
-    """Folding a second edge batch into an existing labeling must equal
-    the full rebuild over all edges — including cluster merges, new
-    singleton chains, and edges inside one old component."""
-    import random
-
-    rng = random.Random(7)
-    nodes = list(range(60))
-    all_edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(50)]
-    all_edges = [e for e in all_edges if e[0] != e[1]]
-    batch1, batch2 = all_edges[:30], all_edges[30:]
-    # plus edges touching brand-new nodes (60..69)
-    batch2 += [(59, 61), (61, 62), (65, 66)]
-    e1 = spark.createDataFrame(batch1, "id_a long, id_b long")
-    e2 = spark.createDataFrame(batch2, "id_a long, id_b long")
-    eall = spark.createDataFrame(batch1 + batch2, "id_a long, id_b long")
-
-    full = {r["node"]: r["component"]
-            for r in dd.connected_components(eall).collect()}
-    old = dd.connected_components(e1)
-    incr = {r["node"]: r["component"]
-            for r in dd.connected_components_incremental(old, e2).collect()}
-    assert incr == full
-
-
-def test_connected_components_incremental_no_bridges(spark):
-    """A batch whose edges all fall inside existing components (or are
-    fully new singleton clusters) must not change any old label."""
-    e1 = spark.createDataFrame([(1, 2), (2, 3), (10, 11)],
-                               "id_a long, id_b long")
-    old = dd.connected_components(e1)
-    # in-component edge + disjoint brand-new pair
-    e2 = spark.createDataFrame([(1, 3), (100, 101)],
-                               "id_a long, id_b long")
-    incr = {r["node"]: r["component"]
-            for r in dd.connected_components_incremental(old, e2).collect()}
-    assert incr == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 100: 100, 101: 100}
-
-
 def test_blocked_fuzzy_linkage_resolution(spark):
     """Record linkage (operators/linkage.py): typo'd names resolve to
     their source entity within the threshold, scrambles miss, and the
@@ -1486,41 +1447,3 @@ def test_bloom_fill_autosize_and_saturation_guard(spark):
     assert grown["m_bits"] > dd.BLOOM_M          # outgrew the floor
     assert grown["m_bits"] & (grown["m_bits"] - 1) == 0   # power of 2
     assert grown["fill"] < 0.5                   # and not saturated
-
-
-def test_connected_components_incremental_rejects_foreign_labels(spark):
-    """r12 advice: the fold's correctness depends on min-node-id
-    labels; a labeling from any other scheme must be REJECTED on the
-    touched slice, not silently merged wrong."""
-    old = spark.createDataFrame(
-        [(1, 99), (2, 99)], "node long, component long")  # 99 > members
-    e2 = spark.createDataFrame([(1, 3)], "id_a long, id_b long")
-    with pytest.raises(ValueError, match="min-node-id"):
-        dd.connected_components_incremental(old, e2)
-
-
-def test_connected_components_incremental_validate_flag(spark):
-    """r13 advice: validate=False keeps the operator purely
-    plan-building for hot ingest loops that trust their labeling
-    provenance — result identical on a VALID labeling, and (the
-    documented trade) a foreign labeling is NOT caught."""
-    e1 = spark.createDataFrame([(1, 2), (10, 11)], "id_a long, id_b long")
-    e2 = spark.createDataFrame([(2, 10), (20, 21)], "id_a long, id_b long")
-    old = dd.connected_components(e1)
-    with_check = {r["node"]: r["component"]
-                  for r in dd.connected_components_incremental(
-                      old, e2).collect()}
-    without = {r["node"]: r["component"]
-               for r in dd.connected_components_incremental(
-                   old, e2, validate=False).collect()}
-    assert without == with_check == {
-        1: 1, 2: 1, 10: 1, 11: 1, 20: 20, 21: 20}
-    # the skip really skips: the foreign labeling that raises under
-    # validate=True flows through silently (necessary-but-not-
-    # sufficient check, explicitly waived by the caller)
-    foreign = spark.createDataFrame(
-        [(1, 99), (2, 99)], "node long, component long")
-    e3 = spark.createDataFrame([(1, 3)], "id_a long, id_b long")
-    out = dd.connected_components_incremental(
-        foreign, e3, validate=False).collect()
-    assert len(out) == 3  # built a plan and ran; no contract error

@@ -97,58 +97,6 @@ def test_pagerank_no_edges_uniform(spark):
     assert len(ranks) == 1  # all-dangling graph stays uniform
 
 
-def test_pagerank_warm_start_equals_continued_iteration(spark):
-    """pagerank(init=pagerank(G, 3), 2) == pagerank(G, 5) bit-for-bit:
-    the warm-start path is exactly the recurrence continued, so
-    incremental maintenance inherits every determinism guarantee."""
-    nodes = list(range(20))
-    edges = [(i, (i * 3 + 1) % 20) for i in range(20)] + [
-        (i, (i * 7 + 2) % 20) for i in range(0, 20, 3)
-    ]
-    n = spark.createDataFrame([(v,) for v in nodes], "node long")
-    e = spark.createDataFrame(edges, "src long, dst long")
-    cold3 = gr.pagerank_fixed(n, e, iterations=3)
-    warm = {r["node"]: r["pr_rank"]
-            for r in gr.pagerank_fixed(
-                n, e, iterations=2, init_ranks=cold3).collect()}
-    cold5 = {r["node"]: r["pr_rank"]
-             for r in gr.pagerank_fixed(n, e, iterations=5).collect()}
-    assert warm == cold5
-
-
-def test_pagerank_warm_start_new_nodes_uniform(spark):
-    """Nodes absent from init_ranks start uniform at the NEW N."""
-    n2 = spark.createDataFrame([(v,) for v in range(4)], "node long")
-    e0 = spark.createDataFrame([(0, 1)], "src long, dst long")
-    prev = gr.pagerank_fixed(
-        spark.createDataFrame([(0,), (1,)], "node long"), e0, iterations=2)
-    out = {r["node"]: r
-           for r in gr.pagerank_fixed(
-               n2, e0, iterations=1, init_ranks=prev).collect()}
-    assert set(out) == {0, 1, 2, 3}
-
-
-def test_pagerank_warm_start_renormalized_removes_mass_bias(spark):
-    """After node growth, the raw warm start carries the old vector's
-    mass excess; renormalize_init rescales it to exactly `scale` at
-    init (probe-measured: the excess IS the dominant warm-start error).
-    """
-    old = [(v,) for v in range(10)]
-    edges = [(i, (i * 3 + 1) % 10) for i in range(10)]
-    n_old = spark.createDataFrame(old, "node long")
-    e = spark.createDataFrame(edges, "src long, dst long")
-    prev = gr.pagerank_fixed(n_old, e, iterations=5)
-    n_new = spark.createDataFrame([(v,) for v in range(12)], "node long")
-    # zero iterations isolates the init vector itself
-    init_raw = gr.pagerank_fixed(n_new, e, iterations=0, init_ranks=prev)
-    init_ren = gr.pagerank_fixed(n_new, e, iterations=0, init_ranks=prev,
-                                 renormalize_init=True)
-    raw_mass = sum(r["pr_rank"] for r in init_raw.collect())
-    ren_mass = sum(r["pr_rank"] for r in init_ren.collect())
-    assert raw_mass > gr.PR_SCALE * 105 // 100   # old mass + 2 new uniforms
-    assert gr.PR_SCALE * 999 // 1000 <= ren_mass <= gr.PR_SCALE
-
-
 def test_pagerank_rejects_bad_damping(spark):
     import pytest as _pt
 

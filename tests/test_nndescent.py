@@ -454,96 +454,6 @@ def test_search_rejects_k_wider_than_beam(spark):
     release(g)
 
 
-def test_insert_recall_parity_vs_rebuild(spark):
-    """r12 incremental maintenance: build on 80, insert 20, compare
-    recall@k of the merged graph's adjacency (vs the exact brute-force
-    lists over all 100) against a FULL REBUILD on 100 — the insert
-    path must not cost recall. Also: untouched old nodes' lists must
-    be byte-identical to the pre-insert graph (splice locality)."""
-    from training_datawarehouse_spark.operators.nndescent import nnd_insert
-
-    k = 5
-    full = _toy(spark, n=100, seed=7)
-    old = full.filter(F.col("vec_id") < 80)
-    new = full.filter(F.col("vec_id") >= 80)
-    g_old = nnd_graph(old, k=k, iters=3)
-    g_ins = nnd_insert(g_old, old, new, k=k, iters=2)
-    g_reb = nnd_graph(full, k=k, iters=3)
-    exact = _exact_graph(full, k)
-
-    def adjacency(g):
-        adj = {}
-        for r in g.collect():
-            adj.setdefault(r["src"], set()).add(r["dst"])
-        return adj
-
-    def recall(adj, ids):
-        return sum(
-            len(adj[i] & exact[i]) / k for i in ids
-        ) / len(ids)
-
-    a_ins, a_reb = adjacency(g_ins), adjacency(g_reb)
-    assert set(a_ins) == set(range(100))
-    assert all(len(v) == k for v in a_ins.values())
-    new_ids = range(80, 100)
-    r_ins, r_reb = recall(a_ins, new_ids), recall(a_reb, new_ids)
-    # parity: within 10% of rebuild recall on the inserted nodes,
-    # and good in absolute terms
-    assert r_ins >= r_reb - 0.1, (r_ins, r_reb)
-    assert r_ins >= 0.75, r_ins
-    # whole-graph recall parity too
-    all_ids = range(100)
-    assert recall(a_ins, all_ids) >= recall(a_reb, all_ids) - 0.1
-
-
-def test_insert_untouched_nodes_unchanged(spark):
-    """Splice locality: an old node never touched by a seed edge and
-    not reached by refine keeps its exact pre-insert list. With
-    iters=0 (splice only), EVERY non-touched node is untouched."""
-    from training_datawarehouse_spark.operators.nndescent import nnd_insert
-
-    k = 4
-    full = _toy(spark, n=60, seed=11)
-    old = full.filter(F.col("vec_id") < 50)
-    new = full.filter(F.col("vec_id") >= 50)
-    g_old = nnd_graph(old, k=k, iters=2)
-    before = {}
-    for r in g_old.collect():
-        before.setdefault(r["src"], set()).add((r["dst"], r["cos"]))
-    g0 = nnd_insert(g_old, old, new, k=k, iters=0)
-    rows = g0.collect()
-    after = {}
-    for r in rows:
-        after.setdefault(r["src"], set()).add((r["dst"], r["cos"]))
-    # new nodes present with k seeds each
-    assert all(len(after[i]) == k for i in range(50, 60))
-    # old nodes: either untouched-identical, or re-ranked top-k of
-    # (old list ∪ reversed seeds) — verify the untouched ones exactly
-    touched = {d for i in range(50, 60) for (d, _) in after[i]}
-    for s in range(50):
-        if s not in touched:
-            assert after[s] == before[s], s
-
-
-def test_insert_touched_only_refine_is_result_identical(spark):
-    """The batch-sized refine restriction (touched centers only,
-    changed srcs only) must be a pure optimization: edge-for-edge
-    identical to the unrestricted incremental loop."""
-    from training_datawarehouse_spark.operators.nndescent import nnd_insert
-
-    full = _toy(spark, n=90, seed=5)
-    old = full.filter(F.col("vec_id") < 70)
-    new = full.filter(F.col("vec_id") >= 70)
-    g_old = nnd_graph(old, k=5, iters=2)
-    a = nnd_insert(g_old, old, new, k=5, iters=2,
-                   refine_touched_only=True)
-    b = nnd_insert(g_old, old, new, k=5, iters=2,
-                   refine_touched_only=False)
-    ea = sorted(map(tuple, a.collect()))
-    eb = sorted(map(tuple, b.collect()))
-    assert ea == eb
-
-
 def test_hier_search_beats_flat_on_manifold(spark):
     """The graph-diameter wall, pinned at test scale (the 200k probe's
     finding): on a 1-D ring manifold a flat beam search from global
@@ -607,149 +517,3 @@ def test_hier_search_beats_flat_on_manifold(spark):
     assert flat <= 0.5, flat     # the wall: 4 hops from 4 fixed entries
     assert hier >= 0.9, hier     # the hierarchy walks the manifold
     assert hier > flat
-
-
-def _clustered(spark, n_clusters=12, members=40, dim=16, seed=5,
-               spread=0.3):
-    """Well-separated gaussian clusters — the regime where ring-init
-    descent is round-hungry (in-cluster candidate rate =
-    members/n per round 1) and IVF seeding starts converged-adjacent."""
-    rng = np.random.RandomState(seed)
-    centers = rng.standard_normal((n_clusters, dim)) * 5.0
-    rows = []
-    for c in range(n_clusters):
-        for m in range(members):
-            v = centers[c] + spread * rng.standard_normal(dim)
-            rows.append((c * 1000 + m,
-                         [float(x) for x in np.round(v, 6)]))
-    return spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>")
-
-
-def test_ivf_seeded_build_converges_where_ring_init_lags(spark):
-    """The r13 IVF-seeded init, pinned at test scale: on a clustered
-    corpus the seeded build (nnd_graph_ivf — coarse-cell rings as
-    init) is several times closer to the exact graph than the same
-    round budget from the random hash-ring init (the 200 k probe's
-    two-phase finding: seeding converts every coarse-navigation round
-    into fine descent). Measured here: ivf 0.64 vs ring 0.14 at 3
-    rounds — seeding helps every round but random IN-cell seeds still
-    start a cluster-diameter away, which is why the recursive build
-    (test below) is the full convergence recipe. Also: shape
-    invariants and deterministic rebuild hold for the seeded path."""
-    from training_datawarehouse_spark.operators.nndescent import (
-        nnd_graph_ivf,
-    )
-
-    df = _clustered(spark)
-    exact = _exact_graph(df, 6)
-
-    def match(g):
-        got = {}
-        for r in g.collect():
-            got.setdefault(r["src"], set()).add(r["dst"])
-        return sum(len(got.get(s, set()) & exact[s])
-                   for s in exact) / (len(exact) * 6)
-
-    ring = nnd_graph(df, k=6, iters=3)
-    g_ivf, cents = nnd_graph_ivf(df, k=6, iters=3, n_lists=12,
-                                 kmeans_iters=3)
-    assert len(cents) == 12
-    m_ring, m_ivf = match(ring), match(g_ivf)
-    assert m_ivf > 2 * m_ring, (m_ivf, m_ring)  # seeding buys rounds
-    assert m_ivf >= 0.5, m_ivf    # measured 0.64 (ring: 0.14)
-    # shape invariants on the seeded path
-    rows = g_ivf.collect()
-    assert all(r["src"] != r["dst"] for r in rows)
-    per_src = {}
-    for r in rows:
-        per_src.setdefault(r["src"], set()).add(r["dst"])
-    assert all(len(v) == 6 for v in per_src.values())
-    # deterministic rebuild (trained centroids + md5 order, no RNG)
-    g2, _ = nnd_graph_ivf(df, k=6, iters=3, n_lists=12, kmeans_iters=3)
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, g2.collect()))
-
-
-def test_recursive_build_reaches_near_exact_graph(spark):
-    """The r13 convergence recipe (verdict lead task): the recursive
-    build — converge a core sample IVF-seeded, then insert the rest
-    in doubling waves with beam-seeded lists — reaches the near-EXACT
-    graph on a clustered corpus (measured 0.999 here) where both flat
-    inits plateau far lower at comparable budgets (ring 0.08@2it,
-    ivf-seeded 0.37@2it). Beam seeds are approximate top-k already,
-    so per-wave refine is genuine polish, not navigation."""
-    from training_datawarehouse_spark.operators.nndescent import (
-        nnd_graph_recursive,
-    )
-
-    df = _clustered(spark, n_clusters=8, members=30)
-    exact = _exact_graph(df, 6)
-    g, cents = nnd_graph_recursive(
-        df, k=6, core_frac=4, core_iters=3, refine_iters=2,
-        hops_core=3, hops=2, n_lists=8, kmeans_iters=3)
-    assert len(cents) == 8
-    got = {}
-    for r in g.collect():
-        got.setdefault(r["src"], set()).add(r["dst"])
-    m = sum(len(got.get(s, set()) & exact[s])
-            for s in exact) / (len(exact) * 6)
-    assert m >= 0.95, m           # measured 0.999
-    # every node has exactly k out-edges, none to itself
-    assert len(got) == 240
-    rows = g.collect()
-    assert all(r["src"] != r["dst"] for r in rows)
-    assert all(len(v) == 6 for v in got.values())
-    # power-of-two contract
-    with pytest.raises(ValueError, match="power of two"):
-        nnd_graph_recursive(df, k=6, core_frac=6)
-
-
-def test_ivf_init_edges_shape_and_in_cell_bias(spark):
-    """ivf_init_edges contract: no self-loops, distinct pairs, every
-    node present as a src, and the seed edges are dominated by
-    same-cluster pairs (the whole point — round 1 starts in-cluster);
-    the ring_mix global edges keep the init connected across cells."""
-    from training_datawarehouse_spark.operators.nndescent import (
-        ivf_init_edges, nnd_graph_ivf,
-    )
-    from training_datawarehouse_spark.operators.similarity import (
-        kmeans_fit,
-    )
-
-    df = _clustered(spark, n_clusters=6, members=30)
-    init = [r[1] for r in
-            df.select("vec_id", "embedding").orderBy("vec_id")
-            .limit(6).collect()]
-    cents, _ = kmeans_fit(df, "embedding", k=6, iters=3,
-                          init_vectors=init, round_dp=6)
-    edges = ivf_init_edges(df, cents, k=6, nprobe=2, ring_mix=2)
-    rows = edges.collect()
-    assert all(r["src"] != r["dst"] for r in rows)
-    assert len(rows) == len({(r["src"], r["dst"]) for r in rows})
-    srcs = {r["src"] for r in rows}
-    assert len(srcs) == 180                  # every node seeds
-    # nprobe=2 spends half the seed budget on the 2nd-nearest cell
-    # (straddle insurance — mostly cross-cluster on a well-separated
-    # corpus), so the default mix is ~1/3 in-cluster...
-    in_cluster = [r["src"] // 1000 == r["dst"] // 1000 for r in rows]
-    assert sum(in_cluster) / len(in_cluster) >= 0.25
-    # ...while pure own-cell seeding (nprobe=1, no global ring) with an
-    # OVERSEGMENTED quantizer (2x lists — cells subdivide clusters
-    # instead of merging them under an unlucky sample init, the
-    # production sizing guidance) is dominated by same-cluster pairs
-    init12 = [r[1] for r in
-              df.select("vec_id", "embedding")
-              .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-              .limit(12).collect()]
-    cents12, _ = kmeans_fit(df, "embedding", k=12, iters=3,
-                            init_vectors=init12, round_dp=6)
-    own = ivf_init_edges(df, cents12, k=6, nprobe=1,
-                         ring_mix=0).collect()
-    own_in = [r["src"] // 1000 == r["dst"] // 1000 for r in own]
-    assert sum(own_in) / len(own_in) >= 0.7
-    # ring_mix=0 drops the global ring; edges shrink, still no loops
-    bare = ivf_init_edges(df, cents, k=6, nprobe=2, ring_mix=0)
-    assert bare.count() < len(rows)
-    # nprobe must be >= 1
-    with pytest.raises(ValueError):
-        nnd_graph_ivf(df, k=6, n_lists=500)  # fewer vectors than lists

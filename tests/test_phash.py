@@ -202,130 +202,14 @@ def test_planted_near_dup_found_by_banded_join(spark):
     assert "Exchange" not in plan  # signatures are row-local
 
 
-def _ref_phash_params(pixels: bytes, p: ph.PhashParams) -> list[int]:
-    """The independent loop reimplementation, geometry-generic."""
-    c = ph.dct_basis_int(p.dct_n)
-    blk = [[0] * p.dct_n for _ in range(p.dct_n)]
-    for y in range(p.grid):
-        for x in range(p.grid):
-            blk[y // 2][x // 2] += pixels[y * p.grid + x]
-    f = [
-        sum(blk[r][col] * c[u][r] * c[v][col]
-            for r in range(p.dct_n) for col in range(p.dct_n))
-        for u in range(p.dct_n) for v in range(p.dct_n)
-    ]
-    med = sorted(f)[p.n_bits // 2 - 1]
-    order = p.bit_order()   # PRODUCTION scatters bits across bands
-    bands = [0] * p.n_bands
-    for pos in range(p.n_bits):
-        if f[order[pos]] > med:
-            bands[pos // p.band_bits] |= 1 << (pos % p.band_bits)
-    return bands
-
-
-def test_production_params_geometry():
-    p = ph.PRODUCTION_PARAMS
-    assert (p.grid, p.dct_n) == (32, 16)
-    assert p.n_bits == 256 and p.n_bands == 16
-    assert p.band_cols == [f"b{k}" for k in range(16)]
-    # proportional threshold: 6/64 -> 24/256
-    assert ph.scaled_max_hamming(ph.DEFAULT_PARAMS) == 6
-    assert ph.scaled_max_hamming(p) == 24
-
-
-def test_production_phash_matches_reference_and_batch():
-    """256-bit scalar path == the independent loop reimplementation ==
-    the batched einsum, on the calibration corpus."""
-    import numpy as np
-    p = ph.PRODUCTION_PARAMS
-    pix = [ph.token_grid_pixels(t, p) for t in (BASE, NEAR, FAR)]
-    scalar = [ph.phash_bands(px, p) for px in pix]
-    ref = [_ref_phash_params(px, p) for px in pix]
-    assert scalar == ref
-    batch = ph.phash_bands_batch(
-        np.frombuffer(b"".join(pix), dtype=np.uint8), p)
-    assert [list(b) for b in batch] == scalar
-    assert all(0 <= v < (1 << p.band_bits) for b in scalar for v in b)
-
-
-def test_production_hamming_separation():
-    """The planted near-dup/unrelated separation transfers to the
-    256-bit envelope at the proportionally scaled threshold."""
-    p = ph.PRODUCTION_PARAMS
-
-    def dist(a, b):
-        sa = ph.phash_bands(ph.token_grid_pixels(a, p), p)
-        sb = ph.phash_bands(ph.token_grid_pixels(b, p), p)
-        return sum(bin(x ^ y).count("1") for x, y in zip(sa, sb))
-
-    tau = ph.scaled_max_hamming(p)
-    assert dist(BASE, NEAR) <= tau
-    assert dist(BASE, FAR) > tau
-
-
-def test_production_planted_near_dup_found_by_banded_join(spark):
-    """End-to-end at the PRODUCTION envelope: 16-band candidate join +
-    scaled threshold surfaces exactly the planted pair; the signature
-    crossing stays row-local. (The registry keeps the 64-bit default;
-    this pins the parameterized path the SCALE.md r10 prescription
-    calls for at >=10^6 items/modality.)"""
-    p = ph.PRODUCTION_PARAMS
-    decoys = [
-        f"decoy document number {i} with tokens drawn from vocabulary "
-        f"slice {i % 7} plus padding words alpha beta gamma delta "
-        f"epsilon zeta eta theta iota kappa row{i}"
-        for i in range(20)
-    ]
-    rows = ([(1, BASE), (2, NEAR), (3, FAR)]
-            + [(10 + i, t) for i, t in enumerate(decoys)])
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    sig = ph.image_phash_signatures(df, "doc_id", "text", params=p)
-    assert sig.columns == ["id"] + p.band_cols
-    pairs = {(r.id_a, r.id_b): r.hamming
-             for r in ph.phash_candidate_pairs(
-                 sig, max_hamming=ph.scaled_max_hamming(p),
-                 n_bands=p.n_bands).collect()}
-    assert (1, 2) in pairs
-    assert pairs[(1, 2)] <= ph.scaled_max_hamming(p)
-    assert all(3 not in pr for pr in pairs)
-    plan = sig._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan  # signatures stay row-local
-
-
-def test_cap_grain_rep_recovers_mega_group_neighbors(spark):
-    """r12 (r11 probe residual): an identical-fingerprint MEGA-GROUP
-    under the doc-weight cap takes its whole bucket — including its
-    DISTINCT near-dup neighbor — out of the candidate set; under the
-    rep-grain cap the bucket survives, the neighbor pairs with the
-    group's REP, and the group's quadratic C(g,2) doc expansion never
-    materializes (exact dups resolve via the collapse membership)."""
-    mega = [(i, 1, 1, 1, 1) for i in range(30)]     # one fingerprint
-    near = [(100, 1, 1, 1, 3)]                      # Hamming 1, shares b0..b2
-    far = [(200, 21845, 13107, 3855, 255)]          # unrelated
-    sig = spark.createDataFrame(
-        mega + near + far, "id long, b0 int, b1 int, b2 int, b3 int"
-    )
-    doc_pairs = {(r["id_a"], r["id_b"]) for r in ph.phash_candidate_pairs(
-        sig, max_bucket=10).collect()}
-    rep_pairs = {(r["id_a"], r["id_b"]) for r in ph.phash_candidate_pairs(
-        sig, max_bucket=10, cap_grain="rep").collect()}
-    # doc-weight cap: every bucket holding the mega group is over cap
-    # (weight 30 or 31 > 10) -> the true near-dup is lost
-    assert doc_pairs == set()
-    # rep cap: bucket weight is 2 distinct fingerprints -> the rep
-    # (min id 0) pairs with the neighbor; NO within-group pairs
-    assert rep_pairs == {(0, 100)}
-
-
 def test_cap_grain_rep_small_groups_unchanged(spark):
-    """Groups within the cap keep the full doc-grain expansion in rep
-    mode — the guard only bites mega-groups."""
+    """Groups within the cap keep the full doc-grain expansion: the
+    Hamming-0 group pairs within itself and with its near neighbor."""
     sig = spark.createDataFrame(
         [(1, 7, 7, 7, 7), (2, 7, 7, 7, 7), (3, 7, 7, 7, 5)],
         "id long, b0 int, b1 int, b2 int, b3 int",
     )
-    for grain in ("doc", "rep"):
-        pairs = {(r["id_a"], r["id_b"]): r["hamming"]
-                 for r in ph.phash_candidate_pairs(
-                     sig, max_bucket=10, cap_grain=grain).collect()}
-        assert pairs == {(1, 2): 0, (1, 3): 1, (2, 3): 1}, grain
+    pairs = {(r["id_a"], r["id_b"]): r["hamming"]
+             for r in ph.phash_candidate_pairs(
+                 sig, max_bucket=10).collect()}
+    assert pairs == {(1, 2): 0, (1, 3): 1, (2, 3): 1}

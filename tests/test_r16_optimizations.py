@@ -40,12 +40,11 @@ TEXTS = [
 
 # ------------------------- pre-r16 reference loops (the fixed point)
 
-def _ref_grid(text, params=ph.DEFAULT_PARAMS):
-    ncells = params.grid * params.grid
-    counts = [0] * ncells
+def _ref_grid(text):
+    counts = [0] * (ph.GRID * ph.GRID)
     for tok in text.split(" "):
-        counts[ph._token_cell(tok, ncells)] += 1
-    return bytes(min(255, params.pixel_gain * c) for c in counts)
+        counts[ph._token_cell(tok)] += 1
+    return bytes(min(255, ph.PIXEL_GAIN * c) for c in counts)
 
 
 def _ref_wave(text):
@@ -75,12 +74,11 @@ def _ref_fingerprint(samples):
     return bands
 
 
-def _ref_frame_grids(text, n_frames=vd.N_FRAMES, params=ph.DEFAULT_PARAMS):
-    ncells = params.grid * params.grid
-    counts = [[0] * ncells for _ in range(n_frames)]
+def _ref_frame_grids(text, n_frames=vd.N_FRAMES):
+    counts = [[0] * (ph.GRID * ph.GRID) for _ in range(n_frames)]
     for i, tok in enumerate(text.split(" ")):
-        counts[i % n_frames][ph._token_cell(tok, ncells)] += 1
-    return [bytes(min(255, params.pixel_gain * c) for c in row)
+        counts[i % n_frames][ph._token_cell(tok)] += 1
+    return [bytes(min(255, ph.PIXEL_GAIN * c) for c in row)
             for row in counts]
 
 
@@ -198,10 +196,10 @@ def test_lsh_pair_materialize_parity(spark):
 
 def test_phash_pair_materialize_and_fused_expansion_parity(spark):
     """The fused within/across pair expansion + materialize=True must
-    reproduce the two-branch union's pair multiset exactly, for both
-    cap grains, including a planted identical-fingerprint group (the
-    within-group C(g,2) path) and near-dup reps (the across path), and
-    release its internal checkpoint."""
+    reproduce the two-branch union's pair multiset exactly, including
+    a planted identical-fingerprint group (the within-group C(g,2)
+    path) and near-dup reps (the across path), and release its
+    internal checkpoint."""
     from training_datawarehouse_spark.operators import phash as ph
 
     rows = []
@@ -212,13 +210,11 @@ def test_phash_pair_materialize_and_fused_expansion_parity(spark):
     rows.append((200, 0x0F0F, 0xF0F0, 0x00FF, 0xFF00))    # far away
     sig = spark.createDataFrame(
         rows, "id long, b0 int, b1 int, b2 int, b3 int")
-    for grain in ("doc", "rep"):
-        lazy = ph.phash_candidate_pairs(sig, cap_grain=grain).collect()
-        mat = _materialize_keeps_only_output(
-            spark, lambda: ph.phash_candidate_pairs(
-                sig, cap_grain=grain, materialize=True))
-        assert sorted(map(tuple, lazy)) == sorted(map(tuple, mat)), grain
-        assert len(lazy) > 0
+    lazy = ph.phash_candidate_pairs(sig).collect()
+    mat = _materialize_keeps_only_output(
+        spark, lambda: ph.phash_candidate_pairs(sig, materialize=True))
+    assert sorted(map(tuple, lazy)) == sorted(map(tuple, mat))
+    assert len(lazy) > 0
 
 
 def test_video_pair_matches_materialize_parity(spark):

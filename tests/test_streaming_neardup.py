@@ -133,22 +133,6 @@ def test_rowlocal_bands_match_batch_portable(spark):
     assert not any(k[0] == 4 for k in got)
 
 
-def test_rowlocal_bands_reject_colliding_keep_cols(spark):
-    """r16 (r15 ADVICE low): a kept column named like the kernel's
-    own output/internal columns would silently produce
-    duplicate/ambiguous columns — loud ValueError instead."""
-    df = spark.range(1).select(
-        F.col("id").alias("doc_id"),
-        F.lit("a b c d").alias("text"),
-        F.lit(1).alias("band"),
-    )
-    for bad in ("band", "sig", "__tk", "bs", "doc_id"):
-        with pytest.raises(ValueError, match="keep_cols"):
-            dd.minhash_band_rows_rowlocal(
-                df, "doc_id", "text", num_hashes=16, bands=4,
-                rows_per_band=4, keep_cols=(bad,))
-
-
 def test_admission_matches_batch_rule_across_batches(spark, tmp_path):
     """The sequential streaming decision == the batch first-writer rule,
     with at least one reject whose ONLY evidence is state written by an
@@ -320,338 +304,3 @@ def test_stream_bloomgate_matches_batch_probe(spark):
     assert got == want
     assert any(v[0] == "reject" for v in want.values())
     assert any(v[0] == "admit" for v in want.values())
-
-
-def test_admission_ttl_evicts_idle_buckets_and_readmits(spark, tmp_path):
-    """r13 TTL variant (verdict #3): with ttl_ms set, buckets idle past
-    the horizon are EVICTED (state count drops to zero on the live
-    query's progress), and a later duplicate of the evicted bucket's
-    ancient first member is RE-ADMITTED (match NULL) — the stated
-    time-horizon semantics. Within-horizon behavior is unchanged
-    (same-batch duplicates still reject). One long-lived
-    processingTime-trigger query (the TTL deployment shape — with
-    AvailableNow the engine keeps scheduling timeout-check batches and
-    never self-terminates, per the operator docstring), files dropped
-    while it runs."""
-    import json as _json
-    import time as _time
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    src = tmp_path / "src"
-    src.mkdir()
-
-    def write_batch(i, docs):
-        pq.write_table(
-            pa.Table.from_pylist(
-                [{"doc_id": d, "text": t} for d, t in docs],
-                schema=DOC_SCHEMA,
-            ),
-            src / f"part{i}.parquet",
-        )
-
-    def state_rows(q):
-        lp = q.lastProgress
-        ops = (_json.loads(lp.json)["stateOperators"]
-               if lp is not None else [])
-        return ops[0]["numRowsTotal"] if ops else None
-
-    def wait_for(pred, timeout_s=240):
-        t0 = _time.time()
-        while _time.time() - t0 < timeout_s:
-            if pred():
-                return True
-            _time.sleep(1)
-        return False
-
-    def sink():
-        return {
-            (r["doc_id"], r["band"]): r["match_id"]
-            for r in spark.table("adm_ttl").collect()
-        }
-
-    write_batch(0, [(0, base), (1, base + " extra")])
-    raw = (
-        spark.readStream.schema(SPARK_DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    bands = dd.minhash_band_rows_rowlocal(
-        raw, "doc_id", "text", num_hashes=16, bands=4,
-        rows_per_band=4, shingle_n=3,
-    )
-    q = (
-        streaming_neardup_admission(bands, ttl_ms=3000)
-        .writeStream.format("memory")
-        .queryName("adm_ttl")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        # phase 1: both docs decided; same-batch near-dup rejects
-        assert wait_for(lambda: len({k[0] for k in sink()}) == 2)
-        got = sink()
-        assert {got[k] for k in got if k[0] == 0} == {None}
-        assert {got[k] for k in got if k[0] == 1} - {None} == {0}
-        assert wait_for(lambda: (state_rows(q) or 0) >= 4)
-
-        # phase 2: idle past the horizon -> the engine's timeout
-        # batches evict every bucket (STATE COUNT DROPS — the gate)
-        assert wait_for(lambda: state_rows(q) == 0), state_rows(q)
-
-        # phase 3: the ancient near-dup arrives after eviction and is
-        # RE-ADMITTED (its buckets were forgotten — the stated trade)
-        write_batch(1, [(10, base)])
-        assert wait_for(lambda: 10 in {k[0] for k in sink()})
-        got = sink()
-        assert {got[k] for k in got if k[0] == 10} == {None}
-    finally:
-        q.stop()
-
-
-def test_admission_event_ttl_horizon_is_data_defined(spark, tmp_path):
-    """r15 EventTimeTimeout variant (r14 verdict #2): the horizon is
-    defined by the DATA's timestamps, not trigger cadence — the exact
-    failure the r14 wall-clock probe measured (a 16.9 s cold-start
-    cadence blew a 15 s ttl_ms and re-admitted within-horizon dups)
-    cannot happen here. The test replays a 5-minute event-time
-    timeline in a few wall-clock seconds: a duplicate arriving 30
-    EVENT-seconds after its bucket opened still rejects against a
-    60 s event horizon (wall-clock elapsed is ~2 s — irrelevant),
-    buckets whose last arrival trails the advancing WATERMARK by more
-    than the horizon are evicted (state count drops on the live
-    query's progress), and a later duplicate of the evicted bucket's
-    first member is re-admitted — the same stated time-horizon trade,
-    now replay-stable."""
-    import time as _time
-    from datetime import datetime, timedelta
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    other = "one two three four five six seven eight nine ten"
-    t0 = datetime(2026, 1, 1, 0, 0, 0)
-    ts_schema = pa.schema([
-        ("doc_id", pa.int64()), ("text", pa.string()),
-        ("ts", pa.timestamp("us")),
-    ])
-    spark_ts_schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-    ])
-    src = tmp_path / "src"
-    src.mkdir()
-
-    def write_batch(i, docs):
-        pq.write_table(
-            pa.Table.from_pylist(
-                [{"doc_id": d, "text": t, "ts": t0 + timedelta(seconds=dt)}
-                 for d, t, dt in docs],
-                schema=ts_schema,
-            ),
-            src / f"part{i}.parquet",
-        )
-
-    def state_rows(q):
-        lp = q.lastProgress
-        ops = (json.loads(lp.json)["stateOperators"]
-               if lp is not None else [])
-        return ops[0]["numRowsTotal"] if ops else None
-
-    def wait_for(pred, timeout_s=240):
-        deadline = _time.time() + timeout_s
-        while _time.time() < deadline:
-            if pred():
-                return True
-            _time.sleep(1)
-        return False
-
-    def sink():
-        return {
-            (r["doc_id"], r["band"]): r["match_id"]
-            for r in spark.table("adm_ettl").collect()
-        }
-
-    write_batch(0, [(0, base, 0), (1, base + " extra", 0)])
-    raw = (
-        spark.readStream.schema(spark_ts_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-        .withWatermark("ts", "1 second")
-    )
-    bands = dd.minhash_band_rows_rowlocal(
-        raw, "doc_id", "text", num_hashes=16, bands=4,
-        rows_per_band=4, shingle_n=3, keep_cols=("ts",),
-    )
-    q = (
-        streaming_neardup_admission(bands, event_ttl_ms=60_000)
-        .writeStream.format("memory")
-        .queryName("adm_ettl")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        # phase 1: bucket opens at event T+0; same-batch dup rejects
-        assert wait_for(lambda: len({k[0] for k in sink()}) == 2)
-        got = sink()
-        assert {got[k] for k in got if k[0] == 0} == {None}
-        assert {got[k] for k in got if k[0] == 1} - {None} == {0}
-
-        # phase 2: a dup 30 EVENT-seconds later — inside the 60 s
-        # event horizon, so it REJECTS no matter how much or little
-        # wall clock elapsed between the files (the r14 probe's
-        # cadence failure is impossible by construction)
-        write_batch(1, [(2, base + " extra", 30)])
-        assert wait_for(lambda: 2 in {k[0] for k in sink()})
-        got = sink()
-        # matches are per-band first writers: buckets shared with doc
-        # 0's base text carry 0, buckets of the identical "extra"
-        # text carry 1 — any non-NULL match is a rejection
-        m2 = {got[k] for k in got if k[0] == 2} - {None}
-        assert m2 and m2 <= {0, 1}
-        n_before = state_rows(q)
-        assert n_before and n_before >= 4
-
-        # phase 3: an unrelated doc at event T+300 s advances the
-        # watermark past every open bucket's (last arrival + 60 s) —
-        # the engine's next timeout batch evicts them; only the new
-        # doc's own buckets remain
-        write_batch(2, [(3, other, 300)])
-        assert wait_for(lambda: 3 in {k[0] for k in sink()})
-        assert wait_for(lambda: (state_rows(q) or 99) <= 4), state_rows(q)
-
-        # phase 4: a dup of the evicted bucket's first member
-        # RE-ADMITS (the stated horizon trade, event-time edition)
-        write_batch(3, [(10, base, 310)])
-        assert wait_for(lambda: 10 in {k[0] for k in sink()})
-        got = sink()
-        assert {got[k] for k in got if k[0] == 10} == {None}
-    finally:
-        q.stop()
-
-
-def test_admission_event_ttl_late_row_does_not_rewind_horizon(
-        spark, tmp_path):
-    """r16 (the r15 ADVICE medium): the event horizon anchors to the
-    bucket's RUNNING MAX event time persisted in state, not to the
-    current batch's max. A late out-of-order row that lands in a
-    batch AFTER a newer row must not rewind the eviction deadline
-    from newer_ts+horizon back to late_ts+horizon — under the old
-    batch-max anchoring, eviction (hence re-admission) depended on
-    which micro-batch boundary a late row fell on. The late row must
-    sit WITHIN the watermark delay (EventTimeTimeout drops
-    older-than-watermark input before it reaches the function), so
-    the delay here is 30 s: bucket opens at T+100, a late dup at
-    T+80 lands in the next batch (wm = 70, passes the gate), then an
-    unrelated doc advances the watermark to T+145 — past the
-    REWOUND deadline (80+60 = 140) but inside the correct one
-    (100+60 = 160); with batch-max anchoring the bucket would evict
-    here and the T+150 duplicate would falsely re-admit. With the
-    running max in state it rejects."""
-    import time as _time
-    from datetime import datetime, timedelta
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    other = "one two three four five six seven eight nine ten"
-    t0 = datetime(2026, 1, 1, 0, 0, 0)
-    ts_schema = pa.schema([
-        ("doc_id", pa.int64()), ("text", pa.string()),
-        ("ts", pa.timestamp("us")),
-    ])
-    spark_ts_schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-    ])
-    src = tmp_path / "src"
-    src.mkdir()
-
-    def write_batch(i, docs):
-        pq.write_table(
-            pa.Table.from_pylist(
-                [{"doc_id": d, "text": t, "ts": t0 + timedelta(seconds=dt)}
-                 for d, t, dt in docs],
-                schema=ts_schema,
-            ),
-            src / f"part{i}.parquet",
-        )
-
-    def sink():
-        return {
-            (r["doc_id"], r["band"]): r["match_id"]
-            for r in spark.table("adm_ettl_late").collect()
-        }
-
-    def wait_for(pred, timeout_s=240):
-        deadline = _time.time() + timeout_s
-        while _time.time() < deadline:
-            if pred():
-                return True
-            _time.sleep(1)
-        return False
-
-    # batch 0: the bucket opens at event T+100 (its NEWEST arrival)
-    write_batch(0, [(0, base, 100)])
-    raw = (
-        spark.readStream.schema(spark_ts_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-        .withWatermark("ts", "30 seconds")
-    )
-    bands = dd.minhash_band_rows_rowlocal(
-        raw, "doc_id", "text", num_hashes=16, bands=4,
-        rows_per_band=4, shingle_n=3, keep_cols=("ts",),
-    )
-    q = (
-        streaming_neardup_admission(bands, event_ttl_ms=60_000)
-        .writeStream.format("memory")
-        .queryName("adm_ettl_late")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        assert wait_for(lambda: 0 in {k[0] for k in sink()})
-
-        # batch 1: a LATE out-of-order duplicate at event T+80 — 20
-        # event-seconds behind the bucket's newest arrival, inside
-        # the 30 s watermark delay (wm = 70 after batch 0, so the row
-        # is not dropped). It rejects; the deadline must STAY at
-        # 100+60 = 160, not rewind to 80+60 = 140.
-        write_batch(1, [(5, base, 80)])
-        assert wait_for(lambda: 5 in {k[0] for k in sink()})
-        got = sink()
-        assert {got[k] for k in got if k[0] == 5} == {0}
-
-        # batch 2: an unrelated doc at T+175 advances the watermark
-        # to 145 — past the rewound deadline, inside the correct one.
-        # Give the engine a few timeout-check triggers: under
-        # batch-max anchoring the bucket would evict here.
-        write_batch(2, [(6, other, 175)])
-        assert wait_for(lambda: 6 in {k[0] for k in sink()})
-        _time.sleep(3)
-
-        # batch 3: a duplicate at event T+150 — inside the horizon
-        # anchored at the bucket's newest arrival (160 > wm 145).
-        # Running-max anchoring keeps the state row alive, so it
-        # REJECTS; the rewound deadline would have re-admitted it.
-        write_batch(3, [(7, base, 150)])
-        assert wait_for(lambda: 7 in {k[0] for k in sink()})
-        got = sink()
-        assert {got[k] for k in got if k[0] == 7} == {0}
-    finally:
-        q.stop()
-
-
-def test_admission_ttl_modes_mutually_exclusive(spark):
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        streaming_neardup_admission(
-            spark.range(1).select(
-                F.col("id").alias("doc_id"),
-                F.lit(0).alias("band"), F.lit("s").alias("sig"),
-            ),
-            ttl_ms=1000, event_ttl_ms=1000,
-        )

@@ -24,6 +24,9 @@ import struct
 
 import pytest
 
+from pyspark.sql import functions as F
+
+from training_datawarehouse_spark.operators import audiofp as afp
 from training_datawarehouse_spark.operators import phash as ph
 from training_datawarehouse_spark.operators import video as vi
 from training_datawarehouse_spark.operators.jpeg import encode_jpeg
@@ -43,6 +46,24 @@ FAR = ("completely unrelated content about sourdough hydration ratios "
        "and the maillard reaction temperature curve during the bake "
        "with steam injected for the first twenty minutes of oven time "
        "then vented to crisp the crust before the final cooling rack")
+
+
+def _video_signatures(docs):
+    """(id, frame, b0..b3) per-frame signatures from the fused crossing
+    the registry runs, exploded to frame grain the way
+    `plans/northstar.py` does it."""
+    fused = afp.fused_multimodal_signatures(
+        docs, "doc_id", "text", include_video=True)
+    return fused.select(
+        "id",
+        F.explode(F.array(*[
+            F.struct(F.lit(f).alias("frame"),
+                     *[F.col(f"vf{f}b{k}").alias(f"b{k}")
+                       for k in range(ph.N_BANDS)])
+            for f in range(vi.N_FRAMES)
+        ])).alias("s"),
+    ).select("id", "s.frame",
+             *[F.col(f"s.b{k}").alias(f"b{k}") for k in range(ph.N_BANDS)])
 
 
 def test_avi_dib_round_trip_pixel_identity():
@@ -141,7 +162,7 @@ def test_synthesize_avi_payload_and_meta(spark):
 def test_video_pair_matches_planted_near_dup(spark):
     docs = spark.createDataFrame(
         [(1, BASE), (2, NEAR), (3, FAR)], "doc_id long, text string")
-    sig = vi.video_phash_signatures(docs, "doc_id", "text")
+    sig = _video_signatures(docs)
     got = {(r["id_a"], r["id_b"]): r
            for r in vi.video_pair_matches(sig).collect()}
     assert (1, 2) in got
@@ -158,7 +179,7 @@ def test_video_offset_voting_finds_time_shifted_copy(spark):
     shifted = " ".join([toks[-1]] + toks[:-1])
     docs = spark.createDataFrame(
         [(1, BASE), (2, shifted), (3, FAR)], "doc_id long, text string")
-    sig = vi.video_phash_signatures(docs, "doc_id", "text")
+    sig = _video_signatures(docs)
     got = {(r["id_a"], r["id_b"]): r
            for r in vi.video_pair_matches(sig).collect()}
     assert (1, 2) in got
@@ -182,12 +203,14 @@ def test_phash_bands_batch_parity():
 
 
 def test_video_signatures_match_reference_loop(spark):
-    """The in-plan signatures equal a direct no-Spark reimplementation
-    (synthesize → encode → decode → hash, per frame)."""
+    """The fused crossing's ``vf{f}b{k}`` columns equal a direct
+    no-Spark reimplementation (synthesize → encode → decode → hash,
+    per frame)."""
     docs = spark.createDataFrame(
         [(7, BASE), (9, NEAR)], "doc_id long, text string")
     got = {(r["id"], r["frame"]): [r[f"b{k}"] for k in range(4)]
-           for r in vi.video_phash_signatures(docs, "doc_id", "text").collect()}
+           for r in _video_signatures(docs).collect()}
+    assert len(got) == 2 * vi.N_FRAMES
     for did, text in ((7, BASE), (9, NEAR)):
         dec = vi.decode_avi(vi.encode_avi(
             vi.frame_token_grids(text), ph.GRID, ph.GRID))
@@ -257,32 +280,13 @@ def test_foreign_avi_with_audio_stream_parses_video_correctly():
     assert dec["frames"] == frames
 
 
-def test_video_pair_matches_production_envelope(spark):
-    """r11: the 256-bit PRODUCTION envelope threads end-to-end through
-    the video path (32x32 frames -> AVI round trip -> 16-band
-    signatures -> scaled-threshold matching) and finds the planted
-    near-dup without false positives."""
-    p = ph.PRODUCTION_PARAMS
-    docs = spark.createDataFrame(
-        [(1, BASE), (2, NEAR), (3, FAR)], "doc_id long, text string")
-    sig = vi.video_phash_signatures(docs, "doc_id", "text", params=p)
-    assert sig.columns == ["id", "frame"] + p.band_cols
-    got = {(r["id_a"], r["id_b"]): r
-           for r in vi.video_pair_matches(
-               sig, max_hamming=ph.scaled_max_hamming(p),
-               params=p).collect()}
-    assert (1, 2) in got
-    assert got[(1, 2)]["n_match"] >= vi.DEFAULT_MIN_FRAMES
-    assert (1, 3) not in got and (2, 3) not in got
-
-
 def test_video_pair_matches_rejects_negative_ids(spark):
     """The composite-id precondition is enforced per-row, not just
     documented: a negative doc id raises instead of silently
     mis-grouping (Spark `div` truncates toward zero on negatives)."""
     docs = spark.createDataFrame(
         [(-1, BASE), (2, NEAR)], "doc_id long, text string")
-    sig = vi.video_phash_signatures(docs, "doc_id", "text")
+    sig = _video_signatures(docs)
     with pytest.raises(Exception, match="id must be >= 0"):
         vi.video_pair_matches(sig).collect()
 

@@ -22,6 +22,15 @@ created them, and every ``localCheckpoint`` gets a fresh RDD id), the
 higher-order-function lambda counters and temporary directories. The
 checkout's own path reads ``<repo>``, so checkouts in different
 directories diff empty too.
+
+Two entries keep a run-dependent plan after masking:
+``ns_split_train_val`` and ``op_agg_event_profile``. Each has several
+distinct aggregates, and Spark orders their ``Expand`` groups
+differently from run to run, so two dumps of the same code can differ
+by a column swap. To check that a change leaves every plan unchanged,
+dump the parent twice and the change once: each entry's plan from the
+change must equal that entry's plan in at least one of the two parent
+dumps. For every other entry the two parent dumps are identical.
 """
 from __future__ import annotations
 

@@ -19,8 +19,8 @@ from pyspark.sql import DataFrame
 
 #: Count of ``eager_checkpoint`` calls that fell back to the plain
 #: stats-inheriting checkpoint because the ``internalCreateDataFrame``
-#: seam was unavailable. Probes (tools/scale100x.py) and the regression
-#: test read this so the degradation is observable, never silent
+#: seam was unavailable. The regression test reads this so the
+#: degradation is observable, never silent
 #: (r13 verdict #7): on a Spark where the private seam moved, the
 #: BigInteger estimate-compounding this helper exists to prevent would
 #: otherwise return with no signal. Deliberately unsynchronized:
@@ -105,11 +105,11 @@ def eager_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
 
     What the stat-less leaf DOES change in static plans: joins
     against it no longer inherit the origin's small size estimate,
-    so without ``iterative_tuning`` the static planner defaults to
-    shuffle joins where it previously broadcast the checkpointed
-    frame; AQE converts back to broadcast at runtime from real
-    shuffle sizes (measured on the PageRank edge set:
-    BENCH_ATTRIBUTION.md r15 addendum, zero wall-clock movement). Falls back to the plain checkpoint if the
+    so the static planner defaults to shuffle joins where it
+    previously broadcast the checkpointed frame; AQE converts back to
+    broadcast at runtime from real shuffle sizes (measured on the
+    PageRank edge set: BENCH_ATTRIBUTION.md r15 addendum, zero
+    wall-clock movement). Falls back to the plain checkpoint if the
     internal API is unavailable (stats inheritance accepted, never a
     correctness issue) — warning once, counting in
     ``FALLBACK_COUNT`` (process-wide), and incrementing the failing

@@ -572,7 +572,7 @@ def resolve_near_duplicates(
 def minhash_band_rows_rowlocal(
     df: DataFrame, id_col: str, text_col: str,
     num_hashes: int = 16, bands: int = 4, rows_per_band: int = 4,
-    shingle_n: int = 3, keep_cols: tuple = (),
+    shingle_n: int = 3,
 ) -> DataFrame:
     """(id, band, sig) LSH band rows computed ENTIRELY ROW-LOCALLY on
     the engine-portable md5 family — no groupBy, no window, no shuffle
@@ -606,24 +606,9 @@ def minhash_band_rows_rowlocal(
     per-row fold when shingle rows already flow through an exchange).
 
     Docs with fewer than ``shingle_n`` tokens have no shingles and are
-    filtered out, exactly like the batch kernel.
-
-    ``keep_cols`` (r15) passes extra row-local columns through beside
-    (id, band, sig) — the event-time column an EventTimeTimeout
-    admission gate needs must survive the kernel so the watermark can
-    propagate into the stateful operator. Kept names may not collide
-    with the kernel's own output/internal columns (``band``, ``sig``,
-    the ``__tk``/``bs`` internals, or ``id_col``): a silent duplicate
-    column would poison every downstream selection, so that is a
-    ``ValueError`` (r16, r15 ADVICE)."""
+    filtered out, exactly like the batch kernel."""
     if num_hashes != bands * rows_per_band:
         raise ValueError("num_hashes must equal bands * rows_per_band")
-    reserved = {"band", "sig", "__tk", "bs", id_col} & set(keep_cols)
-    if reserved:
-        raise ValueError(
-            f"keep_cols may not contain {sorted(reserved)}: these "
-            "collide with the kernel's output/internal columns "
-            f"('band', 'sig', '__tk', 'bs') or id_col={id_col!r}")
     p = _LSH_P
     coeffs = lsh_hash_coeffs(num_hashes)
     arr_a = "array(" + ",".join(str(a) for a, _ in coeffs) + ")"
@@ -660,37 +645,13 @@ def minhash_band_rows_rowlocal(
         f"'band', CAST(b AS INT), "
         f"'sig', concat_ws('|', {sig_parts}))))))"
     )
-    keep = [F.col(c) for c in keep_cols]
     return (
-        df.select(F.col(id_col), *keep,
-                  F.split(F.col(text_col), " ").alias("__tk"))
+        df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("__tk"))
         .filter(F.size("__tk") >= shingle_n)
-        .select(F.col(id_col), *keep, F.expr(banded).alias("bs"))
-        .select(id_col, *keep_cols, F.col("bs.band").alias("band"),
+        .select(F.col(id_col), F.expr(banded).alias("bs"))
+        .select(id_col, F.col("bs.band").alias("band"),
                 F.col("bs.sig").alias("sig"))
     )
-
-
-def lsh_band_index(
-    df: DataFrame, id_col: str, text_col: str,
-    num_hashes: int = 32, bands: int = 8, rows_per_band: int = 4,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """(id, band, sig) rows — the persistable LSH index of a corpus.
-
-    Rows are the band signatures of ``lsh_candidate_pairs_portable`` (same
-    md5 family, same groupBy kernel): ``bands`` rows per document, each
-    an int band, a string of ``rows_per_band`` minima and the id —
-    fixed size per document, so at 100 TB of text the index is orders
-    of magnitude smaller than its corpus and cheap to keep hot.
-    """
-    per_doc = hashed_shingles_portable(
-        df, id_col, text_col, shingle_n
-    ).groupBy(id_col).agg(*_portable_min_exprs(num_hashes))
-    return per_doc.select(
-        F.col(id_col).alias("id"),
-        F.explode(_band_structs(bands, rows_per_band)).alias("bs"),
-    ).select("id", F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
 
 
 def dup_span_coverage(
@@ -1011,99 +972,4 @@ def bloom_probe_lit(
                 ),
             )
         ).cast("long").alias("n_bloom_hits"),
-    )
-
-
-def connected_components_incremental(
-    old_components: DataFrame,
-    new_edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 60,
-    validate: bool = True,
-) -> DataFrame:
-    """Incremental connected-components maintenance (r12 — the dedup-
-    cluster member of the incremental suite next to `nnd_insert` and
-    the PageRank warm start): fold a batch of
-    NEW edges into an existing labeling without re-running CC over the
-    corpus.
-
-    Method: relabel each new edge's endpoints by their OLD component
-    label (an endpoint never seen before labels itself), keep only the
-    BRIDGE edges (endpoints in different old components), run the
-    batch ``connected_components`` on that CONTRACTED graph — one node
-    per touched component, so its size is bounded by the ingest batch,
-    not the corpus — and remap. Labels are min node ids, which are
-    hierarchical (the min over merged labels IS the min over merged
-    node sets), so the result is IDENTICAL to a full rebuild over
-    old ∪ new edges — pytest-pinned, not assumed.
-
-    Returns (node, component) covering every previously-labeled node
-    plus every endpoint of ``new_edges``. Scale shape: two broadcast-
-    able hash joins against the old labeling (at 100 TB the labeling
-    is a bucketed table and these are co-located joins), one CC on the
-    bridge contraction, one remap join. A daily ingest pays for its
-    batch; only cluster-merging edges cost iteration.
-
-    ``validate`` (default True) runs the min-node-id contract check
-    below, which is an EAGER action (one batch-sized join per call) —
-    a hot ingest loop that already trusts its labeling provenance can
-    pass ``validate=False`` to keep this operator purely
-    plan-building (r13 ADVICE). The check is NECESSARY BUT NOT
-    SUFFICIENT either way: a foreign labeling whose labels all happen
-    to be ≤ the touched node ids passes undetected — it catches the
-    likely accident (labels from a different scheme or a different
-    corpus), not an adversarially-crafted one."""
-    oc = old_components.select(
-        F.col("node").alias("__on"), F.col("component").alias("__oc")
-    )
-    e = new_edges.select(F.col(src).alias("__ea"), F.col(dst).alias("__eb"))
-    # Contract check (r12 advice): correctness REQUIRES min-node-id
-    # (hierarchical) labels, as connected_components produces — any
-    # other labeling scheme would silently merge wrong. Validate the
-    # TOUCHED slice only (batch-sized — the same endpoints⋈labeling
-    # join the fold performs anyway; a full-labeling scan per ingest
-    # would not be "cheap" at corpus scale): a min-id label is never
-    # greater than its member's node id.
-    if validate:
-        bad = (
-            e.select(F.col("__ea").alias("__on"))
-            .union(e.select(F.col("__eb").alias("__on")))
-            .distinct()
-            .join(oc, "__on")
-            .filter(F.col("__oc") > F.col("__on"))
-        )
-        if not bad.isEmpty():
-            raise ValueError(
-                "old_components is not a min-node-id labeling (found a "
-                "component label greater than a member node id on the "
-                "batch's touched slice); connected_components_incremental "
-                "requires labels produced by connected_components")
-    relabeled = (
-        e.join(oc.withColumnRenamed("__on", "__ea"), "__ea", "left")
-        .select(
-            F.coalesce("__oc", F.col("__ea")).alias("__ca"), "__eb"
-        )
-        .join(oc.withColumnRenamed("__on", "__eb"), "__eb", "left")
-        .select("__ca", F.coalesce("__oc", F.col("__eb")).alias("__cb"))
-    )
-    bridges = relabeled.filter(F.col("__ca") != F.col("__cb"))
-    new_nodes = (
-        e.select(F.col("__ea").alias("__on"))
-        .union(e.select(F.col("__eb").alias("__on")))
-        .distinct()
-        .join(oc, "__on", "left_anti")
-        .select("__on", F.col("__on").alias("__oc"))
-    )
-    mapping = oc.unionByName(new_nodes)
-    if bridges.isEmpty():
-        return mapping.select(
-            F.col("__on").alias("node"), F.col("__oc").alias("component")
-        )
-    merged = connected_components(bridges, "__ca", "__cb", max_iter).select(
-        F.col("node").alias("__oc"), F.col("component").alias("__mc")
-    )
-    return mapping.join(merged, "__oc", "left").select(
-        F.col("__on").alias("node"),
-        F.coalesce("__mc", F.col("__oc")).alias("component"),
     )

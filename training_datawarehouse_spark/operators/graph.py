@@ -41,9 +41,8 @@ leaves — iteration t+1 reads t twice, contrib + dangling, so
 origin-stats inheritance would compound size estimates per
 generation; r13 verdict #5) and each superseded generation's blocks
 are released, so peak storage is O(1) generations. On a real
-cluster, checkpoint to reliable storage, pre-partition ``edges`` by
-``src`` so the rank join is co-located, and apply
-``session.iterative_tuning`` at high iteration counts.
+cluster, checkpoint to reliable storage and pre-partition ``edges``
+by ``src`` so the rank join is co-located.
 """
 
 from __future__ import annotations
@@ -65,36 +64,12 @@ def pagerank_fixed(
     iterations: int = 5,
     damping_pct: int = 85,
     scale: int = PR_SCALE,
-    init_ranks: DataFrame | None = None,
-    renormalize_init: bool = False,
 ) -> DataFrame:
     """Fixed-point PageRank over ``nodes`` (one row per node) and
     ``edges`` (src, dst). Self-loops and duplicate edges are removed;
     edges pointing outside ``nodes`` are dropped. Returns one row per
     node: (node_col, pr_rank BIGINT in 1/scale units, pr_out_deg,
-    pr_in_deg). Bit-deterministic under any partitioning.
-
-    ``init_ranks`` (node_col, pr_rank) WARM-STARTS the iteration from
-    a previous run's output — the incremental-maintenance path when
-    the graph grows: nodes present in ``init_ranks`` keep their old
-    rank, new nodes start at the uniform ``scale // N``. No mass
-    rescaling is applied (the recurrence pulls total mass toward
-    ``scale`` geometrically: after k iterations the init-mass error
-    shrinks by d^k, so a slightly-over-mass warm start self-corrects).
-    By construction ``pagerank(init=pagerank(G, a), b) ==
-    pagerank(G, a+b)`` bit-for-bit on an unchanged graph — the
-    equivalence the warm-start test pins.
-
-    ``renormalize_init`` rescales the warm-start vector so its total
-    mass is exactly ``scale`` (exact DECIMAL(38,0) integer math, still
-    bit-deterministic). Measured at the 100× probe: after 10 % node
-    growth the RAW warm start's error is almost entirely the
-    systematic mass excess (old ranks sum to ~1.1·scale at the new N;
-    L1-to-converged tracked 0.09·d^k to three decimals), so
-    renormalizing removes the bias up front and leaves only the local
-    perturbation from the new edges. Off by default because it breaks
-    the continued-iteration bit-equivalence above (it rescales even a
-    perfect input by its floor-leak deficit)."""
+    pr_in_deg). Bit-deterministic under any partitioning."""
     if not 0 < damping_pct < 100:
         raise ValueError("damping_pct must be in (0, 100)")
     n = nodes.select(F.col(node_col).alias("__n")).distinct()
@@ -119,32 +94,9 @@ def pagerank_fixed(
     # t+1 reads ranks_t twice (contrib + dangling) — without the break
     # each use re-derives the whole upstream chain (2^K plan blowup)
     uniform = F.expr(f"CAST({scale} AS BIGINT) DIV __nodecnt")
-    if init_ranks is None:
-        ranks = eager_checkpoint(base.select(
-            "__n", "__nodecnt", uniform.alias("__r")
-        ))
-    else:
-        iv = init_ranks.select(
-            F.col(node_col).alias("__n"),
-            F.col("pr_rank").cast("long").alias("__prev"),
-        )
-        warm = base.join(iv, "__n", "left").select(
-            "__n", "__nodecnt",
-            F.coalesce("__prev", uniform).alias("__r"),
-        )
-        if renormalize_init:
-            tot = (
-                warm.select(F.col("__r").alias("__ri"))
-                .agg(F.sum("__ri").cast("long").alias("__tot"))
-            )
-            warm = warm.crossJoin(F.broadcast(tot)).select(
-                "__n", "__nodecnt",
-                F.expr(
-                    f"CAST((CAST(__r AS DECIMAL(38,0)) * {scale})"
-                    f" DIV __tot AS BIGINT)"
-                ).alias("__r"),
-            )
-        ranks = eager_checkpoint(warm)
+    ranks = eager_checkpoint(base.select(
+        "__n", "__nodecnt", uniform.alias("__r")
+    ))
     for _ in range(iterations):
         ranked_edges = e.join(
             ranks.select(F.col("__n").alias("__s"), "__r"), "__s"

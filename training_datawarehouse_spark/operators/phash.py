@@ -46,7 +46,6 @@ from __future__ import annotations
 import functools
 import hashlib
 import math
-from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
@@ -82,66 +81,8 @@ N_BITS = DCT_N * DCT_N    # 64-bit fingerprint
 BAND_BITS = 16
 N_BANDS = N_BITS // BAND_BITS
 PIXEL_GAIN = 16           # pixel = min(255, PIXEL_GAIN * token count)
+BAND_COLS = [f"b{k}" for k in range(N_BANDS)]  # signature column names
 
-
-class PhashParams(NamedTuple):
-    """Perceptual-hash geometry. The bench/oracle default is the
-    64-bit envelope (8x8 DCT, 4x16-bit bands); ``PRODUCTION_PARAMS``
-    is the >=10^6-items-per-modality envelope: 256-bit hash (radius-15
-    pigeonhole guarantee at 16 bands) WITH the scatter partition.
-    NB the r10 prescription ("a wider hash re-sparsifies the
-    buckets") was MEASURED in r11 and refuted: at 2 M frame
-    signatures the 256-bit raster-order envelope read 18.6 % over-cap
-    doc-weight band rows vs 64-bit's 16.6 % — occupancy concentration
-    is DCT sign structure + repeated-content weight, not hash-space
-    saturation, so width alone cannot fix it; the scatter partition
-    (``bit_scatter``) is what does (SCALE.md r11 table). Fixed-point
-    bound: |F| <= 255*4 * dct_n^2 * DCT_SCALE^2 = 2.7e14 at dct_n=16
-    — inside int64."""
-    grid: int = GRID            # synthesized raster side
-    dct_n: int = DCT_N          # DCT block side (grid == 2*dct_n)
-    band_bits: int = BAND_BITS
-    pixel_gain: int = PIXEL_GAIN
-    #: assign fingerprint bits to bands via a FIXED md5-derived
-    #: permutation instead of DCT raster order. Any disjoint partition
-    #: of the bits preserves the banding guarantees (total Hamming is
-    #: permutation-invariant; ham < n_bands still pigeonholes a clean
-    #: band) — but DCT sign structure makes raster-order band keys
-    #: collide heavily (alternating patterns like 0x5555 dominate),
-    #: and scattering correlated bits across bands re-sparsifies the
-    #: buckets. Measured at 2 M frame signatures (SCALE.md r11):
-    #: rep-grain over-cap band rows 2.24 % -> 0.66 %.
-    bit_scatter: bool = False
-
-    @property
-    def n_bits(self) -> int:
-        return self.dct_n * self.dct_n
-
-    @property
-    def n_bands(self) -> int:
-        return self.n_bits // self.band_bits
-
-    @property
-    def band_cols(self) -> list[str]:
-        return [f"b{k}" for k in range(self.n_bands)]
-
-    def bit_order(self) -> list[int]:
-        """Bit index consumed by packed position i. Identity in
-        raster order; under ``bit_scatter`` the fixed md5-derived
-        permutation (deterministic — no RNG, same everywhere)."""
-        if not self.bit_scatter:
-            return list(range(self.n_bits))
-        return sorted(
-            range(self.n_bits),
-            key=lambda i: (
-                hashlib.md5(f"phash-bit-{i}".encode()).hexdigest(), i),
-        )
-
-
-DEFAULT_PARAMS = PhashParams()
-#: 32x32 raster -> 16x16 DCT -> 256-bit hash -> 16 x 16-bit bands,
-#: scatter-partitioned into bands (see ``bit_scatter``)
-PRODUCTION_PARAMS = PhashParams(grid=32, dct_n=16, bit_scatter=True)
 # Calibrated on the synthetic corpus (sf0.001, full pairwise Hamming
 # histogram over banded candidates): true text near-dups land at <= 6
 # bits, while vocabulary-overlap-only pairs form a continuum from ~8
@@ -160,49 +101,27 @@ DEFAULT_MAX_HAMMING = 6
 DEFAULT_MAX_BUCKET = 512
 
 
-def scaled_max_hamming(params: PhashParams) -> int:
-    """The calibrated 64-bit threshold scaled proportionally to the
-    envelope's bit width (6/64 -> 24/256): the bit-error RATE of a
-    near-dup is geometry-independent, the absolute distance is not.
-    Measured on the calibration corpus: the BASE/NEAR planted pair
-    reads 4/64 and 18/256; the unrelated pair 16/64 and 68/256 — the
-    proportional threshold separates both envelopes identically."""
-    return _scaled_max_hamming_bits(params.n_bits)
-
-
-def _scaled_max_hamming_bits(n_bits: int) -> int:
-    """Single source of the default-threshold scaling for EVERY
-    banding entry point. `phash_candidate_pairs` used to scale by band
-    COUNT (n_bands/N_BANDS) while
-    `scaled_max_hamming` (the video path) scales by bit WIDTH
-    (n_bits/N_BITS); the two agree only while band_bits == 16, so a
-    PhashParams with a different band width silently applied
-    inconsistent thresholds between the image and video paths for the
-    same geometry (r11 advice). Both now scale by total bit width."""
-    return DEFAULT_MAX_HAMMING * n_bits // N_BITS
-
-
-def dct_basis_int(dct_n: int = DCT_N) -> list[list[int]]:
-    """The integerized dct_n x dct_n DCT-II basis C[u][x] =
-    round(cos((2x+1)·u·pi/(2·dct_n)) · 1024). Single source of truth:
+def dct_basis_int() -> list[list[int]]:
+    """The integerized 8x8 DCT-II basis C[u][x] =
+    round(cos((2x+1)·u·pi/16) · 1024). Single source of truth:
     the Spark-side numpy DCT and the generated oracle SQL both read
     THIS table, so the two engines cannot disagree on the basis."""
     return [
-        [round(math.cos((2 * x + 1) * u * math.pi / (2 * dct_n)) * DCT_SCALE)
-         for x in range(dct_n)]
-        for u in range(dct_n)
+        [round(math.cos((2 * x + 1) * u * math.pi / (2 * DCT_N)) * DCT_SCALE)
+         for x in range(DCT_N)]
+        for u in range(DCT_N)
     ]
 
 
 @functools.lru_cache(maxsize=1 << 16)
-def _token_cell(tok: str, ncells: int = GRID * GRID) -> int:
+def _token_cell(tok: str) -> int:
     """Grid cell for one token (md5 once per distinct token per
     executor — corpus tokens repeat heavily)."""
     h = int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:15], 16)
-    return h % ncells
+    return h % (GRID * GRID)
 
 
-def token_grid_pixels(text: str, params: PhashParams = DEFAULT_PARAMS) -> bytes:
+def token_grid_pixels(text: str) -> bytes:
     """grid x grid grayscale token-histogram image for one document:
     token -> cell ``int(md5(token)[:15 hex], 16) % grid²`` (the
     engine-portable md5-prefix integer convention of
@@ -210,24 +129,22 @@ def token_grid_pixels(text: str, params: PhashParams = DEFAULT_PARAMS) -> bytes:
     `('0x' || substr(md5(t),1,15))::BIGINT` in the oracle), pixel =
     min(255, gain·count). Tokenization is a bare split on ' ' to match
     DuckDB's ``string_split(text, ' ')``."""
-    ncells = params.grid * params.grid
+    ncells = GRID * GRID
     cells = np.fromiter(
-        (_token_cell(tok, ncells) for tok in text.split(" ")),
+        (_token_cell(tok) for tok in text.split(" ")),
         dtype=np.int64,
     )
     counts = np.bincount(cells, minlength=ncells)
     # min(255, gain·count) — exact integers, so the vectorized form is
     # bit-identical to the former per-cell Python loop (r16: the loop
     # was ~9 % of the fused-crossing CPU at 5 k docs)
-    return np.minimum(255, params.pixel_gain * counts).astype(np.uint8).tobytes()
+    return np.minimum(255, PIXEL_GAIN * counts).astype(np.uint8).tobytes()
 
 
-def phash_bands(
-    pixels: bytes, params: PhashParams = DEFAULT_PARAMS
-) -> list[int]:
-    """n_bits-bit pHash of a grid x grid grayscale raster, returned as
-    n_bands x band_bits band integers (band k holds bits
-    [k·bb, (k+1)·bb), LSB-first within the band). Exact integer math
+def phash_bands(pixels: bytes) -> list[int]:
+    """64-bit pHash of a 16x16 grayscale raster, returned as
+    4 x 16-bit band integers (band k holds bits [16k, 16(k+1)),
+    LSB-first within the band). Exact integer math
     throughout:
 
     - 2x2 block SUM (not mean — no division, stays int) -> 8x8,
@@ -237,51 +154,45 @@ def phash_bands(
       — the lower median, chosen over the averaged median so it is a
       k-th order statistic both engines compute identically on ints.
     """
-    g, n = params.grid, params.dct_n
-    img = np.frombuffer(pixels, dtype=np.uint8).reshape(g, g)
+    n = DCT_N
+    img = np.frombuffer(pixels, dtype=np.uint8).reshape(GRID, GRID)
     s = img.reshape(n, 2, n, 2).sum(axis=(1, 3)).astype(np.int64)
-    c = np.array(dct_basis_int(n), dtype=np.int64)
+    c = np.array(dct_basis_int(), dtype=np.int64)
     f = (c @ s @ c.T).reshape(-1)          # f[u*n+v], row u = y-freq
-    med = np.sort(f)[params.n_bits // 2 - 1]   # lower median
+    med = np.sort(f)[N_BITS // 2 - 1]      # lower median
     bits = f > med
-    order = params.bit_order()
     bands = []
-    for k in range(params.n_bands):
+    for k in range(N_BANDS):
         val = 0
-        for j in range(params.band_bits):
-            if bits[order[k * params.band_bits + j]]:
+        for j in range(BAND_BITS):
+            if bits[k * BAND_BITS + j]:
                 val |= 1 << j
         bands.append(val)
     return bands
 
 
-def phash_bands_batch(
-    rasters: np.ndarray, params: PhashParams = DEFAULT_PARAMS
-) -> np.ndarray:
+def phash_bands_batch(rasters: np.ndarray) -> np.ndarray:
     """Vectorized `phash_bands` over a BATCH of rasters: (n, grid²)
-    uint8 -> (n, n_bands) int64 band values, one stacked einsum
+    uint8 -> (n, 4) int64 band values, one stacked einsum
     instead of n small matmuls and n·n_bits Python bit-shifts.
     Bit-identical to the scalar path (same integer math;
     parity-tested) — the batch form exists because per-frame video
     hashing multiplies the call count by n_frames."""
-    g, dn = params.grid, params.dct_n
+    dn = DCT_N
     imgs = np.ascontiguousarray(rasters, dtype=np.int64)
-    imgs = imgs.reshape(-1, g, g)
+    imgs = imgs.reshape(-1, GRID, GRID)
     s = imgs.reshape(-1, dn, 2, dn, 2).sum(axis=(2, 4))
-    c = np.array(dct_basis_int(dn), dtype=np.int64)
-    f = np.einsum("ur,nrc,vc->nuv", c, s, c).reshape(
-        len(imgs), params.n_bits)
-    med = np.sort(f, axis=1)[:, params.n_bits // 2 - 1]
-    bits = (f > med[:, None])[:, params.bit_order()]
-    weights = 1 << np.arange(params.band_bits, dtype=np.int64)
-    return (bits.reshape(-1, params.n_bands, params.band_bits)
-            * weights).sum(axis=2)
+    c = np.array(dct_basis_int(), dtype=np.int64)
+    f = np.einsum("ur,nrc,vc->nuv", c, s, c).reshape(len(imgs), N_BITS)
+    med = np.sort(f, axis=1)[:, N_BITS // 2 - 1]
+    bits = f > med[:, None]
+    weights = 1 << np.arange(BAND_BITS, dtype=np.int64)
+    return (bits.reshape(-1, N_BANDS, BAND_BITS) * weights).sum(axis=2)
 
 
 def image_phash_signatures(df: DataFrame, id_col: str, text_col: str,
-                           parallelism: int | None = None,
-                           params: PhashParams = DEFAULT_PARAMS) -> DataFrame:
-    """(id, b0..b{n_bands-1}) pHash signatures: synthesize the
+                           parallelism: int | None = None) -> DataFrame:
+    """(id, b0..b3) pHash signatures: synthesize the
     token-grid image,
     round-trip it through the REAL PNG codec (encode with a per-row
     scanline filter so all five filter paths run, then full decode —
@@ -291,31 +202,27 @@ def image_phash_signatures(df: DataFrame, id_col: str, text_col: str,
     repartition width (see `functions.crossing.map_batches`)."""
     schema = T.StructType(
         [T.StructField("id", T.LongType())]
-        + [T.StructField(c, T.IntegerType()) for c in params.band_cols]
+        + [T.StructField(c, T.IntegerType()) for c in BAND_COLS]
     )
 
     def gen(ids: list, texts: list) -> list:
         rasters = []
         for text in texts:
-            pix = token_grid_pixels(text, params)
-            png = encode_png(params.grid, params.grid, pix,
-                             filter_type=len(text) % 5)
+            pix = token_grid_pixels(text)
+            png = encode_png(GRID, GRID, pix, filter_type=len(text) % 5)
             rasters.append(decode_png(png)["pixels"])
         # r16: one stacked einsum hashes the whole Arrow batch
         # (phash_bands_batch is parity-tested bit-identical)
         bands = phash_bands_batch(
-            np.frombuffer(b"".join(rasters), dtype=np.uint8), params)
+            np.frombuffer(b"".join(rasters), dtype=np.uint8))
         return [[did, *bands[j]] for j, did in enumerate(ids)]
 
     return map_batches(df, [id_col, text_col], schema, gen, parallelism)
 
 
 def phash_candidate_pairs(
-    sig: DataFrame, max_hamming: int | None = None,
+    sig: DataFrame, max_hamming: int = DEFAULT_MAX_HAMMING,
     max_bucket: int = DEFAULT_MAX_BUCKET,
-    n_bands: int = N_BANDS,
-    band_bits: int = BAND_BITS,
-    cap_grain: str = "doc",
     materialize: bool = False,
 ) -> DataFrame:
     """Hamming-banded near-dup pairs from (id, b0..b3) signatures.
@@ -357,39 +264,11 @@ def phash_candidate_pairs(
     test pins the behavior on this corpus). Scale sizing: 16-bit band
     keys give 65 536 buckets per band; occupancy grows with DISTINCT
     hashes, and the 100x probe measured 20 % of doc-grain band rows
-    in over-cap buckets at 500 k docs. The production scale-up
-    (r11, MEASURED — the r10 "wider hash" hypothesis was refuted at
-    2 M signatures): keep the banding plan, scatter-partition the
-    bits into bands (``PhashParams.bit_scatter`` — rep-grain over-cap
-    2.24 % -> 0.66 %), widen to 256-bit for the radius-15 guarantee,
-    and let the doc-weight cap keep suppressing identical-fingerprint
-    mega-groups (they are exact dups; their quadratic doc expansion
-    is the thing the cap exists to prevent). The banding/verify shape
-    here is band-count-generic (see SCALE.md r9/r11)."""
-    if max_hamming is None:
-        # scale the calibrated 64-bit threshold to this geometry's
-        # total BIT WIDTH (shared with scaled_max_hamming / the video
-        # path): a fixed 6 against a 256-bit envelope would silently
-        # drop true near-dups (measured 18/256 for the planted pair)
-        max_hamming = _scaled_max_hamming_bits(n_bands * band_bits)
-    if cap_grain not in ("doc", "rep"):
-        raise ValueError(f"cap_grain must be 'doc' or 'rep', got {cap_grain!r}")
-    # cap_grain (r12 — the r11 probe's residual finding): the r11
-    # measurement attributed the remaining 8.4 % doc-weight over-cap
-    # band rows (PRODUCTION_PARAMS, 2 M frame signatures) to
-    # identical-fingerprint MEGA-GROUPS — exact dups whose member
-    # count, not hash-space crowding, blows the doc-weight cap and
-    # takes their whole buckets (including their DISTINCT near-dup
-    # neighbors) out of the candidate set. 'rep' caps buckets by
-    # DISTINCT-fingerprint count instead — the bucket stays usable for
-    # the neighbors — and moves the quadratic-expansion guard to where
-    # the quadratic actually lives: groups larger than ``max_bucket``
-    # skip their OWN C(g,2)/cross doc expansion (they are exact dups;
-    # production resolves them through the exact-collapse membership,
-    # min-id rep, not through pair enumeration). 'doc' remains the
-    # registry/oracle default.
-    hash_cols = [f"b{k}" for k in range(n_bands)]
-    groups = sig.groupBy(*hash_cols).agg(
+    in over-cap buckets at 500 k docs (SCALE.md r9). The doc-weight
+    cap suppresses identical-fingerprint mega-groups: they are exact
+    dups, and their quadratic doc expansion is the thing the cap
+    exists to prevent."""
+    groups = sig.groupBy(*BAND_COLS).agg(
         F.min("id").alias("gid"),
         F.array_sort(F.collect_list("id")).alias("ids"),
         F.count(F.lit(1)).alias("gn"),
@@ -405,22 +284,19 @@ def phash_candidate_pairs(
 
     band_structs = F.array(*[
         F.struct(F.lit(k).alias("band"), F.col(f"b{k}").alias("val"))
-        for k in range(n_bands)
+        for k in range(N_BANDS)
     ])
     banded = groups.select(
         "gid", "gn", F.explode(band_structs).alias("bs")
     ).select("gid", "gn", F.col("bs.band"), F.col("bs.val"))
 
-    # bucket weight: documents in the bucket ('doc', oracle cap
-    # parity) or distinct fingerprints ('rep', production); self-pair
-    # eligibility = any under-cap bucket containing the group, which
-    # the a <= b expansion below covers with gn > 1
-    weight = (F.sum("gn") if cap_grain == "doc"
-              else F.count(F.lit(1)).cast("long"))
+    # bucket weight: documents in the bucket (the oracle's cap);
+    # self-pair eligibility = any under-cap bucket containing the
+    # group, which the a <= b expansion below covers with gn > 1
     rep_pairs = (
         banded.groupBy("band", "val")
         .agg(F.array_sort(F.collect_list("gid")).alias("gids"),
-             weight.alias("w"))
+             F.sum("gn").alias("w"))
         .filter(F.col("w") <= max_bucket)
         .select(F.explode(_self_incl_pairs_expr("gids")).alias("p"))
         .select(F.col("p.id_a").alias("ga"), F.col("p.id_b").alias("gb"))
@@ -429,13 +305,13 @@ def phash_candidate_pairs(
 
     ra = groups.select(F.col("gid").alias("ga"),
                        F.col("ids").alias("ids_a"), F.col("gn").alias("gn_a"),
-                       *[F.col(f"b{k}").alias(f"a{k}") for k in range(n_bands)])
+                       *[F.col(f"b{k}").alias(f"a{k}") for k in range(N_BANDS)])
     rb = groups.select(F.col("gid").alias("gb"),
                        F.col("ids").alias("ids_b"),
-                       *[F.col(f"b{k}").alias(f"c{k}") for k in range(n_bands)])
+                       *[F.col(f"b{k}").alias(f"c{k}") for k in range(N_BANDS)])
     ham = sum(
         F.bit_count(F.col(f"a{k}").bitwiseXOR(F.col(f"c{k}")))
-        for k in range(n_bands)
+        for k in range(N_BANDS)
     )
     # NO forced broadcast of rep_pairs (r10 fix): its size is
     # data-dependent (candidate-grain — the r9 image probe measured
@@ -452,22 +328,6 @@ def phash_candidate_pairs(
         .filter((F.col("ga") != F.col("gb")) | (F.col("gn_a") > 1))
     )
 
-    ids_a_exp, ids_b_exp = F.col("ids_a"), F.col("ids_b")
-    if cap_grain == "rep":
-        # group-size guard: an over-cap IDENTICAL-fingerprint group
-        # never enumerates its quadratic doc expansion — its members
-        # resolve through the exact-collapse membership (gid = min id)
-        # and only its REP pairs with distinct near-dup neighbors;
-        # the self-pair (within) of such a group is dropped entirely
-        # (all Hamming-0 — membership already encodes it)
-        verified = verified.filter(
-            (F.col("ga") != F.col("gb"))
-            | (F.col("gn_a") <= max_bucket)
-        )
-        ids_a_exp = F.when(F.col("gn_a") <= max_bucket,
-                           F.col("ids_a")).otherwise(F.array("ga"))
-        ids_b_exp = F.when(F.size("ids_b") <= max_bucket,
-                           F.col("ids_b")).otherwise(F.array("gb"))
     # r16: the within-group and across-group doc expansions are ONE
     # conditional pair-array explode instead of a two-branch union —
     # the union's branches each statically re-derived the whole
@@ -480,9 +340,9 @@ def phash_candidate_pairs(
         F.col("ga") == F.col("gb"), _pairs_expr("ids_a")
     ).otherwise(
         F.flatten(F.transform(
-            ids_a_exp,
+            F.col("ids_a"),
             lambda x: F.transform(
-                ids_b_exp,
+                F.col("ids_b"),
                 lambda y: F.struct(
                     F.least(x, y).alias("id_a"),
                     F.greatest(x, y).alias("id_b"),

@@ -61,7 +61,7 @@ import hashlib
 import struct
 
 import numpy as np
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.caching import release_local_checkpoint
 from ..functions.crossing import map_batches
@@ -306,76 +306,34 @@ def decode_avi(data: bytes) -> dict:
 
 # ------------------------------------------------- synthesis + hash
 
-def frame_token_grids(text: str, n_frames: int = N_FRAMES,
-                      params: ph.PhashParams = ph.DEFAULT_PARAMS,
-                      ) -> list[bytes]:
+def frame_token_grids(text: str, n_frames: int = N_FRAMES) -> list[bytes]:
     """Per-frame grid×grid token-histogram rasters: token i (0-based,
     bare split on ' ' to match DuckDB `string_split`) lands in frame
     ``i % n_frames``, cell ``md5-prefix(token) % grid²``, pixel
     ``min(255, gain·count)`` — `phash.token_grid_pixels` per frame
     subset, so the oracle re-derives every pixel in SQL."""
-    ncells = params.grid * params.grid
+    ncells = ph.GRID * ph.GRID
     toks = text.split(" ")
     # composite (frame, cell) index -> one bincount for every frame;
     # min(255, gain·count) over exact ints is bit-identical to the
     # former per-cell Python loop (r16: that loop + its genexprs were
     # ~1/3 of the fused-crossing CPU at 5 k docs)
     idx = np.fromiter(
-        ((i % n_frames) * ncells + ph._token_cell(tok, ncells)
+        ((i % n_frames) * ncells + ph._token_cell(tok)
          for i, tok in enumerate(toks)),
         dtype=np.int64, count=len(toks),
     )
     counts = np.bincount(idx, minlength=n_frames * ncells)
-    pix = np.minimum(255, params.pixel_gain * counts).astype(np.uint8)
+    pix = np.minimum(255, ph.PIXEL_GAIN * counts).astype(np.uint8)
     return [pix[f * ncells:(f + 1) * ncells].tobytes()
             for f in range(n_frames)]
 
 
-def video_phash_signatures(df: DataFrame, id_col: str, text_col: str,
-                           n_frames: int = N_FRAMES,
-                           parallelism: int | None = None,
-                           params: ph.PhashParams = ph.DEFAULT_PARAMS,
-                           ) -> DataFrame:
-    """(id, frame, b0..b{n_bands-1}) per-frame pHash signatures:
-    synthesize the frame rasters, round-trip them through the REAL
-    AVI/DIB container codec (lossless => pixel-identity, pinned by
-    pytest), and pHash each DECODED frame. One ``map_batches``
-    crossing, row-local; ``parallelism`` is the crossing's repartition
-    width (see `functions.crossing.map_batches`); ``params`` selects
-    the hash envelope (64-bit bench default vs the 256-bit
-    `phash.PRODUCTION_PARAMS`)."""
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()),
-         T.StructField("frame", T.IntegerType())]
-        + [T.StructField(c, T.IntegerType()) for c in params.band_cols]
-    )
-
-    def gen(ids: list, texts: list) -> list:
-        rasters = []
-        for text in texts:
-            avi = encode_avi(
-                frame_token_grids(text, n_frames, params),
-                params.grid, params.grid)
-            rasters.extend(decode_avi(avi)["frames"])
-        # one stacked einsum hashes EVERY frame in the Arrow batch
-        bands = ph.phash_bands_batch(
-            np.frombuffer(b"".join(rasters), dtype=np.uint8), params)
-        return [
-            [did, fno, *bands[j * n_frames + fno]]
-            for j, did in enumerate(ids)
-            for fno in range(n_frames)
-        ]
-
-    return map_batches(df, [id_col, text_col], schema, gen, parallelism)
-
-
 def video_pair_matches(
     sig: DataFrame, n_frames: int = N_FRAMES,
-    max_hamming: int | None = None,
+    max_hamming: int = ph.DEFAULT_MAX_HAMMING,
     max_bucket: int = ph.DEFAULT_MAX_BUCKET,
     min_frames: int = DEFAULT_MIN_FRAMES,
-    params: ph.PhashParams = ph.DEFAULT_PARAMS,
-    cap_grain: str = "doc",
     materialize: bool = False,
 ) -> DataFrame:
     """Video-grain near-dup pairs from (id, frame, b0..b3) signatures:
@@ -398,21 +356,7 @@ def video_pair_matches(
     (id, frame); negative ids would silently mis-group composites, and
     Spark's `div` truncates toward zero where DuckDB's `//` floors —
     enforced per-row below, not just documented); n_frames must exceed
-    the max frame number. ``max_hamming`` defaults to the threshold
-    SCALED to the envelope's bit width (`phash.scaled_max_hamming` —
-    a fixed 64-bit constant against a 256-bit envelope would silently
-    drop true near-dups, measured at 18/256 for the planted pair).
-
-    ``cap_grain='rep'`` (r12, the PRODUCTION composition with
-    `PRODUCTION_PARAMS`): buckets cap by DISTINCT-fingerprint count
-    and over-cap identical-fingerprint groups expand through their
-    REP only — the r11 probe measured the residual 8.4 % doc-weight
-    over-cap as exactly these exact-dup mega-groups, which under the
-    doc-weight cap take their whole buckets (and their distinct
-    near-dup neighbors) out of the candidate set. 'doc' stays the
-    registry/oracle default."""
-    if max_hamming is None:
-        max_hamming = ph.scaled_max_hamming(params)
+    the max frame number."""
     comp = sig.select(
         F.when(
             F.col("id") >= 0, F.col("id") * n_frames + F.col("frame")
@@ -422,7 +366,7 @@ def video_pair_matches(
                       "(composite-id grouping)")
             ).cast("long")
         ).alias("id"),
-        *params.band_cols,
+        *ph.BAND_COLS,
     )
     # materialize=True (r16): passes the phash operator's
     # three-consumer group materialization through AND materializes
@@ -430,8 +374,7 @@ def video_pair_matches(
     # identical rows, one execution of the banding subtree)
     fp = ph.phash_candidate_pairs(
         comp, max_hamming=max_hamming, max_bucket=max_bucket,
-        n_bands=params.n_bands, band_bits=params.band_bits,
-        cap_grain=cap_grain, materialize=materialize)
+        materialize=materialize)
     pairs = fp.select(
         F.expr(f"id_a div {n_frames}").alias("va"),
         F.expr(f"id_b div {n_frames}").alias("vb"),

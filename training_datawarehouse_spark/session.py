@@ -15,7 +15,6 @@ ship on a 1000-executor cluster, scaled down for local[N]:
 
 from __future__ import annotations
 
-import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -75,72 +74,3 @@ def tune_for_queries(spark: SparkSession) -> SparkSession:
         "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
     )
     return spark
-
-
-#: Session knobs for the ITERATIVE operator family (NN-descent,
-#: PageRank, connected components, tokenizer training) — the three
-#: measured r13 settings, applied by ``iterative_tuning``.
-#:
-#: These operators checkpoint one generation per round through
-#: ``functions.caching.eager_checkpoint``, whose stat-less LogicalRDD
-#: leaves stop Catalyst's size-estimate compounding (the per-generation
-#: squaring that ground the driver in BigInteger.multiply at the r13
-#: 200 k NN-descent probe). Stat-less leaves then need:
-#:
-#: 1. ``spark.sql.defaultSizeInBytes`` at a realistic value (64 MB —
-#:    safely above the 10 MB autoBroadcast line, so no spurious
-#:    broadcasts): otherwise every leaf estimates Long.MaxValue and
-#:    size PRODUCTS through a 40-join/50-union wave plan are
-#:    BigIntegers with thousands of digits — the OPTIMIZER, not the
-#:    job, burns driver-minutes (jstack-diagnosed, r13).
-#: 2. A small AQE ``minPartitionSize`` (64k): the family's shuffles
-#:    carry slim (id, id, cos) rows whose map work is a 64-dim cosine;
-#:    byte-based coalescing sees ~2 MB and squeezes stages to 1-3
-#:    tasks, serializing the scoring (measured: same-plan hop
-#:    checkpoints growing 1.5 s -> 23 s across waves).
-#: 3. Runtime bloom-filter injection OFF: InjectRuntimeFilter re-walks
-#:    size stats for every join of every freshly-copied plan tree and
-#:    can never fire on these plans anyway (runtime bloom filters push
-#:    into FILE scans; every leaf here is an in-memory RDD). Both
-#:    observed driver grinds bottomed out in this rule.
-ITERATIVE_CONFS = {
-    "spark.sql.defaultSizeInBytes": str(64 * 1024 * 1024),
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
-    "spark.sql.optimizer.runtime.bloomFilter.enabled": "false",
-}
-
-
-@contextlib.contextmanager
-def iterative_tuning(spark: SparkSession):
-    """Applies the three iterative-family confs (``ITERATIVE_CONFS``)
-    on entry and RESTORES the prior values on exit (r14 verdict #3).
-
-    Left on, knob 3 would permanently disable runtime bloom-filter
-    injection — a feature that measurably cuts fact-table scans
-    (tests/test_plan_quality.py) — so a long-lived 100 TB session
-    that once built an ANN graph would pay on every subsequent
-    relational query. This form snapshots the EFFECTIVE value of each
-    knob (Spark-default or user-set — restoring the effective default
-    explicitly is behavior-identical to never having touched it) and
-    puts it back even if the build raises::
-
-        with iterative_tuning(spark):
-            graph = nnd_graph_recursive(emb, ...)
-        # relational queries here keep their runtime bloom filters
-    """
-    prior: dict[str, str | None] = {}
-    for key in ITERATIVE_CONFS:
-        try:
-            prior[key] = spark.conf.get(key)
-        except Exception:
-            prior[key] = None  # unset and no Spark-side default
-    for key, value in ITERATIVE_CONFS.items():
-        spark.conf.set(key, value)
-    try:
-        yield spark
-    finally:
-        for key, value in prior.items():
-            if value is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, value)

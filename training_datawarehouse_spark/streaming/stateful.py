@@ -194,10 +194,7 @@ def streaming_kmv_sketch(hashed: DataFrame, k: int = 64) -> DataFrame:
     )
 
 
-def streaming_neardup_admission(
-    band_rows: DataFrame, ttl_ms: int | None = None,
-    event_ttl_ms: int | None = None, event_time_col: str = "ts",
-) -> DataFrame:
+def streaming_neardup_admission(band_rows: DataFrame) -> DataFrame:
     """STREAMING near-dup admission (r12 — the r11 verdict's top ask):
     probe each micro-batch's new document signatures against the
     historical banded LSH index, maintained as state ACROSS
@@ -212,9 +209,7 @@ def streaming_neardup_admission(
     signatures must not need a shuffle). Grouping key = the band
     bucket (band, sig) — the unit of index membership.
 
-    State per bucket: (first_id, n) — TWO LONGS, by construction
-    (``event_ttl_ms`` adds a third, the running max event timestamp;
-    see below).
+    State per bucket: (first_id, n) — TWO LONGS, by construction.
     First-writer-wins admission only ever needs the bucket's EARLIEST
     member: every later arrival matches against it, so storing more
     members adds no information to the decision. This makes the
@@ -223,8 +218,8 @@ def streaming_neardup_admission(
     (the batch family's ``max_bucket`` guards quadratic PAIR expansion,
     which admission never performs; `n` is kept so occupancy stays
     observable and a cap COULD gate emission). State grows with
-    |distinct touched buckets| only — the banded index itself, 3 longs
-    per entry, orders of magnitude smaller than its corpus.
+    |distinct touched buckets| only — the banded index itself, 16
+    bytes per entry, orders of magnitude smaller than its corpus.
 
     Arrival order IS the admission order (the operator's contract):
     within a batch, rows are processed in ascending doc_id; across
@@ -238,93 +233,15 @@ def streaming_neardup_admission(
     Emits one row per input row: (doc_id, band, match_id) where
     match_id is the bucket's prior first member (NULL -> this doc
     opened the bucket). The caller aggregates to doc grain:
-    admit = every band NULL; matched-cluster id = min(match_id).
-
-    ``ttl_ms`` (r13 — the r12 verdict's #3): OPTIONAL idle-bucket
-    eviction for month-scale ingest gates. Without it, state grows
-    monotonically with distinct touched buckets forever (16 bytes
-    each — SCALE.md prices 10⁹ docs ≈ 64 GB cluster-wide; bounded,
-    but history-sized). With a TTL, state is bounded by the ACTIVE
-    working set: a bucket idle longer than the horizon is dropped via
-    ``GroupStateTimeout.ProcessingTimeTimeout``, and a duplicate of
-    an evicted bucket's ancient first member is RE-ADMITTED — the
-    standard, stated trade of a time-horizon gate (dedup guarantees
-    hold within the horizon only; the batch twin for parity is the
-    first-writer rule restricted to arrivals inside the horizon).
-    Eviction follows the engine's timeout contract: an expired bucket
-    is removed at the next TRIGGER in which it receives no data — a
-    duplicate arriving in that same trigger still matches
-    (conservative-keep: late eviction never causes a false admit,
-    only delays the re-admission window). Run TTL gates with a
-    continuous trigger (e.g. ``processingTime``): with
-    ``Trigger.AvailableNow`` the engine keeps scheduling timeout-check
-    batches and the query never self-terminates while a timeout conf
-    is registered (observed on Spark 4.1.2 — the gate test stops the
-    query explicitly), which suits a month-scale always-on gate but
-    not drain-and-exit batch jobs.
-
-    ``event_ttl_ms`` (r15 — the r14 probe's own lesson): the SAME
-    eviction semantics keyed to EVENT TIME instead of wall clock. The
-    wall-clock horizon measured its failure mode live (SCALE.md r14:
-    a 16.9 s cold-start trigger cadence blew a 15 s ``ttl_ms`` and
-    re-admitted within-horizon duplicates) — the horizon a month-scale
-    ingest wants is defined by the DATA's timestamps, not by trigger
-    scheduling. A bucket expires when the stream's WATERMARK passes
-    (the bucket's LATEST event time + horizon): slow triggers,
-    backfill bursts, and replay at any speed all preserve the
-    decision sequence, because watermark and timestamps replay with
-    the data (``GroupStateTimeout.EventTimeTimeout`` +
-    ``state.setTimeoutTimestamp``). "Latest event time" is a RUNNING
-    MAX persisted in state (event mode stores THREE longs per bucket:
-    first_id, n, max_ts — one long over the two the other modes
-    keep), not the current batch's max: a late out-of-order row that
-    lands in a batch AFTER a newer row must not REWIND the bucket's
-    eviction deadline from newer_ts+horizon back to late_ts+horizon,
-    or eviction (hence re-admission) would depend on which
-    micro-batch boundary the late row happened to fall on — exactly
-    the replay-instability this mode exists to remove (r16, from the
-    r15 ADVICE). Requirements: ``band_rows`` must carry
-    ``event_time_col`` (pass it through the signature kernel
-    via ``minhash_band_rows_rowlocal(keep_cols=(...,))``) and the
-    caller must set ``withWatermark`` on that column upstream —
-    EventTimeTimeout without a watermark is rejected by the engine.
-    The timeout is clamped to (watermark + 1 ms) when the bucket's
-    running max timestamp already trails the watermark past the
-    horizon, so the bucket still evicts at the next opportunity
-    instead of crashing the query. Mutually exclusive with
-    ``ttl_ms``."""
-    if ttl_ms is not None and event_ttl_ms is not None:
-        raise ValueError(
-            "ttl_ms (wall-clock horizon) and event_ttl_ms (event-time "
-            "horizon) are mutually exclusive")
-    has_ttl = ttl_ms is not None or event_ttl_ms is not None
+    admit = every band NULL; matched-cluster id = min(match_id)."""
 
     def update(
         key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if has_ttl and state.hasTimedOut:
-            state.remove()   # idle past the horizon: forget the bucket
-            return
-        stored_max = 0
-        if state.exists:
-            if event_ttl_ms is not None:
-                fid, n, stored_max = state.get
-            else:
-                fid, n = state.get
-        else:
-            fid, n = None, 0
+        fid, n = state.get if state.exists else (None, 0)
         ids: list[int] = []
-        max_ts_ms = None
         for pdf in pdfs:
             ids.extend(int(x) for x in pdf["doc_id"])
-            if event_ttl_ms is not None and len(pdf):
-                # .value = ns since epoch (tz-safe); horizon anchors
-                # to the bucket's latest arrival SO FAR (running max,
-                # merged with the persisted max below) — never to
-                # this batch alone
-                mx = int(pd.Timestamp(pdf[event_time_col].max()).value
-                         // 1_000_000)
-                max_ts_ms = mx if max_ts_ms is None else max(max_ts_ms, mx)
         if not ids:  # data-less invocation: nothing to decide
             return
         ids.sort()
@@ -335,21 +252,7 @@ def streaming_neardup_admission(
             if fid is None:
                 fid = d
             n += 1
-        if ttl_ms is not None:
-            state.update((int(fid), n))
-            state.setTimeoutDuration(ttl_ms)
-        elif event_ttl_ms is not None:
-            # a late batch (max_ts < stored_max) keeps the NEWER
-            # deadline: the horizon is anchored to the bucket's
-            # latest event time ever seen, so eviction decisions are
-            # independent of micro-batch boundaries (ADVICE r15)
-            anchor = max(stored_max, max_ts_ms or 0)
-            state.update((int(fid), n, anchor))
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(anchor + event_ttl_ms, wm + 1))
-        else:
-            state.update((int(fid), n))
+        state.update((int(fid), n))
         yield pd.DataFrame({
             "doc_id": out_id,
             "band": [key[0]] * len(out_id),
@@ -359,23 +262,9 @@ def streaming_neardup_admission(
     return band_rows.groupBy("band", "sig").applyInPandasWithState(
         update,
         outputStructType="doc_id long, band int, match_id long",
-        # event mode persists the bucket's running max event time so
-        # late out-of-order arrivals cannot rewind the horizon; the
-        # other modes keep the original two-longs-per-bucket state
-        # byte-identical
-        stateStructType=(
-            "first_id long, n long, max_ts long"
-            if event_ttl_ms is not None
-            else "first_id long, n long"
-        ),
+        stateStructType="first_id long, n long",
         outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if ttl_ms is not None
-            else GroupStateTimeout.EventTimeTimeout
-            if event_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
