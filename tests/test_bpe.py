@@ -1,4 +1,4 @@
-"""Distributed BPE tokenizer training (operators/bpe.py).
+"""BPE tokenizer training (operators/bpe.py).
 
 Known-answer test uses the classic Sennrich et al. (2016) corpus
 {low:5, lower:2, newest:6, widest:3}, whose first five merges are
@@ -6,7 +6,7 @@ the textbook sequence e+s, es+t, est+</w>, l+o, lo+w (the first three
 exercise the count-desc/left-asc tie-break: e-s, s-t and t-</w> all
 count 9). The DuckDB parity test re-trains via the UNROLLED
 recursive-CTE oracle — an independent string-scan-pointer
-re-derivation of the greedy merge, not the Spark fold."""
+re-derivation of the greedy merge, not the Python loop."""
 
 import duckdb
 import pytest
@@ -21,16 +21,15 @@ SENNRICH_DOCS = [
 ]
 
 
-@pytest.mark.parametrize("cap", [0, 1_000_000],
-                         ids=["distributed-loop", "driver-fast-path"])
-def test_train_bpe_sennrich_known_answer(spark, cap):
-    """Both training paths — the fully distributed unrolled loop
-    (cap=0) and the driver-side fast path over the collected count
-    table — must produce the identical textbook merge sequence,
-    vocabulary, and encoding."""
+def _train(docs, num_merges):
+    return bpe.train_bpe(docs.sparkSession,
+                         bpe.collect_word_counts(docs, "text"), num_merges)
+
+
+def test_train_bpe_sennrich_known_answer(spark):
+    """The textbook merge sequence, vocabulary, and encoding."""
     docs = spark.createDataFrame(SENNRICH_DOCS, "doc_id long, text string")
-    vocab, merges = bpe.train_bpe(docs, "text", num_merges=5,
-                                  driver_vocab_cap=cap)
+    vocab, merges = _train(docs, 5)
     try:
         assert [(a, b, c) for a, b, c in merges] == [
             ("e", "s", 9), ("es", "t", 9), ("est", "</w>", 9),
@@ -57,11 +56,7 @@ def test_merge_fold_overlap_rule(spark):
     docs = spark.createDataFrame(
         [(1, "aaaa aaa")], "doc_id long, text string"
     )
-    # cap=0 forces the distributed fold — the path whose overlap
-    # semantics this test pins (the driver path shares _merge_fold_py,
-    # covered by the parametrized known-answer test)
-    vocab, merges = bpe.train_bpe(docs, "text", num_merges=1,
-                                  driver_vocab_cap=0)
+    vocab, merges = _train(docs, 1)
     try:
         assert merges == [("a", "a", 5)]
         syms = {r["w"]: r["syms"] for r in vocab.collect()}
@@ -74,10 +69,9 @@ def test_merge_fold_overlap_rule(spark):
 def test_train_bpe_exhausted_corpus_raises(spark):
     docs = spark.createDataFrame([(1, "ab ab")], "doc_id long, text string")
     # 'ab' has pairs a-b, b-</w>; after 2 merges 'ab</w>' is a single
-    # symbol -> no pairs left for merge 3 — both paths must refuse
-    for cap in (0, 1_000_000):
-        with pytest.raises(ValueError, match="exhausted"):
-            bpe.train_bpe(docs, "text", num_merges=3, driver_vocab_cap=cap)
+    # symbol -> no pairs left for merge 3
+    with pytest.raises(ValueError, match="exhausted"):
+        _train(docs, 3)
 
 
 def test_encode_skips_untrainable_words(spark):
@@ -88,7 +82,7 @@ def test_encode_skips_untrainable_words(spark):
         [(1, "abc abc 123 ?!"), (2, "ABC abc"), (3, "42 77")],
         "doc_id long, text string",
     )
-    vocab, _ = bpe.train_bpe(docs, "text", num_merges=1)
+    vocab, _ = _train(docs, 1)
     try:
         enc = {r["doc_id"]: r["bpe_n_tokens"] for r in
                bpe.encode_token_counts(docs, vocab).collect()}
@@ -107,7 +101,7 @@ def test_bpe_duckdb_oracle_parity(spark):
     encoding differentially checked against an independent
     implementation shape (string scan-pointer vs array fold)."""
     docs = spark.createDataFrame(SENNRICH_DOCS, "doc_id long, text string")
-    vocab, merges = bpe.train_bpe(docs, "text", num_merges=5)
+    vocab, merges = _train(docs, 5)
     try:
         spark_enc = {r["doc_id"]: r["bpe_n_tokens"] for r in
                      bpe.encode_token_counts(docs, vocab).collect()}
@@ -154,38 +148,3 @@ def test_release_local_checkpoint_frees_rdd_blocks(spark):
     assert _persistent_ids(spark) - before, "unpersist should be a no-op"
     assert release_local_checkpoint(ck, blocking=True) is True
     assert _persistent_ids(spark) - before == set()
-
-
-def test_train_bpe_distributed_loop_bounded_storage(spark):
-    """The distributed merge loop must pin O(1) generations, not
-    O(num_merges): after training, at most ONE new persistent RDD (the
-    returned final generation's checkpoint) may remain."""
-    from training_datawarehouse_spark.functions.caching import (
-        release_local_checkpoint,
-    )
-
-    docs = spark.createDataFrame(SENNRICH_DOCS, "doc_id long, text string")
-    before = _persistent_ids(spark)
-    vocab, merges = bpe.train_bpe(docs, "text", num_merges=5,
-                                  driver_vocab_cap=0)
-    leaked = _persistent_ids(spark) - before
-    assert len(merges) == 5
-    assert len(leaked) <= 1, (
-        f"superseded BPE generations leaked persistent RDDs: {sorted(leaked)}"
-    )
-    release_local_checkpoint(vocab, blocking=True)
-    assert _persistent_ids(spark) - before == set()
-
-
-def test_train_bpe_error_path_releases_checkpoints(spark):
-    """r8 ADVICE: when the corpus exhausts pairs mid-loop, the pinned
-    checkpoint RDDs for the in-flight generations must be released,
-    not leaked for the session."""
-    docs = spark.createDataFrame([(1, "ab ab")], "doc_id long, text string")
-    before = _persistent_ids(spark)
-    with pytest.raises(ValueError, match="exhausted"):
-        bpe.train_bpe(docs, "text", num_merges=3, driver_vocab_cap=0)
-    leaked = _persistent_ids(spark) - before
-    assert leaked == set(), (
-        f"error-path BPE generations leaked persistent RDDs: {sorted(leaked)}"
-    )

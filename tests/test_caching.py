@@ -10,8 +10,7 @@ BigInteger.multiply (diagnosed live at the r13 200 k NN-descent
 probe). These tests pin (a) the compounding really happens on the
 plain path, (b) the rewrap really stops it, (c) the fallback path is
 VISIBLE (warns once + counts) instead of silently reintroducing the
-time bomb, and (d) the lazy mode used by the tokenizer training loops
-round-trips data and releases correctly.
+time bomb.
 """
 from __future__ import annotations
 
@@ -139,17 +138,3 @@ def test_eager_checkpoint_fallback_warns_once_and_counts(spark, monkeypatch):
         spark.conf.unset(caching.FALLBACK_CONF_KEY)
     for f in (ck1, ck2, ck3):
         release_local_checkpoint(f)
-
-
-def test_eager_checkpoint_lazy_mode_roundtrip_and_release(spark):
-    """eager=False (the BPE/WordPiece loop shape): no job at checkpoint
-    time is hard to assert cheaply, but the frame must materialize on
-    first action, hash out the same rows, and release through the
-    remembered checkpoint source."""
-    base = spark.range(32).select(
-        "id", (F.col("id") * 3).alias("v"))
-    lz = eager_checkpoint(base, eager=False)
-    assert lz.agg(F.sum("v")).first()[0] == 3 * sum(range(32))
-    # the rewrapped frame released via its _graft_ck_source
-    assert getattr(lz, "_graft_ck_source", None) is not None
-    assert release_local_checkpoint(lz)

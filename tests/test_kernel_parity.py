@@ -4,9 +4,9 @@ results BYTE-IDENTICAL to their reference loops. These tests pin:
 - the vectorized synthesis/fingerprint kernels (token grids, wave
   mixture, batch DFT fingerprint) against their pre-r16 per-element
   reference loops, re-implemented here verbatim as the fixed point;
-- the trainers' shared-scan ``word_counts`` injection against the
-  self-collecting path;
-- ``doc_unigram_scores(words=...)`` against its self-collecting path.
+- the trainers' shared ``collect_word_counts`` scan and its
+  driver-memory refusal;
+- the ``materialize=True`` pair passes against their lazy plans.
 
 The composite-level guarantees (lsh_cross_modal's materialized pair
 pass, text_profile's overlapped stage builds, similarity_topk's shared
@@ -24,7 +24,6 @@ from training_datawarehouse_spark.operators import (
     phash as ph,
     unigram as ug,
     video as vd,
-    wordpiece as wpc,
 )
 
 TEXTS = [
@@ -116,7 +115,7 @@ def test_pixel_gain_saturation_still_clamps_at_255():
     assert ph.token_grid_pixels(t.strip()) == _ref_grid(t.strip())
 
 
-# --------------------------------- trainer shared-scan injection
+# ------------------------------------------ trainer shared scan
 
 @pytest.fixture()
 def docs(spark):
@@ -129,28 +128,15 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_collect_word_counts_matches_trainer_scan(docs):
+def test_collect_word_counts_matches_trainer_scan(docs, monkeypatch):
     wc = bpe.collect_word_counts(docs, "text")
-    assert wc is not None
     assert dict(wc)["aa"] == 6
-    # over-cap returns None (the distributed-loop signal)
-    assert bpe.collect_word_counts(docs, "text", driver_vocab_cap=3) is None
-
-
-def test_train_bpe_word_counts_injection_parity(docs):
-    wc = bpe.collect_word_counts(docs, "text")
-    w1, m1 = bpe.train_bpe(docs, "text", num_merges=4)
-    w2, m2 = bpe.train_bpe(docs, "text", num_merges=4, word_counts=wc)
-    assert m1 == m2
-    assert sorted(map(tuple, w1.collect())) == sorted(map(tuple, w2.collect()))
-
-
-def test_train_wordpiece_word_counts_injection_parity(docs):
-    wc = bpe.collect_word_counts(docs, "text")
-    w1, m1 = wpc.train_wordpiece(docs, "text", num_merges=3)
-    w2, m2 = wpc.train_wordpiece(docs, "text", num_merges=3, word_counts=wc)
-    assert m1 == m2
-    assert sorted(map(tuple, w1.collect())) == sorted(map(tuple, w2.collect()))
+    assert dict(ug.collect_word_counts(docs, "text")) == dict(wc)
+    # over the cap both scans refuse, naming the count and the cap
+    monkeypatch.setattr(bpe, "DRIVER_VOCAB_CAP", 3)
+    for collect in (bpe.collect_word_counts, ug.collect_word_counts):
+        with pytest.raises(ValueError, match=r"^24 distinct .*CAP=3\b"):
+            collect(docs, "text")
 
 
 def _persistent_rdd_ids(spark):
@@ -232,16 +218,3 @@ def test_video_pair_matches_materialize_parity(spark):
     mat = vd.video_pair_matches(sig, materialize=True).collect()
     assert sorted(map(tuple, lazy)) == sorted(map(tuple, mat))
     assert len(lazy) > 0
-
-
-def test_unigram_word_counts_and_words_injection_parity(docs):
-    wc = ug.collect_word_counts(docs, "text")
-    assert wc is not None
-    p1 = ug.train_unigram(docs, "text", vocab_size=12, max_len=3, iters=2)
-    p2 = ug.train_unigram(docs, "text", vocab_size=12, max_len=3, iters=2,
-                          word_counts=wc)
-    assert p1 == p2
-    s1 = ug.doc_unigram_scores(docs, p1, "doc_id", "text").collect()
-    s2 = ug.doc_unigram_scores(docs, p1, "doc_id", "text",
-                               words=[w for w, _ in wc]).collect()
-    assert sorted(map(tuple, s1)) == sorted(map(tuple, s2))

@@ -117,8 +117,8 @@ def test_rejects_degenerate_corpus(spark):
 
 
 def test_checkpoints_released_on_failure(spark):
-    """The iteration loop's error path releases its checkpoints (the
-    wordpiece discipline) — force a failure by passing a frame whose
+    """The iteration loop's error path releases its checkpoints — force
+    a failure by passing a frame whose
     vector column breaks scoring lazily."""
     sc = spark.sparkContext
     before = sc._jsc.sc().getPersistentRDDs().size()
@@ -148,33 +148,6 @@ def test_incremental_flag_is_result_identical(spark):
         inc = sorted(map(tuple, nnd_graph(
             df, k=5, iters=iters, incremental=True).collect()))
         assert full == inc, iters
-
-
-def test_sampling_knob_bounds_fanout_and_keeps_recall(spark):
-    """The sample-rate knob (deterministic md5-least per center) is an
-    APPROXIMATION and this test prices it: capping the general
-    neighborhood at 1.6k entries per center costs real recall on the
-    toy corpus (measured 0.54 vs 0.83 full at the same rounds — the
-    recall/cost dial the paper's ρ turns), degrades gracefully rather
-    than collapsing, and stays deterministic (md5 order, not RNG)."""
-    df = _toy(spark, n=60, seed=11)
-    exact = _exact_graph(df, 5)
-
-    def match(g):
-        got = {}
-        for r in g.collect():
-            got.setdefault(r["src"], set()).add(r["dst"])
-        return sum(len(got[s] & exact[s]) for s in exact) / (60 * 5)
-
-    m_full = match(nnd_graph(df, k=5, iters=4))
-    g_samp = nnd_graph(df, k=5, iters=4, sample=8)
-    m_samp = match(g_samp)
-    assert m_full >= 0.8
-    assert 0.35 <= m_samp < m_full   # priced, graceful, not free
-    # deterministic: the sampled build reproduces exactly
-    again = nnd_graph(df, k=5, iters=4, sample=8)
-    assert sorted(map(tuple, g_samp.collect())) \
-        == sorted(map(tuple, again.collect()))
 
 
 def test_beam_search_non_member_queries(spark):

@@ -309,104 +309,6 @@ def test_codec_sniff_falls_back_to_stub_on_unsupported(spark):
         assert got[5] == {"id": 5, **decode_fn(good)}
 
 
-def test_pil_fast_path_routing_and_parity(monkeypatch):
-    """The optional PIL accelerator seam (round-3 verdict task 4): this
-    sandbox has no Pillow, so the seam is exercised with a fake PIL
-    Image module that decodes via an independent raster source. Checks:
-    (a) with no PIL, decode_png_auto IS the stdlib decoder; (b) with a
-    (fake) PIL present, decode_png_auto routes through it and honors
-    the return contract; (c) a fake-PIL failure (wrong mode, or a
-    decode error) falls back to stdlib with identical pixels — so an
-    accelerator can never change answers, only speed."""
-    w, h = 9, 5
-    pixels = bytes((3 * x + 7 * y) % 256 for y in range(h) for x in range(w))
-    png = mm.encode_png(w, h, pixels, filter_type=4)
-
-    # (a) no PIL in this environment: stdlib path, exact pixels
-    assert mm._PILImage is None
-    base = mm.decode_png_auto(png)
-    assert base["pixels"] == pixels and base["width"] == w
-
-    calls = []
-
-    class _FakeImg:
-        format, mode, size = "PNG", "L", (w, h)
-
-        def load(self):
-            pass
-
-        def tobytes(self):
-            return pixels
-
-    class _FakePIL:
-        @staticmethod
-        def open(buf):
-            calls.append(len(buf.getvalue()))
-            return _FakeImg()
-
-    # (b) PIL present: the seam routes through it, same contract
-    monkeypatch.setattr(mm, "_PILImage", _FakePIL)
-    out = mm.decode_png_auto(png)
-    assert calls == [len(png)]
-    assert out == base  # bit-identical contract: accelerator ≡ stdlib
-
-    # (c) PIL rejects (RGB mode) → silent stdlib fallback, same pixels
-    _FakeImg.mode = "RGB"
-    out2 = mm.decode_png_auto(png)
-    assert out2["pixels"] == pixels
-
-    # (c') PIL raises OSError (undecodable stream) → stdlib fallback
-    class _BrokenPIL:
-        @staticmethod
-        def open(buf):
-            raise OSError("cannot identify image file")
-
-    monkeypatch.setattr(mm, "_PILImage", _BrokenPIL)
-    assert mm.decode_png_auto(png)["pixels"] == pixels
-
-
-def test_pil_gate_parses_ihdr_not_mode(monkeypatch):
-    """Sub-8-bit and Adam7-interlaced grayscale PNGs: PIL normalizes
-    both to mode 'L', but the stdlib decoder rejects them — so the
-    seam must reject them from the RAW IHDR bytes, BEFORE consulting
-    PIL, or answers become environment-dependent (decode under
-    Pillow, stub without)."""
-    import zlib as _zlib
-
-    w, h = 9, 5
-    pixels = bytes((x + y) % 256 for y in range(h) for x in range(w))
-    png = bytearray(mm.encode_png(w, h, pixels))
-
-    class _EagerPIL:
-        @staticmethod
-        def open(buf):  # pragma: no cover - must never run
-            raise AssertionError("gate must reject before PIL is consulted")
-
-    monkeypatch.setattr(mm, "_PILImage", _EagerPIL)
-    for offset, val in ((24, 4), (28, 1)):  # bit_depth=4; interlace=Adam7
-        bad = bytearray(png)
-        bad[offset] = val
-        # re-seal the IHDR CRC (type+13-byte body = bytes 12..29) so the
-        # mutation reaches the field gates, not the CRC check
-        bad[29:33] = _zlib.crc32(bytes(bad[12:29])).to_bytes(4, "big")
-        with pytest.raises(mm._CODEC_ERRORS):
-            mm.decode_png_auto(bytes(bad))  # AssertionError would escape
-
-
-@pytest.mark.skipif(
-    __import__("importlib").util.find_spec("PIL") is None,
-    reason="Pillow not installed: stdlib codec is the active path",
-)
-def test_pil_real_pixel_parity():
-    """Auto-activates when Pillow exists: real-PIL decode must produce
-    bit-identical pixels to the stdlib codec on all five filter types."""
-    w, h = 17, 11
-    pixels = bytes((x * 13 + y * 29) % 256 for y in range(h) for x in range(w))
-    for ftype in range(5):
-        png = mm.encode_png(w, h, pixels, filter_type=ftype)
-        assert mm._pil_decode_png(png) == mm.decode_png(png)
-
-
 def test_watermark_filter_lag(spark, tmp_path):
     """PINS three empirically-observed Spark append-mode rules the
     'late' stage and its oracle depend on:

@@ -45,7 +45,7 @@ ORACLES = {
     "operators/phash.py:image_phash_signatures":
         "test_audiofp.py::test_fused_crossing_matches_separate_signatures",
     "operators/audiofp.py:fingerprint_bands":
-        "test_r16_optimizations.py::"
+        "test_kernel_parity.py::"
         "test_fingerprint_bands_scalar_and_batch_match_reference",
     "operators/audiofp.py:audio_fingerprint_signatures":
         "test_audiofp.py::test_fused_crossing_matches_separate_signatures",

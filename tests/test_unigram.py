@@ -1,12 +1,10 @@
 """Unigram-LM tokenizer training (operators/unigram.py): known-answer
-EM vs a hand-checkable corpus, local/distributed E-step parity, and
-the DuckDB retrain oracle."""
+EM vs a hand-checkable corpus and the DuckDB retrain oracle."""
 
 import math
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from training_datawarehouse_spark.operators import unigram as ug
 
@@ -25,6 +23,12 @@ def _word_counts():
             if w and all("a" <= c <= "z" for c in w):
                 wc[w] = wc.get(w, 0) + 1
     return sorted(wc.items())
+
+
+def _train(docs):
+    """(model, distinct words) from one ``collect_word_counts`` scan."""
+    wc = ug.collect_word_counts(docs, "text")
+    return ug.train_unigram(wc), [w for w, _ in wc]
 
 
 def test_alpha_beta_known_answer():
@@ -71,33 +75,8 @@ def test_em_monotone_likelihood():
         return s
 
     seed = ug.seed_vocab(wc, 40, 3)
-    trained = ug._train_local(wc, 40, 3, 2)
+    trained = ug.train_unigram(wc, 40, 3, 2)
     assert ll(trained) >= ll(seed)
-
-
-def test_distributed_estep_parity(spark):
-    """The mapInPandas E-step must produce EXACTLY the driver loop's
-    micro counts (same per-word Python function, exact long sums)."""
-    wc = _word_counts()
-    probs = ug.seed_vocab(wc, 40, 3)
-    micro_local = {q: 0 for q in probs}
-    for w, n in wc:
-        for q, m in ug._estep_word(w, n, probs, 3):
-            micro_local[q] += m
-    words_df = spark.createDataFrame(wc, "w string, n long")
-    micro_dist = ug._estep_distributed(words_df, probs, 3)
-    assert micro_dist == micro_local
-
-
-def test_train_unigram_distributed_loop_matches_local(spark):
-    """cap=0 forces the distributed seed + EM loop; the final model
-    must be byte-identical to the driver fast path."""
-    docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    fast = ug.train_unigram(docs, "text", vocab_size=40, max_len=3,
-                            iters=2)
-    dist = ug.train_unigram(docs, "text", vocab_size=40, max_len=3,
-                            iters=2, driver_vocab_cap=0)
-    assert fast == dist
 
 
 def test_unigram_oracle_retrains_identically(spark):
@@ -105,11 +84,10 @@ def test_unigram_oracle_retrains_identically(spark):
     piece-for-piece, prob-for-prob) and reproduce every document
     score bit-for-bit."""
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    probs = ug.train_unigram(docs, "text", vocab_size=40, max_len=3,
-                             iters=2)
+    probs, words = _train(docs)
     got = {
         r["doc_id"]: (r["ulm_nll"], r["ulm_exp_tokens"])
-        for r in ug.doc_unigram_scores(docs, probs).collect()
+        for r in ug.doc_unigram_scores(docs, probs, words).collect()
     }
     con = duckdb.connect()
     con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
@@ -129,8 +107,8 @@ def test_scoring_plan_is_broadcast_join_no_python(spark):
     """Doc scoring is a broadcast join + exact long sums — no Python
     in the scoring plan (training is off-plan by design)."""
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
-    probs = ug.train_unigram(docs, "text")
-    sc = ug.doc_unigram_scores(docs, probs)
+    probs, words = _train(docs)
+    sc = ug.doc_unigram_scores(docs, probs, words)
     plan = sc._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert "BroadcastHashJoin" in plan
@@ -145,13 +123,13 @@ def test_word_length_cap_contract(spark):
     docs = spark.createDataFrame(
         [(1, f"short {long_word} words")], "doc_id long, text string"
     )
-    probs = ug.train_unigram(docs, "text")
+    probs, words = _train(docs)
     # the 200-char all-'a' word is excluded whole: 'a' never enters
     # the vocabulary (no other word contains it), while the short
     # words' chars do
     assert "a" not in probs
     assert "s" in probs and "w" in probs
     sc = {r["doc_id"]: r for r in
-          ug.doc_unigram_scores(docs, probs).collect()}
+          ug.doc_unigram_scores(docs, probs, words).collect()}
     # the 200-char word contributed nothing; the two short words did
     assert sc[1]["ulm_exp_tokens"] > 0

@@ -1,13 +1,13 @@
 """WordPiece tokenizer training (`operators/wordpiece.py`): selection
-rule, prefix handling, driver/distributed parity, DuckDB retrain
-parity, inference segmentation."""
+rule, prefix handling, exhaustion refusal, DuckDB retrain parity,
+per-document encoding."""
 
 from __future__ import annotations
 
 import duckdb
 import pytest
 
-from training_datawarehouse_spark.operators import wordpiece as wp
+from training_datawarehouse_spark.operators import bpe, wordpiece as wp
 
 
 def _docs(spark, rows):
@@ -16,14 +16,20 @@ def _docs(spark, rows):
     )
 
 
-def test_likelihood_ratio_selection_not_frequency():
+def _train(docs, num_merges):
+    return wp.train_wordpiece(docs.sparkSession,
+                              bpe.collect_word_counts(docs, "text"),
+                              num_merges)
+
+
+def test_likelihood_ratio_selection_not_frequency(spark):
     """The defining WordPiece property: the chosen pair maximizes
     count(ab)/(count(a)·count(b)), NOT raw pair frequency. Here
     ('x','##y') occurs 3 times but both symbols are rare-apart, while
     ('a','##b') occurs 4 times among very frequent symbols — BPE
     would pick (a, ##b); WordPiece must pick (x, ##y)."""
     counts = [("xy", 3), ("ab", 4), ("ac", 5), ("ba", 5), ("cb", 4)]
-    words, merges = wp._train_local(counts, 1)
+    words, merges = wp.train_wordpiece(spark, counts, 1)
     assert (merges[0][0], merges[0][1]) == ("x", "##y")
 
 
@@ -45,26 +51,13 @@ def test_overlap_rule_greedy_left_to_right():
     assert wp._merge_fold_py(syms, "##a", "##a") == ["a", "##aa", "##a"]
 
 
-def test_driver_and_distributed_paths_agree(spark):
-    docs = _docs(spark, [
-        "low lower lowest new newer newest wide wider widest",
-        "low low lower new new newer hug hugs hugging",
-        "the hug of the new low",
-    ])
-    w1, m1 = wp.train_wordpiece(docs, num_merges=6)
-    w2, m2 = wp.train_wordpiece(docs, num_merges=6, driver_vocab_cap=0)
-    assert m1 == m2
-    assert sorted((r["w"], tuple(r["syms"])) for r in w1.collect()) == \
-        sorted((r["w"], tuple(r["syms"])) for r in w2.collect())
-
-
 def test_duckdb_oracle_retrains_identically(spark):
     docs = _docs(spark, [
         "low lower lowest new newer newest wide wider widest",
         "low low lower new new newer hug hugs hugging",
         "the hug of the new low",
     ])
-    vocab, merges = wp.train_wordpiece(docs, num_merges=6)
+    vocab, merges = _train(docs, 6)
     enc = {r["doc_id"]: r["wp_n_tokens"]
            for r in wp.encode_token_counts(docs, vocab).collect()}
     con = duckdb.connect()
@@ -75,32 +68,20 @@ def test_duckdb_oracle_retrains_identically(spark):
           "FROM wp_enc ORDER BY doc_id"
     ).fetchall()
     con.close()
-    assert rows[0][0] == wp.merges_tag(merges)
+    assert rows[0][0] == bpe.merges_tag(merges)
     assert {r[1]: r[2] for r in rows} == enc
 
 
 def test_exhaustion_refusal_and_checkpoint_release(spark):
-    """Too many merges for the corpus must raise on BOTH paths, and
-    the distributed path's error exit must not leak generation
-    checkpoints (the BPE r8-ADVICE discipline)."""
-    def _persistent_ids(spark) -> set:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in jmap.keySet().toArray()}
-
+    """Too many merges for the corpus must raise."""
     docs = _docs(spark, ["ab ab"])
     with pytest.raises(ValueError, match="exhausted"):
-        wp.train_wordpiece(docs, num_merges=3)
-    before = _persistent_ids(spark)
-    with pytest.raises(ValueError, match="exhausted"):
-        wp.train_wordpiece(docs, num_merges=3, driver_vocab_cap=0)
-    leaked = _persistent_ids(spark) - before
-    assert leaked == set(), (
-        f"error-path WordPiece generations leaked RDDs: {sorted(leaked)}")
+        _train(docs, 3)
 
 
 def test_encode_counts_match_vocab_syms(spark):
     docs = _docs(spark, ["hug hug hugs", "the hug"])
-    vocab, _ = wp.train_wordpiece(docs, num_merges=2)
+    vocab, _ = _train(docs, 2)
     syms = {r["w"]: len(r["syms"]) for r in vocab.collect()}
     got = {r["doc_id"]: r["wp_n_tokens"]
            for r in wp.encode_token_counts(docs, vocab).collect()}

@@ -6,9 +6,9 @@ internal RDD wrapped by the resulting ``LogicalRDD`` keeps its blocks
 through ``unpersist`` and is otherwise freed only by the
 ContextCleaner when the driver GCs the reference (r7 ADVICE; verified
 on Spark 4.1.2 via ``getPersistentRDDs``). Iterative operators that
-supersede one checkpointed generation per round (BPE training,
-connected components) must release through THIS helper so peak
-storage is O(1) generations, not O(rounds).
+supersede one checkpointed generation per round (NN-descent,
+connected components, PageRank) must release through THIS helper so
+peak storage is O(1) generations, not O(rounds).
 """
 
 from __future__ import annotations
@@ -63,7 +63,7 @@ def _rewrap_statless(ck: DataFrame, origin: DataFrame) -> DataFrame:
     return out
 
 
-def eager_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+def eager_checkpoint(df: DataFrame) -> DataFrame:
     """``localCheckpoint(eager=True)`` with the ORIGIN-STATS
     INHERITANCE BROKEN (r13).
 
@@ -115,15 +115,9 @@ def eager_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     ``FALLBACK_COUNT`` (process-wide), and incrementing the failing
     frame's own session conf ``FALLBACK_CONF_KEY`` (per-session) so
     a spark-submit'd job can alarm post-run without grepping executor
-    logs (r13 verdict #7, r14 verdict #6, r15 ADVICE).
-
-    ``eager=False`` defers materialization exactly like
-    ``localCheckpoint(eager=False)`` — the rewrap only re-labels the
-    leaf, it runs no job — for loops (BPE/unigram/WordPiece training)
-    that piggyback each generation's materialization on the next
-    round's aggregate job."""
+    logs (r13 verdict #7, r14 verdict #6, r15 ADVICE)."""
     global FALLBACK_COUNT, _warned
-    ck = df.localCheckpoint(eager=eager)
+    ck = df.localCheckpoint(eager=True)
     try:
         return _rewrap_statless(ck, df)
     except Exception as exc:

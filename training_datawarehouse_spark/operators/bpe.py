@@ -1,33 +1,29 @@
-"""Distributed BPE-style subword tokenizer training.
+"""BPE subword tokenizer training.
 
 The charter's token-counting surface (``operators/text.py``) is
 regex-shaped; a real training-data pipeline TRAINS a subword
 vocabulary on the corpus (Sennrich et al. 2016, "Neural Machine
 Translation of Rare Words with Subword Units" — public algorithm).
-This module re-expresses the classic byte-pair-encoding training loop
-Spark-first:
+Training is two-phase, like the reference trainers (subword-nmt,
+HuggingFace ``tokenizers``):
 
 1. **Word-frequency table, once.** BPE training never touches the
-   corpus again after the initial ``(word, count)`` aggregation —
-   exactly how reference trainers (subword-nmt, HuggingFace
-   tokenizers) work. At 100 TB this is the only full-corpus scan: a
-   map-side-combinable groupBy whose output is vocabulary-sized
-   (millions of rows, not billions), persisted for the loop.
-2. **k merge iterations, unrolled.** Each iteration is one
-   vocabulary-sized job: count adjacent symbol pairs (weighted by
-   word count, overlapping positions included — Sennrich semantics),
-   pick the most frequent pair with a DETERMINISTIC tie-break
-   (count desc, then left symbol asc, then right symbol asc), apply
-   the merge to every word. Only ONE (pair, count) row crosses the
-   driver per iteration — the same scalar-only-driver-traffic shape
-   as ``similarity.kmeans_fit``'s Lloyd iterations.
-3. **Greedy left-to-right merge as a fold.** Applying pair (a, b) to
-   a word's symbol sequence is ``F.aggregate`` over the symbol array:
-   append each symbol unless the accumulator's last element is ``a``
-   and the incoming one is ``b``, in which case replace the last with
-   ``a||b``. This reproduces the reference regex-replace semantics
-   exactly, including the overlap rule ("aaa" + (a,a) -> [aa, a],
-   never [a, aa]) — property-tested against a pure-Python reference.
+   corpus again after the initial ``(word, count)`` aggregation
+   (``collect_word_counts``): one map-side-combinable groupBy whose
+   vocabulary-sized output is collected to the driver, refused above
+   ``DRIVER_VOCAB_CAP`` distinct words.
+2. **k merge iterations on the driver.** Each iteration counts
+   adjacent symbol pairs over the table (weighted by word count,
+   overlapping positions included — Sennrich semantics), picks the
+   most frequent pair with a DETERMINISTIC tie-break (count desc,
+   then left symbol asc, then right symbol asc) and applies the
+   merge to every word.
+3. **Greedy left-to-right merge.** Applying pair (a, b) to a word's
+   symbol sequence appends each symbol unless the last kept symbol
+   is ``a`` and the incoming one is ``b``, in which case it replaces
+   the last with ``a||b``. This reproduces the reference
+   regex-replace semantics exactly, including the overlap rule
+   ("aaa" + (a,a) -> [aa, a], never [a, aa]).
 4. **Encoding is a broadcast join, not a second algorithm.** Training
    already computed the final symbol sequence of every distinct word,
    so encoding a document = split into words, broadcast-join the
@@ -37,7 +33,7 @@ Spark-first:
 The trainable alphabet here is ``[a-z]+`` words (lower-cased,
 whitespace-split) with the standard ``</w>`` end-of-word marker; a
 production deployment widens the alphabet to bytes, which changes the
-initial symbol split only — the loop, the fold, and the join shapes
+initial symbol split only — the loop, the merge, and the join shapes
 are alphabet-independent.
 
 Oracle: the DuckDB side RETRAINS the same k merges (fully unrolled
@@ -56,11 +52,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.caching import eager_checkpoint, release_local_checkpoint
 from ..functions.crossing import local_frame
 
 EOW = "</w>"
 WORD_RE = "^[a-z]+$"
+
+#: the most distinct trainable words ``collect_word_counts`` brings to
+#: the driver; reference trainers (subword-nmt, HuggingFace
+#: ``tokenizers``) hold the same table in memory
+DRIVER_VOCAB_CAP = 1_000_000
 
 
 def _trainable_words(docs: DataFrame, text_col: str) -> DataFrame:
@@ -74,32 +74,10 @@ def _trainable_words(docs: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def _merge_fold(syms_col, a: str, b: str):
-    """Greedy left-to-right single-pair merge of (a, b) -> a||b over a
-    symbol array, as a fold: the ONLY correct non-iterative way to
-    express the overlap rule ('aaa' + (a,a) -> [aa, a]) in one pass.
-    Word arrays are short (chars + marker), so the per-element array
-    rebuild is bounded — the r5 lambda-CSE trap (SCALE.md) applies to
-    corpus-length arrays, not ~10-symbol words."""
-    return F.aggregate(
-        syms_col,
-        F.array().cast("array<string>"),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(a))
-            & (s == F.lit(b)),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(F.lit(a + b)),
-            ),
-        ).otherwise(F.concat(acc, F.array(s))),
-    )
-
-
 def _merge_fold_py(syms: list, a: str, b: str) -> list:
-    """Pure-Python twin of ``_merge_fold`` — same greedy left-to-right
-    overlap semantics, used by the driver-side fast path (and as the
-    property-test reference for the Spark fold)."""
+    """Greedy left-to-right single-pair merge of (a, b) -> a||b over a
+    symbol list, with the overlap rule ('aaa' + (a,a) -> [aa, a],
+    never [a, aa])."""
     out: list = []
     ab = a + b
     for s in syms:
@@ -110,11 +88,51 @@ def _merge_fold_py(syms: list, a: str, b: str) -> list:
     return out
 
 
-def _train_merges_local(
-    word_counts: list, num_merges: int
-) -> tuple[list, list]:
-    """Driver-side merge loop over a collected (word, count) table:
-    identical algorithm and tie-break as the distributed loop."""
+def collect_word_counts(
+    docs: DataFrame, text_col: str = "text",
+) -> list[tuple[str, int]]:
+    """The trainers' shared corpus scan, collected once: the
+    (word, count) table over the [a-z]+ trainable alphabet. BPE and
+    WordPiece train on EXACTLY this table, so a caller running both
+    (the ``text_profile`` composite) collects it once and passes the
+    list to each."""
+    return collect_capped(
+        _trainable_words(docs, text_col)
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def collect_capped(counts: DataFrame) -> list[tuple[str, int]]:
+    """Collect a (word, count) table to the driver, raising
+    ``ValueError`` when it has more than ``DRIVER_VOCAB_CAP`` rows."""
+    head = counts.take(DRIVER_VOCAB_CAP + 1)
+    if len(head) > DRIVER_VOCAB_CAP:
+        raise ValueError(
+            f"{counts.count()} distinct trainable words exceed "
+            f"DRIVER_VOCAB_CAP={DRIVER_VOCAB_CAP}: the trainers hold "
+            f"the (word, count) table in driver memory"
+        )
+    return [(r[0], int(r[1])) for r in head]
+
+
+def train_bpe(
+    spark,
+    word_counts: list[tuple[str, int]],
+    num_merges: int = 8,
+):
+    """Train ``num_merges`` BPE merges on a ``collect_word_counts``
+    table (the module docstring's steps 2-3).
+
+    Returns ``(words, merges)``: ``words`` is the trained vocabulary
+    DataFrame ``(w, cnt, syms array<string>)`` with the final
+    (post-merge) symbol sequence of every distinct trainable word, a
+    ``local_frame`` over the trained rows; join it to encode.
+    ``merges`` is the learned rank-ordered list of ``(a, b, count)``
+    tuples. Raises if the corpus exhausts pairs before ``num_merges``
+    (keep k small relative to corpus — the differential oracle
+    unrolls exactly k stages).
+    """
     words = {w: [*w, EOW] for w, _ in word_counts}
     counts = dict(word_counts)
     merges: list[tuple[str, str, int]] = []
@@ -134,184 +152,11 @@ def _train_merges_local(
         (a, b), c = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
         merges.append((a, b, int(c)))
         words = {w: _merge_fold_py(s, a, b) for w, s in words.items()}
-    return [(w, counts[w], s) for w, s in words.items()], merges
-
-
-def collect_word_counts(
-    docs: DataFrame, text_col: str = "text",
-    driver_vocab_cap: int = 1_000_000,
-) -> list[tuple[str, int]] | None:
-    """The trainers' shared corpus scan, collected once: the
-    (word, count) table over the [a-z]+ trainable alphabet, or
-    ``None`` when it exceeds ``driver_vocab_cap`` (callers then let
-    each trainer run its distributed loop). BPE and WordPiece train
-    on EXACTLY this table, so a caller running both (the
-    ``text_profile`` composite) passes the one collected list to each
-    via ``word_counts=`` instead of paying the scan + aggregation +
-    driver collect twice (r16; identical results by construction)."""
-    head = (
-        _trainable_words(docs, text_col)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .take(driver_vocab_cap + 1)
+    rows = [(w, counts[w], s) for w, s in words.items()]
+    return (
+        local_frame(spark, rows, "w string, cnt long, syms array<string>"),
+        merges,
     )
-    if len(head) > driver_vocab_cap:
-        return None
-    return [(r["w"], int(r["cnt"])) for r in head]
-
-
-def train_bpe(
-    docs: DataFrame,
-    text_col: str = "text",
-    num_merges: int = 8,
-    driver_vocab_cap: int = 1_000_000,
-    word_counts: list[tuple[str, int]] | None = None,
-):
-    """Train ``num_merges`` BPE merges on the corpus.
-
-    ``word_counts`` (r16): a pre-collected ``collect_word_counts``
-    list — skips this trainer's own scan/collect and goes straight to
-    the driver-side loop (the table is the trainers' shared input, so
-    results are identical; callers running several trainers collect
-    it once).
-
-    Two-phase, like reference trainers (subword-nmt, HuggingFace
-    tokenizers): the corpus-scale work is ONE distributed
-    word-frequency aggregation; the merge loop then runs over the
-    vocabulary-sized count table. When that table fits the driver
-    (``distinct words <= driver_vocab_cap``, the common case — web
-    corpora have ~1e7-1e8 distinct words after the [a-z]+ filter,
-    reference trainers hold exactly this table in memory), the loop
-    runs driver-side: zero per-iteration Spark jobs, identical
-    algorithm and tie-break (equivalence pytest-pinned). Above the
-    cap it falls back to the fully distributed loop below — one
-    vocabulary-sized pair-count job per merge with scalar-only driver
-    traffic, generations lineage-truncated via localCheckpoint.
-
-    Returns ``(words, merges)``: ``words`` is the trained vocabulary
-    DataFrame ``(w, cnt, syms array<string>)`` with the final
-    (post-merge) symbol sequence of every distinct trainable word;
-    join it to encode. On the driver fast path it is a plain
-    ``createDataFrame`` over the locally-trained rows; on the
-    distributed path it is the final generation's eager
-    localCheckpoint (every superseded generation's checkpoint RDD is
-    released — ``functions/caching.py``, RDD-level, since
-    ``Dataset.unpersist`` is a no-op on checkpoints — as soon as its
-    successor materializes, so only this one frame stays pinned). ``merges`` is the learned rank-ordered list of
-    ``(a, b, count)`` tuples. Raises if the corpus exhausts pairs
-    before ``num_merges`` (keep k small relative to corpus — the
-    differential oracle unrolls exactly k stages).
-    """
-    chars = F.filter(F.split(F.col("w"), ""), lambda c: c != F.lit(""))
-    if word_counts is None and driver_vocab_cap > 0:
-        word_counts = collect_word_counts(docs, text_col, driver_vocab_cap)
-    if word_counts is not None:
-        rows, merges = _train_merges_local(word_counts, num_merges)
-        words = local_frame(
-            docs.sparkSession, rows, "w string, cnt long, syms array<string>"
-        )
-        return words, merges
-    counts_df = (
-        _trainable_words(docs, text_col)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-    # Each generation is localCheckpoint'ed (not merely persisted):
-    # an iterative fold nests every prior generation's plan inside the
-    # next InMemoryRelation recipe, so after k iterations the PLAN
-    # TEXT (and analyzer work) grows superlinearly — the standard
-    # Spark iterative-algorithm fix is to truncate lineage per
-    # iteration. Vocabulary-sized data, so the checkpoint is cheap; a
-    # cluster deployment with executor churn would use reliable
-    # checkpointing or land each generation to a scratch table
-    # instead (localCheckpoint storage dies with its executor).
-    # eager_checkpoint (stat-less leaves), not plain localCheckpoint:
-    # each generation's plan reads the previous generation's leaf, so
-    # origin-stats inheritance compounds the size estimate per merge —
-    # at thousands of merges the same BigInteger optimizer grind
-    # diagnosed on NN-descent (r13 verdict #5). eager=False keeps the
-    # materialize-with-next-job shape documented below.
-    words = eager_checkpoint(counts_df.withColumn(
-        "syms", F.concat(chars, F.array(F.lit(EOW)))
-    ), eager=False)
-
-    merges: list[tuple[str, str, int]] = []
-    prev: DataFrame | None = None
-    try:
-        for it in range(num_merges):
-            n1 = F.size("syms") - 1
-            pair_rows = (
-                words.select(
-                    "cnt",
-                    F.explode(
-                        F.when(
-                            n1 < 1,
-                            F.array().cast(
-                                "array<struct<a:string,b:string>>"
-                            ),
-                        ).otherwise(
-                            F.zip_with(
-                                F.slice("syms", 1, n1),
-                                F.slice("syms", 2, n1),
-                                lambda x, y: F.struct(
-                                    x.alias("a"), y.alias("b")
-                                ),
-                            )
-                        )
-                    ).alias("p"),
-                )
-                .groupBy("p.a", "p.b")
-                .agg(F.sum("cnt").alias("c"))
-                .orderBy(F.col("c").desc(), "a", "b")
-                .limit(1)
-                .collect()
-            )
-            if not pair_rows:
-                raise ValueError(
-                    f"corpus exhausted adjacent pairs after "
-                    f"{len(merges)} merges; num_merges={num_merges} "
-                    f"is too large for this corpus"
-                )
-            a, b, c = pair_rows[0]["a"], pair_rows[0]["b"], pair_rows[0]["c"]
-            merges.append((a, b, int(c)))
-            # The collect above materialized THIS generation's
-            # checkpoint, so the one before it is no longer an input of
-            # anything — release its RDD blocks now. NB
-            # ``Dataset.unpersist`` would be a no-op here
-            # (localCheckpoint persists at the RDD level, below the
-            # cache manager — r7 ADVICE); the helper unpersists the
-            # LogicalRDD's underlying RDD, which actually frees the
-            # blocks. Never release before the successor materializes:
-            # the lineage is truncated, so the blocks are the only
-            # copy.
-            if prev is not None:
-                release_local_checkpoint(prev)
-            prev = words
-            # eager=False: the checkpoint materializes with the NEXT
-            # iteration's pair-count job instead of spending a
-            # dedicated job per generation — halves the serial job
-            # count of the training loop (the loop's cost at small
-            # scale is job launch latency, not data). The FINAL
-            # generation is eager so its predecessor can be released
-            # before returning.
-            words = eager_checkpoint(words.select(
-                "w", "cnt", _merge_fold(F.col("syms"), a, b).alias("syms")
-            ), eager=it == num_merges - 1)
-    except BaseException:
-        # error-path release (r8 ADVICE): when the corpus-exhausts-
-        # pairs ValueError (or any job failure) fires mid-loop, the
-        # pinned checkpoint RDDs for prev/words would otherwise leak
-        # for the session — the funnel_counts / pq_train try/finally
-        # discipline. release_local_checkpoint is a safe no-op on a
-        # never-materialized lazy checkpoint.
-        for frame in (prev, words):
-            if frame is not None:
-                release_local_checkpoint(frame)
-        raise
-    if prev is not None:
-        release_local_checkpoint(prev)
-    return words, merges
 
 
 def encode_token_counts(

@@ -129,7 +129,7 @@ def pagerank_fixed(
         )
         # generation t is fully materialized into t+1 (eager) — free
         # its blocks so peak storage is O(1) generations, not
-        # O(iterations) (the CC/BPE release discipline).
+        # O(iterations) (the CC/NN-descent release discipline).
         release_local_checkpoint(ranks)
         ranks = new_ranks
     in_deg = e.groupBy("__d").agg(F.count(F.lit(1)).alias("__ind"))

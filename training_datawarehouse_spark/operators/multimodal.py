@@ -56,77 +56,6 @@ _CODEC_ERRORS = (
     struct.error, zlib.error, wave.Error,
 )
 
-# Optional PIL/Pillow accelerator (round-3 verdict task 4). The probe
-# runs once per Python worker at import; this sandbox ships no PIL, so
-# the stdlib codecs carry — but when PIL IS present, PNG *decode*
-# (the one content-scaling per-pixel Python cost: the Average/Paeth
-# un-filter loops) routes through its C un-filtering instead. The fast
-# path is decode-only and PNG-only BY DESIGN: PNG decode is lossless,
-# so PIL's pixels are bit-identical to the stdlib decoder's and every
-# downstream checksum/oracle hash is unchanged; re-encode always uses
-# this module's deterministic ``encode_png`` (PIL's zlib settings
-# would change output bytes), and JPEG stays on ``jpeg.decode_jpeg``
-# because libjpeg's approximate integer IDCT is NOT bit-identical to
-# that codec's exact orthonormal IDCT — an accelerator must never
-# change answers. Parity is asserted in
-# tests/test_streaming_multimodal.py (fake-PIL routing test always;
-# real-PIL pixel parity auto-activates when Pillow is installed).
-try:  # pragma: no cover - depends on the environment
-    from PIL import Image as _PILImage  # type: ignore
-except ImportError:
-    _PILImage = None
-
-
-def _pil_decode_png(data: bytes) -> dict:
-    """PIL-backed decode with ``decode_png``'s exact return contract
-    ({width, height, bit_depth, color_type, pixels}). Only the 8-bit
-    grayscale subset the stdlib codec supports is accepted — anything
-    else raises into ``_CODEC_ERRORS`` so both paths degrade to the
-    same documented stub behavior.
-
-    The gate parses the IHDR from the RAW BYTES, not PIL's normalized
-    ``mode``: PIL reports mode 'L' for 2-/4-bit and Adam7-interlaced
-    grayscale PNGs too — inputs ``decode_png`` rejects — so trusting
-    the mode would make answers environment-dependent (decode under
-    Pillow, stub without), violating the accelerator-never-changes-
-    answers invariant. IHDR is the first chunk by spec: after the
-    8-byte signature come length+type (8 bytes) and the 13-byte body,
-    whose bit_depth / color_type / compression / filter / interlace
-    bytes sit at offsets 24..28. All five must match the stdlib gate
-    exactly: (8, 0, 0, 0, 0)."""
-    import io
-
-    if len(data) < 29 or data[12:16] != b"IHDR" or tuple(data[24:29]) != (
-        8, 0, 0, 0, 0
-    ):
-        raise NotImplementedError(
-            "PIL fast path covers 8-bit non-interlaced grayscale PNG only"
-        )
-    img = _PILImage.open(io.BytesIO(data))
-    img.load()
-    if getattr(img, "format", None) != "PNG" or img.mode != "L":
-        raise NotImplementedError(
-            "PIL fast path covers 8-bit grayscale PNG only"
-        )
-    w, h = img.size
-    return {
-        "width": w, "height": h, "bit_depth": 8, "color_type": 0,
-        "pixels": img.tobytes(),
-    }
-
-
-def decode_png_auto(data: bytes) -> dict:
-    """PNG decode via PIL when available, stdlib codec otherwise.
-    OSError joins the caught set because PIL signals undecodable
-    streams with it; the stdlib codec then gets its say (and raises
-    the canonical ``_CODEC_ERRORS`` member if it also rejects)."""
-    if _PILImage is not None:
-        try:
-            return _pil_decode_png(data)
-        except _CODEC_ERRORS + (OSError,):
-            pass
-    return decode_png(data)
-
 
 def _paeth(a: int, b: int, c: int) -> int:
     """PNG Paeth predictor (spec §9.4)."""
@@ -373,7 +302,7 @@ def png_decode_meta(payload: bytes) -> dict:
     that only a correct decoder can produce."""
     if payload is None or len(payload) == 0:
         raise ValueError("empty payload")
-    img = decode_png_auto(payload)
+    img = decode_png(payload)
     return {
         "n_bytes": len(img["pixels"]),
         "format": "png",

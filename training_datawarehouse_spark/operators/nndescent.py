@@ -29,17 +29,16 @@ Spark-first shape (100 TB posture):
   general-degree (2k)², independent of n), one distance evaluation on
   the candidate edges, one per-node top-k window. Every step shuffles
   on node ids; nothing materializes beyond candidate grain.
-- Iterations are eagerly checkpointed and the previous graph released
-  (the train_wordpiece discipline): the plan never compounds across
-  iterations, and a failed build leaks nothing.
-- The published production refinements are IMPLEMENTED, not prose
-  (the r10 lesson): the incremental new-neighbor flag (Algorithm 2 —
-  result-identical, parity-tested, on by default so the registry
-  entry ships the production shape) and the sample-rate cap (an
-  approximation, priced by its recall test, off by default). Early
-  termination on update count is the one knob deliberately left out:
-  the oracle RETRAINS the graph and a FIXED iteration count is what
-  keeps it closed-form.
+- Iterations are eagerly checkpointed and the previous graph
+  released: the plan never compounds across iterations, and a failed
+  build leaks nothing.
+- The incremental new-neighbor flag (the paper's Algorithm 2) is
+  implemented — result-identical, parity-tested, on by default so the
+  registry entry ships the production shape. The paper's sample-rate
+  cap and early termination on update count are left out: both are
+  approximations, and the oracle RETRAINS the graph, so a FIXED
+  iteration count over the full local join is what keeps it
+  closed-form.
 - ``nnd_search`` serves NON-member queries by greedy beam descent
   over the built graph — per hop one slim equi-join against the
   n·k edge list + one candidate-vector join, amortized over the
@@ -117,7 +116,6 @@ def nnd_graph(
     k: int = 8,
     iters: int = 3,
     incremental: bool = True,
-    sample: int | None = None,
 ) -> DataFrame:
     """Directed k-NN graph (src, dst, cos) after ``iters`` NN-descent
     rounds from the deterministic hash-ring init. ``cos`` is cosine
@@ -134,15 +132,7 @@ def nnd_graph(
     parity-tested), but the scoring volume collapses after the first
     rounds instead of re-evaluating every settled neighborhood — the
     knob that matters at 10⁹ nodes, implemented and tested rather
-    than documented.
-
-    ``sample`` (the paper's sample-rate ρ, as an absolute per-center
-    cap): before the local join, each center keeps only its ``sample``
-    general-neighborhood entries with the smallest
-    ``md5(center‖node)`` — a deterministic stand-in for the paper's
-    random sampling, so runs are reproducible. Cuts the per-center
-    join fan-out from (2k)² to sample²; an APPROXIMATION (unlike
-    ``incremental``), priced by the recall test, default off."""
+    than documented."""
     nodes = emb.select(
         F.col(id_col).alias("nid"), _as_double(F.col(vec_col)).alias("v")
     )
@@ -173,12 +163,12 @@ def nnd_graph(
     )
     g = _score(nodes, ring).withColumn("new", F.lit(True)) \
         .transform(eager_checkpoint)
-    return _refine(nodes, g, k, iters, incremental, sample)
+    return _refine(nodes, g, k, iters, incremental)
 
 
 def _refine(
     nodes: DataFrame, g: DataFrame, k: int, iters: int,
-    incremental: bool, sample: int | None,
+    incremental: bool,
 ) -> DataFrame:
     """The NN-descent iteration loop over a flagged (src, dst, cos,
     new) CHECKPOINTED graph. Takes ownership of ``g`` (releases it);
@@ -200,23 +190,6 @@ def _refine(
                 g.select(F.col("dst").alias("c"),
                          F.col("src").alias("nid"), "new")
             )
-            if sample is not None:
-                # the round index rotates the sample (the paper's
-                # fresh ρ-sample per iteration): a FIXED per-center
-                # sample would stay blind to the same excluded pairs
-                # every round, so capped hot centers could never try
-                # them; rotation restores eventual coverage
-                ws = Window.partitionBy("c").orderBy(
-                    F.md5(F.concat_ws("|", F.col("c").cast("string"),
-                                      F.col("nid").cast("string"),
-                                      F.lit(str(it)))),
-                    "nid",
-                )
-                und = (
-                    und.withColumn("__sr", F.row_number().over(ws))
-                    .filter(F.col("__sr") <= sample)
-                    .drop("__sr")
-                )
             # local join: nodes sharing a center become candidates;
             # under the incremental flag a settled pair (both old) was
             # already tried the round its later member arrived

@@ -30,15 +30,11 @@ segmentations of each word:
 
 Spark-first shape (the BPE discipline, ``bpe.py`` two-phase): the
 corpus is touched ONCE (the word-frequency aggregation — map-side
-combinable, vocabulary-sized output); the EM loop then runs over the
-(word, count) table. Below ``driver_vocab_cap`` that table collects
-and the loop is driver-side Python (how reference trainers hold it);
-above the cap each E-step is ONE Arrow-batched ``map_batches`` pass
-over the distributed word table running the identical per-word
-function with the (model-sized, ≤V entries) probability table closed
-over — per-iteration driver traffic is V micro-count longs, the
-k-means scalar-traffic shape. Scoring is a broadcast join of the
-(vocabulary-sized) per-word stats table — no per-document DP replay.
+combinable, vocabulary-sized output, collected to the driver by
+``collect_word_counts``); the EM loop then runs driver-side over the
+(word, count) table, as reference trainers hold it. Scoring is a
+broadcast join of the (vocabulary-sized) per-word stats table — no
+per-document DP replay.
 
 Cross-engine exactness contract (every value hash-checks): α/β/e are
 IEEE doubles computed in a pinned operation order (l ascending,
@@ -60,10 +56,12 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
-from ..functions.crossing import local_frame, map_batches
+from ..functions.crossing import local_frame
 from ..functions.scalars import round_half_away
+from .bpe import collect_capped
+
 #: trainable-word alphabet: the BPE [a-z]+ rule PLUS an explicit
 #: 127-char length cap — the oracle's position/length expansion uses
 #: constant-bound ranges (DuckDB's range() cannot take a lateral
@@ -170,10 +168,34 @@ def seed_vocab(word_counts: list, vocab_size: int, max_len: int) -> dict:
     }
 
 
-def _train_local(word_counts: list, vocab_size: int, max_len: int,
-                 iters: int) -> dict:
-    """Driver-side EM loop — the algorithmic reference the distributed
-    E-step and the SQL oracle must both reproduce exactly."""
+def collect_word_counts(
+    docs: DataFrame, text_col: str = "text",
+) -> list[tuple[str, int]]:
+    """The unigram family's corpus scan, collected once: the
+    (word, count) table over ``ULM_WORD_RE``. A caller that both
+    trains (``train_unigram``) and scores (``doc_unigram_scores``)
+    passes the one collected table to each — the scorer's
+    distinct-word set is exactly its keys."""
+    return collect_capped(
+        docs.select(
+            F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("w")
+        )
+        .filter(F.col("w").rlike(ULM_WORD_RE))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
+def train_unigram(
+    word_counts: list[tuple[str, int]],
+    vocab_size: int = 40,
+    max_len: int = 3,
+    iters: int = 2,
+) -> dict:
+    """Train the unigram model on a ``collect_word_counts`` table;
+    returns the final ``{piece: prob}`` dict (model-sized). The EM
+    loop runs on the driver — the algorithmic reference the SQL
+    oracle must reproduce exactly."""
     probs = seed_vocab(word_counts, vocab_size, max_len)
     for _ in range(iters):
         micro = {q: 0 for q in probs}
@@ -190,151 +212,13 @@ def _train_local(word_counts: list, vocab_size: int, max_len: int,
     return probs
 
 
-def _estep_distributed(words_df: DataFrame, probs: dict,
-                       max_len: int) -> dict:
-    """One distributed E-step: Arrow-batched pass over the (w, n)
-    table running ``_estep_word`` per row (identical floats — same
-    Python arithmetic, executor-side), partial micro sums per batch,
-    ONE vocabulary-sized aggregation back to the driver."""
-    schema = T.StructType([
-        T.StructField("piece", T.StringType()),
-        T.StructField("micro", T.LongType()),
-    ])
-
-    def run(ws: list, ns: list) -> list:
-        acc: dict = {}
-        for w, n in zip(ws, ns):
-            for q, m in _estep_word(str(w), int(n), probs, max_len):
-                acc[q] = acc.get(q, 0) + m
-        return list(acc.items())
-
-    rows = (
-        map_batches(words_df, ["w", "n"], schema, run)
-        .groupBy("piece")
-        .agg(F.sum("micro").alias("micro"))
-        .collect()
-    )
-    micro = {q: 0 for q in probs}
-    for r in rows:
-        micro[r["piece"]] = r["micro"]
-    return micro
-
-
-def collect_word_counts(
-    docs: DataFrame, text_col: str = "text",
-    driver_vocab_cap: int = 1_000_000,
-) -> list[tuple[str, int]] | None:
-    """The unigram family's corpus scan, collected once: the
-    (word, count) table over ``ULM_WORD_RE``, or ``None`` above the
-    cap. A caller that both trains (``train_unigram``) and scores
-    (``doc_unigram_scores``) passes the one collected list to each —
-    the scorer's distinct-word set is exactly these keys, so the
-    former second corpus scan + collect is free (r16; identical
-    results by construction)."""
-    head = (
-        docs.select(
-            F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("w")
-        )
-        .filter(F.col("w").rlike(ULM_WORD_RE))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .take(driver_vocab_cap + 1)
-    )
-    if len(head) > driver_vocab_cap:
-        return None
-    return [(r["w"], int(r["n"])) for r in head]
-
-
-def train_unigram(
-    docs: DataFrame,
-    text_col: str = "text",
-    vocab_size: int = 40,
-    max_len: int = 3,
-    iters: int = 2,
-    driver_vocab_cap: int = 1_000_000,
-    word_counts: list[tuple[str, int]] | None = None,
-) -> dict:
-    """Train the unigram model on the corpus; returns the final
-    ``{piece: prob}`` dict (model-sized). One corpus scan (the word
-    frequency aggregation); the EM loop is driver-side under the cap
-    and per-iteration ``map_batches`` passes above it (identical
-    results — the two E-steps run the same per-word Python function
-    and the micro-unit sums are exact; parity-tested).
-
-    ``word_counts`` (r16): a pre-collected ``collect_word_counts``
-    list — skips this trainer's own scan/collect (identical results;
-    the composite caller shares the scan with the scorer)."""
-    if word_counts is not None:
-        return _train_local(word_counts, vocab_size, max_len, iters)
-    counts_df = (
-        docs.select(
-            F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("w")
-        )
-        .filter(F.col("w").rlike(ULM_WORD_RE))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    if driver_vocab_cap > 0:
-        head = counts_df.take(driver_vocab_cap + 1)
-        if len(head) <= driver_vocab_cap:
-            return _train_local(
-                [(r["w"], int(r["n"])) for r in head],
-                vocab_size, max_len, iters,
-            )
-    # distributed loop: seed still needs the candidate counts — they
-    # are vocabulary-shaped (bounded by Σ|w|·P distinct substrings of
-    # DISTINCT words), aggregated in one job
-    cand_rows = (
-        counts_df.select(
-            "n",
-            F.explode(
-                F.flatten(F.expr(
-                    f"transform(sequence(1, length(w)), i -> "
-                    f"transform(sequence(1, least({max_len}, "
-                    f"length(w) - i + 1)), l -> substring(w, i, l)))"
-                ))
-            ).alias("piece"),
-        )
-        .groupBy("piece")
-        .agg(F.sum("n").alias("c"))
-        .collect()
-    )
-    cand = {r["piece"]: int(r["c"]) for r in cand_rows}
-    chars = sorted(q for q in cand if len(q) == 1)
-    multis = sorted(
-        (q for q in cand if len(q) > 1), key=lambda q: (-cand[q], q)
-    )[: max(0, vocab_size - len(chars))]
-    vocab = chars + multis
-    total = sum(cand[q] for q in vocab)
-    probs = {
-        q: max(round_half_away(cand[q] / total, 6), P_FLOOR)
-        for q in vocab
-    }
-    words = counts_df.persist()
-    try:
-        for _ in range(iters):
-            micro = _estep_distributed(words, probs, max_len)
-            ctot = sum(micro.values())
-            if ctot == 0:
-                raise ValueError(
-                    "degenerate corpus: zero expected counts"
-                )
-            probs = {
-                q: max(round_half_away(micro[q] / ctot, 6), P_FLOOR)
-                for q in probs
-            }
-    finally:
-        words.unpersist()
-    return probs
-
-
 def doc_unigram_scores(
     docs: DataFrame,
     probs: dict,
+    words: list[str],
     id_col: str = "doc_id",
     text_col: str = "text",
     max_len: int = 3,
-    words: list[str] | None = None,
 ) -> DataFrame:
     """Per-document scores under the trained model: ``ulm_nll`` =
     Σ over trainable word occurrences of −ln Z(word), and
@@ -343,25 +227,12 @@ def doc_unigram_scores(
     Documents with no trainable word are absent (LEFT-join from the
     caller).
 
-    ``words`` (r16): the distinct trainable words, when the caller
-    already holds them (``collect_word_counts`` keys — the trainer's
-    table has exactly the scorer's distinct-word set, so passing it
-    drops this function's own corpus scan + collect; sorted here
-    either way)."""
+    ``words``: the distinct trainable words (the
+    ``collect_word_counts`` keys — the trainer's table has exactly the
+    scorer's distinct-word set)."""
     spark = docs.sparkSession
     # the distinct-word stats table: vocabulary-sized, computed once
-    words = sorted(set(words) if words is not None else {
-        r["w"] for r in (
-            docs.select(
-                F.explode(
-                    F.split(F.lower(F.col(text_col)), " ")
-                ).alias("w")
-            )
-            .filter(F.col("w").rlike(ULM_WORD_RE))
-            .distinct()
-            .collect()
-        )
-    })
+    words = sorted(set(words))
     stat_rows = []
     for w in words:
         nll_micro, exp_micro = _word_stats(w, probs, max_len)

@@ -18,11 +18,9 @@ merges (``merge('a', '##b') = 'ab'``, ``merge('##a', '##b') =
 training corpus's own words, and no unseen-word inference is built.
 
 Spark-first shape — the ``train_bpe`` two-phase discipline exactly:
-ONE corpus-scale word-frequency aggregation, then the merge loop over
-the vocabulary-sized table (driver-side under ``driver_vocab_cap``,
-fully distributed above it with one pair-count + one symbol-count
-aggregation per merge, scalar-only driver traffic,
-localCheckpoint-truncated generations released as superseded).
+ONE corpus-scale word-frequency aggregation
+(``bpe.collect_word_counts``), then the merge loop on the driver over
+the vocabulary-sized table.
 
 Cross-engine exactness: pair and symbol counts are exact int64s;
 ``score`` is the ONE division both engines compute on the same ints
@@ -44,9 +42,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.caching import eager_checkpoint, release_local_checkpoint
 from ..functions.crossing import local_frame
-from .bpe import WORD_RE, _trainable_words
+from .bpe import WORD_RE
 
 CONT = "##"
 
@@ -72,24 +69,6 @@ def _merge_fold_py(syms: list, a: str, b: str) -> list:
     return out
 
 
-def _merge_fold(syms_col, a: str, b: str):
-    """Column twin of ``_merge_fold_py`` (the ``bpe._merge_fold``
-    fold shape with an explicit merged symbol)."""
-    return F.aggregate(
-        syms_col,
-        F.array().cast("array<string>"),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(a))
-            & (s == F.lit(b)),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(F.lit(_merged_sym(a, b))),
-            ),
-        ).otherwise(F.concat(acc, F.array(s))),
-    )
-
-
 def _best_pair_py(words: dict, counts: dict):
     pc: dict = {}
     sc: dict = {}
@@ -112,7 +91,17 @@ def _best_pair_py(words: dict, counts: dict):
     return best[0][0], best[0][1], best[1]
 
 
-def _train_local(word_counts: list, num_merges: int):
+def train_wordpiece(
+    spark,
+    word_counts: list[tuple[str, int]],
+    num_merges: int = 6,
+):
+    """Train ``num_merges`` WordPiece merges on a
+    ``bpe.collect_word_counts`` table — WordPiece trains on EXACTLY
+    BPE's (word, count) table, so a caller running both collects it
+    once. Returns ``(words, merges)`` shaped exactly like
+    ``bpe.train_bpe`` (``words`` = (w, cnt, syms) with ##-prefixed
+    continuation symbols)."""
     words = {w: _init_syms_py(w) for w, _ in word_counts}
     counts = dict(word_counts)
     merges: list[tuple[str, str, int]] = []
@@ -127,126 +116,11 @@ def _train_local(word_counts: list, num_merges: int):
         a, b, c = got
         merges.append((a, b, int(c)))
         words = {w: _merge_fold_py(s, a, b) for w, s in words.items()}
-    return [(w, counts[w], s) for w, s in words.items()], merges
-
-
-def train_wordpiece(
-    docs: DataFrame,
-    text_col: str = "text",
-    num_merges: int = 6,
-    driver_vocab_cap: int = 1_000_000,
-    word_counts: list[tuple[str, int]] | None = None,
-):
-    """Train ``num_merges`` WordPiece merges; returns ``(words,
-    merges)`` shaped exactly like ``bpe.train_bpe`` (``words`` =
-    (w, cnt, syms) with ##-prefixed continuation symbols).
-
-    Driver fast path under the vocab cap (identical algorithm,
-    equivalence pytest-pinned); above it the distributed loop runs
-    one pair-count job and one symbol-count job per merge — both
-    vocabulary-sized, map-side combinable, scalar-only driver
-    traffic — with the BPE generation-checkpoint release discipline
-    (incl. the error path).
-
-    ``word_counts`` (r16): a pre-collected ``bpe.collect_word_counts``
-    list — WordPiece trains on EXACTLY the same (word, count) table as
-    BPE, so a caller running both collects it once and passes it to
-    each trainer (identical results by construction)."""
-    from .bpe import collect_word_counts
-
-    if word_counts is None and driver_vocab_cap > 0:
-        word_counts = collect_word_counts(docs, text_col, driver_vocab_cap)
-    if word_counts is not None:
-        rows, merges = _train_local(word_counts, num_merges)
-        words = local_frame(
-            docs.sparkSession, rows, "w string, cnt long, syms array<string>"
-        )
-        return words, merges
-    counts_df = (
-        _trainable_words(docs, text_col)
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+    rows = [(w, counts[w], s) for w, s in words.items()]
+    return (
+        local_frame(spark, rows, "w string, cnt long, syms array<string>"),
+        merges,
     )
-
-    chars = F.filter(F.split(F.col("w"), ""), lambda c: c != F.lit(""))
-    init = F.transform(
-        chars,
-        lambda ch, i: F.when(i == 0, ch).otherwise(F.concat(F.lit(CONT), ch)),
-    )
-    # stat-less generation leaves, lazy materialization — see the BPE
-    # loop's note (r13 verdict #5: per-merge origin-stats inheritance
-    # would compound size estimates across thousands of generations)
-    words = eager_checkpoint(
-        counts_df.withColumn("syms", init), eager=False)
-    merges: list[tuple[str, str, int]] = []
-    prev: DataFrame | None = None
-    try:
-        for it in range(num_merges):
-            n1 = F.size("syms") - 1
-            pairs = (
-                words.select(
-                    "cnt",
-                    F.explode(
-                        F.when(
-                            n1 < 1,
-                            F.array().cast(
-                                "array<struct<a:string,b:string>>"
-                            ),
-                        ).otherwise(
-                            F.zip_with(
-                                F.slice("syms", 1, n1),
-                                F.slice("syms", 2, n1),
-                                lambda x, y: F.struct(
-                                    x.alias("a"), y.alias("b")
-                                ),
-                            )
-                        )
-                    ).alias("p"),
-                )
-                .groupBy("p.a", "p.b")
-                .agg(F.sum("cnt").alias("c"))
-            )
-            syms = (
-                words.select("cnt", F.explode("syms").alias("s"))
-                .groupBy("s")
-                .agg(F.sum("cnt").alias("sc"))
-            )
-            best = (
-                pairs
-                .join(syms.withColumnsRenamed({"s": "a", "sc": "ca"}), "a")
-                .join(syms.withColumnsRenamed({"s": "b", "sc": "cb"}), "b")
-                .select(
-                    "a", "b", "c",
-                    (F.col("c") / (F.col("ca").cast("double")
-                                   * F.col("cb").cast("double")))
-                    .alias("score"),
-                )
-                .orderBy(F.col("score").desc(), "a", "b")
-                .limit(1)
-                .collect()
-            )
-            if not best:
-                raise ValueError(
-                    f"corpus exhausted adjacent pairs after "
-                    f"{len(merges)} merges; num_merges={num_merges} "
-                    f"is too large for this corpus"
-                )
-            a, b, c = best[0]["a"], best[0]["b"], best[0]["c"]
-            merges.append((a, b, int(c)))
-            if prev is not None:
-                release_local_checkpoint(prev)
-            prev = words
-            words = eager_checkpoint(words.select(
-                "w", "cnt", _merge_fold(F.col("syms"), a, b).alias("syms")
-            ), eager=it == num_merges - 1)
-    except BaseException:
-        for frame in (prev, words):
-            if frame is not None:
-                release_local_checkpoint(frame)
-        raise
-    if prev is not None:
-        release_local_checkpoint(prev)
-    return words, merges
 
 
 def encode_token_counts(
@@ -271,12 +145,6 @@ def encode_token_counts(
     )
 
 
-def merges_tag(merges: list[tuple[str, str, int]]) -> str:
-    """The learned merge sequence as a constant column value, so the
-    oracle checks training symbol-for-symbol."""
-    return ",".join(f"{a}+{b}" for a, b, _ in merges)
-
-
 def wordpiece_oracle_ctes(num_merges: int = 6, src: str = "documents",
                           text_col: str = "text") -> str:
     """DuckDB CTE block that RETRAINS the same ``num_merges``
@@ -285,7 +153,8 @@ def wordpiece_oracle_ctes(num_merges: int = 6, src: str = "documents",
     and the likelihood-ratio argmax. Symbol sequences are strings
     shaped ``' a ##b ##c '``; the greedy merge reuses the recursive
     (done, todo) scan with the ##-stripped merged symbol. Emits
-    wp_w0..wp_wK, wp_b1..wp_bK, wp_merge_tag, wp_enc. Must be
+    wp_w0..wp_wK, wp_b1..wp_bK, wp_merge_tag (the ``bpe.merges_tag``
+string), wp_enc. Must be
     spliced into a WITH RECURSIVE."""
     parts = [f"""
 wp_tw AS MATERIALIZED (

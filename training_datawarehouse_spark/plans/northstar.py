@@ -2103,11 +2103,8 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _bpe_wp_track():
         _label("BPE/WordPiece track")
         wc = bpe.collect_word_counts(docs, "text")
-        trained_bpe = bpe.train_bpe(docs, "text", num_merges=8,
-                                    word_counts=wc)
-        trained_wp = wpc.train_wordpiece(docs, "text", num_merges=6,
-                                         word_counts=wc)
-        return trained_bpe, trained_wp
+        return (bpe.train_bpe(spark, wc, num_merges=8),
+                wpc.train_wordpiece(spark, wc, num_merges=6))
 
     def _dsir_track():
         _label("DSIR track")
@@ -2129,12 +2126,9 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _ulm_track():
         _label("unigram-LM track")
         wc = ug.collect_word_counts(docs, "text")
-        uprobs = ug.train_unigram(docs, "text", vocab_size=40,
-                                  max_len=3, iters=2, word_counts=wc)
-        usc = ug.doc_unigram_scores(
-            docs, uprobs, "doc_id", "text",
-            words=[w for w, _ in wc] if wc is not None else None,
-        )
+        uprobs = ug.train_unigram(wc, vocab_size=40, max_len=3, iters=2)
+        usc = ug.doc_unigram_scores(docs, uprobs, [w for w, _ in wc],
+                                    "doc_id", "text")
         return uprobs, usc
 
     tracks = {"lm": _lm_track, "bpe_wp": _bpe_wp_track,
@@ -2170,7 +2164,7 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wenc = wpc.encode_token_counts(docs, wvocab, "doc_id", "text")
     prof = prof.join(wenc, "doc_id", "left").withColumn(
-        "wp_merges", F.lit(wpc.merges_tag(wmerges))
+        "wp_merges", F.lit(bpe.merges_tag(wmerges))
     )
     return prof
 

@@ -1822,7 +1822,7 @@ def _kmv_stages(spark: SparkSession, ev: DataFrame,
             release_local_checkpoint(sk)
         return out
     du = distinct.localCheckpoint(eager=True)
-    # error-path release discipline (the train_wordpiece pattern): if
+    # error-path release discipline (the nnd_graph pattern): if
     # anything below throws, both eager checkpoints must be freed
     # before re-raising or their RDDs leak for the session's lifetime
     sk = None
