@@ -4,8 +4,9 @@ results BYTE-IDENTICAL to their reference loops. These tests pin:
 - the vectorized synthesis/fingerprint kernels (token grids, wave
   mixture, batch DFT fingerprint) against their pre-r16 per-element
   reference loops, re-implemented here verbatim as the fixed point;
-- the trainers' shared ``collect_word_counts`` scan and its
-  driver-memory refusal;
+- the tokenizer trainers' shared ``bpe.collect_word_counts`` scan, the
+  unigram trainer's length-filtered view of it, and its driver-memory
+  refusal;
 - the ``materialize=True`` pair passes against their lazy plans.
 
 The composite-level guarantees (lsh_cross_modal's materialized pair
@@ -128,15 +129,31 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_collect_word_counts_matches_trainer_scan(docs, monkeypatch):
+def test_collect_word_counts_matches_trainer_scan(spark, docs, monkeypatch):
+    from pyspark.sql import functions as F
+
     wc = bpe.collect_word_counts(docs, "text")
     assert dict(wc)["aa"] == 6
-    assert dict(ug.collect_word_counts(docs, "text")) == dict(wc)
-    # over the cap both scans refuse, naming the count and the cap
+    # the unigram trainer's table is the shared one less words over 127
+    # characters: exactly the scan ULM_WORD_RE (the scorer's filter)
+    # selects, with the same counts
+    long_docs = docs.unionByName(spark.createDataFrame(
+        [(4, "a" * 127 + " " + "b" * 128 + " aa")],
+        "doc_id long, text string"))
+    ulm_scan = {
+        r["w"]: r["n"] for r in long_docs.select(
+            F.explode(F.split(F.lower("text"), " ")).alias("w"))
+        .filter(F.col("w").rlike(ug.ULM_WORD_RE))
+        .groupBy("w").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    shared = bpe.collect_word_counts(long_docs, "text")
+    assert "b" * 128 in dict(shared)
+    assert {w: n for w, n in shared if len(w) <= 127} == ulm_scan
+    assert ulm_scan["a" * 127] == 1 and ulm_scan["aa"] == 7
+    # over the cap the scan refuses, naming the count and the cap
     monkeypatch.setattr(bpe, "DRIVER_VOCAB_CAP", 3)
-    for collect in (bpe.collect_word_counts, ug.collect_word_counts):
-        with pytest.raises(ValueError, match=r"^24 distinct .*CAP=3\b"):
-            collect(docs, "text")
+    with pytest.raises(ValueError, match=r"^24 distinct .*CAP=3\b"):
+        bpe.collect_word_counts(docs, "text")
 
 
 def _persistent_rdd_ids(spark):

@@ -287,8 +287,7 @@ def test_search_covers_queries_with_repless_entry_cells(spark):
     """r16 (the r15 verdict's empty-rep seam): an IVF cell with no
     layer member yields no representative, so a query assigned only
     to rep-less cells used to get ZERO frontier rows and silently
-    vanish from ``nnd_search``'s result. The library now provides the
-    safe default (``cover_missing=True``): uncovered queries fall
+    vanish from ``nnd_search``'s result. Now uncovered queries fall
     back to the global md5-least entries — bit-identical to the
     no-``entry_df`` descent for those queries — while covered queries
     are untouched. The cell is PLANTED: reps for one query's nearest
@@ -347,12 +346,6 @@ def test_search_covers_queries_with_repless_entry_cells(spark):
                 .select("query_id").collect()}
     assert 200 in stranded
 
-    # the seam, pinned: without the safe default the stranded queries
-    # are simply ABSENT from the result
-    legacy = nnd_search(g, mog, qdf, k=5, beam=10, hops=3,
-                        entry_df=entries, cover_missing=False).collect()
-    assert {r["query_id"] for r in legacy}.isdisjoint(stranded)
-
     covered_rows = nnd_search(g, mog, qdf, k=5, beam=10, hops=3,
                               entry_df=entries).collect()
     got = {}
@@ -374,12 +367,17 @@ def test_search_covers_queries_with_repless_entry_cells(spark):
             (r["rank"], r["neighbor_id"], r["cos"]))
     for qid in stranded:
         assert sorted(got[qid]) == sorted(want[qid])
-    # covered queries untouched by the fallback arm
-    legacy_by_q = {}
-    for r in legacy:
-        legacy_by_q.setdefault(r["query_id"], []).append(
+    # covered queries untouched by the fallback arm: they read the same
+    # as a search over the covered queries alone, where none falls back
+    alone = nnd_search(
+        g, mog, qdf.filter(~F.col("query_id").isin(*stranded)),
+        k=5, beam=10, hops=3, entry_df=entries).collect()
+    alone_by_q = {}
+    for r in alone:
+        alone_by_q.setdefault(r["query_id"], []).append(
             (r["rank"], r["neighbor_id"], r["cos"]))
-    for qid, v in legacy_by_q.items():
+    assert set(alone_by_q) == set(got) - stranded
+    for qid, v in alone_by_q.items():
         assert sorted(got[qid]) == sorted(v)
 
 

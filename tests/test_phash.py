@@ -210,6 +210,5 @@ def test_cap_grain_rep_small_groups_unchanged(spark):
         "id long, b0 int, b1 int, b2 int, b3 int",
     )
     pairs = {(r["id_a"], r["id_b"]): r["hamming"]
-             for r in ph.phash_candidate_pairs(
-                 sig, max_bucket=10).collect()}
+             for r in ph.phash_candidate_pairs(sig).collect()}
     assert pairs == {(1, 2): 0, (1, 3): 1, (2, 3): 1}

@@ -149,59 +149,57 @@ def test_operators_handle_empty_input(spark):
 
 
 def test_ewma_scan_matches_applyinpandas(spark):
-    """Segmented prefix-scan EWMA ≡ the sequential loop, including
-    ragged last blocks and multiple keys (worst diff ~1e-13)."""
+    """Segmented prefix-scan EWMA ≡ the sequential loop on series
+    shorter than, equal to and longer than one ``EWMA_SCAN_BLOCK``
+    segment, ragged last blocks included (worst diff ~1e-13)."""
     import random
 
-    from training_datawarehouse_spark.operators.timeseries import ewma, ewma_scan
+    from training_datawarehouse_spark.operators.timeseries import (
+        EWMA_SCAN_BLOCK, ewma, ewma_scan,
+    )
 
     rng = random.Random(7)
-    rows = [
-        (k, i, round(rng.uniform(0, 300), 6))
-        for k, n in (("a", 301), ("b", 32), ("c", 1), ("d", 95))
-        for i in range(n)
-    ]
-    df = spark.createDataFrame(rows, "k string, date int, tss double")
     pairs = [("tss", "ctl", 42.0), ("tss", "atl", 7.0)]
-    ref = {
-        (r["k"], r["date"]): (r["ctl"], r["atl"])
-        for r in ewma(df, pairs, keys=["k"]).collect()
-    }
-    scan = {
-        (r["k"], r["date"]): (r["ctl"], r["atl"])
-        for r in ewma_scan(df, pairs, keys=["k"], block=32).collect()
-    }
-    assert ref.keys() == scan.keys()
-    for x in ref:
-        assert abs(ref[x][0] - scan[x][0]) < 1e-9
-        assert abs(ref[x][1] - scan[x][1]) < 1e-9
+    for n in (301, EWMA_SCAN_BLOCK, 1, 95):
+        rows = [(i, round(rng.uniform(0, 300), 6)) for i in range(n)]
+        df = spark.createDataFrame(rows, "date int, tss double")
+        ref = {r["date"]: (r["ctl"], r["atl"])
+               for r in ewma(df, pairs).collect()}
+        scan = {r["date"]: (r["ctl"], r["atl"])
+                for r in ewma_scan(df, pairs).collect()}
+        assert ref.keys() == scan.keys() and len(scan) == n
+        for x in ref:
+            assert abs(ref[x][0] - scan[x][0]) < 1e-9
+            assert abs(ref[x][1] - scan[x][1]) < 1e-9
 
 
 def test_interpolation_keyed_series_independent(spark):
-    """The per-key interpolation branch: each key interpolates on its
-    own anchors; one key's gaps never read another key's values."""
+    """Interpolation reads only the series' own anchors: a gap between
+    two anchors is the straight line between them, a leading gap is
+    0-filled and a trailing gap carries the last anchor forward."""
     from datetime import date
 
     from training_datawarehouse_spark.operators.timeseries import interpolate_linear
-    from pyspark.sql import functions as F
 
     rows = [
-        ("a", date(2020, 1, 1), 10.0),
-        ("a", date(2020, 1, 5), 50.0),
-        ("b", date(2020, 1, 2), 100.0),
-        ("b", date(2020, 1, 3), 300.0),
+        (date(2020, 1, 1), None),
+        (date(2020, 1, 2), 10.0),
+        (date(2020, 1, 6), 50.0),
+        (date(2020, 1, 7), 300.0),
+        (date(2020, 1, 9), None),
     ]
-    df = spark.createDataFrame(rows, "k string, date date, v double")
+    df = spark.createDataFrame(rows, "date date, v double")
     out = {
-        (r["k"], r["date"].isoformat()): r["v"]
-        for r in interpolate_linear(df, ["v"], keys=["k"], fill_zero=True).collect()
+        r["date"].isoformat(): r["v"]
+        for r in interpolate_linear(df, ["v"], fill_zero=True).collect()
     }
-    # key a: linear 10→50 over 4 days
-    assert out[("a", "2020-01-03")] == pytest.approx(30.0)
-    # key b before first anchor: leading gap → 0 fill
-    assert out[("b", "2020-01-01")] == 0.0
-    # key b beyond last anchor: forward-fill of the last observed
-    # value (pandas interpolate limit_direction='forward' parity)
-    assert out[("b", "2020-01-05")] == pytest.approx(300.0)
-    # every key × every spine date exists
-    assert len(out) == 2 * 5
+    # linear 10→50 over 4 days
+    assert out["2020-01-04"] == pytest.approx(30.0)
+    # leading gap, before the first anchor → 0 fill
+    assert out["2020-01-01"] == 0.0
+    # beyond the last anchor: forward-fill of the last observed value
+    # (pandas interpolate limit_direction='forward' parity)
+    assert out["2020-01-08"] == pytest.approx(300.0)
+    assert out["2020-01-09"] == pytest.approx(300.0)
+    # every spine date exists
+    assert len(out) == 9

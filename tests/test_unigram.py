@@ -6,6 +6,7 @@ import math
 import duckdb
 import pytest
 
+from training_datawarehouse_spark.operators import bpe
 from training_datawarehouse_spark.operators import unigram as ug
 
 DOCS = [
@@ -26,8 +27,10 @@ def _word_counts():
 
 
 def _train(docs):
-    """(model, distinct words) from one ``collect_word_counts`` scan."""
-    wc = ug.collect_word_counts(docs, "text")
+    """(model, distinct words) from the shared ``bpe.collect_word_counts``
+    scan less words over 127 characters, as ``ns_text_profile`` trains."""
+    wc = [(w, n) for w, n in bpe.collect_word_counts(docs, "text")
+          if len(w) <= 127]
     return ug.train_unigram(wc), [w for w, _ in wc]
 
 

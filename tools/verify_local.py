@@ -5,7 +5,7 @@ DuckDB at the given sf dir and compares them with the SAME
 canonicalization the driver uses (sort columns by name, sort rows,
 stringify every cell) — imported from
 ``training_datawarehouse_spark.canon``, the single code path shared
-with ``tools/check_all.py``. r10 shipped a red driver row because this
+with the pytest dtype sweep. r10 shipped a red driver row because this
 tool compared numeric values where the driver compares strings
 (DuckDB HUGEINT → pandas float64 → '74.0' vs '74'); never again.
 

@@ -9,9 +9,9 @@ shipped red driver rows because a local gate compared *values*
 - r10: DuckDB ``sum(INTEGER)`` returns HUGEINT; a UNION promoted the
   whole column, pandas rendered it float64, and ``74`` != ``'74.0'``.
 
-This module is that single canonicalization, imported by both
-``tools/check_all.py`` and ``tools/verify_local.py`` and by the pytest
-dtype sweep, so the gates cannot drift from each other again.
+This module is that single canonicalization, imported by
+``tools/verify_local.py`` and by the pytest dtype sweep, so the gates
+cannot drift from each other again.
 """
 
 from __future__ import annotations

@@ -201,8 +201,7 @@ def merges_tag(merges: list[tuple[str, str, int]]) -> str:
 
 # ----------------------------------------------------------- oracle
 
-def bpe_oracle_ctes(num_merges: int = 8, src: str = "documents",
-                    text_col: str = "text") -> str:
+def bpe_oracle_ctes(num_merges: int = 8) -> str:
     """DuckDB CTE block that RETRAINS the same ``num_merges`` BPE
     merges and re-encodes every document — fully unrolled, one
     (pairs, best, recursive-merge, vocabulary) stage per merge.
@@ -223,8 +222,8 @@ def bpe_oracle_ctes(num_merges: int = 8, src: str = "documents",
     parts = [f"""
 bpe_tw AS MATERIALIZED (
   SELECT doc_id, w FROM (
-    SELECT doc_id, unnest(string_split(lower({text_col}), ' ')) AS w
-    FROM {src}
+    SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
+    FROM documents
   ) WHERE regexp_matches(w, '^[a-z]+$')
 ),
 bpe_w0 AS MATERIALIZED (

@@ -44,9 +44,6 @@ def funnel_counts(
     events: DataFrame,
     steps: list[str],
     within_days: int = 7,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
     persist_steps: bool = False,
     convert_percentiles: tuple[float, ...] = (),
 ) -> DataFrame:
@@ -92,9 +89,9 @@ def funnel_counts(
         raise ValueError("a funnel needs at least two steps")
     win = F.expr(f"INTERVAL {int(within_days)} DAYS")
     cur = (
-        events.filter(F.col(type_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("__t1"))
+        events.filter(F.col("event_type") == steps[0])
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("__t1"))
     )
     if persist_steps:
         cur = cur.persist()
@@ -103,14 +100,14 @@ def funnel_counts(
     for i, s in enumerate(steps[1:], start=2):
         t_i = f"__t{i}"
         cur = (
-            events.filter(F.col(type_col) == s)
-            .join(cur, user_col)
+            events.filter(F.col("event_type") == s)
+            .join(cur, "user_id")
             .filter(
-                (F.col(ts_col) > F.col(prev))
-                & (F.col(ts_col) <= F.col("__t1") + win)
+                (F.col("ts") > F.col(prev))
+                & (F.col("ts") <= F.col("__t1") + win)
             )
-            .groupBy(user_col)
-            .agg(F.min(ts_col).alias(t_i), F.min("__t1").alias("__t1"))
+            .groupBy("user_id")
+            .agg(F.min("ts").alias(t_i), F.min("__t1").alias("__t1"))
         )
         if persist_steps:
             cur = cur.persist()
@@ -162,7 +159,6 @@ def funnel_counts(
 def funnel_oracle_ctes(
     steps: list[str],
     within_days: int = 7,
-    src: str = "events",
     convert_percentiles: tuple[float, ...] = (),
 ) -> str:
     """DuckDB CTE block re-deriving the identical min-chain; emits
@@ -180,7 +176,7 @@ def funnel_oracle_ctes(
 
     parts = [
         f"""fnl_s1 AS (
-  SELECT user_id, min(ts) AS t1 FROM {src}
+  SELECT user_id, min(ts) AS t1 FROM events
   WHERE event_type = {q(steps[0])} GROUP BY user_id
 )"""
     ]
@@ -189,7 +185,7 @@ def funnel_oracle_ctes(
         p = i - 1
         parts.append(f"""fnl_s{i} AS (
   SELECT e.user_id, min(e.ts) AS t{i}, min(f.t1) AS t1
-  FROM {src} e JOIN fnl_s{p} f USING (user_id)
+  FROM events e JOIN fnl_s{p} f USING (user_id)
   WHERE e.event_type = {q(s)} AND e.ts > f.{prev_t}
     AND e.ts <= f.t1 + INTERVAL '{int(within_days)} days'
   GROUP BY e.user_id

@@ -59,16 +59,13 @@ def pagerank_fixed(
     nodes: DataFrame,
     edges: DataFrame,
     node_col: str = "node",
-    src_col: str = "src",
-    dst_col: str = "dst",
     iterations: int = 5,
     damping_pct: int = 85,
-    scale: int = PR_SCALE,
 ) -> DataFrame:
     """Fixed-point PageRank over ``nodes`` (one row per node) and
     ``edges`` (src, dst). Self-loops and duplicate edges are removed;
     edges pointing outside ``nodes`` are dropped. Returns one row per
-    node: (node_col, pr_rank BIGINT in 1/scale units, pr_out_deg,
+    node: (node_col, pr_rank BIGINT in 1/PR_SCALE units, pr_out_deg,
     pr_in_deg). Bit-deterministic under any partitioning."""
     if not 0 < damping_pct < 100:
         raise ValueError("damping_pct must be in (0, 100)")
@@ -79,7 +76,7 @@ def pagerank_fixed(
     # contrib join (the edge set is read once per round). Stat-less
     # leaf keeps the family consistent (r14 verdict #1).
     e = eager_checkpoint(
-        edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
+        edges.select(F.col("src").alias("__s"), F.col("dst").alias("__d"))
         .filter(F.col("__s") != F.col("__d"))
         .distinct()
         .join(n.withColumnRenamed("__n", "__s"), "__s")
@@ -93,7 +90,7 @@ def pagerank_fixed(
     # checkpoint every rank generation (initial included): iteration
     # t+1 reads ranks_t twice (contrib + dangling) — without the break
     # each use re-derives the whole upstream chain (2^K plan blowup)
-    uniform = F.expr(f"CAST({scale} AS BIGINT) DIV __nodecnt")
+    uniform = F.expr(f"CAST({PR_SCALE} AS BIGINT) DIV __nodecnt")
     ranks = eager_checkpoint(base.select(
         "__n", "__nodecnt", uniform.alias("__r")
     ))
@@ -121,7 +118,7 @@ def pagerank_fixed(
                 "__n",
                 "__nodecnt",
                 (
-                    F.expr(f"({dd - d}L * {scale}L) DIV ({dd}L * __nodecnt)")
+                    F.expr(f"({dd - d}L * {PR_SCALE}L) DIV ({dd}L * __nodecnt)")
                     + F.expr(f"{d}L * __dang DIV ({dd}L * __nodecnt)")
                     + F.coalesce(F.col("__in"), F.lit(0).cast("long"))
                 ).alias("__r"),

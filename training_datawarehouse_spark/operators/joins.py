@@ -51,7 +51,6 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     value_cols: Sequence[str],
-    suffix: str = "_asof",
     direction: str = "backward",
     tolerance: float | None = None,
 ) -> DataFrame:
@@ -73,7 +72,7 @@ def asof_join(
       tolerance gates each side BEFORE the argmin, so a backward row
       past the tolerance loses to an in-tolerance forward row.
 
-    Returns every left row plus ``<value_col><suffix>`` columns from
+    Returns every left row plus ``<value_col>_asof`` columns from
     the matched right row (null when no match; NULL value columns of
     the matched row stay NULL — the right row is carried as one
     struct, never column-by-column). Ties on (key, ts) between right
@@ -86,7 +85,7 @@ def asof_join(
     keys = list(keys)
     out_cols = list(left.columns)
 
-    carried = [f"{c}{suffix}" for c in value_cols]
+    carried = [f"{c}_asof" for c in value_cols]
     r = right.select(
         *keys,
         F.col(right_ts).alias("__ts"),

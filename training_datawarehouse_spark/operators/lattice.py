@@ -45,13 +45,10 @@ def _label(c: str) -> Column:
 def cube_lattice(
     df: DataFrame,
     measures: list[Column],
-    activity: str = "activity",
-    activity_type: str = "activity_type",
-    equipment: str = "equipment",
     extra_keys: list[str] | None = None,
-    not_set: tuple[str, ...] = NOT_SET,
 ) -> DataFrame:
-    """Aggregate ``df`` over the full 8-set lattice in ONE pass.
+    """Aggregate ``df`` over the full 8-set lattice of ``activity``,
+    ``activity_type`` and ``equipment`` in ONE pass.
 
     ``measures`` are reusable unresolved aggregate expressions (built by
     ``specs.agg_exprs`` or ad hoc). ``extra_keys`` (e.g. ``date``) are
@@ -74,11 +71,11 @@ def cube_lattice(
     for non-Not-Set values (the check precedes the strip).
     """
     extra = extra_keys or []
-    a, t, e = activity, activity_type, equipment
+    a, t, e = "activity", "activity_type", "equipment"
 
     e_col = F.col(e)
     src = df.withColumn(
-        e, F.when(e_col.isin(*not_set), e_col).otherwise(strip_spaces(e_col))
+        e, F.when(e_col.isin(*NOT_SET), e_col).otherwise(strip_spaces(e_col))
     )
     agg = src.groupingSets(
         [
@@ -91,7 +88,7 @@ def cube_lattice(
         F.grouping(e).alias("__ge"),
         *measures,
     )
-    kept = agg.filter((F.col("__ge") == 1) | ~F.col(e).isin(*not_set))
+    kept = agg.filter((F.col("__ge") == 1) | ~F.col(e).isin(*NOT_SET))
     mcols = [
         c for c in agg.columns
         if c not in (*extra, a, t, e, "__a", "__t", "__e", "__ge")
@@ -106,11 +103,6 @@ def cube_lattice_two_level(
     df: DataFrame,
     base_aggs: list[Column],
     re_aggs: list[Column],
-    activity: str = "activity",
-    activity_type: str = "activity_type",
-    equipment: str = "equipment",
-    extra_keys: list[str] | None = None,
-    not_set: tuple[str, ...] = NOT_SET,
 ) -> DataFrame:
     """Lattice via pre-aggregation — the shape that wins at 100 TB.
 
@@ -118,14 +110,11 @@ def cube_lattice_two_level(
     (8× the aggregation work and shuffle input). When every measure is
     algebraic (sum / weighted-sum / max / count — all of the
     reference's, SURVEY §2.1), aggregate once to the physical cell
-    grain ``(extra, a, t, e)`` with ``base_aggs`` (ordinary shuffle,
-    map-side combine collapses to |cells| rows per task), then run the
-    8-set lattice over the tiny cell table with ``re_aggs`` re-merging
+    grain ``(activity, activity_type, equipment)`` with ``base_aggs``
+    (ordinary shuffle, map-side combine collapses to |cells| rows per
+    task), then run the 8-set lattice over the tiny cell table with ``re_aggs`` re-merging
     the partials. The per-set Not-Set filter (SURVEY §2.3.1) drops
     whole cells, so applying it to the pre-aggregate is exact.
     """
-    extra = extra_keys or []
-    base = df.groupBy(*extra, activity, activity_type, equipment).agg(*base_aggs)
-    return cube_lattice(
-        base, re_aggs, activity, activity_type, equipment, extra_keys, not_set
-    )
+    base = df.groupBy("activity", "activity_type", "equipment").agg(*base_aggs)
+    return cube_lattice(base, re_aggs)

@@ -9,8 +9,8 @@ charter-extension surface every real warehouse ingest needs.
 Method (the standard blocking + edit-distance shape, e.g.
 Fellegi-Sunter-style candidate generation):
 
-1. BLOCK both sides on a cheap deterministic key (a name-suffix slice,
-   a soundex, a sorted-token prefix) — the quadratic pair space
+1. BLOCK both sides on a cheap deterministic key (the last 3
+   characters of the normalized name) — the quadratic pair space
    collapses to in-block pairs, exactly the LSH-bucket argument from
    the dedup family;
 2. score in-block pairs with ``levenshtein`` (JVM codegen'd, and
@@ -20,9 +20,8 @@ Fellegi-Sunter-style candidate generation):
    — deterministic tie-break.
 
 Scale shape (100 TB dims): one equi-shuffle on the block key, in-block
-pair expansion bounded by block size (pick the key so blocks stay
-small; hot blocks are the same hazard as hot LSH buckets and take the
-same cap), one min_by aggregation. Nothing is all-pairs.
+pair expansion bounded by block size (hot blocks are the same hazard
+as hot LSH buckets), one min_by aggregation. Nothing is all-pairs.
 """
 
 from __future__ import annotations
@@ -44,24 +43,12 @@ def blocked_fuzzy_pairs(
     clean_id: str,
     dirty_name: str,
     clean_name: str,
-    block: Column | None = None,
     max_dist: int = 2,
-    max_block: int | None = None,
 ) -> DataFrame:
     """(dirty_id, clean_id, dist) for every in-block pair within
-    ``max_dist`` edits of each other (normalized names). ``block``
-    is a Column computed from the NORMALIZED name (exposed as ``__nm``
-    while it is evaluated); default: last 3 characters — swap in
-    ``F.soundex(F.col("__nm"))`` or a sorted-token prefix per corpus.
-
-    ``max_block`` caps the CLEAN-side block size (None = off): a hot
-    block (a very common suffix/phonetic key) is the same quadratic
-    hazard as a hot LSH bucket and takes the same treatment — skip it
-    and surface those entities to an exact/manual path. The registry
-    stage runs uncapped (its planted blocks are ≤ a few rows); set the
-    cap in production."""
-    if block is None:
-        block = F.substring(F.col("__nm"), -3, 3)
+    ``max_dist`` edits of each other (normalized names). The block key
+    is the last 3 characters of the NORMALIZED name."""
+    block = F.substring(F.col("__nm"), -3, 3)
     d = dirty.select(
         F.col(dirty_id).alias("__di"),
         normalize_name(F.col(dirty_name)).alias("__nm"),
@@ -70,12 +57,6 @@ def blocked_fuzzy_pairs(
         F.col(clean_id).alias("__ci"),
         normalize_name(F.col(clean_name)).alias("__nm"),
     ).select("__ci", F.col("__nm").alias("__cn"), block.alias("__blk"))
-    if max_block is not None:
-        keep = (
-            c.groupBy("__blk").agg(F.count(F.lit(1)).alias("__bn"))
-            .filter(F.col("__bn") <= max_block).select("__blk")
-        )
-        c = c.join(F.broadcast(keep), "__blk")
     return (
         d.join(c, "__blk")
         .select(

@@ -181,15 +181,14 @@ def decode_png(data: bytes) -> dict:
     }
 
 
-def encode_wav(samples: list[int], framerate: int = 8000,
-               n_channels: int = 1) -> bytes:
-    """REAL WAV encoder (stdlib ``wave``): 16-bit PCM."""
+def encode_wav(samples: list[int], framerate: int = 8000) -> bytes:
+    """REAL WAV encoder (stdlib ``wave``): mono 16-bit PCM."""
     import io
     import wave
 
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
-        w.setnchannels(n_channels)
+        w.setnchannels(1)
         w.setsampwidth(2)
         w.setframerate(framerate)
         w.writeframes(struct.pack(f"<{len(samples)}h", *samples))

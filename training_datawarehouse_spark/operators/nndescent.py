@@ -293,14 +293,11 @@ def nnd_search(
     graph: DataFrame,
     emb: DataFrame,
     queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 5,
     beam: int = 8,
     hops: int = 3,
     n_entry: int = 4,
     entry_df: DataFrame | None = None,
-    cover_missing: bool = True,
 ) -> DataFrame:
     """Greedy beam search over the k-NN graph for NON-member queries
     (the graph family's serving path — member queries read their
@@ -327,7 +324,7 @@ def nnd_search(
     coarse-quantizer-entry + graph-refine composition; gate-tested at
     recall 1.0 on the clustered slice) — and the global default
     remains for structure-free corpora, where any entry works.
-    ``cover_missing`` (default True, r16): queries ABSENT from a
+    Queries ABSENT from a
     caller-supplied ``entry_df`` fall back to the global md5-least
     entries instead of silently vanishing from the result — the
     rep-less-IVF-cell seam (a cell with no layer member yields no
@@ -354,10 +351,10 @@ def nnd_search(
             "the kept beam, so a wider k would silently return only "
             "beam rows")
     nodes = emb.select(
-        F.col(id_col).alias("nid"), _as_double(F.col(vec_col)).alias("v")
+        F.col("vec_id").alias("nid"), _as_double(F.col("embedding")).alias("v")
     )
     q = queries.select(
-        F.col("query_id"), _as_double(F.col(vec_col)).alias("qv")
+        F.col("query_id"), _as_double(F.col("embedding")).alias("qv")
     )
     entries = (
         nodes.select(
@@ -370,25 +367,22 @@ def nnd_search(
     )
     if entry_df is not None:
         frontier = entry_df.select("query_id", "nid")
-        if cover_missing:
-            # SAFE DEFAULT for uncovered queries (r16 — the r15
-            # verdict's empty-rep seam): a query absent from
-            # ``entry_df`` previously got NO frontier rows and
-            # silently dropped out of the result — real at production
-            # core_frac with small/skewed IVF cells, where a cell may
-            # hold no layer member to serve as its representative.
-            # Such queries fall back to the global md5-least entries
-            # (the no-entry_df default), so every query always
-            # descends from SOMETHING; covered queries are untouched,
-            # making the fallback a no-op whenever entry derivation
-            # is total (every bench/probe composition to date). Cost:
-            # one slim anti-join on query_id against the entry frame
-            # at build time, nothing in the final plan.
-            uncovered = q.select("query_id").join(
-                frontier.select("query_id").distinct(),
-                "query_id", "left_anti")
-            frontier = frontier.unionByName(
-                uncovered.crossJoin(F.broadcast(entries)))
+        # Uncovered queries (r16 — the r15 verdict's empty-rep seam):
+        # a query absent from ``entry_df`` would get NO frontier rows
+        # and silently drop out of the result — real at production
+        # core_frac with small/skewed IVF cells, where a cell may hold
+        # no layer member to serve as its representative. Such queries
+        # fall back to the global md5-least entries (the no-entry_df
+        # default), so every query always descends from SOMETHING;
+        # covered queries are untouched, making the fallback a no-op
+        # whenever entry derivation is total. Cost: one slim anti-join
+        # on query_id against the entry frame at build time, nothing
+        # in the final plan.
+        uncovered = q.select("query_id").join(
+            frontier.select("query_id").distinct(),
+            "query_id", "left_anti")
+        frontier = frontier.unionByName(
+            uncovered.crossJoin(F.broadcast(entries)))
     else:
         frontier = q.select("query_id").crossJoin(F.broadcast(entries))
 
@@ -477,8 +471,6 @@ def nnd_search_hier(
     graph1: DataFrame,
     emb1: DataFrame,
     queries: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     k: int = 5,
     beam: int = 8,
     hops0: int = 4,
@@ -515,14 +507,12 @@ def nnd_search_hier(
     the serving path carries the same differential-correctness grade
     as the build."""
     l1 = nnd_search(
-        graph1, emb1, queries, vec_col=vec_col, id_col=id_col,
-        k=min(n_entry, beam), beam=beam, hops=hops1,
+        graph1, emb1, queries, k=min(n_entry, beam), beam=beam, hops=hops1,
         n_entry=n_entry, entry_df=entry_df1,
     )
     try:
         out = nnd_search(
-            graph0, emb, queries, vec_col=vec_col, id_col=id_col,
-            k=k, beam=beam, hops=hops0,
+            graph0, emb, queries, k=k, beam=beam, hops=hops0,
             entry_df=l1.select("query_id",
                                F.col("neighbor_id").alias("nid")),
         )

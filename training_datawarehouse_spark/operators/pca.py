@@ -46,10 +46,10 @@ from pyspark.sql import functions as F
 from ..functions.scalars import round_half_away
 from .similarity import _as_double, vec_lit
 
+ROUND_DP = 6  # decimals of every number that crosses an engine boundary
 
-def dim_means(
-    df: DataFrame, vec_col: str, round_dp: int = 6
-) -> list[float]:
+
+def dim_means(df: DataFrame, vec_col: str) -> list[float]:
     """Per-dimension mean, rounded — one posexplode + groupBy pass."""
     rows = (
         df.select(F.posexplode(_as_double(F.col(vec_col))).alias("i", "x"))
@@ -58,7 +58,7 @@ def dim_means(
         .collect()
     )
     return [
-        round_half_away(r["m"], round_dp)
+        round_half_away(r["m"], ROUND_DP)
         for r in sorted(rows, key=lambda r: r["i"])
     ]
 
@@ -67,7 +67,6 @@ def covariance_matrix(
     df: DataFrame,
     vec_col: str,
     means: list[float],
-    round_dp: int = 6,
 ) -> list[list[float]]:
     """Centered covariance C[i][j] = Σ (x_i−μ_i)(x_j−μ_j) / n,
     rounded. Two chained posexplodes produce the d² products per row
@@ -117,7 +116,7 @@ def covariance_matrix(
         )
     cov = [[0.0] * dim for _ in range(dim)]
     for r in rows:
-        cov[r["i"]][r["j"]] = round_half_away(r["s"] / n, round_dp)
+        cov[r["i"]][r["j"]] = round_half_away(r["s"] / n, ROUND_DP)
     return cov
 
 
@@ -125,7 +124,6 @@ def power_iteration_components(
     cov: list[list[float]],
     n_components: int = 2,
     iters: int = 12,
-    round_dp: int = 6,
 ) -> tuple[list[list[float]], list[float]]:
     """Top components of a (rounded) covariance by fixed-iteration
     power iteration with deflation — driver-side model math that
@@ -133,7 +131,7 @@ def power_iteration_components(
     Rayleigh sums run in ascending index order (the oracle pins the
     same order via list_sum over ORDER-BY-collected lists — a plain
     GROUP-BY SUM's engine-chosen order could flip a 6-dp midpoint and
-    cascade), each normalized vector rounds to ``round_dp``, λ is the
+    cascade), each normalized vector rounds to ``ROUND_DP``, λ is the
     rounded Rayleigh quotient, and the deflated matrix re-rounds.
     Init: v0 = round(1/√d, 6) in every coordinate.
     Returns (components[n][d], eigenvalues[n])."""
@@ -141,7 +139,7 @@ def power_iteration_components(
     c = [row[:] for row in cov]
     comps: list[list[float]] = []
     eigs: list[float] = []
-    v0 = round_half_away(1.0 / math.sqrt(dim), round_dp)
+    v0 = round_half_away(1.0 / math.sqrt(dim), ROUND_DP)
     for _ in range(n_components):
         v = [v0] * dim
         for _t in range(iters):
@@ -156,16 +154,16 @@ def power_iteration_components(
                     f"n_components — fit fewer components "
                     f"(got {len(comps)} before collapse)"
                 )
-            v = [round_half_away(x / nrm, round_dp) for x in w]
+            v = [round_half_away(x / nrm, ROUND_DP) for x in w]
         w = [sum(c[i][j] * v[j] for j in range(dim)) for i in range(dim)]
         lam = round_half_away(
-            sum(v[i] * w[i] for i in range(dim)), round_dp
+            sum(v[i] * w[i] for i in range(dim)), ROUND_DP
         )
         comps.append(v)
         eigs.append(lam)
         c = [
             [
-                round_half_away(c[i][j] - lam * v[i] * v[j], round_dp)
+                round_half_away(c[i][j] - lam * v[i] * v[j], ROUND_DP)
                 for j in range(dim)
             ]
             for i in range(dim)
@@ -178,16 +176,13 @@ def pca_whiten_fit(
     vec_col: str,
     n_components: int = 2,
     iters: int = 12,
-    round_dp: int = 6,
 ) -> tuple[list[float], list[list[float]], list[float]]:
     """Fit = distributed moments + driver power iteration. Returns
     (means, components, eigenvalues), all rounded — splice-ready for
     row-local projection in any engine."""
-    means = dim_means(df, vec_col, round_dp)
-    cov = covariance_matrix(df, vec_col, means, round_dp)
-    comps, eigs = power_iteration_components(
-        cov, n_components, iters, round_dp
-    )
+    means = dim_means(df, vec_col)
+    cov = covariance_matrix(df, vec_col, means)
+    comps, eigs = power_iteration_components(cov, n_components, iters)
     return means, comps, eigs
 
 
@@ -197,11 +192,9 @@ def whiten_project(
     means: list[float],
     components: list[list[float]],
     eigenvalues: list[float],
-    id_col: str = "vec_id",
-    round_dp: int = 6,
 ) -> DataFrame:
     """Row-local whitened projection: z_c = (x − μ)·v_c / √λ_c, each
-    coordinate rounded. Returns (id_col, z array<double>). The model
+    coordinate rounded. Returns (vec_id, z array<double>). The model
     rides the plan as literals — no join, no shuffle."""
     cent = F.zip_with(
         _as_double(F.col(vec_col)),
@@ -232,5 +225,5 @@ def whiten_project(
             ),
             F.lit(0.0), lambda acc, x: acc + x,
         )
-        zs.append(F.round(dotc / F.lit(math.sqrt(lam)), round_dp))
-    return df.select(F.col(id_col), F.array(*zs).alias("z"))
+        zs.append(F.round(dotc / F.lit(math.sqrt(lam)), ROUND_DP))
+    return df.select(F.col("vec_id"), F.array(*zs).alias("z"))

@@ -222,7 +222,6 @@ def image_phash_signatures(df: DataFrame, id_col: str, text_col: str,
 
 def phash_candidate_pairs(
     sig: DataFrame, max_hamming: int = DEFAULT_MAX_HAMMING,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
     materialize: bool = False,
 ) -> DataFrame:
     """Hamming-banded near-dup pairs from (id, b0..b3) signatures.
@@ -244,7 +243,7 @@ def phash_candidate_pairs(
        carrying its member-id list and member count,
     2. band the reps; bucket weight = SUM of member counts, so the
        hot-bucket cap keeps the ORACLE's doc-grain semantics
-       (a bucket is hot when it holds > max_bucket DOCUMENTS,
+       (a bucket is hot when it holds > DEFAULT_MAX_BUCKET DOCUMENTS,
        regardless of how the docs collapse into hashes),
     3. in-bucket rep-pair expansion INCLUDING self-pairs (gid_a ==
        gid_b: a multi-doc hash group pairs with itself at Hamming 0 —
@@ -297,7 +296,7 @@ def phash_candidate_pairs(
         banded.groupBy("band", "val")
         .agg(F.array_sort(F.collect_list("gid")).alias("gids"),
              F.sum("gn").alias("w"))
-        .filter(F.col("w") <= max_bucket)
+        .filter(F.col("w") <= DEFAULT_MAX_BUCKET)
         .select(F.explode(_self_incl_pairs_expr("gids")).alias("p"))
         .select(F.col("p.id_a").alias("ga"), F.col("p.id_b").alias("gb"))
         .distinct()

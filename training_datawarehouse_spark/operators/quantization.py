@@ -67,12 +67,10 @@ def pq_train(
     m: int = 4,
     ksub: int = 8,
     iters: int = 4,
-    id_col: str = "vec_id",
-    round_dp: int | None = 6,
 ) -> list[list[list[float]]]:
     """Train ``m`` per-subspace codebooks of ``ksub`` centroids each.
     Returns ``codebooks[m][ksub][dim//m]``. Init per subspace = the
-    ``ksub`` lowest-``id_col`` rows' subvectors (deterministic, no
+    ``ksub`` lowest-``vec_id`` rows' subvectors (deterministic, no
     RNG — the ``kmeans_fit`` oracle-reproducible discipline: rounded
     iterations, lowest-cid ties, empty clusters keep their previous
     centroid).
@@ -89,8 +87,8 @@ def pq_train(
         raise ValueError(f"dim={dim} not divisible by m={m}")
     dsub = dim // m
     init_rows = (
-        df.filter(F.col(id_col) < ksub)
-        .orderBy(id_col)
+        df.filter(F.col("vec_id") < ksub)
+        .orderBy("vec_id")
         .select(vec_col)
         .collect()
     )
@@ -151,9 +149,8 @@ def pq_train(
                 )
             new_books = [[list(c) for c in b] for b in books]
             for (j, cid), comps in acc.items():
-                cen = [comps[p][0] / comps[p][1] for p in sorted(comps)]
-                if round_dp is not None:
-                    cen = [round_half_away(x, round_dp) for x in cen]
+                cen = [round_half_away(comps[p][0] / comps[p][1], 6)
+                       for p in sorted(comps)]
                 new_books[j][cid] = cen
             books = new_books
     finally:
@@ -175,8 +172,6 @@ def residual_frame(
     df: DataFrame,
     vec_col: str,
     cents: list[list[float]],
-    id_col: str = "vec_id",
-    list_col: str | None = None,
 ) -> DataFrame:
     """Per-vector residual ``x − c(x)`` against a coarse quantizer —
     the input representation for residual-encoded IVFADC (Jégou et
@@ -188,22 +183,18 @@ def residual_frame(
     one matrix literal (k·d floats — model-sized), the assignment is
     the same cosine-argmin expression IVF probing uses, and the
     subtraction is ``zip_with`` — no join, no shuffle, the corpus
-    vectors never move. Pass ``list_col`` to reuse an existing
-    assignment column instead of recomputing it.
+    vectors never move.
 
-    Returns ``(id_col, list_id, residual array<double>)``. The
+    Returns ``(vec_id, list_id, residual array<double>)``. The
     subtraction of two exact doubles is deterministic IEEE — no
     rounding needed for the cross-engine oracle contract (centroids
     are already 6-dp from the shared Lloyd's trainer)."""
     from .similarity import nearest_centroid_lists
 
     v = _as_double(F.col(vec_col))
-    if list_col is None:
-        lid = nearest_centroid_lists(v, cents, 1)[0]["list_id"]
-    else:
-        lid = F.col(list_col)
+    lid = nearest_centroid_lists(v, cents, 1)[0]["list_id"]
     return df.select(
-        F.col(id_col),
+        F.col("vec_id"),
         lid.alias("list_id"),
         F.zip_with(
             v, F.element_at(mat_lit(cents), lid + 1), lambda x, c: x - c
@@ -215,13 +206,12 @@ def pq_encode(
     df: DataFrame,
     vec_col: str,
     codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Encode every vector as ``m`` code ids + its reconstruction
     error. Row-local (codebooks are literals): per subspace, argmin
     squared-L2 with lowest-code-id ties. Returns
-    ``(id_col, *keep_cols, codes array<int>, recon_err double)`` with
+    ``(vec_id, *keep_cols, codes array<int>, recon_err double)`` with
     recon_err = Σ_j d²(x_j, cb[j][code_j]) rounded to 6 dp.
     ``keep_cols`` carries extra columns (e.g. the coarse ``list_id``
     for residual IVFADC) through without a re-join."""
@@ -243,7 +233,7 @@ def pq_encode(
     errs = [d for _, d in best]
     err = F.round(sum(errs[1:], errs[0]), 6)
     return df.select(
-        F.col(id_col), *[F.col(c) for c in keep_cols],
+        F.col("vec_id"), *[F.col(c) for c in keep_cols],
         codes.alias("codes"), err.alias("recon_err"),
     )
 
@@ -252,13 +242,11 @@ def pq_adc_scores(
     codes_df: DataFrame,
     queries: DataFrame,
     codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric distance computation: exact query vs PQ-approximated
     corpus. ``codes_df`` is ``pq_encode`` output; ``queries`` is a
-    small frame (broadcasts) with (id_col, vec_col). Returns
+    small frame (broadcasts) with (vec_id, embedding). Returns
     ``(query_id, neighbor_id, adc_d2)`` (6 dp) excluding self-pairs —
     rank/top-k is the caller's (``retrieval.topk_per_query`` above
     bench scale).
@@ -276,8 +264,8 @@ def pq_adc_scores(
     candidate grain, map-side combinable."""
     dsub = len(codebooks[0][0])
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("__qv"),
+        F.col("vec_id").alias("query_id"),
+        _as_double(F.col("embedding")).alias("__qv"),
     )
     terms = [
         _d2(
@@ -289,7 +277,7 @@ def pq_adc_scores(
         for j, book in enumerate(codebooks)
     ]
     adc = F.round(sum(terms[1:], terms[0]), 6)
-    base = codes_df.select(F.col(id_col).alias("neighbor_id"), "codes")
+    base = codes_df.select(F.col("vec_id").alias("neighbor_id"), "codes")
     if pairs is None:
         cand = base.crossJoin(F.broadcast(q))
     else:
@@ -311,8 +299,6 @@ def pq_adc_scores_residual(
     codes_df: DataFrame,
     queries_res: DataFrame,
     codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    res_col: str = "qres",
 ) -> DataFrame:
     """ADC where the QUERY representation varies per probed list — the
     residual-encoded IVFADC form (Jégou et al. 2011 §IV-A): corpus
@@ -321,7 +307,7 @@ def pq_adc_scores_residual(
     ``pq_encode(..., keep_cols=("list_id",))`` output over the
     residual frame; ``queries_res`` is the (tiny, broadcast) per-
     (query, probed-list) residual frame ``(query_id, list_id,
-    res_col)`` — ``residual_frame``-shaped but exploded over n_probe
+    qres)`` — ``residual_frame``-shaped but exploded over n_probe
     lists.
 
     The list join IS the coarse pruning: only vectors whose list the
@@ -334,7 +320,7 @@ def pq_adc_scores_residual(
     excluded — rank/top-k is the caller's."""
     dsub = len(codebooks[0][0])
     q = queries_res.select(
-        "query_id", "list_id", _as_double(F.col(res_col)).alias("__qrv")
+        "query_id", "list_id", _as_double(F.col("qres")).alias("__qrv")
     )
     terms = [
         _d2(
@@ -348,7 +334,7 @@ def pq_adc_scores_residual(
     adc = F.round(sum(terms[1:], terms[0]), 6)
     return (
         codes_df.select(
-            F.col(id_col).alias("neighbor_id"), "list_id", "codes"
+            F.col("vec_id").alias("neighbor_id"), "list_id", "codes"
         )
         .join(F.broadcast(q), "list_id")
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -400,7 +386,6 @@ def sq_train(
 
 def sq_encode(
     df: DataFrame, vec_col: str, mins: list[float], maxs: list[float],
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """(id, codes): ROW-LOCAL 8-bit encode — ``code_i = clamp(round(
     (x_i − mn_i) · 255 / (mx_i − mn_i)), 0, 255)``, constant
@@ -430,7 +415,7 @@ def sq_encode(
             )
         ),
     )
-    return df.select(F.col(id_col).alias(id_col), codes.alias("codes"))
+    return df.select(F.col("vec_id").alias("vec_id"), codes.alias("codes"))
 
 
 def sq_adc_scores(
@@ -438,8 +423,6 @@ def sq_adc_scores(
     queries: DataFrame,
     mins: list[float],
     maxs: list[float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Asymmetric distance for scalar quantization: exact query vs
     per-dim reconstructed corpus ``x̂_i = mn_i + code_i·(mx_i−mn_i)/
@@ -456,8 +439,8 @@ def sq_adc_scores(
     mn = F.array(*[F.lit(float(x)) for x in mins])
     mx = F.array(*[F.lit(float(x)) for x in maxs])
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _as_double(F.col(vec_col)).alias("__qv"),
+        F.col("vec_id").alias("query_id"),
+        _as_double(F.col("embedding")).alias("__qv"),
     )
 
     def term(c, i):
@@ -473,7 +456,7 @@ def sq_adc_scores(
         lambda acc, t: acc + t,
     )
     return (
-        codes_df.select(F.col(id_col).alias("neighbor_id"), "codes")
+        codes_df.select(F.col("vec_id").alias("neighbor_id"), "codes")
         .crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id",
@@ -483,7 +466,6 @@ def sq_adc_scores(
 
 def sq_train_per_list(
     df: DataFrame, vec_col: str, dim: int, n_lists: int,
-    list_col: str = "list_id",
 ) -> tuple[list[list[float]], list[list[float]]]:
     """PER-COARSE-LIST (min, max) bounds — the production fix for
     SQ8's clustered-recall inversion (global bounds stretch across
@@ -494,7 +476,7 @@ def sq_train_per_list(
     would all be 0 — but an empty list also has nothing to encode).
     Raises on ragged, wrong-dim, or NULL vectors."""
     v = _as_double(F.col(vec_col))
-    rows = df.groupBy(list_col).agg(
+    rows = df.groupBy("list_id").agg(
         F.sum(_bad_vec(vec_col, dim)).alias("__bad"),
         *[F.min(F.try_element_at(v, F.lit(i + 1))).alias(f"mn{i}")
           for i in range(dim)],
@@ -509,7 +491,7 @@ def sq_train_per_list(
     mins = [[0.0] * dim for _ in range(n_lists)]
     maxs = [[0.0] * dim for _ in range(n_lists)]
     for r in rows:
-        li = int(r[list_col])
+        li = int(r["list_id"])
         if not 0 <= li < n_lists:
             raise ValueError(f"list id {li} outside [0, {n_lists})")
         mins[li] = [r[f"mn{i}"] for i in range(dim)]
@@ -534,7 +516,7 @@ def _sq_list_code(x, i, mn_row, mx_row):
 def sq_encode_per_list(
     df: DataFrame, vec_col: str,
     mins: list[list[float]], maxs: list[list[float]],
-    id_col: str = "vec_id", list_col: str = "list_id",
+    id_col: str = "vec_id",
 ) -> DataFrame:
     """(id, list_id, codes): row-local encode against the row's OWN
     list bounds — the bounds matrix rides the plan as one
@@ -542,11 +524,11 @@ def sq_encode_per_list(
     mn_mat = mat_lit(mins)
     mx_mat = mat_lit(maxs)
     v = _as_double(F.col(vec_col))
-    mn_row = F.element_at(mn_mat, F.col(list_col).cast("int") + 1)
-    mx_row = F.element_at(mx_mat, F.col(list_col).cast("int") + 1)
+    mn_row = F.element_at(mn_mat, F.col("list_id").cast("int") + 1)
+    mx_row = F.element_at(mx_mat, F.col("list_id").cast("int") + 1)
     codes = F.transform(v, lambda x, i: _sq_list_code(x, i, mn_row, mx_row))
     return df.select(
-        F.col(id_col).alias(id_col), F.col(list_col).alias(list_col),
+        F.col(id_col).alias(id_col), F.col("list_id").alias("list_id"),
         codes.alias("codes"),
     )
 
@@ -557,7 +539,6 @@ def sq_adc_scores_per_list(
     mins: list[list[float]],
     maxs: list[list[float]],
     id_col: str = "vec_id",
-    list_col: str = "list_id",
     query_vec_col: str = "__qv",
 ) -> DataFrame:
     """IVF + per-list-SQ8 composition: the list join IS the coarse
@@ -570,8 +551,8 @@ def sq_adc_scores_per_list(
     ``(query_id, neighbor_id, sq_d2)``, self-pairs excluded."""
     mn_mat = mat_lit(mins)
     mx_mat = mat_lit(maxs)
-    mn_row = F.element_at(mn_mat, F.col(list_col).cast("int") + 1)
-    mx_row = F.element_at(mx_mat, F.col(list_col).cast("int") + 1)
+    mn_row = F.element_at(mn_mat, F.col("list_id").cast("int") + 1)
+    mx_row = F.element_at(mx_mat, F.col("list_id").cast("int") + 1)
 
     def term(c, i):
         lo = F.element_at(mn_row, i + 1)
@@ -585,12 +566,12 @@ def sq_adc_scores_per_list(
         F.lit(0).cast("long"),
         lambda acc, t: acc + t,
     )
-    q = queries_probed.select("query_id", list_col, query_vec_col)
+    q = queries_probed.select("query_id", "list_id", query_vec_col)
     return (
         codes_df.select(
-            F.col(id_col).alias("neighbor_id"), list_col, "codes"
+            F.col(id_col).alias("neighbor_id"), "list_id", "codes"
         )
-        .join(F.broadcast(q), list_col)
+        .join(F.broadcast(q), "list_id")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id",
                 (micro / F.lit(1e6)).alias("sq_d2"))

@@ -72,14 +72,11 @@ def _tokens(text_col):
 def bm25_scores(
     docs: DataFrame,
     qmap: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
     prune: str = "auto",
 ) -> DataFrame:
-    """Score every document against every query in ``qmap(query_id,
-    term)`` (a tiny frame — literal or derived — that broadcasts).
+    """Score every ``docs(doc_id, text)`` row against every query in
+    ``qmap(query_id, term)`` (a tiny frame — literal or derived — that
+    broadcasts).
     Returns ``(query_id, neighbor_id, score)`` for documents matching
     ≥1 query term; ``score`` is rounded to 6 dp. One corpus token
     scan builds tf+|d|; one narrow scan computes (N, avgdl).
@@ -103,7 +100,7 @@ def bm25_scores(
     """
     if prune not in ("auto", "inlist", "semijoin"):
         raise ValueError(f"prune must be auto|inlist|semijoin, got {prune!r}")
-    toks = _tokens(text_col)
+    toks = _tokens("text")
     # Query-term contract (r8 review): terms are lowercased to match
     # the lowercased token stream (an uppercase query term would
     # silently match nothing), NULL terms are dropped in BOTH paths
@@ -142,13 +139,13 @@ def bm25_scores(
     if prune == "inlist":
         matched = F.filter(toks, lambda t: t.isin(terms))
         tok_rows = docs.select(
-            F.col(id_col).alias("__doc"),
+            F.col("doc_id").alias("__doc"),
             F.size(toks).alias("__dl"),
             F.explode(matched).alias("term"),
         )
     else:
         tok_rows = docs.select(
-            F.col(id_col).alias("__doc"),
+            F.col("doc_id").alias("__doc"),
             F.size(toks).alias("__dl"),
             F.explode(toks).alias("term"),
         ).join(
@@ -169,11 +166,12 @@ def bm25_scores(
         / (F.col("df") + F.lit(0.5))
     )
     sat = (
-        F.col("tf") * F.lit(k1 + 1.0)
+        F.col("tf") * F.lit(BM25_K1 + 1.0)
         / (
             F.col("tf")
-            + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("__avgdl"))
+            + F.lit(BM25_K1)
+            * (F.lit(1.0 - BM25_B)
+               + F.lit(BM25_B) * F.col("dl") / F.col("__avgdl"))
         )
     )
     return (
@@ -190,7 +188,6 @@ def topk_per_query(
     scored: DataFrame,
     k: int,
     n_shards: int = 32,
-    score_col: str = "score",
 ) -> DataFrame:
     """Two-level top-k per query over ``(query_id, neighbor_id,
     score)``: partial top-k inside hash shards of the neighbor space
@@ -202,7 +199,7 @@ def topk_per_query(
     row rides (partial top-k per disjoint shard + exact final top-k is
     correct for ANY sharding)."""
     shard = F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(n_shards))
-    order = [F.col(score_col).desc(), F.col("neighbor_id")]
+    order = [F.col("score").desc(), F.col("neighbor_id")]
     partial = Window.partitionBy("query_id", shard).orderBy(*order)
     final = Window.partitionBy("query_id").orderBy(*order)
     return (
@@ -210,7 +207,7 @@ def topk_per_query(
         .filter(F.col("__pr") <= k)
         .withColumn("rank", F.row_number().over(final))
         .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", score_col)
+        .select("query_id", "rank", "neighbor_id", "score")
     )
 
 
@@ -218,10 +215,9 @@ def rrf_fuse(
     rank_a: DataFrame,
     rank_b: DataFrame,
     k: int,
-    c: int = RRF_C,
 ) -> DataFrame:
     """Reciprocal-rank fusion of two ``(query_id, rank, neighbor_id)``
-    rankings: ``score = Σ_lists 1/(c + rank)`` (a document absent from
+    rankings: ``score = Σ_lists 1/(RRF_C + rank)`` (a document absent from
     one list simply contributes nothing — the standard convention),
     rounded to 6 dp, re-ranked to the top ``k``. Two addends, so the
     double sum is order-exact across engines."""
@@ -234,10 +230,10 @@ def rrf_fuse(
             "neighbor_id",
             F.round(
                 F.coalesce(
-                    F.lit(1.0) / (F.lit(float(c)) + F.col("__ra")), F.lit(0.0)
+                    F.lit(1.0) / (F.lit(float(RRF_C)) + F.col("__ra")), F.lit(0.0)
                 )
                 + F.coalesce(
-                    F.lit(1.0) / (F.lit(float(c)) + F.col("__rb")), F.lit(0.0)
+                    F.lit(1.0) / (F.lit(float(RRF_C)) + F.col("__rb")), F.lit(0.0)
                 ),
                 6,
             ).alias("score"),
@@ -248,8 +244,6 @@ def rrf_fuse(
 
 def mlt_query_terms(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_terms: int = 8,
 ) -> DataFrame:
     """More-like-this query derivation: a query document's terms are
@@ -258,9 +252,9 @@ def mlt_query_terms(
     'interesting terms' heuristic, which would need its own oracle).
     Returns ``(query_id, term)``; callers pre-filter ``docs`` to the
     query slice (tiny → broadcasts downstream)."""
-    toks = _tokens(text_col)
+    toks = _tokens("text")
     return docs.select(
-        F.col(id_col).alias("query_id"),
+        F.col("doc_id").alias("query_id"),
         F.explode(
             F.slice(F.array_sort(F.array_distinct(toks)), 1, max_terms)
         ).alias("term"),

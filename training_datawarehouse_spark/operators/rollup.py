@@ -26,7 +26,6 @@ def periodic_rollup(
     period_col: str,
     specs: Sequence[ColumnSpec] | None = None,
     keys: Sequence[str] = (),
-    date_col: str = "date",
     measures: Sequence[Column] | None = None,
 ) -> DataFrame:
     """Roll day rows up to ``period_col`` grain (``year_week`` or
@@ -35,7 +34,7 @@ def periodic_rollup(
     Either pass ``specs`` (config-driven, mirrors the reference's
     generated agg list :537-549) or explicit ``measures``.
     """
-    aggs: list[Column] = [F.max(date_col).alias(date_col)]
+    aggs: list[Column] = [F.max("date").alias("date")]
     if specs is not None:
         aggs += rollup_exprs(list(specs))
     if measures is not None:

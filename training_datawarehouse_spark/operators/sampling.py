@@ -37,15 +37,14 @@ from pyspark.sql import functions as F
 from .text import hash_bucket
 
 
-def _fraction_col(
-    domain_col: str, fractions: dict[str, float], default_fraction: float
-) -> Column:
-    """Literal-map lookup of the target fraction for a row's domain."""
+def _fraction_col(domain_col: str, fractions: dict[str, float]) -> Column:
+    """Literal-map lookup of the target fraction for a row's domain; a
+    domain missing from ``fractions`` gets fraction 0."""
     for d, f in fractions.items():
         if not 0.0 <= f <= 1.0:
             raise ValueError(f"fraction for {d!r} must be in [0, 1], got {f}")
     m = F.create_map(*[F.lit(x) for kv in fractions.items() for x in kv])
-    return F.coalesce(m[F.col(domain_col)], F.lit(float(default_fraction)))
+    return F.coalesce(m[F.col(domain_col)], F.lit(0.0))
 
 
 def mixture_sample_exact(
@@ -53,7 +52,6 @@ def mixture_sample_exact(
     domain_col: str,
     id_col: str,
     fractions: dict[str, float],
-    default_fraction: float = 0.0,
 ) -> DataFrame:
     """Exact per-domain quota: ``floor(frac_d · n_d + 0.5)`` rows per
     domain, selected in md5(id) order (id as tiebreak). ``floor(x+0.5)``
@@ -64,7 +62,7 @@ def mixture_sample_exact(
     )
     whole = Window.partitionBy(domain_col)
     quota = F.floor(
-        _fraction_col(domain_col, fractions, default_fraction)
+        _fraction_col(domain_col, fractions)
         * F.count(F.lit(1)).over(whole)
         + F.lit(0.5)
     )
@@ -81,16 +79,14 @@ def mixture_sample_threshold(
     domain_col: str,
     id_col: str,
     fractions: dict[str, float],
-    default_fraction: float = 0.0,
-    n_buckets: int = 256,
 ) -> DataFrame:
-    """Scan-only mixture: keep rows whose content-hash bucket is below
-    the domain's cutoff ``floor(frac_d · n_buckets + 0.5)``. Appends no
+    """Scan-only mixture: keep rows whose 256-bucket content hash is
+    below the domain's cutoff ``floor(frac_d · 256 + 0.5)``. Appends no
     shuffle to the plan — verify with ``.explain()``: the filter sits
     directly on the scan."""
     cutoff = F.floor(
-        _fraction_col(domain_col, fractions, default_fraction)
-        * F.lit(n_buckets)
+        _fraction_col(domain_col, fractions)
+        * F.lit(256)
         + F.lit(0.5)
     )
-    return df.filter(hash_bucket(F.col(id_col), n_buckets) < cutoff)
+    return df.filter(hash_bucket(F.col(id_col)) < cutoff)

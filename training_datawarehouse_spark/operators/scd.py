@@ -35,14 +35,11 @@ def scd2_merge(
     key_cols: Sequence[str],
     tracked_cols: Sequence[str],
     batch_ts: str,
-    eff_col: str = "effective_from",
-    end_col: str = "effective_to",
-    curr_col: str = "is_current",
 ) -> DataFrame:
     """Apply one update batch to an SCD2 dimension table.
 
-    ``dim`` carries (key_cols, tracked_cols, eff_col, end_col,
-    curr_col); ``updates`` carries (key_cols, tracked_cols) — one row
+    ``dim`` carries (key_cols, tracked_cols, effective_from, effective_to,
+    is_current); ``updates`` carries (key_cols, tracked_cols) — one row
     per key. A batch holding several rows for a key would silently open
     multiple current versions, so duplicates are rejected here (dedupe
     upstream with an explicit precedence rule instead — this operator
@@ -55,11 +52,12 @@ def scd2_merge(
     keys = list(key_cols)
     if not keys:
         raise ValueError("key_cols must be non-empty")
-    out_cols = [*keys, *tracked_cols, eff_col, end_col, curr_col]
+    out_cols = [*keys, *tracked_cols,
+                "effective_from", "effective_to", "is_current"]
     ts = F.lit(batch_ts).cast("timestamp")
 
-    open_slice = dim.filter(F.col(curr_col))
-    closed_slice = dim.filter(~F.col(curr_col))
+    open_slice = dim.filter(F.col("is_current"))
+    closed_slice = dim.filter(~F.col("is_current"))
 
     # One-row-per-key enforcement, kept lazy: aggregate the (small)
     # update batch by key and plant a raise_error that fires at action
@@ -107,15 +105,15 @@ def scd2_merge(
     ).select(
         *keys,
         *[F.col(f"d.{c}").alias(c) for c in tracked_cols],
-        F.col(eff_col), F.col(end_col), F.col(curr_col),
+        F.col("effective_from"), F.col("effective_to"), F.col("is_current"),
     )
 
     closures = joined.filter(in_dim & in_upd & changed_pred).select(
         *keys,
         *[F.col(f"d.{c}").alias(c) for c in tracked_cols],
-        F.col(eff_col),
-        ts.alias(end_col),
-        F.lit(False).alias(curr_col),
+        F.col("effective_from"),
+        ts.alias("effective_to"),
+        F.lit(False).alias("is_current"),
     )
 
     new_versions = joined.filter(
@@ -123,9 +121,9 @@ def scd2_merge(
     ).select(
         *keys,
         *[F.col(f"u.{c}").alias(c) for c in tracked_cols],
-        ts.alias(eff_col),
-        F.lit(None).cast("timestamp").alias(end_col),
-        F.lit(True).alias(curr_col),
+        ts.alias("effective_from"),
+        F.lit(None).cast("timestamp").alias("effective_to"),
+        F.lit(True).alias("is_current"),
     )
 
     return (

@@ -136,7 +136,7 @@ def nearest_centroid_lists(
 
 def ivf_topk(
     corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
-    k: int = 5, n_lists: int = 8, n_probe: int = 2, seed: int = 13,
+    k: int = 5, n_lists: int = 8, n_probe: int = 2,
     centroids: list[list[float]] | None = None, dim: int | None = None,
 ) -> DataFrame:
     """IVF-style ANN: coarse-quantize the corpus to its nearest centroid
@@ -154,7 +154,7 @@ def ivf_topk(
     if centroids is not None:
         cents = centroids
     else:
-        cents = ivf_default_centroids(n_lists, _vec_dim(corpus, vec_col, dim), seed)
+        cents = ivf_default_centroids(n_lists, _vec_dim(corpus, vec_col, dim))
 
     def nearest_lists(vec: Column, n: int) -> Column:
         return nearest_centroid_lists(vec, cents, n)
@@ -188,7 +188,6 @@ def kmeans_fit(
     vec_col: str,
     k: int = 8,
     iters: int = 5,
-    seed: int = 13,
     init_vectors: list[list[float]] | None = None,
     round_dp: int | None = None,
 ) -> tuple[list[list[float]], list[float]]:
@@ -215,7 +214,7 @@ def kmeans_fit(
             raise ValueError(f"init_vectors must have k={k} rows")
         cents = [[float(x) for x in v] for v in init_vectors]
     else:
-        rng = np.random.RandomState(seed)
+        rng = np.random.RandomState(13)
         sample = df.select(vec_col).head(max(k * 20, 100))
         pool = np.array([r[0] for r in sample], dtype="float64")
         cents = pool[rng.choice(len(pool), size=k, replace=False)].tolist()
@@ -297,19 +296,17 @@ def _kmeans_iterate(
     return cents, inertia_hist
 
 
-def ivf_default_centroids(
-    n_lists: int, dim: int, seed: int = 13
-) -> list[list[float]]:
+def ivf_default_centroids(n_lists: int, dim: int) -> list[list[float]]:
     """Deterministic pseudo-random coarse centroids (seeded numpy,
     rounded) — shared by the Spark builder and the DuckDB oracle
     generator so both engines quantize identically."""
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(13)
     return rng.standard_normal((n_lists, dim)).round(6).tolist()
 
 
-def hyperplanes(dim: int, n_planes: int = 16, seed: int = 7) -> list[list[float]]:
+def hyperplanes(dim: int, n_planes: int = 16) -> list[list[float]]:
     """Deterministic random hyperplanes for sign-LSH."""
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(7)
     return rng.standard_normal((n_planes, dim)).round(6).tolist()
 
 
@@ -333,7 +330,7 @@ def signlsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
 
 def signlsh_topk(
     corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
-    k: int = 5, n_planes: int = 8, seed: int = 7, dim: int | None = None,
+    k: int = 5, n_planes: int = 8, dim: int | None = None,
     n_tables: int = 1,
 ) -> DataFrame:
     """Approximate top-k: bucket-join on sign-LSH keys, exact cosine
@@ -346,9 +343,7 @@ def signlsh_topk(
     tiny query side), and only candidates ever reach the cosine —
     at scale the candidate set is far smaller than the corpus, so the
     re-score join stays slim."""
-    planes_all = hyperplanes(
-        _vec_dim(corpus, vec_col, dim), n_tables * n_planes, seed
-    )
+    planes_all = hyperplanes(_vec_dim(corpus, vec_col, dim), n_tables * n_planes)
 
     # ALL tables' bucket keys from ONE 32-bit sign string (one
     # transform lambda over the full plane literal, per-table keys by

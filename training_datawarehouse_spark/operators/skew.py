@@ -19,19 +19,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def with_salt(
-    df: DataFrame,
-    n_salts: int,
-    col_name: str = "__salt",
-    cols: list[str] | None = None,
-) -> DataFrame:
-    """Deterministic row-level salt in [0, n_salts): a content hash of a
-    stable column set (retry-stable, unlike monotonic ids). Pass
-    ``cols`` to hash a small distinguishing subset — on wide rows,
-    hashing every column costs real CPU per row for no extra spread."""
+def with_salt(df: DataFrame, n_salts: int) -> DataFrame:
+    """Deterministic row-level salt ``__salt`` in [0, n_salts): a
+    content hash of every column (retry-stable, unlike monotonic
+    ids)."""
     return df.withColumn(
-        col_name,
-        F.pmod(F.xxhash64(*(cols or df.columns)), F.lit(n_salts)).cast("int"),
+        "__salt",
+        F.pmod(F.xxhash64(*df.columns), F.lit(n_salts)).cast("int"),
     )
 
 

@@ -62,9 +62,6 @@ def drop_reason(
     quality: Column,
     repetition: Column,
     n_tokens: Column,
-    min_tokens: int = 5,
-    min_quality: float = 0.3,
-    max_repetition: float = 0.5,
 ) -> Column:
     """Filter-with-provenance: the FIRST failing quality rule, or
     'kept'. Corpus filtering that records WHY each document was dropped
@@ -73,9 +70,9 @@ def drop_reason(
     the contract: short-circuit cheap structural checks before model-ish
     scores, mirroring how production filters are layered."""
     return (
-        F.when(n_tokens < min_tokens, F.lit("too_short"))
-        .when(repetition > max_repetition, F.lit("repetitive"))
-        .when(quality < min_quality, F.lit("low_quality"))
+        F.when(n_tokens < 5, F.lit("too_short"))
+        .when(repetition > 0.5, F.lit("repetitive"))
+        .when(quality < 0.3, F.lit("low_quality"))
         .when(lang_pred == "und", F.lit("unknown_lang"))
         .otherwise(F.lit("kept"))
     )
@@ -108,15 +105,13 @@ def hash_bucket(key: Column, n_buckets: int = 256) -> Column:
     return b0 % n_buckets
 
 
-def train_val_test_split(
-    key: Column, val_pct: int = 5, test_pct: int = 5
-) -> Column:
-    """Stable split label from 256 hash buckets: first ``256·test%``
-    buckets → 'test', next ``256·val%`` → 'val', rest → 'train'.
+def train_val_test_split(key: Column) -> Column:
+    """Stable split label from 256 hash buckets: the first 5 % of the
+    buckets → 'test', the next 5 % → 'val', the rest → 'train'.
     Membership of a given key never changes as the corpus grows."""
     b = hash_bucket(key, 256)
-    test_hi = round(256 * test_pct / 100)
-    val_hi = test_hi + round(256 * val_pct / 100)
+    test_hi = round(256 * 5 / 100)
+    val_hi = test_hi + round(256 * 5 / 100)
     return (
         F.when(b < test_hi, F.lit("test"))
         .when(b < val_hi, F.lit("val"))
@@ -130,15 +125,15 @@ def train_val_test_split(
 BPE_TOKEN_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 
 
-def regex_tokens(text: Column, pattern: str = BPE_TOKEN_PATTERN) -> Column:
+def regex_tokens(text: Column) -> Column:
     """Regex tokenization (BPE-ish pre-tokenizer splits), JVM-side."""
     # group 0 = whole match (Spark defaults to group 1 and rejects
     # patterns without capture groups)
-    return F.regexp_extract_all(text, F.lit(pattern), F.lit(0))
+    return F.regexp_extract_all(text, F.lit(BPE_TOKEN_PATTERN), F.lit(0))
 
 
-def regex_token_count(text: Column, pattern: str = BPE_TOKEN_PATTERN) -> Column:
-    return F.size(regex_tokens(text, pattern)).cast("long")
+def regex_token_count(text: Column) -> Column:
+    return F.size(regex_tokens(text)).cast("long")
 
 
 # Frequent character trigrams per language (deterministic mini

@@ -31,22 +31,21 @@ from pyspark.sql import types as T
 
 # ---------------------------------------------------------------- spine
 
-def date_spine(df: DataFrame, date_col: str = "date") -> DataFrame:
+def date_spine(df: DataFrame) -> DataFrame:
     """Dense daily date axis spanning [min(date), max(date)] (OP-TS-1).
 
     One tiny global agg then ``sequence`` + ``explode`` — the spine is
     generated, never shuffled from the fact table.
     """
-    mm = df.agg(F.min(date_col).alias("lo"), F.max(date_col).alias("hi"))
+    mm = df.agg(F.min("date").alias("lo"), F.max("date").alias("hi"))
     return mm.select(
-        F.explode(F.sequence("lo", "hi", F.expr("interval 1 day"))).alias(date_col)
+        F.explode(F.sequence("lo", "hi", F.expr("interval 1 day"))).alias("date")
     )
 
 
 def densify(
     facts: DataFrame,
     keys: Sequence[str],
-    date_col: str = "date",
     defaults: dict[str, object] | None = None,
 ) -> DataFrame:
     """Give every key cell one row per date in the global span (OP-JN-1).
@@ -56,13 +55,13 @@ def densify(
     left join against spine × distinct-keys. Both spine and key set are
     tiny → broadcast; the fact table never moves.
     """
-    spine = date_spine(facts, date_col)
+    spine = date_spine(facts)
     if keys:
         cells = facts.select(*keys).distinct()
         grid = F.broadcast(spine.crossJoin(cells))
     else:
         grid = F.broadcast(spine)
-    out = grid.join(facts, on=[date_col, *keys], how="left")
+    out = grid.join(facts, on=["date", *keys], how="left")
     if defaults:
         out = out.na.fill(defaults)
     return out
@@ -73,11 +72,10 @@ def densify(
 def interpolate_linear(
     series: DataFrame,
     value_cols: Sequence[str],
-    date_col: str = "date",
-    keys: Sequence[str] = (),
     fill_zero: bool = True,
 ) -> DataFrame:
-    """Dense daily reindex + linear interpolation (OP-TS-1 + OP-TS-2).
+    """Dense daily reindex + linear interpolation (OP-TS-1 + OP-TS-2) of
+    one unkeyed ``date`` series.
 
     Equivalent of pandas ``Series.reindex(date_range).interpolate('linear')``
     (reference :168-171,214-219) as pure window functions: for each row,
@@ -94,29 +92,22 @@ def interpolate_linear(
     null, then → 0 when ``fill_zero`` (the reference's ``fillna(0)``
     :175-176,222-224 only ever hits those, OP-TS-3).
     """
-    spine = date_spine(series, date_col)
-    if keys:
-        cells = series.select(*keys).distinct()
-        spine = spine.crossJoin(F.broadcast(cells))
-    dense = spine.join(series, on=[date_col, *keys], how="left")
+    dense = date_spine(series).join(series, on=["date"], how="left")
 
-    w_back = (
-        Window.partitionBy(*keys).orderBy(date_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    w_back = Window.orderBy("date").rowsBetween(Window.unboundedPreceding, 0)
     w_fwd = (
-        Window.partitionBy(*keys).orderBy(F.col(date_col).desc())
+        Window.orderBy(F.col("date").desc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     out = dense
     for v in value_cols:
-        anchor_d = F.when(F.col(v).isNotNull(), F.col(date_col))
+        anchor_d = F.when(F.col(v).isNotNull(), F.col("date"))
         prev_v = F.last(v, ignorenulls=True).over(w_back)
         prev_d = F.last(anchor_d, ignorenulls=True).over(w_back)
         next_v = F.last(v, ignorenulls=True).over(w_fwd)
         next_d = F.last(anchor_d, ignorenulls=True).over(w_fwd)
         span = F.datediff(next_d, prev_d)
-        lerp = prev_v + (next_v - prev_v) * F.datediff(F.col(date_col), prev_d) / span
+        lerp = prev_v + (next_v - prev_v) * F.datediff(F.col("date"), prev_d) / span
         interp = (
             F.when(F.col(v).isNotNull(), F.col(v))
             .when(next_v.isNull() & prev_v.isNotNull(), prev_v)
@@ -135,7 +126,6 @@ def ewma(
     df: DataFrame,
     pairs: Iterable[tuple[str, str, float]],
     keys: Sequence[str] = (),
-    date_col: str = "date",
 ) -> DataFrame:
     """Per-key EWMA recurrences (OP-WIN-1; reference ``calculate_tsb``
     :255-274).
@@ -167,7 +157,7 @@ def ewma(
     srcs = {out: src for src, out, _ in pairs}
 
     def compute(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(date_col).reset_index(drop=True)
+        pdf = pdf.sort_values("date").reset_index(drop=True)
         for out_col, alpha in alphas.items():
             decay = 1.0 - alpha
             x = pdf[srcs[out_col]].fillna(0.0).to_numpy(dtype="float64")
@@ -190,14 +180,15 @@ def ewma_alpha(n_days: float) -> float:
     return 1.0 - math.exp(-1.0 / n_days)
 
 
+EWMA_SCAN_BLOCK = 32  # rows per prefix-scan segment
+
+
 def ewma_scan(
     df: DataFrame,
     pairs: Iterable[tuple[str, str, float]],
-    keys: Sequence[str] = (),
-    date_col: str = "date",
-    block: int = 32,
 ) -> DataFrame:
-    """EWMA as a segmented prefix scan — pure built-ins, no Python.
+    """EWMA of one unkeyed ``date`` series as a segmented prefix scan —
+    pure built-ins, no Python.
 
     The ``ewma`` operator above runs each key's series through one
     ``applyInPandas`` task; this is the documented fallback when a
@@ -208,32 +199,29 @@ def ewma_scan(
     loses precision because ``d^{−i}`` grows unboundedly. Blocking
     bounds every exponent:
 
-    1. within a ``block``-row segment, local prefix
-       ``pre_j = d^j · Σ_{i≤j} (α x_i d^{−i})`` uses exponents ≤ block
+    1. within an ``EWMA_SCAN_BLOCK``-row segment, local prefix
+       ``pre_j = d^j · Σ_{i≤j} (α x_i d^{−i})`` uses exponents ≤ 32
        (d^{−31} ≈ 84 at N=7 — harmless);
     2. each block's closing state B_b feeds a block-level closed form
        ``S_b = Σ_{k≤b} B_k · d^{block·(b−k)}`` where every exponent is
        ≥ 0 (terms underflow to 0 exactly when they stop mattering) —
-       computed with a per-key range join over the tiny block-summary
-       table (|blocks| = |series|/block rows per key);
+       computed with a range join over the tiny block-summary
+       table (|blocks| = |series|/block rows);
     3. ``y = d^{j+1}·S_{b−1} + pre_j``.
 
     Differential-tested against ``ewma`` and hash-checked against the
     same recursive-CTE oracle as the applyInPandas path.
     """
     pairs = list(pairs)
-    keys = list(keys)
-    if not keys:
-        df = df.withColumn("__g", F.lit(0))
-        group_keys = ["__g"]
-    else:
-        group_keys = keys
+    # the series is one group: a constant key the windows partition by
+    df = df.withColumn("__g", F.lit(0))
+    group_keys = ["__g"]
 
-    w_rn = Window.partitionBy(*group_keys).orderBy(date_col)
+    w_rn = Window.partitionBy(*group_keys).orderBy("date")
     out_df = (
         df.withColumn("__rn", F.row_number().over(w_rn) - 1)
-        .withColumn("__b", F.floor(F.col("__rn") / block).cast("int"))
-        .withColumn("__j", (F.col("__rn") % block).cast("int"))
+        .withColumn("__b", F.floor(F.col("__rn") / EWMA_SCAN_BLOCK).cast("int"))
+        .withColumn("__j", (F.col("__rn") % EWMA_SCAN_BLOCK).cast("int"))
     )
 
     w_blk = (
@@ -277,7 +265,7 @@ def ewma_scan(
     for (src, out, n) in pairs:
         d = 1.0 - ewma_alpha(n)
         term = F.col(f"__B_{out}") * F.pow(
-            F.lit(d), F.lit(float(block)) * (F.col("__b1") - F.col("__b2"))
+            F.lit(d), F.lit(float(EWMA_SCAN_BLOCK)) * (F.col("__b1") - F.col("__b2"))
         )
         state_aggs.append(F.sum(term).alias(f"__S_{out}"))
     states = (
@@ -300,9 +288,7 @@ def ewma_scan(
         out_df = out_df.withColumn(out, carry + F.col(pre_cols[out]))
 
     drop = ["__rn", "__b", "__j", "__maxj", *pre_cols.values(),
-            *[f"__S_{o}" for o in pre_cols]]
-    if not keys:
-        drop.append("__g")
+            *[f"__S_{o}" for o in pre_cols], "__g"]
     return out_df.drop(*[c for c in drop if c in out_df.columns])
 
 
@@ -317,7 +303,6 @@ def rolling_monotony_strain(
     df: DataFrame,
     value_col: str,
     keys: Sequence[str] = (),
-    date_col: str = "date",
     prefix: str = "",
 ) -> DataFrame:
     """7-row rolling mean/std/sum → monotony & strain (OP-WIN-2).
@@ -329,9 +314,9 @@ def rolling_monotony_strain(
     UDF, one sort per key partition.
     """
     w7 = (
-        Window.partitionBy(*keys).orderBy(date_col).rowsBetween(-6, 0)
+        Window.partitionBy(*keys).orderBy("date").rowsBetween(-6, 0)
         if keys
-        else Window.orderBy(date_col).rowsBetween(-6, 0)
+        else Window.orderBy("date").rowsBetween(-6, 0)
     )
     mean7 = F.avg(value_col).over(w7)
     std7 = F.stddev_samp(value_col).over(w7)

@@ -30,9 +30,11 @@ segmentations of each word:
 
 Spark-first shape (the BPE discipline, ``bpe.py`` two-phase): the
 corpus is touched ONCE (the word-frequency aggregation — map-side
-combinable, vocabulary-sized output, collected to the driver by
-``collect_word_counts``); the EM loop then runs driver-side over the
-(word, count) table, as reference trainers hold it. Scoring is a
+combinable, vocabulary-sized output, collected to the driver once by
+``bpe.collect_word_counts`` and shared with the BPE and WordPiece
+trainers, less the words over 127 characters); the EM loop then runs
+driver-side over the (word, count) table, as reference trainers hold
+it. Scoring is a
 broadcast join of the (vocabulary-sized) per-word stats table — no
 per-document DP replay.
 
@@ -60,13 +62,12 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.crossing import local_frame
 from ..functions.scalars import round_half_away
-from .bpe import collect_capped
 
-#: trainable-word alphabet: the BPE [a-z]+ rule PLUS an explicit
-#: 127-char length cap — the oracle's position/length expansion uses
-#: constant-bound ranges (DuckDB's range() cannot take a lateral
-#: column bound), so the length bound is part of the cross-engine
-#: contract, not an implementation detail
+#: trainable-word alphabet: the BPE [a-z]+ rule (``bpe.WORD_RE``) PLUS
+#: an explicit 127-char length cap — the oracle's position/length
+#: expansion uses constant-bound ranges (DuckDB's range() cannot take a
+#: lateral column bound), so the length bound is part of the
+#: cross-engine contract, not an implementation detail
 ULM_WORD_RE = "^[a-z]{1,127}$"
 ULM_WORD_RE_SQL = "^[a-z]{1,127}$"
 
@@ -168,31 +169,15 @@ def seed_vocab(word_counts: list, vocab_size: int, max_len: int) -> dict:
     }
 
 
-def collect_word_counts(
-    docs: DataFrame, text_col: str = "text",
-) -> list[tuple[str, int]]:
-    """The unigram family's corpus scan, collected once: the
-    (word, count) table over ``ULM_WORD_RE``. A caller that both
-    trains (``train_unigram``) and scores (``doc_unigram_scores``)
-    passes the one collected table to each — the scorer's
-    distinct-word set is exactly its keys."""
-    return collect_capped(
-        docs.select(
-            F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("w")
-        )
-        .filter(F.col("w").rlike(ULM_WORD_RE))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def train_unigram(
     word_counts: list[tuple[str, int]],
     vocab_size: int = 40,
     max_len: int = 3,
     iters: int = 2,
 ) -> dict:
-    """Train the unigram model on a ``collect_word_counts`` table;
+    """Train the unigram model on a (word, count) table over
+    ``ULM_WORD_RE`` (``bpe.collect_word_counts`` less the words over
+    127 characters);
     returns the final ``{piece: prob}`` dict (model-sized). The EM
     loop runs on the driver — the algorithmic reference the SQL
     oracle must reproduce exactly."""
@@ -216,9 +201,6 @@ def doc_unigram_scores(
     docs: DataFrame,
     probs: dict,
     words: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_len: int = 3,
 ) -> DataFrame:
     """Per-document scores under the trained model: ``ulm_nll`` =
     Σ over trainable word occurrences of −ln Z(word), and
@@ -227,23 +209,23 @@ def doc_unigram_scores(
     Documents with no trainable word are absent (LEFT-join from the
     caller).
 
-    ``words``: the distinct trainable words (the
-    ``collect_word_counts`` keys — the trainer's table has exactly the
-    scorer's distinct-word set)."""
+    ``docs`` carries ``doc_id`` and ``text``; ``words``: the distinct
+    trainable words (the keys of the trainer's table, which has exactly
+    the scorer's distinct-word set)."""
     spark = docs.sparkSession
     # the distinct-word stats table: vocabulary-sized, computed once
     words = sorted(set(words))
     stat_rows = []
     for w in words:
-        nll_micro, exp_micro = _word_stats(w, probs, max_len)
+        nll_micro, exp_micro = _word_stats(w, probs, 3)  # trained max_len
         stat_rows.append((w, nll_micro, exp_micro))
     stats = F.broadcast(local_frame(
         spark, stat_rows, "w string, nll_micro long, exp_micro long"
     ))
     doc_words = (
         docs.select(
-            F.col(id_col).alias("__id"),
-            F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("w"),
+            F.col("doc_id").alias("__id"),
+            F.explode(F.split(F.lower(F.col("text")), " ")).alias("w"),
         )
         .filter(F.col("w").rlike(ULM_WORD_RE))
     )
@@ -258,7 +240,7 @@ def doc_unigram_scores(
                 "ulm_exp_tokens"
             ),
         )
-        .withColumnRenamed("__id", id_col)
+        .withColumnRenamed("__id", "doc_id")
     )
 
 
@@ -276,8 +258,6 @@ def unigram_oracle_ctes(
     vocab_size: int = 40,
     max_len: int = 3,
     iters: int = 2,
-    src: str = "documents",
-    text_col: str = "text",
 ) -> str:
     """DuckDB CTE block RETRAINING the identical unigram model and
     re-scoring every document. Emits ``ulm(doc_id, ulm_nll,
@@ -344,7 +324,7 @@ ub{k}(w, j, b0, b1, b2) AS (
 
     parts = [f"""uw AS MATERIALIZED (
   SELECT w, count(*)::BIGINT AS n FROM (
-    SELECT unnest(string_split(lower({text_col}), ' ')) AS w FROM {src}
+    SELECT unnest(string_split(lower(text), ' ')) AS w FROM documents
   ) WHERE regexp_matches(w, '{ULM_WORD_RE_SQL}') GROUP BY w
 ),
 upos AS MATERIALIZED (
@@ -426,8 +406,8 @@ ustat AS MATERIALIZED (
 udw AS (
   SELECT doc_id, w FROM (
     SELECT doc_id,
-           unnest(string_split(lower({text_col}), ' ')) AS w
-    FROM {src}
+           unnest(string_split(lower(text), ' ')) AS w
+    FROM documents
   ) WHERE regexp_matches(w, '{ULM_WORD_RE_SQL}')
 ),
 ulm AS (

@@ -330,18 +330,16 @@ def frame_token_grids(text: str, n_frames: int = N_FRAMES) -> list[bytes]:
 
 
 def video_pair_matches(
-    sig: DataFrame, n_frames: int = N_FRAMES,
-    max_hamming: int = ph.DEFAULT_MAX_HAMMING,
-    max_bucket: int = ph.DEFAULT_MAX_BUCKET,
-    min_frames: int = DEFAULT_MIN_FRAMES,
-    materialize: bool = False,
+    sig: DataFrame, materialize: bool = False,
 ) -> DataFrame:
     """Video-grain near-dup pairs from (id, frame, b0..b3) signatures:
     (id_a, id_b, offset, n_match, score) with id_a < id_b, where
-    ``n_match`` counts frame pairs matching (Hamming <= max_hamming)
-    at the winning temporal offset and ``score = n_match / n_frames``.
+    ``n_match`` counts frame pairs matching (Hamming <=
+    ``ph.DEFAULT_MAX_HAMMING``) at the winning temporal offset,
+    ``score = n_match / N_FRAMES``, and pairs with fewer than
+    ``DEFAULT_MIN_FRAMES`` matches are dropped.
 
-    Shape: frames become COMPOSITE ids (id·n_frames + frame), ONE call
+    Shape: frames become COMPOSITE ids (id·N_FRAMES + frame), ONE call
     to the tested `phash_candidate_pairs` operator does banding +
     rep-grain dedup + the doc-weighted hot-bucket cap + exact-Hamming
     verify across ALL frames at once, and temporal-alignment voting is
@@ -355,11 +353,11 @@ def video_pair_matches(
     fingerprinting. Requires id >= 0 (composite ids must order by
     (id, frame); negative ids would silently mis-group composites, and
     Spark's `div` truncates toward zero where DuckDB's `//` floors —
-    enforced per-row below, not just documented); n_frames must exceed
-    the max frame number."""
+    enforced per-row below, not just documented); ``N_FRAMES`` must
+    exceed the max frame number."""
     comp = sig.select(
         F.when(
-            F.col("id") >= 0, F.col("id") * n_frames + F.col("frame")
+            F.col("id") >= 0, F.col("id") * N_FRAMES + F.col("frame")
         ).otherwise(
             F.raise_error(
                 F.lit("video_pair_matches: id must be >= 0 "
@@ -372,13 +370,11 @@ def video_pair_matches(
     # three-consumer group materialization through AND materializes
     # the frame-grain pair set (it feeds the voting aggregation —
     # identical rows, one execution of the banding subtree)
-    fp = ph.phash_candidate_pairs(
-        comp, max_hamming=max_hamming, max_bucket=max_bucket,
-        materialize=materialize)
+    fp = ph.phash_candidate_pairs(comp, materialize=materialize)
     pairs = fp.select(
-        F.expr(f"id_a div {n_frames}").alias("va"),
-        F.expr(f"id_b div {n_frames}").alias("vb"),
-        (F.col("id_a") % n_frames - F.col("id_b") % n_frames)
+        F.expr(f"id_a div {N_FRAMES}").alias("va"),
+        F.expr(f"id_b div {N_FRAMES}").alias("vb"),
+        (F.col("id_a") % N_FRAMES - F.col("id_b") % N_FRAMES)
         .cast("int").alias("offset"),
     ).filter(F.col("va") != F.col("vb"))
     votes = pairs.groupBy("va", "vb", "offset").agg(
@@ -387,10 +383,10 @@ def video_pair_matches(
         F.col("n_match").desc(), F.abs("offset"), F.col("offset"))
     out = (
         votes.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("n_match") >= min_frames))
+        .filter((F.col("rn") == 1) & (F.col("n_match") >= DEFAULT_MIN_FRAMES))
         .select(F.col("va").alias("id_a"), F.col("vb").alias("id_b"),
                 "offset", "n_match",
-                F.round(F.col("n_match") / F.lit(float(n_frames)), 6)
+                F.round(F.col("n_match") / F.lit(float(N_FRAMES)), 6)
                 .alias("score"))
     )
     if not materialize:

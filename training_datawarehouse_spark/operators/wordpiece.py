@@ -145,8 +145,7 @@ def encode_token_counts(
     )
 
 
-def wordpiece_oracle_ctes(num_merges: int = 6, src: str = "documents",
-                          text_col: str = "text") -> str:
+def wordpiece_oracle_ctes(num_merges: int = 6) -> str:
     """DuckDB CTE block that RETRAINS the same ``num_merges``
     WordPiece merges and re-encodes every document — the
     ``bpe_oracle_ctes`` structure with a per-stage symbol-count CTE
@@ -159,8 +158,8 @@ string), wp_enc. Must be
     parts = [f"""
 wp_tw AS MATERIALIZED (
   SELECT doc_id, w FROM (
-    SELECT doc_id, unnest(string_split(lower({text_col}), ' ')) AS w
-    FROM {src}
+    SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w
+    FROM documents
   ) WHERE regexp_matches(w, '^[a-z]+$')
 ),
 wp_w0 AS MATERIALIZED (

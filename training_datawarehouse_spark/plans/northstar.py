@@ -117,6 +117,10 @@ FROM t
 
 # --------------------------------------------- language id + quality
 
+_PR_ITERS = 5          # PageRank rounds of the link-graph stage
+_PR_DAMPING_PCT = 85
+
+
 def lang_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BOTH language-ID families plus quality filtering in ONE
     projection over one scan: stopword-heuristic lang ID, [0,1] quality
@@ -269,7 +273,7 @@ def lang_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pr = gr.pagerank_fixed(
         docs.select("doc_id"), edges, node_col="doc_id",
-        iterations=5, damping_pct=85,
+        iterations=_PR_ITERS, damping_pct=_PR_DAMPING_PCT,
     )
 
     out = docs.select(
@@ -300,16 +304,15 @@ def lang_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).join(pr, "doc_id")
 
 
-def _pagerank_oracle(iterations: int = 5, d: int = 85,
-                     scale: int = 10**12) -> str:
+def _pagerank_oracle() -> str:
     """DuckDB twin of the lang_quality PageRank stage: the same
     deterministic link-graph synthesis and the same integer recurrence,
-    unrolled to ``iterations`` CTE generations. Pure BIGINT arithmetic
+    unrolled to ``_PR_ITERS`` CTE generations. Pure BIGINT arithmetic
     (``//`` == Spark ``DIV`` for non-negative operands) — bit-exact, no
     float column anywhere."""
-    dd = 100
+    d, dd, scale = _PR_DAMPING_PCT, 100, gr.PR_SCALE
     its = []
-    for k in range(1, iterations + 1):
+    for k in range(1, _PR_ITERS + 1):
         p = k - 1
         its.append(f"""
 prdang{k} AS (
@@ -360,7 +363,7 @@ pr0 AS (
 SELECT p.node AS doc_id, p.r AS pr_rank,
        COALESCE(g.deg, 0) AS pr_out_deg,
        COALESCE(i.ind, 0) AS pr_in_deg
-FROM pr{iterations} p
+FROM pr{_PR_ITERS} p
 LEFT JOIN prdeg g ON g.src = p.node
 LEFT JOIN prind i ON i.dst = p.node
 """
@@ -1331,22 +1334,20 @@ wz AS MATERIALIZED (
     return ",".join(parts)
 
 
-def _embedding_neardup_oracle(dim: int = EMBEDDING_DIM,
-                              n_comp: int = _PCA_COMPONENTS,
-                              iters: int = _PCA_ITERS,
-                              tau: float = _PCA_TAU) -> str:
-    blocks = _pca_blocks(dim, n_comp, iters)
+def _embedding_neardup_oracle() -> str:
+    blocks = _pca_blocks(EMBEDDING_DIM, _PCA_COMPONENTS, _PCA_ITERS)
     comp_rows = "\n  UNION ALL ".join(
         f"SELECT 'comp' AS space, {c} AS id_a, i - 1 AS id_b, x AS cosine"
         f" FROM fv{c}"
-        for c in range(n_comp)
+        for c in range(_PCA_COMPONENTS)
     )
     eig_rows = "\n  UNION ALL ".join(
-        f"SELECT 'eig', {c}, -1, lam FROM p{c}lam" for c in range(n_comp)
+        f"SELECT 'eig', {c}, -1, lam FROM p{c}lam"
+        for c in range(_PCA_COMPONENTS)
     )
-    wn = (" + ".join(f"a.z{c} * a.z{c}" for c in range(n_comp)),
-          " + ".join(f"b.z{c} * b.z{c}" for c in range(n_comp)))
-    wdot = " + ".join(f"a.z{c} * b.z{c}" for c in range(n_comp))
+    wn = (" + ".join(f"a.z{c} * a.z{c}" for c in range(_PCA_COMPONENTS)),
+          " + ".join(f"b.z{c} * b.z{c}" for c in range(_PCA_COMPONENTS)))
+    wdot = " + ".join(f"a.z{c} * b.z{c}" for c in range(_PCA_COMPONENTS))
     return f"""
 WITH e AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id % 4 = 0
@@ -1371,7 +1372,7 @@ UNION ALL
 UNION ALL
 {eig_rows}
 UNION ALL
-SELECT 'white', id_a, id_b, cosine FROM white_pairs WHERE cosine >= {tau}
+SELECT 'white', id_a, id_b, cosine FROM white_pairs WHERE cosine >= {_PCA_TAU}
 """
 
 
@@ -1502,9 +1503,7 @@ def _lloyd_blocks(k: int, iters: int, dim: int, prefix: str = "c",
     return ",".join(parts), prev
 
 
-def _kmeans_oracle(k: int = _KMEANS_K, iters: int = _KMEANS_ITERS,
-                   dim: int = EMBEDDING_DIM,
-                   tau: float = _SEMDEDUP_TAU) -> str:
+def _kmeans_oracle() -> str:
     """SQL twin of ``kmeans_clusters`` (see ``_lloyd_blocks``), plus
     the same final assignment stats and (r6) the SemDeDup stage:
     within-cluster cosine pairs at τ, duplicate groups via the
@@ -1512,8 +1511,8 @@ def _kmeans_oracle(k: int = _KMEANS_K, iters: int = _KMEANS_ITERS,
     oracle), per-cluster would-drop = members − components. Heavily
     referenced CTEs are MATERIALIZED — DuckDB inlines CTEs by default,
     and `final` (the argmin assignment) is referenced three times."""
-    blocks, final_c = _lloyd_blocks(k, iters, dim)
-    d2 = (f"list_sum(list_transform(range(1, {dim + 1}),"
+    blocks, final_c = _lloyd_blocks(_KMEANS_K, _KMEANS_ITERS, EMBEDDING_DIM)
+    d2 = (f"list_sum(list_transform(range(1, {EMBEDDING_DIM + 1}),"
           f" i -> (e.v[i] - c.c[i]) * (e.v[i] - c.c[i])))")
     return f"""
 WITH RECURSIVE e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),{blocks},
@@ -1532,7 +1531,7 @@ sd_pairs AS MATERIALIZED (
                   * sqrt(list_dot_product(b.v, b.v))), 6) AS cosine
   FROM final a JOIN final b ON a.cid = b.cid AND a.vec_id < b.vec_id
 ),
-sd_q AS MATERIALIZED (SELECT * FROM sd_pairs WHERE cosine >= {tau}),
+sd_q AS MATERIALIZED (SELECT * FROM sd_pairs WHERE cosine >= {_SEMDEDUP_TAU}),
 sd_edges AS MATERIALIZED (
   SELECT id_a AS ea, id_b AS eb FROM sd_q
   UNION
@@ -2081,10 +2080,12 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Serially those barriers were most of this entry's wall-clock at
     # bench scale and leave the cluster idle per barrier at any scale
     # — so the stage builds OVERLAP in a thread pool (guide §2.6),
-    # and the tokenizer trainers share their corpus scans: BPE and
-    # WordPiece train on the SAME (word, count) table (collected
-    # once, `bpe.collect_word_counts`), and the unigram scorer's
-    # distinct-word set is exactly its trainer's vocabulary keys.
+    # and the tokenizer trainers share ONE corpus scan: BPE and
+    # WordPiece train on the same (word, count) table (collected
+    # once, `bpe.collect_word_counts`), the unigram trainer on that
+    # table less words over 127 characters (`ug.ULM_WORD_RE`), and
+    # the unigram scorer's distinct-word set is exactly its trainer's
+    # table keys.
     # Join order and every model are unchanged, so the result is
     # byte-identical to the serial build.
     from concurrent.futures import ThreadPoolExecutor
@@ -2100,11 +2101,15 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         _label("bigram-LM track")
         return tx.bigram_lm_scores(docs, "doc_id", "text", top_k=200)
 
-    def _bpe_wp_track():
-        _label("BPE/WordPiece track")
+    def _subword_track():
+        _label("BPE/WordPiece/unigram track")
         wc = bpe.collect_word_counts(docs, "text")
+        uwc = [(w, n) for w, n in wc if len(w) <= 127]
+        uprobs = ug.train_unigram(uwc, vocab_size=40, max_len=3, iters=2)
+        usc = ug.doc_unigram_scores(docs, uprobs, [w for w, _ in uwc])
         return (bpe.train_bpe(spark, wc, num_merges=8),
-                wpc.train_wordpiece(spark, wc, num_merges=6))
+                wpc.train_wordpiece(spark, wc, num_merges=6),
+                (uprobs, usc))
 
     def _dsir_track():
         _label("DSIR track")
@@ -2123,16 +2128,8 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_buckets=256, epochs=3, lr=0.5,
         )
 
-    def _ulm_track():
-        _label("unigram-LM track")
-        wc = ug.collect_word_counts(docs, "text")
-        uprobs = ug.train_unigram(wc, vocab_size=40, max_len=3, iters=2)
-        usc = ug.doc_unigram_scores(docs, uprobs, [w for w, _ in wc],
-                                    "doc_id", "text")
-        return uprobs, usc
-
-    tracks = {"lm": _lm_track, "bpe_wp": _bpe_wp_track,
-              "dsir": _dsir_track, "lrq": _lrq_track, "ulm": _ulm_track}
+    tracks = {"lm": _lm_track, "subword": _subword_track,
+              "dsir": _dsir_track, "lrq": _lrq_track}
     built = {}
     with ThreadPoolExecutor(len(tracks)) as ex:
         futs = {k: ex.submit(fn) for k, fn in tracks.items()}
@@ -2148,7 +2145,7 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             # _modality_pairs discipline
             release_checkpoints_in(built)
             raise errs[0]
-    (vocab, merges), (wvocab, wmerges) = built["bpe_wp"]
+    (vocab, merges), (wvocab, wmerges), (uprobs, usc) = built["subword"]
     prof = prof.join(built["lm"], "doc_id", "left")
     enc = bpe.encode_token_counts(docs, vocab, "doc_id", "text")
     prof = prof.join(enc, "doc_id", "left").withColumn(
@@ -2158,7 +2155,6 @@ def text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dsir_selected", F.coalesce("dsir_selected", F.lit(False))
     )
     prof = prof.join(built["lrq"], "doc_id", "left")
-    uprobs, usc = built["ulm"]
     prof = prof.join(usc, "doc_id", "left").withColumn(
         "ulm_vocab", F.lit(ug.vocab_tag(uprobs))
     )
@@ -3035,34 +3031,32 @@ def _beam_blocks(pref: str, graph: str, src: str, entry: str,
     return "".join(blocks)
 
 
-def _serve_blocks(nnd_final: str, k: int = _ANN_K,
-                  gk: int = _NND_K, giters: int = _NND_ITERS,
-                  beam: int = _SERVE_BEAM, hops: int = _SERVE_HOPS,
-                  n_entry: int = _SERVE_NENTRY,
-                  frac: int = _SERVE_FRAC) -> str:
+def _serve_blocks(nnd_final: str) -> str:
     """SQL twin of the 'nnd_serve' method — ``nnd_search_hier`` end to
-    end: the 1/frac md5-sampled coarse layer (``nnd_sample_layer``'s
-    15-hex-digit conv), its OWN retrained NN-descent graph
-    (``_nnd_blocks`` tag 'c'), IVF-navigated coarse entries (the
-    shared trained quantizer's cassign/qassign, min-id rep per cell
-    among LAYER members — queries whose probed cells are ALL rep-less
-    fall back to the layer's global md5-least ``n_entry`` entries,
-    mirroring ``nnd_search(cover_missing=True)``'s r16 safe default;
-    at gate scale every cell has layer members, so the UNION arm is
-    empty and hashes carry the r15 lineage), ``hops`` beam hops on
-    the coarse graph, the
-    top-``n_entry`` coarse winners handed down as full-graph entries,
-    ``hops`` more hops on the full graph, then the self-match dropped
+    end: the 1/``_SERVE_FRAC`` md5-sampled coarse layer
+    (``nnd_sample_layer``'s 15-hex-digit conv), its OWN retrained
+    NN-descent graph (``_nnd_blocks`` tag 'c'), IVF-navigated coarse
+    entries (the shared trained quantizer's cassign/qassign, min-id rep
+    per cell among LAYER members — queries whose probed cells are ALL
+    rep-less fall back to the layer's global md5-least
+    ``_SERVE_NENTRY`` entries, mirroring ``nnd_search``'s fallback for
+    uncovered queries; at gate scale every cell has layer members, so
+    the UNION arm is empty and hashes carry the r15 lineage),
+    ``_SERVE_HOPS`` beam hops on the coarse graph, the
+    top-``_SERVE_NENTRY`` coarse winners handed down as full-graph
+    entries, ``_SERVE_HOPS`` more hops on the full graph, then the
+    self-match dropped
     and the top-``k`` re-ranked (member queries find themselves at
     cos 1.0; every method's recall compares against the same
     self-excluded exact top-k)."""
-    cg_sql, cg_final = _nnd_blocks(gk, giters, tag="c", src="slay")
-    coarse = _beam_blocks("sc", cg_final, "slay", "sentry", hops, beam)
-    full = _beam_blocks("sf", nnd_final, "e", "sl1", hops, beam)
+    cg_sql, cg_final = _nnd_blocks(_NND_K, _NND_ITERS, tag="c", src="slay")
+    coarse = _beam_blocks("sc", cg_final, "slay", "sentry",
+                          _SERVE_HOPS, _SERVE_BEAM)
+    full = _beam_blocks("sf", nnd_final, "e", "sl1", _SERVE_HOPS, _SERVE_BEAM)
     return f"""slay AS MATERIALIZED (
   SELECT vec_id, v FROM e
   WHERE ('0x' || substr(md5(vec_id::VARCHAR), 1, 15))::BIGINT
-        % {frac} = 0
+        % {_SERVE_FRAC} = 0
 ),
 {cg_sql},
 sreps AS (
@@ -3080,7 +3074,7 @@ sentry AS (
   SELECT qq.query_id, d.nid
   FROM (SELECT query_id FROM q
         EXCEPT SELECT query_id FROM scov) qq
-  CROSS JOIN (SELECT nid FROM ncperm WHERE rn <= {n_entry}) d
+  CROSS JOIN (SELECT nid FROM ncperm WHERE rn <= {_SERVE_NENTRY}) d
 ),
 {coarse},
 sl1 AS (
@@ -3088,8 +3082,8 @@ sl1 AS (
     SELECT query_id, nid,
            row_number() OVER (PARTITION BY query_id
                               ORDER BY cos DESC, nid) AS rk
-    FROM scb{hops}
-  ) WHERE rk <= {n_entry}
+    FROM scb{_SERVE_HOPS}
+  ) WHERE rk <= {_SERVE_NENTRY}
 ),
 {full},
 serve_topk AS (
@@ -3097,17 +3091,12 @@ serve_topk AS (
     SELECT query_id, nid, cos,
            row_number() OVER (PARTITION BY query_id
                               ORDER BY cos DESC, nid) AS rank
-    FROM sfb{hops} WHERE nid <> query_id
-  ) WHERE rank <= {k}
+    FROM sfb{_SERVE_HOPS} WHERE nid <> query_id
+  ) WHERE rank <= {_ANN_K}
 )"""
 
 
-def _ann_oracle(k: int = _ANN_K, n_planes: int = _ANN_PLANES,
-                n_tables: int = _ANN_TABLES,
-                n_lists: int = _ANN_LISTS, n_probe: int = _ANN_PROBE,
-                dim: int = EMBEDDING_DIM,
-                m: int = _PQ_M, ksub: int = _PQ_KSUB,
-                rerank: int = _PQ_RERANK) -> str:
+def _ann_oracle() -> str:
     """SQL twin of ``similarity_ann``: the same multi-table hyperplane
     sign buckets (plane literals from the same deterministic generator
     the Spark builder uses), the same TRAINED coarse quantizer (Lloyd's
@@ -3116,9 +3105,10 @@ def _ann_oracle(k: int = _ANN_K, n_planes: int = _ANN_PLANES,
     top-k. r8: RETRAINS the m per-subspace PQ codebooks (``_lloyd_
     blocks`` over sliced-vector CTEs), re-derives every vector's codes
     + reconstruction error, and re-ranks the ADC top-k."""
-    planes_all = sim.hyperplanes(dim, n_tables * n_planes, seed=7)
+    planes_all = sim.hyperplanes(EMBEDDING_DIM, _ANN_TABLES * _ANN_PLANES)
     tables = [
-        planes_all[t * n_planes:(t + 1) * n_planes] for t in range(n_tables)
+        planes_all[t * _ANN_PLANES:(t + 1) * _ANN_PLANES]
+        for t in range(_ANN_TABLES)
     ]
 
     def cos(v: str, lit: str) -> str:
@@ -3143,21 +3133,22 @@ def _ann_oracle(k: int = _ANN_K, n_planes: int = _ANN_PLANES,
     table_hits = "\n      UNION ALL\n".join(
         f"      SELECT qb.query_id, cb.neighbor_id"
         f" FROM cb JOIN qb ON cb.b{t} = qb.b{t}"
-        for t in range(n_tables)
+        for t in range(_ANN_TABLES)
     )
-    lloyd, final_c = _lloyd_blocks(n_lists, _KMEANS_ITERS, dim, prefix="qc")
+    lloyd, final_c = _lloyd_blocks(_ANN_LISTS, _KMEANS_ITERS, EMBEDDING_DIM,
+                                   prefix="qc")
     nnd_sql, nnd_final = _nnd_blocks(_NND_K, _NND_ITERS)
-    serve_sql = _serve_blocks(nnd_final, k=k)
+    serve_sql = _serve_blocks(nnd_final)
 
-    dsub = dim // m
+    dsub = EMBEDDING_DIM // _PQ_M
     pq_slices, pq_lloyds, pq_assigns, pq_finals = [], [], [], []
-    for j in range(m):
+    for j in range(_PQ_M):
         lo, hi = j * dsub + 1, (j + 1) * dsub
         pq_slices.append(
             f"pe{j} AS (SELECT vec_id, v[{lo}:{hi}] AS v FROM e)"
         )
         blk, fin = _lloyd_blocks(
-            ksub, _KMEANS_ITERS, dsub, prefix=f"p{j}c", src=f"pe{j}"
+            _PQ_KSUB, _KMEANS_ITERS, dsub, prefix=f"p{j}c", src=f"pe{j}"
         )
         pq_lloyds.append(blk)
         pq_finals.append(fin)
@@ -3172,36 +3163,36 @@ pqa{j} AS (
     FROM pe{j} e CROSS JOIN {fin} c
   ) WHERE rn = 1
 )""")
-    recon = " + ".join(f"a{j}.d2" for j in range(m))
-    code_cols = ", ".join(f"a{j}.code AS c{j}" for j in range(m))
+    recon = " + ".join(f"a{j}.d2" for j in range(_PQ_M))
+    code_cols = ", ".join(f"a{j}.code AS c{j}" for j in range(_PQ_M))
     code_joins = " ".join(
-        f"JOIN pqa{j} a{j} USING (vec_id)" for j in range(1, m)
+        f"JOIN pqa{j} a{j} USING (vec_id)" for j in range(1, _PQ_M)
     )
     adc_terms = " + ".join(
         f"list_sum(list_transform(range(1, {dsub + 1}),"
         f" i -> (q.qv[{j * dsub} + i] - f{j}.c[i])"
         f" * (q.qv[{j * dsub} + i] - f{j}.c[i])))"
-        for j in range(m)
+        for j in range(_PQ_M)
     )
     adc_joins = " ".join(
-        f"JOIN {pq_finals[j]} f{j} ON f{j}.cid = t.c{j}" for j in range(m)
+        f"JOIN {pq_finals[j]} f{j} ON f{j}.cid = t.c{j}" for j in range(_PQ_M)
     )
     enc_unpivot = "\n    UNION ALL ".join(
         f"SELECT {j} AS j, c{j} AS code, recon_err FROM pqcodes"
-        for j in range(m)
+        for j in range(_PQ_M)
     )
 
     # r9: residual-encoded IVFADC — retrain the m codebooks on
     # x − c(x) (resid CTE), encode, and ADC against q − c(L) per
     # probed list. Same unrolled-Lloyd's discipline, prefix r{j}c.
     res_slices, res_lloyds, res_assigns, res_finals = [], [], [], []
-    for j in range(m):
+    for j in range(_PQ_M):
         lo, hi = j * dsub + 1, (j + 1) * dsub
         res_slices.append(
             f"rpe{j} AS (SELECT vec_id, v[{lo}:{hi}] AS v FROM resid)"
         )
         blk, fin = _lloyd_blocks(
-            ksub, _KMEANS_ITERS, dsub, prefix=f"r{j}c", src=f"rpe{j}"
+            _PQ_KSUB, _KMEANS_ITERS, dsub, prefix=f"r{j}c", src=f"rpe{j}"
         )
         res_lloyds.append(blk)
         res_finals.append(fin)
@@ -3216,23 +3207,23 @@ rpqa{j} AS (
     FROM rpe{j} e CROSS JOIN {fin} c
   ) WHERE rn = 1
 )""")
-    res_code_cols = ", ".join(f"a{j}.code AS c{j}" for j in range(m))
+    res_code_cols = ", ".join(f"a{j}.code AS c{j}" for j in range(_PQ_M))
     res_code_joins = " ".join(
-        f"JOIN rpqa{j} a{j} USING (vec_id)" for j in range(1, m)
+        f"JOIN rpqa{j} a{j} USING (vec_id)" for j in range(1, _PQ_M)
     )
     res_adc_terms = " + ".join(
         f"list_sum(list_transform(range(1, {dsub + 1}),"
         f" i -> (q.qrv[{j * dsub} + i] - rf{j}.c[i])"
         f" * (q.qrv[{j * dsub} + i] - rf{j}.c[i])))"
-        for j in range(m)
+        for j in range(_PQ_M)
     )
     res_adc_joins = " ".join(
         f"JOIN {res_finals[j]} rf{j} ON rf{j}.cid = t.c{j}"
-        for j in range(m)
+        for j in range(_PQ_M)
     )
     res_sql = f"""resid AS MATERIALIZED (
   SELECT ca.neighbor_id AS vec_id, ca.list_id,
-         list_transform(range(1, {dim + 1}),
+         list_transform(range(1, {EMBEDDING_DIM + 1}),
                         i -> ca.cv[i] - ct.cc[i]) AS v
   FROM cassign ca JOIN cents ct ON ct.list_id = ca.list_id
 ),{",".join(res_slices)},{",".join(res_lloyds)},{",".join(res_assigns)},
@@ -3242,7 +3233,7 @@ rescodes AS MATERIALIZED (
 ),
 qres AS (
   SELECT qa.query_id, qa.list_id,
-         list_transform(range(1, {dim + 1}),
+         list_transform(range(1, {EMBEDDING_DIM + 1}),
                         i -> qa.qv[i] - ct.cc[i]) AS qrv
   FROM qassign qa JOIN cents ct ON ct.list_id = qa.list_id
 ),
@@ -3264,7 +3255,7 @@ ivfpq_res_topk AS (
     FROM rpqadc a
     JOIN q ON q.query_id = a.query_id
     JOIN c ON c.neighbor_id = a.neighbor_id
-  ) WHERE rank <= {k}
+  ) WHERE rank <= {_ANN_K}
 )"""
     pq_sql = f"""{",".join(pq_slices)},{",".join(pq_lloyds)},{",".join(pq_assigns)},
 pqcodes AS MATERIALIZED (
@@ -3290,7 +3281,7 @@ pqranked AS MATERIALIZED (
 ),
 pq_topk AS (
   SELECT query_id, ar AS rank, neighbor_id, cos FROM pqranked
-  WHERE ar <= {k}
+  WHERE ar <= {_ANN_K}
 ),
 pq_rr_topk AS (
   SELECT query_id, rank, neighbor_id, cos FROM (
@@ -3298,8 +3289,8 @@ pq_rr_topk AS (
            row_number() OVER (PARTITION BY query_id
                               ORDER BY cos DESC, neighbor_id) AS rank
     FROM (SELECT query_id, neighbor_id, round(cos, 6) AS cos
-          FROM pqranked WHERE ar <= {rerank}) s
-  ) WHERE rank <= {k}
+          FROM pqranked WHERE ar <= {_PQ_RERANK}) s
+  ) WHERE rank <= {_ANN_K}
 ),
 ivfpq_topk AS (
   SELECT query_id, rank, neighbor_id, cos FROM (
@@ -3313,7 +3304,7 @@ ivfpq_topk AS (
     JOIN cassign ca ON ca.neighbor_id = a.neighbor_id
     JOIN qassign qa ON qa.query_id = a.query_id
                    AND qa.list_id = ca.list_id
-  ) WHERE rank <= {k}
+  ) WHERE rank <= {_ANN_K}
 ),
 pq_enc AS (
   SELECT j, code, count(*) AS n,
@@ -3353,7 +3344,7 @@ lsh_topk AS (
       JOIN cb ON cb.neighbor_id = d.neighbor_id
       JOIN qb ON qb.query_id = d.query_id
     )
-  ) WHERE rank <= {k}
+  ) WHERE rank <= {_ANN_K}
 ),{lloyd},
 cents AS MATERIALIZED (SELECT cid AS list_id, c AS cc FROM {final_c}),
 cassign AS MATERIALIZED (
@@ -3372,7 +3363,7 @@ qassign AS MATERIALIZED (
                               ORDER BY -({cos('q.qv', 'cents.cc')}),
                                        cents.list_id) AS rn
     FROM q CROSS JOIN cents
-  ) WHERE rn <= {n_probe}
+  ) WHERE rn <= {_ANN_PROBE}
 ),
 ivf_topk AS (
   SELECT query_id, rank, neighbor_id, cos FROM (
@@ -3387,7 +3378,7 @@ ivf_topk AS (
       FROM cassign ca JOIN qassign qa USING (list_id)
       WHERE qa.query_id <> ca.neighbor_id
     )
-  ) WHERE rank <= {k}
+  ) WHERE rank <= {_ANN_K}
 ),
 {pq_sql},
 -- sq8 (r10): per-dim min/max RE-DERIVED from the corpus, affine
@@ -3395,7 +3386,7 @@ ivf_topk AS (
 -- to int64 micro-units, summed order-free — the Spark side's exact
 -- discipline), ranked by (distance, neighbor_id)
 sqd AS MATERIALIZED (
-  SELECT neighbor_id, unnest(range(1, {dim} + 1)) AS j, cv FROM c
+  SELECT neighbor_id, unnest(range(1, {EMBEDDING_DIM} + 1)) AS j, cv FROM c
 ),
 sqmm AS MATERIALIZED (
   SELECT j, min(cv[j]) AS mn, max(cv[j]) AS mx FROM sqd GROUP BY j
@@ -3433,7 +3424,7 @@ sq_topk AS (
   ) t
   JOIN q ON q.query_id = t.query_id
   JOIN c ON c.neighbor_id = t.neighbor_id
-  WHERE t.rank <= {k}
+  WHERE t.rank <= {_ANN_K}
 ),
 -- sq8n (r10): normalize-then-quantize — the sq8 pipeline verbatim on
 -- unit vectors (x / sqrt(x·x), the list_dot_product order the Spark
@@ -3455,7 +3446,7 @@ sqnq AS MATERIALIZED (
   FROM q
 ),
 sqnd AS MATERIALIZED (
-  SELECT neighbor_id, unnest(range(1, {dim} + 1)) AS j, nv FROM sqnc
+  SELECT neighbor_id, unnest(range(1, {EMBEDDING_DIM} + 1)) AS j, nv FROM sqnc
 ),
 sqnmm AS MATERIALIZED (
   SELECT j, min(nv[j]) AS mn, max(nv[j]) AS mx FROM sqnd GROUP BY j
@@ -3493,13 +3484,13 @@ sqn_topk AS (
   ) t
   JOIN q ON q.query_id = t.query_id
   JOIN c ON c.neighbor_id = t.neighbor_id
-  WHERE t.rank <= {k}
+  WHERE t.rank <= {_ANN_K}
 ),
 -- sq8l (r10): PER-COARSE-LIST bounds (the clustered-recall fix) +
 -- the list join as coarse pruning — bounds re-derived per (list, dim)
 -- from the shared trained cassign, scored only for probed lists
 sq8ld AS MATERIALIZED (
-  SELECT neighbor_id, list_id, unnest(range(1, {dim} + 1)) AS j, cv
+  SELECT neighbor_id, list_id, unnest(range(1, {EMBEDDING_DIM} + 1)) AS j, cv
   FROM cassign
 ),
 sq8lmm AS MATERIALIZED (
@@ -3539,7 +3530,7 @@ sq8l_topk AS (
   ) t
   JOIN q ON q.query_id = t.query_id
   JOIN c ON c.neighbor_id = t.neighbor_id
-  WHERE t.rank <= {k}
+  WHERE t.rank <= {_ANN_K}
 ),
 {nnd_sql},
 nnd_topk AS (
@@ -3548,7 +3539,7 @@ nnd_topk AS (
            row_number() OVER (PARTITION BY src
                               ORDER BY cos DESC, dst) AS rank
     FROM {nnd_final} WHERE src < 8
-  ) WHERE rank <= {k}
+  ) WHERE rank <= {_ANN_K}
 ),
 {serve_sql},
 ann AS (
@@ -3585,7 +3576,7 @@ exact_topk AS (
                                        c.neighbor_id) AS rank
     FROM q CROSS JOIN c
     WHERE q.query_id <> c.neighbor_id
-  ) WHERE rank <= {k}
+  ) WHERE rank <= {_ANN_K}
 ),
 grid AS (
   SELECT m.method, q.query_id
@@ -3609,7 +3600,7 @@ SELECT 'topk' AS stage, method, query_id, rank::INT AS rank, neighbor_id,
 FROM ann
 UNION ALL
 SELECT 'recall', g.method, g.query_id, NULL::INT, NULL::BIGINT, NULL::DOUBLE,
-       round(coalesce(h.n_hits, 0) / {k}.0, 6)
+       round(coalesce(h.n_hits, 0) / {_ANN_K}.0, 6)
 FROM grid g LEFT JOIN hits h ON h.method = g.method AND h.query_id = g.query_id
 UNION ALL
 SELECT 'encode', 'pq', j::BIGINT, code::INT, n::BIGINT, err, NULL::DOUBLE
@@ -3618,6 +3609,10 @@ FROM pq_enc
 
 
 ANN_ORACLE = _ann_oracle()
+
+
+_WINNOW_K = 4        # winnowing: md5 hashes of 4-token grams,
+_WINNOW_WINDOW = 5   # minimum over every 5 consecutive grams
 
 
 def doc_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3640,7 +3635,8 @@ def doc_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = dd.simhash_hex_portable(docs, "doc_id", "text").withColumnRenamed(
         "id", "doc_id"
     )
-    fps = dd.winnowing_fingerprints_portable(docs, "doc_id", "text", k=4, window=5)
+    fps = dd.winnowing_fingerprints_portable(
+        docs, "doc_id", "text", k=_WINNOW_K, window=_WINNOW_WINDOW)
     per_doc = fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fps"))
     shared = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("n_docs")).filter(
         F.col("n_docs") > 1
@@ -3654,7 +3650,7 @@ def doc_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _doc_signatures_oracle(k: int = 4, window: int = 5) -> str:
+def _doc_signatures_oracle() -> str:
     """SQL twin of ``doc_signatures``: per-bit SimHash majority votes
     over md5 hex digits, winnowing window minima over 60-bit md5-prefix
     k-gram hashes — generated, so the bit/digit formulas are written
@@ -3678,7 +3674,7 @@ def _doc_signatures_oracle(k: int = 4, window: int = 5) -> str:
         for d in range(16)
     )
     gram = " || ' ' || ".join(f"toks[pos + {j}]" if j else "toks[pos]"
-                              for j in range(k))
+                              for j in range(_WINNOW_K))
     span_len = 5
     gram5 = " || ' ' || ".join(f"toks[pos + {j}]" if j else "toks[pos]"
                                for j in range(span_len))
@@ -3698,7 +3694,7 @@ votes AS (
 sim AS (SELECT doc_id, {hex_chars} AS simhash_hex FROM votes),
 kgp AS (
   SELECT doc_id, toks,
-         unnest(range(1, greatest(len(toks) - {k} + 1, 0) + 1)) AS pos
+         unnest(range(1, greatest(len(toks) - {_WINNOW_K} + 1, 0) + 1)) AS pos
   FROM t
 ),
 kg AS (
@@ -3709,7 +3705,7 @@ kg AS (
 wm AS (
   SELECT doc_id,
          min(g) OVER (PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN CURRENT ROW AND {window - 1} FOLLOWING) AS fp
+                      ROWS BETWEEN CURRENT ROW AND {_WINNOW_WINDOW - 1} FOLLOWING) AS fp
   FROM kg
 ),
 fps AS (SELECT DISTINCT doc_id, fp FROM wm),
@@ -3852,6 +3848,13 @@ def video_fp_stage(spark: SparkSession, sf_dir: str,
     )
 
 
+_LSH_HASHES = 32     # md5 minhash functions: 8 bands x 4 rows
+_LSH_BANDS = 8
+_LSH_ROWS = 4
+_LSH_TAU_ALL = 0.3   # Jaccard floor of the verified text pairs
+_LSH_TAU_CAND = 0.5  # Jaccard floor of the 'cand' stage
+
+
 def lsh_cross_modal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup candidates (τ=0.5) plus the cross-modal
     agreement pass (τ=0.3 candidates scored by embedding cosine),
@@ -3902,8 +3905,9 @@ def lsh_cross_modal(spark: SparkSession, sf_dir: str) -> DataFrame:
         # returned pair frame, and releases the internal table
         spark.sparkContext.setJobDescription("lsh_cross_modal: text LSH pass")
         return dd.lsh_candidate_pairs_portable(
-            docs, "doc_id", "text", num_hashes=32, bands=8,
-            rows_per_band=4, jaccard_threshold=0.3, materialize=True,
+            docs, "doc_id", "text", num_hashes=_LSH_HASHES, bands=_LSH_BANDS,
+            rows_per_band=_LSH_ROWS, jaccard_threshold=_LSH_TAU_ALL,
+            materialize=True,
         )
 
     # all modalities read the same (id, text) rows — fuse the codec
@@ -3993,7 +3997,7 @@ def lsh_cross_modal(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for frame in (ipairs, apairs, vpairs):
                     release_local_checkpoint(frame)
             raise lsh_err if lsh_err is not None else mm_err
-    cand = pairs.filter(F.col("jaccard") >= 0.5).select(
+    cand = pairs.filter(F.col("jaccard") >= _LSH_TAU_CAND).select(
         F.lit("candidates").alias("stage"), "id_a", "id_b", "jaccard",
         F.lit(None).cast("double").alias("cosine"),
         F.lit(None).cast("int").alias("agree"),
@@ -4010,11 +4014,7 @@ def lsh_cross_modal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_cross_modal_oracle(
-    num_hashes: int = 32, bands: int = 8, rows_per_band: int = 4,
-    tau_all: float = 0.3, tau_cand: float = 0.5, max_bucket: int = 10_000,
-    shingle_n: int = 3,
-) -> str:
+def _lsh_cross_modal_oracle() -> str:
     """SQL twin of ``lsh_cross_modal``: the same md5-prefix shingle
     integers, the same (a_i·x + b_i·y + i) mod P minhash family
     (coefficients injected from ``dedup.lsh_hash_coeffs`` — one source
@@ -4045,16 +4045,16 @@ def _lsh_cross_modal_oracle(
     mins = ",\n         ".join(
         f"min((({a} * (g1 % {p})) % {p} + ({b} * (g2 % {p})) % {p} + {i}) % {p})"
         f" AS h{i}"
-        for i, (a, b) in enumerate(dd.lsh_hash_coeffs(num_hashes))
+        for i, (a, b) in enumerate(dd.lsh_hash_coeffs(_LSH_HASHES))
     )
     band_rows = "\n  UNION ALL\n".join(
         f"  SELECT doc_id, {b} AS band, concat_ws('|', "
-        + ", ".join(f"h{b * rows_per_band + j}" for j in range(rows_per_band))
+        + ", ".join(f"h{b * _LSH_ROWS + j}" for j in range(_LSH_ROWS))
         + ") AS sig FROM mh"
-        for b in range(bands)
+        for b in range(_LSH_BANDS)
     )
     gram = " || ' ' || ".join(f"toks[i + {j}]" if j else "toks[i]"
-                              for j in range(shingle_n))
+                              for j in range(dd.LSH_SHINGLE_N))
     cos_rows = ",".join(
         f"({u},{x},{c})"
         for u, row in enumerate(ph.dct_basis_int()) for x, c in enumerate(row)
@@ -4076,9 +4076,9 @@ t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
 g AS (
   SELECT doc_id,
          unnest(list_distinct(list_transform(
-             range(1, len(toks) - {shingle_n - 2}),
+             range(1, len(toks) - {dd.LSH_SHINGLE_N - 2}),
              i -> {gram}))) AS gram
-  FROM t WHERE len(toks) >= {shingle_n}
+  FROM t WHERE len(toks) >= {dd.LSH_SHINGLE_N}
 ),
 gh AS (
   SELECT doc_id,
@@ -4100,7 +4100,7 @@ cand AS (
   FROM bands x
   JOIN bands y ON x.band = y.band AND x.sig = y.sig AND x.doc_id < y.doc_id
   JOIN bc ON bc.band = x.band AND bc.sig = x.sig
-  WHERE bc.n <= {max_bucket}
+  WHERE bc.n <= {dd.LSH_MAX_BUCKET}
 ),
 sizes AS (SELECT doc_id, count(DISTINCT g1) AS n_sh FROM gh GROUP BY doc_id),
 common AS (
@@ -4128,7 +4128,7 @@ cm AS (
   FROM verified v2
   JOIN e ea ON ea.vec_id = v2.id_a
   JOIN e eb ON eb.vec_id = v2.id_b
-  WHERE v2.jaccard >= {tau_all}
+  WHERE v2.jaccard >= {_LSH_TAU_ALL}
 ),
 ptok AS (SELECT doc_id, unnest(toks) AS tok FROM t),
 pcell AS (
@@ -4364,7 +4364,7 @@ vfin AS (
 )
 SELECT 'candidates' AS stage, id_a, id_b, jaccard,
        NULL::DOUBLE AS cosine, NULL::INT AS agree
-FROM verified WHERE jaccard >= {tau_cand}
+FROM verified WHERE jaccard >= {_LSH_TAU_CAND}
 UNION ALL
 SELECT 'cross_modal', id_a, id_b, jaccard, cosine,
        (cosine >= 0.2)::INT

@@ -923,6 +923,12 @@ def stream_qsk_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(work, ignore_errors=True)
 
 
+_ADM_HASHES = 16     # admission minhash: 4 bands x 4 rows over 3-word shingles
+_ADM_BANDS = 4
+_ADM_ROWS = 4
+_ADM_SHINGLE_N = 3
+
+
 def stream_neardup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE streaming near-dup ADMISSION under the driver's
     differential gate (r12 — the r11 verdict's top ask): the documents
@@ -986,7 +992,8 @@ def stream_neardup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         bands = minhash_band_rows_rowlocal(
             raw.select("doc_id", "text"), "doc_id", "text",
-            num_hashes=16, bands=4, rows_per_band=4, shingle_n=3,
+            num_hashes=_ADM_HASHES, bands=_ADM_BANDS,
+            rows_per_band=_ADM_ROWS, shingle_n=_ADM_SHINGLE_N,
         )
         q = (
             streaming_neardup_admission(bands)
@@ -1020,10 +1027,7 @@ def stream_neardup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(work, ignore_errors=True)
 
 
-def _neardup_admission_oracle(
-    num_hashes: int = 16, bands: int = 4, rows_per_band: int = 4,
-    shingle_n: int = 3,
-) -> str:
+def _neardup_admission_oracle() -> str:
     """Batch SQL twin of the streaming admission decision: re-derives
     the md5-portable minhash band keys from the text (the
     `_lsh_cross_modal_oracle` CTE shape, coefficients injected from
@@ -1038,24 +1042,24 @@ def _neardup_admission_oracle(
     mins = ",\n         ".join(
         f"min((({a} * (g1 % {p})) % {p} + ({b} * (g2 % {p})) % {p} + {i}) % {p})"
         f" AS h{i}"
-        for i, (a, b) in enumerate(dd.lsh_hash_coeffs(num_hashes))
+        for i, (a, b) in enumerate(dd.lsh_hash_coeffs(_ADM_HASHES))
     )
     band_rows = "\n  UNION ALL\n".join(
         f"  SELECT doc_id, {b} AS band, concat_ws('|', "
-        + ", ".join(f"h{b * rows_per_band + j}" for j in range(rows_per_band))
+        + ", ".join(f"h{b * _ADM_ROWS + j}" for j in range(_ADM_ROWS))
         + ") AS sig FROM adm_mh"
-        for b in range(bands)
+        for b in range(_ADM_BANDS)
     )
     gram = " || ' ' || ".join(f"toks[i + {j}]" if j else "toks[i]"
-                              for j in range(shingle_n))
+                              for j in range(_ADM_SHINGLE_N))
     return f"""
 adm_t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
 adm_g AS (
   SELECT doc_id,
          unnest(list_distinct(list_transform(
-             range(1, len(toks) - {shingle_n - 2}),
+             range(1, len(toks) - {_ADM_SHINGLE_N - 2}),
              i -> {gram}))) AS gram
-  FROM adm_t WHERE len(toks) >= {shingle_n}
+  FROM adm_t WHERE len(toks) >= {_ADM_SHINGLE_N}
 ),
 adm_gh AS (
   SELECT doc_id,

@@ -100,18 +100,18 @@ def build_diary_doc(n_days: int = _N_DAYS, seed: int = 7) -> dict:
     return {"days": days, "weights": weights, "physiologicals": physio}
 
 
-def ensure_diary_fixture(path: str = DIARY_FIXTURE_PATH) -> str:
+def ensure_diary_fixture() -> str:
     """Write the fixture if absent (atomic rename — concurrent callers
     race benignly to identical bytes). Returns the path."""
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
+    if not os.path.exists(DIARY_FIXTURE_PATH):
+        os.makedirs(os.path.dirname(DIARY_FIXTURE_PATH), exist_ok=True)
         payload = json.dumps(build_diary_doc())
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path))
+        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(DIARY_FIXTURE_PATH))
         try:
             with os.fdopen(fd, "w") as f:
                 f.write(payload)
-            os.replace(tmp, path)
+            os.replace(tmp, DIARY_FIXTURE_PATH)
         finally:
             if os.path.exists(tmp):
                 os.unlink(tmp)
-    return path
+    return DIARY_FIXTURE_PATH

@@ -77,18 +77,18 @@ class ColumnSpec:
             return F.bround(scaled, 0).cast("long").alias(self.name)
         return F.bround(scaled, self.round_dp).alias(self.name)
 
-    def agg_expr(self, weight: str = "seconds") -> Column | None:
+    def agg_expr(self) -> Column | None:
         """Aggregate expression for the lattice merge (reference :409-422).
 
-        SUM → plain sum; WEIGHTED_MEAN → sum(v·w)/sum(w) with integer
-        truncation for INTEGER columns (reference :421-422); BOOL_OR →
-        max (any nonzero). NONE columns are not aggregated.
+        SUM → plain sum; WEIGHTED_MEAN → sum(v·seconds)/sum(seconds)
+        with integer truncation for INTEGER columns (reference :421-422);
+        BOOL_OR → max (any nonzero). NONE columns are not aggregated.
         """
         c = F.col(self.name)
         if self.agg is Agg.SUM:
             return F.sum(c).alias(self.name)
         if self.agg is Agg.WEIGHTED_MEAN:
-            wm = F.sum(c * F.col(weight)) / F.sum(F.col(weight))
+            wm = F.sum(c * F.col("seconds")) / F.sum(F.col("seconds"))
             if self.is_integer():
                 wm = wm.cast("long")  # truncation toward zero == Python int()
             return wm.alias(self.name)
@@ -179,8 +179,8 @@ def select_exprs(specs: list[ColumnSpec]) -> list[Column]:
     return [s.ingest_expr() for s in specs]
 
 
-def agg_exprs(specs: list[ColumnSpec], weight: str = "seconds") -> list[Column]:
-    out = [e for s in specs if (e := s.agg_expr(weight)) is not None and s.mapper is None]
+def agg_exprs(specs: list[ColumnSpec]) -> list[Column]:
+    out = [e for s in specs if (e := s.agg_expr()) is not None and s.mapper is None]
     return out
 
 

@@ -58,13 +58,12 @@ def stream_events(spark: SparkSession, path: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def windowed_counts(
-    events: DataFrame, window: str = "6 hours", watermark: str = "1 day"
-) -> DataFrame:
-    """Tumbling-window counts + sums per event_type with a watermark."""
+def windowed_counts(events: DataFrame) -> DataFrame:
+    """6-hour tumbling-window counts + sums per event_type with a
+    1-day watermark."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "1 day")
+        .groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(F.sum("value"), 4).alias("total_value"),

@@ -17,9 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def clicks_purchases_stream_join(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
+def clicks_purchases_stream_join(events: DataFrame) -> DataFrame:
     """Inner stream-stream join: purchases within the hour before each
     click by the same user. Both sides derive from the same watermarked
     events stream; state per side is bounded by watermark + range."""
@@ -30,7 +28,7 @@ def clicks_purchases_stream_join(
             F.col("user_id").alias("c_user"),
             F.col("ts").alias("c_ts"),
         )
-        .withWatermark("c_ts", watermark)
+        .withWatermark("c_ts", "2 hours")
     )
     purchases = (
         events.filter(F.col("event_type") == "purchase")
@@ -39,7 +37,7 @@ def clicks_purchases_stream_join(
             F.col("ts").alias("p_ts"),
             F.round("value", 6).alias("p_value"),
         )
-        .withWatermark("p_ts", watermark)
+        .withWatermark("p_ts", "2 hours")
     )
     return clicks.join(
         purchases,

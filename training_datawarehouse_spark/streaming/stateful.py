@@ -57,9 +57,6 @@ def streaming_funnel_progress(
     events: DataFrame,
     steps: list[str],
     within_days: int = 7,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
 ) -> DataFrame:
     """STREAMING ordered-sequence funnel: per-user progress through
     ``steps`` (the exact `operators/funnel.py` min-chain semantics —
@@ -102,7 +99,7 @@ def streaming_funnel_progress(
             lists = [[] for _ in range(n_steps)]
             nb = 0
         for pdf in pdfs:
-            for et, ts in zip(pdf[type_col], pdf[ts_col]):
+            for et, ts in zip(pdf["event_type"], pdf["ts"]):
                 i = idx.get(et)
                 if i is not None:
                     lists[i].append(int(pd.Timestamp(ts).value // 1000))
@@ -126,8 +123,8 @@ def streaming_funnel_progress(
         [f"s{i} array<long>" for i in range(n_steps)] + ["nb long"]
     )
     return (
-        events.filter(events[type_col].isin(steps))
-        .groupBy(user_col)
+        events.filter(events["event_type"].isin(steps))
+        .groupBy("user_id")
         .applyInPandasWithState(
             update,
             outputStructType="user_id long, nb long, max_step int",
