@@ -4,7 +4,8 @@
 its contract (only ``cols`` cross, fan-out, dict rows, schema column
 order, the ``parallelism`` exchange). ``local_frame`` is the only
 ``createDataFrame``, and its frames are ``LocalRelation``s typed as the
-list path types them.
+list path types them. ``streaming/events_stream.drain`` is the only
+streaming sink.
 """
 
 from __future__ import annotations
@@ -20,19 +21,20 @@ from training_datawarehouse_spark.functions.crossing import (
 
 PACKAGE = Path(__file__).resolve().parents[1] / "training_datawarehouse_spark"
 SEAM = PACKAGE / "functions" / "crossing.py"
+DRAIN = PACKAGE / "streaming" / "events_stream.py"
 
 
-def _sites_outside_seam(attr: str) -> list[str]:
+def _sites_outside_seam(attr: str, seam: Path) -> list[str]:
     return sorted(
         f"{path.relative_to(PACKAGE)}:{node.lineno}"
-        for path in PACKAGE.rglob("*.py") if path != SEAM
+        for path in PACKAGE.rglob("*.py") if path != seam
         for node in ast.walk(ast.parse(path.read_text(), filename=str(path)))
         if isinstance(node, ast.Attribute) and node.attr == attr
     )
 
 
 def test_map_batches_is_the_only_row_local_crossing():
-    sites = _sites_outside_seam("mapInPandas")
+    sites = _sites_outside_seam("mapInPandas", SEAM)
     assert not sites, "mapInPandas outside map_batches: " + ", ".join(sites)
 
 
@@ -40,8 +42,17 @@ def test_local_frame_is_the_only_create_dataframe():
     """A Python list handed to ``createDataFrame`` plans as a Python RDD
     whose partitions each wait on a Python worker every time the plan
     runs; ``local_frame`` plans the same rows in the JVM."""
-    sites = _sites_outside_seam("createDataFrame")
+    sites = _sites_outside_seam("createDataFrame", SEAM)
     assert not sites, "createDataFrame outside local_frame: " + ", ".join(sites)
+
+
+def test_drain_is_the_only_streaming_sink():
+    """``drain`` stages the input, owns the sink, the timeout and the
+    cleanup; a stage that starts or awaits its own query copies that
+    policy instead of using it."""
+    sites = (_sites_outside_seam("writeStream", DRAIN)
+             + _sites_outside_seam("awaitTermination", DRAIN))
+    assert not sites, "streaming sink outside drain: " + ", ".join(sites)
 
 
 SCHEMA = T.StructType([

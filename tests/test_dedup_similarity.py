@@ -137,8 +137,11 @@ def test_cosine_neardup_pairs_exact(vectors):
 
 def test_ivf_topk_finds_planted_neighbor(vectors):
     queries = vectors.filter(F.col("vec_id") == 0)
+    # the lowest ids as the 4 coarse centroids (the registry's init)
+    cents = [r[0] for r in vectors.filter(F.col("vec_id") < 4)
+             .orderBy("vec_id").select("embedding").collect()]
     rows = sim.ivf_topk(vectors, queries, "vec_id", "embedding",
-                        k=3, n_lists=4, n_probe=2).collect()
+                        centroids=cents, k=3, n_probe=2).collect()
     # vec 100 is a tiny perturbation of vec 0 → same coarse list; must
     # be retrieved and rank first
     assert rows and rows[0]["neighbor_id"] == 100
@@ -418,7 +421,10 @@ def test_winnowing_guarantee(docs, spark):
 
 
 def test_kmeans_inertia_decreases(vectors):
-    cents, hist = sim.kmeans_fit(vectors, "embedding", k=3, iters=4)
+    init = [r[0] for r in vectors.filter(F.col("vec_id") < 3)
+            .orderBy("vec_id").select("embedding").collect()]
+    cents, hist = sim.kmeans_fit(vectors, "embedding", k=3, iters=4,
+                                 init_vectors=init)
     assert len(cents) == 3 and all(len(c) == 16 for c in cents)
     # Lloyd's guarantee: inertia is monotonically non-increasing
     assert all(hist[i + 1] <= hist[i] + 1e-9 for i in range(len(hist) - 1))

@@ -14,11 +14,9 @@ from __future__ import annotations
 
 import hashlib
 import math
-import os
 
 import pandas as pd
 import pyarrow as pa
-import pyarrow.parquet as pq
 
 from pyspark.sql import functions as F
 
@@ -99,9 +97,10 @@ def test_qsk_exact_when_population_fits(spark):
         assert r["hll_in_band"] is True
 
 
-def test_streaming_qsk_matches_batch(spark, tmp_path):
+def test_streaming_qsk_matches_batch(spark):
     """Final streaming state == batch bottom-k sketch, across a 2-batch
     split that genuinely crosses a state read-merge-write."""
+    from training_datawarehouse_spark.streaming.events_stream import drain
     from training_datawarehouse_spark.streaming.stateful import (
         streaming_quantile_sketch,
     )
@@ -117,41 +116,31 @@ def test_streaming_qsk_matches_batch(spark, tmp_path):
         ("event_id", pa.int64()), ("event_type", pa.string()),
         ("value", pa.float64()),
     ])
-    src = tmp_path / "src"
-    src.mkdir()
-    pq.write_table(pa.Table.from_pylist(rows[: n // 2], schema=schema),
-                   src / "part0.parquet")
-    pq.write_table(pa.Table.from_pylist(rows[n // 2:], schema=schema),
-                   src / "part1.parquet")
-    now = os.path.getmtime(src / "part0.parquet")
-    os.utime(src / "part0.parquet", (now - 10,) * 2)
     h = F.conv(
         F.substring(F.md5(F.col("event_id").cast("string")), 1, 15), 16, 10
     ).cast("long")
-    raw = (
-        spark.readStream.schema(
-            "event_id long, event_type string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
+
+    def query(src):
+        raw = (
+            spark.readStream.schema(
+                "event_id long, event_type string, value double")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        return streaming_quantile_sketch(raw.select(
+            "event_type", h.alias("h"), F.col("event_id").alias("eid"),
+            F.round(F.col("value") * 100).cast("long").alias("vc"),
+        ), k)
+
+    sink, _ = drain(
+        spark,
+        [pa.Table.from_pylist(rows[: n // 2], schema=schema),
+         pa.Table.from_pylist(rows[n // 2:], schema=schema)],
+        query, "update",
     )
-    stream = raw.select(
-        "event_type", h.alias("h"), F.col("event_id").alias("eid"),
-        F.round(F.col("value") * 100).cast("long").alias("vc"),
-    )
-    q = (
-        streaming_quantile_sketch(stream, k)
-        .writeStream.format("memory")
-        .queryName("qsk_sink")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-    q.stop()
     final = {
         r["event_type"]: r
-        for r in spark.table("qsk_sink")
+        for r in sink
         .groupBy("event_type")
         .agg(F.max_by(F.struct("nb", "m", "p50c", "p95c", "p99c"), "nb")
              .alias("s"))

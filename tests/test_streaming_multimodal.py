@@ -9,30 +9,22 @@ from pyspark.sql import functions as F
 from training_datawarehouse_spark.operators import multimodal as mm
 from training_datawarehouse_spark.plans.relational import tumbling_window
 from training_datawarehouse_spark.streaming.events_stream import (
-    stream_events, windowed_counts,
+    drain, stream_events, windowed_counts,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_stream_batch_parity(spark, tmp_path):
+def test_stream_batch_parity(spark):
     """availableNow drain of the events stream == the batch F.window
     aggregation (Structured Streaming's own guarantee, asserted)."""
-    # file-stream sources read directories; stage the single parquet file
-    src = tmp_path / "events_src"
-    src.mkdir()
-    (src / "events.parquet").symlink_to(f"{SF_DIR}/events.parquet")
-    q = (
-        windowed_counts(stream_events(spark, str(src)))
-        .writeStream.format("memory")
-        .queryName("events_windowed")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    import pyarrow.parquet as pq
+
+    sink, _ = drain(
+        spark, [pq.read_table(f"{SF_DIR}/events.parquet")],
+        lambda src: windowed_counts(stream_events(spark, src)), "complete",
     )
-    assert q.awaitTermination(300)
-    stream_rows = spark.sql("select * from events_windowed").collect()
+    stream_rows = sink.collect()
     batch = tumbling_window(spark, SF_DIR).collect()
     key = lambda r: (r["window_start"], r["event_type"])  # noqa: E731
     s = {key(r): (r["n"], r["total_value"]) for r in stream_rows}
@@ -40,47 +32,30 @@ def test_stream_batch_parity(spark, tmp_path):
     assert s == b
 
 
-def _two_batch_stream(spark, tmp_path, name):
-    """Stage the sf0.001 events as TWO files so maxFilesPerTrigger=1
-    yields two micro-batches — state must survive between them."""
-    import os
-
+def _two_batch_drain(spark, op, mode):
+    """Drain ``op`` over the sf0.001 events staged as TWO files, so
+    maxFilesPerTrigger=1 yields two micro-batches — state must survive
+    between them. Returns the sink table."""
     import pyarrow.parquet as pq
-    import pyarrow as pa
 
-    src = tmp_path / f"{name}_src"
-    src.mkdir()
     t = pq.read_table(f"{SF_DIR}/events.parquet")
     half = t.num_rows // 2
-    pq.write_table(t.slice(0, half), src / "part0.parquet")
-    pq.write_table(t.slice(half), src / "part1.parquet")
-    # the file source takes the oldest file first and breaks mtime ties by
-    # listing order, and both writes often land in one mtime tick: make
-    # part0 strictly older so it is always the first micro-batch
-    st = os.stat(src / "part1.parquet")
-    os.utime(src / "part0.parquet",
-             ns=(st.st_atime_ns, st.st_mtime_ns - 1_000_000_000))
-    return stream_events(spark, str(src))
+    sink, _ = drain(
+        spark, [t.slice(0, half), t.slice(half)],
+        lambda src: op(stream_events(spark, src)), mode,
+    )
+    return sink
 
 
-def test_stateful_running_totals_across_batches(spark, tmp_path):
+def test_stateful_running_totals_across_batches(spark):
     from training_datawarehouse_spark.streaming.stateful import running_user_totals
     from training_datawarehouse_spark.sources.tables import load_table
 
-    ev = _two_batch_stream(spark, tmp_path, "totals")
-    q = (
-        running_user_totals(ev)
-        .writeStream.format("memory").queryName("user_totals")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_totals"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
+    sink = _two_batch_drain(spark, running_user_totals, "update")
     # update mode re-emits a user's row each batch it appears in — the
     # LAST emission per user must equal the batch-exact totals
     got = {}
-    for r in spark.sql("select * from user_totals").collect():
+    for r in sink.collect():
         got[r["user_id"]] = (r["n_events"], r["total_value"])
     exact = {
         r["user_id"]: (r["n"], r["tv"])
@@ -181,25 +156,15 @@ def test_decode_stub_raises_on_empty():
         mm.deterministic_fake_decode(b"")
 
 
-def test_stream_stream_join_parity(spark, tmp_path):
+def test_stream_stream_join_parity(spark):
     """Watermarked stream-stream interval join == the batch range join
     over the same events (multi-micro-batch drain)."""
     from training_datawarehouse_spark.sources.tables import load_table
     from training_datawarehouse_spark.streaming.joins import clicks_purchases_stream_join
 
-    ev_stream = _two_batch_stream(spark, tmp_path, "ssjoin")
-    q = (
-        clicks_purchases_stream_join(ev_stream)
-        .writeStream.format("memory").queryName("ss_join")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ss"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
+    sink = _two_batch_drain(spark, clicks_purchases_stream_join, "append")
     got = sorted(
-        (r["click_id"], r["p_ts"], r["p_value"])
-        for r in spark.sql("select * from ss_join").collect()
+        (r["click_id"], r["p_ts"], r["p_value"]) for r in sink.collect()
     )
 
     ev = load_table(spark, SF_DIR, "events")
@@ -232,9 +197,6 @@ def test_events_ts_unit_tolerance(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from training_datawarehouse_spark.sources.tables import load_table
-    from training_datawarehouse_spark.streaming.events_stream import (
-        stream_events, windowed_counts,
-    )
 
     base_us = 1_704_067_200_000_000  # 2024-01-01T00:00:00Z
     n = 24
@@ -262,15 +224,12 @@ def test_events_ts_unit_tolerance(spark, tmp_path):
         batch = load_table(spark, str(d), "events").select("ts").collect()
         years = {r["ts"].year for r in batch}
         assert years == {2024}, (unit, years)
-        agg = (
-            windowed_counts(stream_events(spark, str(d)))
-            .writeStream.format("memory").queryName(f"tsunit_{unit}")
-            .outputMode("complete")
-            .option("checkpointLocation", str(d / "ckpt"))
-            .trigger(availableNow=True).start()
+        # the drain stages the same table in the same (native) unit
+        sink, _ = drain(
+            spark, [table],
+            lambda src: windowed_counts(stream_events(spark, src)), "complete",
         )
-        assert agg.awaitTermination(120)
-        rows = spark.sql(f"select * from tsunit_{unit}").collect()
+        rows = sink.collect()
         assert sum(r["n"] for r in rows) == n
         assert {r["window_start"].year for r in rows} == {2024}, unit
 
@@ -309,7 +268,7 @@ def test_codec_sniff_falls_back_to_stub_on_unsupported(spark):
         assert got[5] == {"id": 5, **decode_fn(good)}
 
 
-def test_watermark_filter_lag(spark, tmp_path):
+def test_watermark_filter_lag(spark):
     """PINS three empirically-observed Spark append-mode rules the
     'late' stage and its oracle depend on:
 
@@ -327,17 +286,9 @@ def test_watermark_filter_lag(spark, tmp_path):
 
     If a Spark upgrade changes any of these, this test fails before
     the driver gate does."""
-    import json
-    import os
-
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from datetime import datetime as d
-
-    from training_datawarehouse_spark.streaming.events_stream import (
-        stream_events, windowed_counts,
-    )
 
     schema = pa.schema([
         ("event_id", pa.int64()),
@@ -352,44 +303,26 @@ def test_watermark_filter_lag(spark, tmp_path):
         return {"event_id": eid, "ts": ts, "user_id": 1,
                 "event_type": "click", "value": 1.0, "props": ""}
 
-    src = tmp_path / "lag_src"
-    src.mkdir()
-    # batch a: sets watermark = Jan 2 06:00 - 1 day = Jan 1 06:00,
-    # which is EXACTLY the end of e1's [00:00, 06:00) window (rule 3)
-    pq.write_table(pa.Table.from_pylist(
+    batches = [
+        # batch a: sets watermark = Jan 2 06:00 - 1 day = Jan 1 06:00,
+        # which is EXACTLY the end of e1's [00:00, 06:00) window (rule 3)
         [ev(1, d(2024, 1, 1, 0, 30)), ev(2, d(2024, 1, 2, 6, 0))],
-        schema=schema), src / "a.parquet")
-    # batch b: fresh row + a late row (window end Dec 31 00:00 < wm)
-    # that the LAGGED filter watermark does not yet see (rule 1)
-    pq.write_table(pa.Table.from_pylist(
+        # batch b: fresh row + a late row (window end Dec 31 00:00 < wm)
+        # that the LAGGED filter watermark does not yet see (rule 1)
         [ev(3, d(2024, 1, 2, 6, 0)), ev(4, d(2023, 12, 30, 23, 45))],
-        schema=schema), src / "b.parquet")
-    # batch c: the same late timestamp again — NOW dropped (rule 2)
-    pq.write_table(pa.Table.from_pylist(
+        # batch c: the same late timestamp again — NOW dropped (rule 2)
         [ev(5, d(2023, 12, 30, 23, 45))],
-        schema=schema), src / "c.parquet")
-    now = os.path.getmtime(src / "a.parquet")
-    for i, f in enumerate(("a", "b", "c")):
-        os.utime(src / f"{f}.parquet", (now - 30 + 10 * i,) * 2)
-
-    q = (
-        windowed_counts(stream_events(spark, str(src)))
-        .writeStream.format("memory")
-        .queryName("lag_sink")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    ]
+    sink, progress = drain(
+        spark, [pa.Table.from_pylist(b, schema=schema) for b in batches],
+        lambda src: windowed_counts(stream_events(spark, src)), "append",
     )
-    assert q.awaitTermination(300)
-    q.stop()
     dropped = sum(
         op.get("numRowsDroppedByWatermark", 0)
-        for p in q.recentProgress
-        for op in json.loads(p.json)["stateOperators"]
+        for p in progress for op in p["stateOperators"]
     )
     rows = {(str(r["window_start"]), r["event_type"]): r["n"]
-            for r in spark.table("lag_sink").collect()}
+            for r in sink.collect()}
     # rule 2: exactly the batch-c row dropped
     assert dropped == 1
     # rule 1: the batch-b late row was accepted -> its window emitted;
@@ -400,17 +333,12 @@ def test_watermark_filter_lag(spark, tmp_path):
     }
 
 
-def test_stream_dedup_drops_redelivered_keeps_new(spark, tmp_path):
+def test_stream_dedup_drops_redelivered_keeps_new(spark):
     """dropDuplicatesWithinWatermark semantics on a crafted source:
     a re-delivered event_id vanishes, a NEW event_id arriving in the
     same later batch survives — i.e. the drop is keyed dedup state,
     not a batch-level discard."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from training_datawarehouse_spark.streaming.events_stream import (
-        stream_events,
-    )
 
     def tbl(rows):
         return pa.table(
@@ -428,37 +356,19 @@ def test_stream_dedup_drops_redelivered_keeps_new(spark, tmp_path):
 
     base = dt.datetime(2024, 3, 1, 12, 0, 0)
     h = dt.timedelta(hours=1)
-    src = tmp_path / "src"
-    src.mkdir()
-    p0 = str(src / "a.parquet")
-    p1 = str(src / "b.parquet")
-    pq.write_table(tbl([(1, base), (2, base + h), (3, base + 2 * h)]), p0)
-    # batch 1: re-delivery of id 3 (same recent ts) + brand-new id 4
-    pq.write_table(tbl([(3, base + 2 * h), (4, base + 3 * h)]), p1)
-    import os
-
-    now = os.path.getmtime(p0)
-    os.utime(p0, (now - 20, now - 20))
-    os.utime(p1, (now - 10, now - 10))
-
-    deduped = (
-        stream_events(spark, str(src))
-        .withWatermark("ts", "1 day")
-        .dropDuplicatesWithinWatermark(["event_id"])
+    sink, _ = drain(
+        spark,
+        [tbl([(1, base), (2, base + h), (3, base + 2 * h)]),
+         # batch 1: re-delivery of id 3 (same recent ts) + brand-new id 4
+         tbl([(3, base + 2 * h), (4, base + 3 * h)])],
+        lambda src: (
+            stream_events(spark, src)
+            .withWatermark("ts", "1 day")
+            .dropDuplicatesWithinWatermark(["event_id"])
+        ),
+        "append",
     )
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_unit_sink")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-    q.stop()
-    got = sorted(
-        r["event_id"] for r in spark.table("dedup_unit_sink").collect()
-    )
+    got = sorted(r["event_id"] for r in sink.collect())
     assert got == [1, 2, 3, 4]
 
 
@@ -552,63 +462,44 @@ def test_stream_dedup_identical_under_rocksdb_provider(spark):
 
 # ------------------------------------------------ streaming funnel (r9)
 
-def _funnel_stream(spark, tmp_path, name, batches):
-    """File-per-micro-batch event stream from explicit row batches:
-    (event_id, user_id, event_type, ts_string)."""
+def _drain_funnel(spark, batches, steps):
+    """Streaming funnel progress drained over explicit row batches, one
+    micro-batch each: (event_id, user_id, event_type, ts_string)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
     import pandas as pd
 
-    from training_datawarehouse_spark.streaming.events_stream import (
-        stream_events,
+    from training_datawarehouse_spark.streaming.stateful import (
+        streaming_funnel_progress,
     )
 
-    src = tmp_path / f"fsrc_{name}"
-    src.mkdir()
-    for i, rows in enumerate(batches):
+    tables = []
+    for rows in batches:
         pdf = pd.DataFrame(
             rows, columns=["event_id", "user_id", "event_type", "ts"])
         pdf["ts"] = pd.to_datetime(pdf["ts"])
         pdf["value"] = 1.0
         pdf["props"] = "{}"
-        pq.write_table(
-            pa.Table.from_pandas(pdf, preserve_index=False),
-            str(src / f"part{i}.parquet"),
-        )
-    return stream_events(spark, str(src))
-
-
-def _drain_funnel(spark, tmp_path, name, batches, steps):
-    from training_datawarehouse_spark.streaming.stateful import (
-        streaming_funnel_progress,
+        tables.append(pa.Table.from_pandas(pdf, preserve_index=False))
+    sink, _ = drain(
+        spark, tables,
+        lambda src: streaming_funnel_progress(
+            stream_events(spark, src), steps, within_days=7,
+        ),
+        "update",
     )
-
-    q = (
-        streaming_funnel_progress(
-            _funnel_stream(spark, tmp_path, name, batches), steps,
-            within_days=7,
-        )
-        .writeStream.format("memory").queryName(f"fq_{name}")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / f"fckpt_{name}"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-    final = (
-        spark.sql(f"select * from fq_{name}")
-        .groupBy("user_id").agg(F.max_by("max_step", "nb").alias("max_step"))
+    final = sink.groupBy("user_id").agg(
+        F.max_by("max_step", "nb").alias("max_step")
     )
     return {r["user_id"]: r["max_step"] for r in final.collect()}
 
 
-def test_streaming_funnel_state_crosses_batches(spark, tmp_path):
+def test_streaming_funnel_state_crosses_batches(spark):
     """User 1's view arrives in batch 0; click and purchase only in
     batch 1 — full credit requires the state store to carry the
     step-1 timestamp across micro-batches. User 2 stalls at click;
     user 3's purchase is outside the 7-day window."""
     steps = ["view", "click", "purchase"]
-    got = _drain_funnel(spark, tmp_path, "cross", [
+    got = _drain_funnel(spark, [
         [(1, 1, "view", "2024-01-01 00:00:00"),
          (2, 2, "view", "2024-01-01 00:00:00"),
          (3, 3, "view", "2024-01-01 00:00:00")],
@@ -621,14 +512,14 @@ def test_streaming_funnel_state_crosses_batches(spark, tmp_path):
     assert got == {1: 3, 2: 2, 3: 2}
 
 
-def test_streaming_funnel_not_monotone_under_out_of_order(spark, tmp_path):
+def test_streaming_funnel_not_monotone_under_out_of_order(spark):
     """A LATER micro-batch delivers an EARLIER step-1 event: t1 drops,
     the attribution window tightens, and the user's reached step must
     legitimately DECREASE — the property that forces list-state +
     re-derivation (chain-only state cannot roll forward through this)
     and last-emission (max_by nb) final selection."""
     steps = ["view", "click", "purchase"]
-    got = _drain_funnel(spark, tmp_path, "ooo", [
+    got = _drain_funnel(spark, [
         # initially: t1 = Jan 10, click Jan 11, purchase Jan 12 -> step 3
         [(1, 7, "view", "2024-01-10 00:00:00"),
          (2, 7, "click", "2024-01-11 00:00:00"),
@@ -640,7 +531,7 @@ def test_streaming_funnel_not_monotone_under_out_of_order(spark, tmp_path):
     assert got == {7: 1}
 
 
-def test_streaming_funnel_matches_batch_on_random_split(spark, tmp_path):
+def test_streaming_funnel_matches_batch_on_random_split(spark):
     """Stream/batch parity on the real corpus with the e2e split: the
     per-step counts derived from streaming progress must equal
     funnel_counts (the batch min-chain) on the same events."""
@@ -664,14 +555,13 @@ def test_streaming_funnel_matches_batch_on_random_split(spark, tmp_path):
     assert got == exact
 
 
-def test_streaming_video_ingest_decodes_per_microbatch(spark, tmp_path):
+def test_streaming_video_ingest_decodes_per_microbatch(spark):
     """Streaming × video composition: a file-source stream of
     documents synthesizes REAL AVI payloads and container-decodes
     their metadata inside the stream (two Arrow crossings per
     micro-batch, append mode, no state), and the drained rows equal
     the batch pipeline exactly — media ingest at 100 TB is a stream,
     not a table."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from training_datawarehouse_spark.operators import video as vd
@@ -679,32 +569,25 @@ def test_streaming_video_ingest_decodes_per_microbatch(spark, tmp_path):
         decode_metadata,
     )
 
-    src = tmp_path / "docs_src"
-    src.mkdir()
     t = pq.read_table(f"{SF_DIR}/documents.parquet",
                       columns=["doc_id", "text"])
     t = t.slice(0, 40)
     half = t.num_rows // 2
-    pq.write_table(t.slice(0, half), src / "p0.parquet")
-    pq.write_table(t.slice(half), src / "p1.parquet")
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    meta = decode_metadata(
-        vd.synthesize_avi_payload(stream, "doc_id", "text"),
-        decode_fn=vd.avi_decode_meta,
-    )
-    q = (
-        meta.writeStream.format("memory").queryName("video_meta")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True).start()
-    )
-    assert q.awaitTermination(120), "stream drain timed out"
+    def query(src):
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        return decode_metadata(
+            vd.synthesize_avi_payload(stream, "doc_id", "text"),
+            decode_fn=vd.avi_decode_meta,
+        )
+
+    sink, _ = drain(spark, [t.slice(0, half), t.slice(half)], query, "append")
     got = {r["id"]: (r["n_bytes"], r["width"], r["height"], r["checksum"])
-           for r in spark.sql("SELECT * FROM video_meta").collect()}
+           for r in sink.collect()}
     batch = spark.createDataFrame(t.to_pandas())
     want = {r["id"]: (r["n_bytes"], r["width"], r["height"], r["checksum"])
             for r in decode_metadata(
@@ -713,7 +596,7 @@ def test_streaming_video_ingest_decodes_per_microbatch(spark, tmp_path):
     assert got == want and len(got) == 40
 
 
-def test_streaming_kmv_sketch_bounded_state_and_batch_parity(spark, tmp_path):
+def test_streaming_kmv_sketch_bounded_state_and_batch_parity(spark):
     """r11: the streaming KMV sketch — (a) STATE BOUND: with 3·K
     distinct users in one type, every emission's sketch occupancy is
     exactly <= K (the state array is the emitted cnt by construction,
@@ -722,7 +605,6 @@ def test_streaming_kmv_sketch_bounded_state_and_batch_parity(spark, tmp_path):
     the rows were split into micro-batches (bottom-k insertion is a
     semilattice merge)."""
     import pyarrow as pa
-    import pyarrow.parquet as papq
 
     from training_datawarehouse_spark.streaming.stateful import (
         streaming_kmv_sketch,
@@ -733,32 +615,23 @@ def test_streaming_kmv_sketch_bounded_state_and_batch_parity(spark, tmp_path):
     # split so 'big' appears in BOTH batches (state must merge)
     rows = [("big", u) for u in range(3 * K)] + [("tiny", 1000 + u)
                                                 for u in range(5)]
-    src = tmp_path / "kmv_src"
-    src.mkdir()
     half = len(rows) // 2
-    for i, chunk in enumerate((rows[:half], rows[half:])):
-        papq.write_table(
-            pa.table({"event_type": [r[0] for r in chunk],
-                      "user_id": [r[1] for r in chunk]}),
-            str(src / f"part{i}.parquet"),
-        )
-    stream = (
-        spark.readStream.schema("event_type string, user_id long")
-        .option("maxFilesPerTrigger", 1).parquet(str(src))
-    )
     h = F.conv(
         F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10,
     ).cast("long")
-    q = (
-        streaming_kmv_sketch(stream.select("event_type", h.alias("h")), K)
-        .writeStream.format("memory").queryName("kmv_sink")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_kmv"))
-        .trigger(availableNow=True)
-        .start()
+    sink, _ = drain(
+        spark,
+        [pa.table({"event_type": [r[0] for r in chunk],
+                   "user_id": [r[1] for r in chunk]})
+         for chunk in (rows[:half], rows[half:])],
+        lambda src: streaming_kmv_sketch(
+            spark.readStream.schema("event_type string, user_id long")
+            .option("maxFilesPerTrigger", 1).parquet(src)
+            .select("event_type", h.alias("h")), K,
+        ),
+        "update",
     )
-    assert q.awaitTermination(300)
-    emissions = spark.sql("select * from kmv_sink").collect()
+    emissions = sink.collect()
     # (a) every emission bounded by K — including the mid-stream one
     assert all(r["cnt"] <= K for r in emissions)
     big = sorted((r for r in emissions if r["event_type"] == "big"),
@@ -787,42 +660,31 @@ def test_streaming_kmv_sketch_bounded_state_and_batch_parity(spark, tmp_path):
     assert got["tiny"][0] == 5       # not full => exact distinct
 
 
-def test_streaming_kmv_sketch_drops_null_users(spark, tmp_path):
+def test_streaming_kmv_sketch_drops_null_users(spark):
     """A NULL user hashes to NULL in both engines (md5(NULL) is NULL)
     and belongs to no audience: the streaming sketch must skip it, not
     crash on int(None), and the surviving sketch must match the
     non-null distinct count."""
     import pyarrow as pa
-    import pyarrow.parquet as papq
 
     from training_datawarehouse_spark.streaming.stateful import (
         streaming_kmv_sketch,
     )
 
-    src = tmp_path / "kmvnull_src"
-    src.mkdir()
-    papq.write_table(
-        pa.table({"event_type": ["a"] * 6,
-                  "user_id": pa.array([1, 2, None, 3, None, 2],
-                                      type=pa.int64())}),
-        str(src / "part0.parquet"),
-    )
-    stream = (
-        spark.readStream.schema("event_type string, user_id long")
-        .parquet(str(src))
-    )
     h = F.conv(
         F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10,
     ).cast("long")
-    q = (
-        streaming_kmv_sketch(stream.select("event_type", h.alias("h")), 16)
-        .writeStream.format("memory").queryName("kmvnull_sink")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_kmvnull"))
-        .trigger(availableNow=True)
-        .start()
+    sink, _ = drain(
+        spark,
+        [pa.table({"event_type": ["a"] * 6,
+                   "user_id": pa.array([1, 2, None, 3, None, 2],
+                                       type=pa.int64())})],
+        lambda src: streaming_kmv_sketch(
+            spark.readStream.schema("event_type string, user_id long")
+            .parquet(src).select("event_type", h.alias("h")), 16,
+        ),
+        "update",
     )
-    assert q.awaitTermination(300)
-    rows = spark.sql("select * from kmvnull_sink").collect()
+    rows = sink.collect()
     assert len(rows) == 1
     assert rows[0]["cnt"] == 3   # users 1, 2, 3 — NULLs skipped

@@ -14,17 +14,14 @@ Three contracts:
 
 from __future__ import annotations
 
-import json
-import os
-
 import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 import training_datawarehouse_spark.operators.dedup as dd
+from training_datawarehouse_spark.streaming.events_stream import drain
 from training_datawarehouse_spark.streaming.stateful import (
     streaming_neardup_admission,
 )
@@ -36,43 +33,35 @@ SPARK_DOC_SCHEMA = T.StructType([
 ])
 
 
-def _drain_admission(spark, tmp_path, batches, name):
-    """Write each batch as one mtime-ordered parquet file, stream it
-    through the admission operator, return (sink rows, query)."""
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, docs in enumerate(batches):
-        pq.write_table(
-            pa.Table.from_pylist(
-                [{"doc_id": d, "text": t} for d, t in docs],
-                schema=DOC_SCHEMA,
-            ),
-            src / f"part{i}.parquet",
+def _doc_tables(batches):
+    return [
+        pa.Table.from_pylist(
+            [{"doc_id": d, "text": t} for d, t in docs], schema=DOC_SCHEMA,
         )
-    now = os.path.getmtime(src / "part0.parquet")
-    for i in range(len(batches)):
-        os.utime(src / f"part{i}.parquet", (now - 30 + 10 * i,) * 2)
-    raw = (
+        for docs in batches
+    ]
+
+
+def _doc_stream(spark, src):
+    return (
         spark.readStream.schema(SPARK_DOC_SCHEMA)
         .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
+        .parquet(src)
     )
-    bands = dd.minhash_band_rows_rowlocal(
-        raw, "doc_id", "text", num_hashes=16, bands=4, rows_per_band=4,
-        shingle_n=3,
-    )
-    q = (
-        streaming_neardup_admission(bands)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-    q.stop()
-    return spark.table(name).collect(), q
+
+
+def _drain_admission(spark, batches):
+    """Stream each batch as one micro-batch, in order, through the
+    admission operator; return (sink rows, per-batch progress)."""
+    def query(src):
+        bands = dd.minhash_band_rows_rowlocal(
+            _doc_stream(spark, src), "doc_id", "text", num_hashes=16,
+            bands=4, rows_per_band=4, shingle_n=3,
+        )
+        return streaming_neardup_admission(bands)
+
+    sink, progress = drain(spark, _doc_tables(batches), query, "update")
+    return sink.collect(), progress
 
 
 def _batch_rule(spark, all_docs):
@@ -133,7 +122,7 @@ def test_rowlocal_bands_match_batch_portable(spark):
     assert not any(k[0] == 4 for k in got)
 
 
-def test_admission_matches_batch_rule_across_batches(spark, tmp_path):
+def test_admission_matches_batch_rule_across_batches(spark):
     """The sequential streaming decision == the batch first-writer rule,
     with at least one reject whose ONLY evidence is state written by an
     earlier micro-batch (the filter-before-store path actually crossing
@@ -148,7 +137,7 @@ def test_admission_matches_batch_rule_across_batches(spark, tmp_path):
         (10, base + " tail"),  # near-dup of 0 — CROSS-batch evidence
         (11, "fresh novel text with no overlap to anything prior ok"),
     ]
-    rows, _ = _drain_admission(spark, tmp_path, [batch0, batch1], "adm_par")
+    rows, _ = _drain_admission(spark, [batch0, batch1])
     got = {(r["doc_id"], r["band"]): r["match_id"] for r in rows}
     want = _batch_rule(spark, batch0 + batch1)
     assert got == want
@@ -160,7 +149,7 @@ def test_admission_matches_batch_rule_across_batches(spark, tmp_path):
         assert {got[k] for k in got if k[0] == d} == {None}
 
 
-def test_admission_state_is_bucket_grain(spark, tmp_path):
+def test_admission_state_is_bucket_grain(spark):
     """Mega-bucket flood: 40 identical docs touch 4 buckets total; the
     state store must hold ONE row per bucket (first_id, n), not one per
     doc — the hot-bucket problem vanishes by construction instead of
@@ -168,7 +157,7 @@ def test_admission_state_is_bucket_grain(spark, tmp_path):
     text = "identical boilerplate spam flood document body text here"
     flood0 = [(i, text) for i in range(20)]
     flood1 = [(i, text) for i in range(20, 40)]
-    rows, q = _drain_admission(spark, tmp_path, [flood0, flood1], "adm_flood")
+    rows, progress = _drain_admission(spark, [flood0, flood1])
     got = {(r["doc_id"], r["band"]): r["match_id"] for r in rows}
     # every doc except the first matches doc 0 in all 4 bands
     for d in range(1, 40):
@@ -176,9 +165,7 @@ def test_admission_state_is_bucket_grain(spark, tmp_path):
     assert {got[(0, b)] for b in range(4)} == {None}
     # state rows == touched buckets (4), independent of 40 docs
     n_state = max(
-        op["numRowsTotal"]
-        for p in q.recentProgress
-        for op in json.loads(p.json)["stateOperators"]
+        op["numRowsTotal"] for p in progress for op in p["stateOperators"]
     )
     assert n_state == 4
 
@@ -215,7 +202,7 @@ FROM adm_m GROUP BY did
     assert any(n > 0 for _, n, _ in got.values())  # rejects exist
 
 
-def test_admission_serves_media_phash_bands(spark, tmp_path):
+def test_admission_serves_media_phash_bands(spark):
     """MEDIA signatures ride the SAME admission operator (the verdict
     ask covers 'documents/media'): in-stream pHash band rows (real PNG
     encode->decode->DCT inside mapInPandas — stateless, so legal
@@ -227,46 +214,23 @@ def test_admission_serves_media_phash_bands(spark, tmp_path):
     batch0 = [(0, base), (1, "utterly different pixels come from "
                              "utterly different token histograms ok")]
     batch1 = [(10, base)]  # identical content -> identical pHash
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, docs in enumerate((batch0, batch1)):
-        pq.write_table(
-            pa.Table.from_pylist(
-                [{"doc_id": d, "text": t} for d, t in docs],
-                schema=DOC_SCHEMA,
-            ),
-            src / f"part{i}.parquet",
-        )
-    now = os.path.getmtime(src / "part0.parquet")
-    for i in range(2):
-        os.utime(src / f"part{i}.parquet", (now - 30 + 10 * i,) * 2)
-    raw = (
-        spark.readStream.schema(SPARK_DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    sig = ph.image_phash_signatures(raw, "doc_id", "text")
-    bands = sig.select(
-        F.col("id").alias("doc_id"),
-        F.explode(F.array(*[
-            F.struct(F.lit(k).alias("band"),
-                     F.col(f"b{k}").cast("string").alias("sig"))
-            for k in range(ph.N_BANDS)
-        ])).alias("bs"),
-    ).select("doc_id", "bs.band", "bs.sig")
-    q = (
-        streaming_neardup_admission(bands)
-        .writeStream.format("memory")
-        .queryName("adm_media")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-    q.stop()
+
+    def query(src):
+        sig = ph.image_phash_signatures(
+            _doc_stream(spark, src), "doc_id", "text")
+        bands = sig.select(
+            F.col("id").alias("doc_id"),
+            F.explode(F.array(*[
+                F.struct(F.lit(k).alias("band"),
+                         F.col(f"b{k}").cast("string").alias("sig"))
+                for k in range(ph.N_BANDS)
+            ])).alias("bs"),
+        ).select("doc_id", "bs.band", "bs.sig")
+        return streaming_neardup_admission(bands)
+
+    sink, _ = drain(spark, _doc_tables((batch0, batch1)), query, "update")
     got = {}
-    for r in spark.table("adm_media").collect():
+    for r in sink.collect():
         got.setdefault(r["doc_id"], set()).add(r["match_id"])
     # doc 10's image is pixel-identical to doc 0's -> all 4 bands
     # collide with the batch-0 state; docs 0 and 1 admitted

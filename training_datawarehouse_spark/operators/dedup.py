@@ -357,7 +357,6 @@ def contamination_pairs(
     return (
         hits.groupBy("train_id", "eval_id", "n_grams")
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= 1)
         .select(
             "train_id",
             "eval_id",

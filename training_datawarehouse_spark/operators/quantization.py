@@ -415,7 +415,7 @@ def sq_encode(
             )
         ),
     )
-    return df.select(F.col("vec_id").alias("vec_id"), codes.alias("codes"))
+    return df.select("vec_id", codes.alias("codes"))
 
 
 def sq_adc_scores(

@@ -136,28 +136,21 @@ def nearest_centroid_lists(
 
 def ivf_topk(
     corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
-    k: int = 5, n_lists: int = 8, n_probe: int = 2,
-    centroids: list[list[float]] | None = None, dim: int | None = None,
+    centroids: list[list[float]], k: int = 5, n_probe: int = 2,
 ) -> DataFrame:
     """IVF-style ANN: coarse-quantize the corpus to its nearest centroid
     (inverted list), probe each query's ``n_probe`` closest lists, exact
     re-score inside the probed lists only.
 
-    Pass ``centroids`` (e.g. from ``kmeans_fit``) for a trained coarse
-    quantizer; the default is deterministic pseudo-random vectors
-    (seeded numpy). Either way the *query shape* (assign → bucket-join
-    → rescore) is identical, and that shape is what matters at scale:
-    the corpus partitions by list id once, queries broadcast, and the
-    all-pairs product shrinks by ~n_probe/n_lists. Recall < 1 by
-    construction → rows-only check.
+    ``centroids`` is the coarse quantizer, e.g. trained by
+    ``kmeans_fit``. The *query shape* (assign → bucket-join → rescore)
+    is what matters at scale: the corpus partitions by list id once,
+    queries broadcast, and the all-pairs product shrinks by
+    ~n_probe/len(centroids). Recall < 1 by construction → rows-only
+    check.
     """
-    if centroids is not None:
-        cents = centroids
-    else:
-        cents = ivf_default_centroids(n_lists, _vec_dim(corpus, vec_col, dim))
-
     def nearest_lists(vec: Column, n: int) -> Column:
-        return nearest_centroid_lists(vec, cents, n)
+        return nearest_centroid_lists(vec, centroids, n)
 
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
@@ -186,9 +179,9 @@ def ivf_topk(
 def kmeans_fit(
     df: DataFrame,
     vec_col: str,
+    init_vectors: list[list[float]],
     k: int = 8,
     iters: int = 5,
-    init_vectors: list[list[float]] | None = None,
     round_dp: int | None = None,
 ) -> tuple[list[list[float]], list[float]]:
     """Lloyd's k-means over an embedding column with DataFrame ops —
@@ -198,26 +191,20 @@ def kmeans_fit(
     corpus never caches on the driver and never shuffles vectors —
     explode sends (cluster, pos, component) triples to a groupBy.
 
-    Returns (centroids, inertia_per_iteration). Deterministic: seeded
+    Returns (centroids, inertia_per_iteration). Deterministic: explicit
     init, fixed iteration count (empty clusters keep their previous
     centroid).
 
-    ``init_vectors`` bypasses the seeded-sample init with explicit
-    starting centroids, and ``round_dp`` rounds each iteration's new
-    centroids — together they make the fit reproducible in ANOTHER
-    engine (the DuckDB oracle re-runs Lloyd's from the same literals;
-    rounding absorbs the last-ulp float-sum ordering differences that
-    would otherwise let assignments drift between engines).
+    ``init_vectors`` are the k starting centroids, and ``round_dp``
+    rounds each iteration's new centroids — together they make the fit
+    reproducible in ANOTHER engine (the DuckDB oracle re-runs Lloyd's
+    from the same literals; rounding absorbs the last-ulp float-sum
+    ordering differences that would otherwise let assignments drift
+    between engines).
     """
-    if init_vectors is not None:
-        if len(init_vectors) != k:
-            raise ValueError(f"init_vectors must have k={k} rows")
-        cents = [[float(x) for x in v] for v in init_vectors]
-    else:
-        rng = np.random.RandomState(13)
-        sample = df.select(vec_col).head(max(k * 20, 100))
-        pool = np.array([r[0] for r in sample], dtype="float64")
-        cents = pool[rng.choice(len(pool), size=k, replace=False)].tolist()
+    if len(init_vectors) != k:
+        raise ValueError(f"init_vectors must have k={k} rows")
+    cents = [[float(x) for x in v] for v in init_vectors]
 
     # Iterative surface: persist the PRUNED vector projection once so
     # the per-iteration jobs rescan a columnar cache, not the source
@@ -294,14 +281,6 @@ def _kmeans_iterate(
                 ]
         cents = new_cents
     return cents, inertia_hist
-
-
-def ivf_default_centroids(n_lists: int, dim: int) -> list[list[float]]:
-    """Deterministic pseudo-random coarse centroids (seeded numpy,
-    rounded) — shared by the Spark builder and the DuckDB oracle
-    generator so both engines quantize identically."""
-    rng = np.random.RandomState(13)
-    return rng.standard_normal((n_lists, dim)).round(6).tolist()
 
 
 def hyperplanes(dim: int, n_planes: int = 16) -> list[list[float]]:

@@ -1607,8 +1607,7 @@ def similarity_ivf(spark: SparkSession, sf_dir: str,
     if cents is None:
         cents = _train_ivf_cents(emb)
     return sim.ivf_topk(emb, queries, "vec_id", "embedding", k=5,
-                        n_lists=_ANN_LISTS, n_probe=_ANN_PROBE,
-                        centroids=cents, dim=EMBEDDING_DIM)
+                        n_probe=_ANN_PROBE, centroids=cents)
 
 
 # ------------------------------------------------ multimodal columns

@@ -15,9 +15,9 @@ from __future__ import annotations
 
 import math
 
+import pyarrow.parquet as papq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.caching import (
     release_checkpoints_in, release_local_checkpoint,
@@ -25,6 +25,9 @@ from ..functions.caching import (
 from ..functions.crossing import local_frame
 from ..operators import funnel as _funnel
 from ..sources.tables import load_table
+from ..streaming.events_stream import (
+    drain, stream_documents, stream_events, windowed_counts,
+)
 from .base import Query
 from .core import JSON_EXTRACTION_ORACLE, SUBQUERIES_ORACLE
 
@@ -271,7 +274,11 @@ FROM events
 GROUP BY 1, 2
 """
 
-_STREAM_SEQ = __import__("itertools").count()
+
+def _halves(t):
+    """Two micro-batches: the first and second half of ``t``'s rows."""
+    half = t.num_rows // 2
+    return [t.slice(0, half), t.slice(half)]
 
 
 def stream_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -284,42 +291,11 @@ def stream_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream/batch-parity guarantee is checked by the driver's
     differential gate itself, not only by pytest (round-2 VERDICT
     residual #3). Unique sink names keep repeated builds independent."""
-    import os
-    import shutil
-    import tempfile
-
-    from ..streaming.events_stream import stream_events, windowed_counts
-
-    name = f"op_stream_e2e_sink_{next(_STREAM_SEQ)}"
-    work = tempfile.mkdtemp(prefix="stream_e2e_")
-    try:
-        # FileStreamSource requires a DIRECTORY source; stage the events
-        # file into one (a real deployment streams an arrival directory).
-        src = os.path.join(work, "src")
-        os.mkdir(src)
-        os.symlink(
-            os.path.abspath(f"{sf_dir}/events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        q = (
-            windowed_counts(stream_events(spark, src))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming drain did not finish within 300 s "
-                f"(query {name!r}); memory sink would be partial"
-            )
-        q.stop()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.table(name)
+    sink, _ = drain(
+        spark, [papq.read_table(f"{sf_dir}/events.parquet")],
+        lambda src: windowed_counts(stream_events(spark, src)), "complete",
+    )
+    return sink
 
 
 def stream_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -330,41 +306,14 @@ def stream_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval-join SQL oracle applies verbatim and the stream-stream
     state machinery (two buffered sides, watermark-bounded eviction)
     runs under the driver's differential gate, not only in pytest."""
-    import os
-    import shutil
-    import tempfile
-
-    from ..streaming.events_stream import stream_events
     from ..streaming.joins import clicks_purchases_stream_join
 
-    name = f"op_stream_join_sink_{next(_STREAM_SEQ)}"
-    work = tempfile.mkdtemp(prefix="stream_join_e2e_")
-    try:
-        src = os.path.join(work, "src")
-        os.mkdir(src)
-        os.symlink(
-            os.path.abspath(f"{sf_dir}/events.parquet"),
-            os.path.join(src, "events.parquet"),
-        )
-        q = (
-            clicks_purchases_stream_join(stream_events(spark, src))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming drain did not finish within 300 s "
-                f"(query {name!r}); memory sink would be partial"
-            )
-        q.stop()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return spark.table(name).groupBy(F.col("click_id")).agg(
+    sink, _ = drain(
+        spark, [papq.read_table(f"{sf_dir}/events.parquet")],
+        lambda src: clicks_purchases_stream_join(stream_events(spark, src)),
+        "append",
+    )
+    return sink.groupBy(F.col("click_id")).agg(
         F.count(F.lit(1)).alias("n_purchases"),
         F.round(F.sum("p_value"), 4).alias("purchase_value"),
     )
@@ -385,55 +334,25 @@ def stream_stateful_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     in; the final state is the emission with the max ``n_events``
     (strictly increasing per appearance), selected with ``max_by`` —
     so the result is independent of the micro-batch layout."""
-    import os
-    import shutil
-    import tempfile
-
-    import pyarrow.parquet as pq
-
-    from ..streaming.events_stream import stream_events
     from ..streaming.stateful import running_user_totals
 
-    name = f"op_stream_stateful_sink_{next(_STREAM_SEQ)}"
-    work = tempfile.mkdtemp(prefix="stream_stateful_")
-    try:
-        src = os.path.join(work, "src")
-        os.mkdir(src)
-        t = pq.read_table(f"{sf_dir}/events.parquet")
-        half = t.num_rows // 2
-        pq.write_table(t.slice(0, half), os.path.join(src, "part0.parquet"))
-        pq.write_table(t.slice(half), os.path.join(src, "part1.parquet"))
-        cents = stream_events(spark, src).withColumn(
+    sink, _ = drain(
+        spark, _halves(papq.read_table(f"{sf_dir}/events.parquet")),
+        lambda src: running_user_totals(stream_events(spark, src).withColumn(
             "value", F.round(F.col("value") * 100)
-        )
-        q = (
-            running_user_totals(cents)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "stateful streaming drain did not finish within 300 s "
-                f"(query {name!r}); memory sink would be partial"
-            )
-        q.stop()
-        # the sink outlives `work`; final state per user = last emission
-        return spark.table(name).groupBy("user_id").agg(
-            F.max_by(
-                F.struct("n_events", "total_value"), "n_events"
-            ).alias("s")
-        ).select(
-            "user_id",
-            F.col("s.n_events").alias("n_events"),
-            F.col("s.total_value").alias("total_cents"),
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        )),
+        "update",
+    )
+    # final state per user = last emission
+    return sink.groupBy("user_id").agg(
+        F.max_by(
+            F.struct("n_events", "total_value"), "n_events"
+        ).alias("s")
+    ).select(
+        "user_id",
+        F.col("s.n_events").alias("n_events"),
+        F.col("s.total_value").alias("total_cents"),
+    )
 
 
 #: planted-late-row count for the 'late' streaming stage — a constant
@@ -472,104 +391,62 @@ def stream_late_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     (window, type) state grows without bound; this stage is the
     executable proof the eviction actually happens.
     """
-    import json
-    import os
-    import shutil
-    import tempfile
-
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    from ..streaming.events_stream import stream_events, windowed_counts
-
-    name = f"op_stream_late_sink_{next(_STREAM_SEQ)}"
-    work = tempfile.mkdtemp(prefix="stream_late_")
-    try:
-        src = os.path.join(work, "src")
-        os.mkdir(src)
-        t = pq.read_table(f"{sf_dir}/events.parquet")
-        p0 = os.path.join(src, "a_ontime.parquet")
-        pq.write_table(t, p0)
-
-        tmin = pa.compute.min(t.column("ts")).as_py()
-        tmax = pa.compute.max(t.column("ts")).as_py()
-        span = (tmax - tmin) if not isinstance(tmin, int) else (
-            (tmax - tmin) / 1e9  # nanos-as-int64 layout
+    t = papq.read_table(f"{sf_dir}/events.parquet")
+    tmin = pa.compute.min(t.column("ts")).as_py()
+    tmax = pa.compute.max(t.column("ts")).as_py()
+    span = (tmax - tmin) if not isinstance(tmin, int) else (
+        (tmax - tmin) / 1e9  # nanos-as-int64 layout
+    )
+    day_s = 86400.0
+    span_s = span.total_seconds() if hasattr(span, "total_seconds") else span
+    if span_s <= day_s + 6 * 3600:
+        raise ValueError(
+            "events span must exceed watermark delay + one window "
+            "for the planted rows to be provably late"
         )
-        day_s = 86400.0
-        span_s = span.total_seconds() if hasattr(span, "total_seconds") else span
-        if span_s <= day_s + 6 * 3600:
-            raise ValueError(
-                "events span must exceed watermark delay + one window "
-                "for the planted rows to be provably late"
-            )
-        # batch 1: one fresh row AT the max ts — keeps the watermark
-        # where it is while letting the lagged filter watermark catch
-        # up; its window's end exceeds the final watermark, so it can
-        # never be emitted and the sink is unaffected by it
-        fresh = pa.Table.from_pydict(
-            {
-                "event_id": [9_999_999_999],
-                "ts": [tmax],
-                "user_id": [1],
-                "event_type": ["click"],
-                "value": [0.0],
-                "props": ["planted-fresh"],
-            },
-            schema=t.schema,
-        )
-        p1 = os.path.join(src, "b_fresh.parquet")
-        pq.write_table(fresh, p1)
-        # one DISTINCT event_type per planted row: the state operator
-        # applies the late filter to partially-aggregated rows, so its
-        # numRowsDroppedByWatermark metric counts dropped GROUPS —
-        # distinct types make groups == planted rows, so the metric
-        # must equal N_PLANTED_LATE exactly
-        late = pa.Table.from_pydict(
-            {
-                "event_id": [10_000_000_000 + i for i in range(N_PLANTED_LATE)],
-                "ts": [tmin] * N_PLANTED_LATE,
-                "user_id": [1] * N_PLANTED_LATE,
-                "event_type": [f"late_{i}" for i in range(N_PLANTED_LATE)],
-                "value": [123.45] * N_PLANTED_LATE,
-                "props": ["planted-late"] * N_PLANTED_LATE,
-            },
-            schema=t.schema,
-        )
-        p2 = os.path.join(src, "c_late.parquet")
-        pq.write_table(late, p2)
-        # FileStreamSource orders new files by modification time; make
-        # the on-time file strictly oldest so batch 0 sets the watermark
-        now = os.path.getmtime(p0)
-        os.utime(p0, (now - 30, now - 30))
-        os.utime(p1, (now - 20, now - 20))
-        os.utime(p2, (now - 10, now - 10))
-
-        q = (
-            windowed_counts(stream_events(spark, src))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "late-data streaming drain did not finish within 300 s "
-                f"(query {name!r}); memory sink would be partial"
-            )
-        q.stop()
-        dropped = sum(
-            op.get("numRowsDroppedByWatermark", 0)
-            for p in q.recentProgress
-            for op in json.loads(p.json)["stateOperators"]
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-    emitted = spark.table(name).select(
+    # batch 1: one fresh row AT the max ts — keeps the watermark
+    # where it is while letting the lagged filter watermark catch
+    # up; its window's end exceeds the final watermark, so it can
+    # never be emitted and the sink is unaffected by it
+    fresh = pa.Table.from_pydict(
+        {
+            "event_id": [9_999_999_999],
+            "ts": [tmax],
+            "user_id": [1],
+            "event_type": ["click"],
+            "value": [0.0],
+            "props": ["planted-fresh"],
+        },
+        schema=t.schema,
+    )
+    # one DISTINCT event_type per planted row: the state operator
+    # applies the late filter to partially-aggregated rows, so its
+    # numRowsDroppedByWatermark metric counts dropped GROUPS —
+    # distinct types make groups == planted rows, so the metric
+    # must equal N_PLANTED_LATE exactly
+    late = pa.Table.from_pydict(
+        {
+            "event_id": [10_000_000_000 + i for i in range(N_PLANTED_LATE)],
+            "ts": [tmin] * N_PLANTED_LATE,
+            "user_id": [1] * N_PLANTED_LATE,
+            "event_type": [f"late_{i}" for i in range(N_PLANTED_LATE)],
+            "value": [123.45] * N_PLANTED_LATE,
+            "props": ["planted-late"] * N_PLANTED_LATE,
+        },
+        schema=t.schema,
+    )
+    # the on-time file is batch 0, so it sets the watermark
+    sink, progress = drain(
+        spark, [t, fresh, late],
+        lambda src: windowed_counts(stream_events(spark, src)), "append",
+    )
+    dropped = sum(
+        op.get("numRowsDroppedByWatermark", 0)
+        for p in progress for op in p["stateOperators"]
+    )
+    emitted = sink.select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("k1"),
         F.col("event_type").alias("k2"),
         F.col("n").cast("long").alias("n"),
@@ -614,65 +491,29 @@ def stream_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``withinWatermark`` the state grows with the corpus forever; this
     stage is the executable proof of the bounded-state contract.
     """
-    import json
-    import os
-    import shutil
-    import tempfile
-
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    from ..streaming.events_stream import stream_events
+    t = papq.read_table(f"{sf_dir}/events.parquet")
+    recent = t.take(
+        pc.sort_indices(
+            t, sort_keys=[("ts", "descending"), ("event_id", "ascending")]
+        )[:N_PLANTED_DUP]
+    )
 
-    name = f"op_stream_dedup_sink_{next(_STREAM_SEQ)}"
-    work = tempfile.mkdtemp(prefix="stream_dedup_")
-    try:
-        src = os.path.join(work, "src")
-        os.mkdir(src)
-        t = pq.read_table(f"{sf_dir}/events.parquet")
-        p0 = os.path.join(src, "a_ontime.parquet")
-        pq.write_table(t, p0)
-        recent = t.take(
-            pc.sort_indices(
-                t, sort_keys=[("ts", "descending"), ("event_id", "ascending")]
-            )[:N_PLANTED_DUP]
-        )
-        p1 = os.path.join(src, "b_dups.parquet")
-        pq.write_table(recent, p1)
-        now = os.path.getmtime(p0)
-        os.utime(p0, (now - 20, now - 20))
-        os.utime(p1, (now - 10, now - 10))
-
+    def query(src: str) -> DataFrame:
         cents = stream_events(spark, src).withColumn(
             "value", F.round(F.col("value") * 100)
         )
         deduped = cents.withWatermark("ts", "1 day").dropDuplicatesWithinWatermark(
             ["event_id"]
         )
-        q = (
-            deduped.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("v"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        return deduped.groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n"), F.sum("value").alias("v")
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "dedup streaming drain did not finish within 300 s "
-                f"(query {name!r}); memory sink would be partial"
-            )
-        q.stop()
-        input_rows = sum(
-            json.loads(p.json).get("numInputRows", 0) for p in q.recentProgress
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
-    per_type = spark.table(name).select(
+    sink, progress = drain(spark, [t, recent], query, "complete")
+    input_rows = sum(p.get("numInputRows", 0) for p in progress)
+    per_type = sink.select(
         F.col("event_type").alias("k1"),
         F.lit(None).cast("string").alias("k2"),
         F.col("n").cast("long").alias("n"),
@@ -703,66 +544,37 @@ def stream_funnel_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     output shape — (step, step_name, n_users, conversion) — so the
     UNCHANGED batch min-chain SQL oracle checks the streaming
     execution end-to-end."""
-    import os
-    import shutil
-    import tempfile
-
-    import pyarrow.parquet as pq
-
-    from ..streaming.events_stream import stream_events
     from ..streaming.stateful import streaming_funnel_progress
 
-    name = f"op_stream_funnel_sink_{next(_STREAM_SEQ)}"
-    work = tempfile.mkdtemp(prefix="stream_funnel_")
-    try:
-        src = os.path.join(work, "src")
-        os.mkdir(src)
-        t = pq.read_table(f"{sf_dir}/events.parquet")
-        half = t.num_rows // 2
-        pq.write_table(t.slice(0, half), os.path.join(src, "part0.parquet"))
-        pq.write_table(t.slice(half), os.path.join(src, "part1.parquet"))
-        q = (
-            streaming_funnel_progress(
-                stream_events(spark, src), FUNNEL_STEPS,
-                within_days=FUNNEL_WITHIN_DAYS,
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming funnel drain did not finish within 300 s "
-                f"(query {name!r}); memory sink would be partial"
-            )
-        q.stop()
-        final = spark.table(name).groupBy("user_id").agg(
-            F.max_by("max_step", "nb").alias("max_step")
-        )
-        steps_df = local_frame(
-            spark, [(i, s) for i, s in enumerate(FUNNEL_STEPS, start=1)],
-            "step int, step_name string",
-        )
-        counts = (
-            F.broadcast(steps_df)
-            .join(final, F.col("max_step") >= F.col("step"), "left")
-            .groupBy("step", "step_name")
-            .agg(F.count("user_id").alias("n_users"))
-        )
-        n1 = counts.filter(F.col("step") == 1).select(
-            F.col("n_users").alias("__n1"))
-        return counts.crossJoin(F.broadcast(n1)).select(
-            "step", "step_name", "n_users",
-            F.when(F.col("__n1") > 0,
-                   F.round(F.col("n_users") / F.col("__n1"), 6))
-            .alias("conversion"),
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    sink, _ = drain(
+        spark, _halves(papq.read_table(f"{sf_dir}/events.parquet")),
+        lambda src: streaming_funnel_progress(
+            stream_events(spark, src), FUNNEL_STEPS,
+            within_days=FUNNEL_WITHIN_DAYS,
+        ),
+        "update",
+    )
+    final = sink.groupBy("user_id").agg(
+        F.max_by("max_step", "nb").alias("max_step")
+    )
+    steps_df = local_frame(
+        spark, [(i, s) for i, s in enumerate(FUNNEL_STEPS, start=1)],
+        "step int, step_name string",
+    )
+    counts = (
+        F.broadcast(steps_df)
+        .join(final, F.col("max_step") >= F.col("step"), "left")
+        .groupBy("step", "step_name")
+        .agg(F.count("user_id").alias("n_users"))
+    )
+    n1 = counts.filter(F.col("step") == 1).select(
+        F.col("n_users").alias("__n1"))
+    return counts.crossJoin(F.broadcast(n1)).select(
+        "step", "step_name", "n_users",
+        F.when(F.col("__n1") > 0,
+               F.round(F.col("n_users") / F.col("__n1"), 6))
+        .alias("conversion"),
+    )
 
 
 def stream_kmv_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -780,28 +592,14 @@ def stream_kmv_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Emitted per type: n = the KMV estimate (exact count when the
     sketch is not full), v = sketch occupancy (min(K, distinct))."""
-    import os
-    import shutil
-    import tempfile
-
-    import pyarrow.parquet as papq
-
-    from ..streaming.events_stream import stream_events
     from ..streaming.stateful import streaming_kmv_sketch
 
-    name = f"op_stream_kmv_sink_{next(_STREAM_SEQ)}"
-    work = tempfile.mkdtemp(prefix="stream_kmv_")
-    try:
-        src = os.path.join(work, "src")
-        os.mkdir(src)
-        t = papq.read_table(f"{sf_dir}/events.parquet")
-        half = t.num_rows // 2
-        papq.write_table(t.slice(0, half), os.path.join(src, "part0.parquet"))
-        papq.write_table(t.slice(half), os.path.join(src, "part1.parquet"))
-        h = F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
-            16, 10,
-        ).cast("long")
+    h = F.conv(
+        F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
+        16, 10,
+    ).cast("long")
+
+    def query(src: str) -> DataFrame:
         # 'NULL belongs to no audience': drop NULL-user rows JVM-side
         # before the shuffle, mirroring both streaming_kmv_sketch's
         # NULL-hash guard (ef09145) and the oracle's IS NOT NULL filter
@@ -811,39 +609,27 @@ def stream_kmv_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("user_id").isNotNull())
             .select("event_type", h.alias("h"))
         )
-        q = (
-            streaming_kmv_sketch(hashed, KMV_K)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming KMV drain did not finish within 300 s "
-                f"(query {name!r}); memory sink would be partial"
-            )
-        q.stop()
-        final = spark.table(name).groupBy("event_type").agg(
-            F.max_by(F.struct("cnt", "hk"), "nb").alias("s")
-        )
-        est = F.when(
-            F.col("s.cnt") < KMV_K, F.col("s.cnt").cast("double")
-        ).otherwise(
-            F.lit(float(KMV_K - 1))
-            / (F.col("s.hk").cast("double") / KMV_SPACE)
-        )
-        return final.select(
-            F.col("event_type").alias("k1"),
-            F.lit(None).cast("string").alias("k2"),
-            F.round(est).cast("long").alias("n"),
-            F.col("s.cnt").cast("double").alias("v"),
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return streaming_kmv_sketch(hashed, KMV_K)
+
+    sink, _ = drain(
+        spark, _halves(papq.read_table(f"{sf_dir}/events.parquet")),
+        query, "update",
+    )
+    final = sink.groupBy("event_type").agg(
+        F.max_by(F.struct("cnt", "hk"), "nb").alias("s")
+    )
+    est = F.when(
+        F.col("s.cnt") < KMV_K, F.col("s.cnt").cast("double")
+    ).otherwise(
+        F.lit(float(KMV_K - 1))
+        / (F.col("s.hk").cast("double") / KMV_SPACE)
+    )
+    return final.select(
+        F.col("event_type").alias("k1"),
+        F.lit(None).cast("string").alias("k2"),
+        F.round(est).cast("long").alias("n"),
+        F.col("s.cnt").cast("double").alias("v"),
+    )
 
 
 def stream_qsk_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -860,67 +646,37 @@ def stream_qsk_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Emitted per (type, quantile): k2 the quantile label, n the
     estimate in exact cents, v the sketch occupancy."""
-    import os
-    import shutil
-    import tempfile
-
-    import pyarrow.parquet as papq
-
-    from ..streaming.events_stream import stream_events
     from ..streaming.stateful import streaming_quantile_sketch
 
-    name = f"op_stream_qsk_sink_{next(_STREAM_SEQ)}"
-    work = tempfile.mkdtemp(prefix="stream_qsk_")
-    try:
-        src = os.path.join(work, "src")
-        os.mkdir(src)
-        t = papq.read_table(f"{sf_dir}/events.parquet")
-        half = t.num_rows // 2
-        papq.write_table(t.slice(0, half), os.path.join(src, "part0.parquet"))
-        papq.write_table(t.slice(half), os.path.join(src, "part1.parquet"))
-        h = F.conv(
-            F.substring(F.md5(F.col("event_id").cast("string")), 1, 15),
-            16, 10,
-        ).cast("long")
-        rows = stream_events(spark, src).select(
+    h = F.conv(
+        F.substring(F.md5(F.col("event_id").cast("string")), 1, 15),
+        16, 10,
+    ).cast("long")
+    sink, _ = drain(
+        spark, _halves(papq.read_table(f"{sf_dir}/events.parquet")),
+        lambda src: streaming_quantile_sketch(stream_events(spark, src).select(
             "event_type", h.alias("h"),
             F.col("event_id").alias("eid"),
             F.round(F.col("value") * 100).cast("long").alias("vc"),
+        ), QSK_K),
+        "update",
+    )
+    final = sink.groupBy("event_type").agg(
+        F.max_by(F.struct("m", "p50c", "p95c", "p99c"), "nb").alias("s")
+    )
+    parts = [
+        final.select(
+            F.col("event_type").alias("k1"),
+            F.lit(f"p{lbl}").alias("k2"),
+            F.col(f"s.p{lbl}c").alias("n"),
+            F.col("s.m").cast("double").alias("v"),
         )
-        q = (
-            streaming_quantile_sketch(rows, QSK_K)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming quantile-sketch drain did not finish within "
-                f"300 s (query {name!r}); memory sink would be partial"
-            )
-        q.stop()
-        final = spark.table(name).groupBy("event_type").agg(
-            F.max_by(F.struct("m", "p50c", "p95c", "p99c"), "nb").alias("s")
-        )
-        parts = [
-            final.select(
-                F.col("event_type").alias("k1"),
-                F.lit(f"p{lbl}").alias("k2"),
-                F.col(f"s.p{lbl}c").alias("n"),
-                F.col("s.m").cast("double").alias("v"),
-            )
-            for lbl, _ in QSK_QS
-        ]
-        out = parts[0]
-        for pt in parts[1:]:
-            out = out.unionByName(pt)
-        return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        for lbl, _ in QSK_QS
+    ]
+    out = parts[0]
+    for pt in parts[1:]:
+        out = out.unionByName(pt)
+    return out
 
 
 _ADM_HASHES = 16     # admission minhash: 4 bands x 4 rows over 3-word shingles
@@ -953,78 +709,37 @@ def stream_neardup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Emitted per doc: k2 = matched-cluster id (the earliest collider;
     NULL -> admitted), n = number of colliding bands (evidence
     strength, 0..4), v = 1.0 if admitted else 0.0."""
-    import os
-    import shutil
-    import tempfile
-
-    import pyarrow.parquet as papq
-
     from ..operators.dedup import minhash_band_rows_rowlocal
     from ..streaming.stateful import streaming_neardup_admission
 
-    name = f"op_stream_admit_sink_{next(_STREAM_SEQ)}"
-    work = tempfile.mkdtemp(prefix="stream_admit_")
-    try:
-        src = os.path.join(work, "src")
-        os.mkdir(src)
-        t = papq.read_table(f"{sf_dir}/documents.parquet").sort_by("doc_id")
-        half = t.num_rows // 2
-        p0 = os.path.join(src, "part0.parquet")
-        p1 = os.path.join(src, "part1.parquet")
-        papq.write_table(t.slice(0, half), p0)
-        papq.write_table(t.slice(half), p1)
-        # the admission contract says batches arrive in id order;
-        # FileStreamSource orders by modification time, so pin it
-        # explicitly instead of trusting sub-millisecond write order
-        now = os.stat(p1).st_mtime
-        os.utime(p0, (now - 10, now - 10))
-        schema = T.StructType([
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ])
-        raw = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    def query(src: str) -> DataFrame:
         bands = minhash_band_rows_rowlocal(
-            raw.select("doc_id", "text"), "doc_id", "text",
+            stream_documents(spark, src).select("doc_id", "text"),
+            "doc_id", "text",
             num_hashes=_ADM_HASHES, bands=_ADM_BANDS,
             rows_per_band=_ADM_ROWS, shingle_n=_ADM_SHINGLE_N,
         )
-        q = (
-            streaming_neardup_admission(bands)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming admission drain did not finish within 300 s "
-                f"(query {name!r}); memory sink would be partial"
-            )
-        q.stop()
-        # each (doc, band) row is emitted exactly once (docs are decided
-        # in their arrival batch), so doc-grain folding needs no max_by
-        per_doc = spark.table(name).groupBy("doc_id").agg(
-            F.min("match_id").alias("mid"),
-            F.count("match_id").alias("nhit"),
-        )
-        return per_doc.select(
-            F.col("doc_id").cast("string").alias("k1"),
-            F.col("mid").cast("string").alias("k2"),
-            F.col("nhit").alias("n"),
-            F.when(F.col("nhit") == 0, 1.0).otherwise(0.0).alias("v"),
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return streaming_neardup_admission(bands)
+
+    # the admission contract says batches arrive in id order: a sorted
+    # split, in list order
+    sink, _ = drain(
+        spark,
+        _halves(papq.read_table(f"{sf_dir}/documents.parquet").sort_by("doc_id")),
+        query, "update",
+    )
+    # each (doc, band) row is emitted exactly once (docs are decided
+    # in their arrival batch), so doc-grain folding needs no max_by
+    per_doc = sink.groupBy("doc_id").agg(
+        F.min("match_id").alias("mid"),
+        F.count("match_id").alias("nhit"),
+    )
+    return per_doc.select(
+        F.col("doc_id").cast("string").alias("k1"),
+        F.col("mid").cast("string").alias("k2"),
+        F.col("nhit").alias("n"),
+        F.when(F.col("nhit") == 0, 1.0).otherwise(0.0).alias("v"),
+    )
 
 
 def _neardup_admission_oracle() -> str:
@@ -1328,12 +1043,6 @@ def stream_bloomgate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Emitted per train doc carrying ≥1 five-gram: k2 = 'reject' if any
     gram bloom-flags else 'admit', n = flagged-gram count, v =
     round(flagged fraction, 6)."""
-    import os
-    import shutil
-    import tempfile
-
-    import pyarrow.parquet as papq
-
     from ..operators import dedup as dd
     from ..operators import text as tx
 
@@ -1344,32 +1053,8 @@ def stream_bloomgate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                        n=5).collect()[0]["words"]
     )
 
-    name = f"op_stream_bgate_sink_{next(_STREAM_SEQ)}"
-    work = tempfile.mkdtemp(prefix="stream_bgate_")
-    try:
-        src = os.path.join(work, "src")
-        os.mkdir(src)
-        t = papq.read_table(f"{sf_dir}/documents.parquet").sort_by("doc_id")
-        half = t.num_rows // 2
-        p0 = os.path.join(src, "part0.parquet")
-        p1 = os.path.join(src, "part1.parquet")
-        papq.write_table(t.slice(0, half), p0)
-        papq.write_table(t.slice(half), p1)
-        now = os.stat(p1).st_mtime
-        os.utime(p0, (now - 10, now - 10))
-        schema = T.StructType([
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("source", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-        ])
-        raw = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        tr = raw.filter(
+    def query(src: str) -> DataFrame:
+        tr = stream_documents(spark, src).filter(
             tx.train_val_test_split(F.col("doc_id")) == "train"
         ).select("doc_id", "text")
         # max_fill=1.0: the registry stage PINS M=65536 (the oracle CTEs
@@ -1378,35 +1063,23 @@ def stream_bloomgate_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         # fill 0.81 — past the r13 saturation guard's default. The
         # acceptance is explicit and registry-only; production callers
         # auto-size via bloom_build(m_bits=None) and keep the guard.
-        gated = dd.bloom_probe_lit(tr, "doc_id", "text", words, n=5,
-                                   max_fill=1.0).filter(
+        return dd.bloom_probe_lit(tr, "doc_id", "text", words, n=5,
+                                  max_fill=1.0).filter(
             F.col("n_grams") >= 1
         )
-        q = (
-            gated.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "streaming bloom gate drain did not finish within 300 s "
-                f"(query {name!r}); memory sink would be partial"
-            )
-        q.stop()
-        out = spark.table(name)
-        return out.select(
-            F.col("doc_id").cast("string").alias("k1"),
-            F.when(F.col("n_bloom_hits") > 0, F.lit("reject"))
-            .otherwise(F.lit("admit")).alias("k2"),
-            F.col("n_bloom_hits").alias("n"),
-            F.round(F.col("n_bloom_hits") / F.col("n_grams"), 6).alias("v"),
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    sink, _ = drain(
+        spark,
+        _halves(papq.read_table(f"{sf_dir}/documents.parquet").sort_by("doc_id")),
+        query, "append",
+    )
+    return sink.select(
+        F.col("doc_id").cast("string").alias("k1"),
+        F.when(F.col("n_bloom_hits") > 0, F.lit("reject"))
+        .otherwise(F.lit("admit")).alias("k2"),
+        F.col("n_bloom_hits").alias("n"),
+        F.round(F.col("n_bloom_hits") / F.col("n_grams"), 6).alias("v"),
+    )
 
 
 def _bloomgate_oracle_ctes() -> str:

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import os
 import stat
+from typing import Callable
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
@@ -97,23 +98,28 @@ def _file_identity(spark: SparkSession, path: str) -> tuple[str, tuple] | None:
     return str(fs.makeQualified(jpath)), (st.getLen(), st.getModificationTime())
 
 
+def read_events(spark: SparkSession, read: Callable[[], DataFrame]) -> DataFrame:
+    """The events frame ``read()`` returns, with ``ts`` as a micro
+    timestamp. The driver's events.ts is INT64 TIMESTAMP(NANOS) — Spark
+    has no nanosecond timestamp type; ``read()`` runs under the
+    nanos-as-long flag, and the raw int64 is truncated to micros
+    (integer DIV — a double division would lose precision at 2^53).
+    Files from other writers may already carry a micro-precision
+    timestamp: those pass through. The batch loader and the events
+    stream both read through here."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = read()
+    if isinstance(df.schema["ts"].dataType, T.LongType):
+        return df.withColumn(
+            "ts", F.expr("timestamp_micros(CAST(ts DIV 1000 AS LONG))")
+        )
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        # The driver's events.ts is INT64 TIMESTAMP(NANOS) — Spark has
-        # no nanosecond timestamp type; read the raw int64 and truncate
-        # to micros (integer DIV — a double division would lose
-        # precision at 2^53). Files from other writers may already
-        # carry a micro-precision timestamp: pass those through.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read_parquet(spark, path)
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn(
-                "ts", F.expr("timestamp_micros(CAST(ts DIV 1000 AS LONG))")
-            )
-        else:
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
+        return read_events(spark, lambda: _read_parquet(spark, path))
     return _read_parquet(spark, path)
 
 
